@@ -68,39 +68,13 @@ def timed_median(df_fn, iters: int = 5) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     try:
         sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
         sf = -1.0
 
-    builder = (
-        SparkSession.builder.appName("pdwx-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-    )
-    # Round-1 root cause of the 12-24x driver-bench outliers: this session was
-    # built WITHOUT the engine runtime confs, so the driver ran with the 10MB
-    # default broadcast threshold and no AQE while local snapshots had both.
-    # Build the bench session exactly like the engine session (session.py).
-    for k, v in session.RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = session.apply_runtime_confs(builder.getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    for k in sorted(session.RUNTIME_CONFS):
-        print(f"conf {k} = {spark.conf.get(k, '<unset>')}", file=sys.stderr)
-    print(f"defaultParallelism = {spark.sparkContext.defaultParallelism}", file=sys.stderr)
-    # Warmup so engine boot doesn't land on the first timed entries (BASELINE
-    # measures queries, not boot): one codegen job, one scan of every input
-    # table (parquet footers + OS page cache), and one Arrow/pandas round
-    # trip (Python worker pool spin-up).
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    warm = catalog.load(spark, sf_dir)
-    for tname in catalog.TABLE_NAMES:
-        warm.table(tname).write.format("noop").mode("overwrite").save()
-    spark.range(10_000).toPandas()
+    spark = bench_session()
+    warm_up(spark, sf_dir)
     # Host fingerprint (stderr only; VERDICT r16 item 9): three fixed
     # microbenches -- codegen, shuffle, Python/Arrow boundary -- so
     # round-over-round driver numbers can be normalized for host drift
@@ -432,7 +406,6 @@ def main() -> None:
         "x_media_metadata",
         "x_media_features",
         "x_media_binary_dedup",
-        "x_stream_countmin",
         "x_sql_rollup",
         "x_sql_ranking",
         "x_sql_left_join_zero_counts",
@@ -507,24 +480,7 @@ def main() -> None:
     # best-of-N would triple the ~seconds-long fixed cost for no signal);
     # x_stream_dedup doubles the input and drains via the distributed
     # parquet sink -- the entry that used to collect O(N) rows to the driver
-    stream_entries = (
-        "x_stream_tumbling_hourly",
-        "x_stream_dedup",
-        "x_stream_incremental_mv",
-        "x_stream_range_join",
-        "x_stream_cdc_latest",
-        "x_stream_hll",
-        "x_stream_histogram",
-        "x_stream_cep",
-        "x_stream_bm25_index",
-        "x_stream_ann_index",
-        # round 15: the four stateful-stream entries the sweep below
-        # would otherwise pick up -- they belong in the single-run tier
-        "x_stream_user_totals_stateful",
-        "x_stream_session_windows",
-        "x_stream_segment_hourly",
-        "x_stream_funnel_stages",
-    )
+    stream_entries = [name for name in registry if name.startswith("x_stream_")]
 
     # --- full-registry micro sweep (VERDICT r14 item 6) -------------------
     # Every registry entry not already timed above runs ONCE here, so
@@ -604,6 +560,43 @@ def main() -> None:
         )
     )
     sys.stdout.flush()
+
+
+def bench_session() -> SparkSession:
+    """The bench session on local[$SPARK_GRAFT_CPUS], with its confs echoed
+    to stderr."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    builder = (
+        SparkSession.builder.appName("pdwx-bench")
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.ui.enabled", "false")
+    )
+    # Round-1 root cause of the 12-24x bench outliers: this session was
+    # built WITHOUT the engine runtime confs, so it ran with the 10MB default
+    # broadcast threshold and no AQE while local snapshots had both.  Build
+    # the bench session exactly like the engine session (session.py).
+    for k, v in session.RUNTIME_CONFS.items():
+        builder = builder.config(k, v)
+    spark = session.apply_runtime_confs(builder.getOrCreate())
+    spark.sparkContext.setLogLevel("ERROR")
+    for k in sorted(session.RUNTIME_CONFS):
+        print(f"conf {k} = {spark.conf.get(k, '<unset>')}", file=sys.stderr)
+    print(f"defaultParallelism = {spark.sparkContext.defaultParallelism}", file=sys.stderr)
+    return spark
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Keep engine boot off the first timed entries (BASELINE measures
+    queries, not boot): one codegen job, one scan of every input table
+    (parquet footers + OS page cache), and one Arrow/pandas round trip
+    (Python worker pool spin-up)."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    warm = catalog.load(spark, sf_dir)
+    for tname in catalog.TABLE_NAMES:
+        warm.table(tname).write.format("noop").mode("overwrite").save()
+    spark.range(10_000).toPandas()
 
 
 if __name__ == "__main__":

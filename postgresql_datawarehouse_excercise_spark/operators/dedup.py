@@ -25,7 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions import fround, ratio, sql_ratio
 
@@ -218,13 +217,12 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     each computed ONCE and localCheckpoint'd; every consumer — this
     operator, dedup_clusters, lsh_recall, threshold_sweep, the curation
     funnel — inherits the single-scan shape."""
-    # MEMORY_AND_DISK: corpus-sized materializations spill instead of
-    # evict; localCheckpoint is the local-mode stand-in for a reliable
-    # per-stage materialization (a session-scoped persist would be reused
-    # across bench iterations -- the no-caching-across-runs rule)
-    sigs = minhash_signature_df(documents).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    # localCheckpoint's default level is memory-and-disk, so corpus-sized
+    # blocks spill instead of being evicted; it is the local-mode stand-in
+    # for a reliable per-stage materialization (a session-scoped persist
+    # would be reused across bench iterations -- the no-caching-across-runs
+    # rule)
+    sigs = minhash_signature_df(documents).localCheckpoint()
     keys = lsh_band_keys(sigs)
     cand = (
         keys.alias("x")
@@ -235,9 +233,7 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    sets_ = shingled(documents).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    sets_ = shingled(documents).localCheckpoint()
     return (
         cand.join(sets_.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sha"), "doc_a")
         .join(sets_.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "shb"), "doc_b")
@@ -628,7 +624,7 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 15) -> DataFrame:
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     try:
         # Convergence test: labels only ever DECREASE (least of self and
@@ -654,7 +650,7 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 15) -> DataFrame:
                     "doc_id",
                     F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
                 )
-                .localCheckpoint(eager=True)
+                .localCheckpoint()
             )
             total = label_total(labels)
             if total == prev_total:
@@ -1128,11 +1124,8 @@ def prefix_join_pairs(
     from pyspark.sql import Window
 
     # referenced by all_hsets AND the posting explode: shingle once
-    # (guide §5); MEMORY_AND_DISK so the corpus-sized block spills, never
-    # evicts (localCheckpoint = local-mode stand-in, see minhash_lsh_pairs)
-    sh = shingled(documents).localCheckpoint(
-        storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+    # (guide §5; localCheckpoint = local-mode stand-in, see minhash_lsh_pairs)
+    sh = shingled(documents).localCheckpoint()
     # EXACT-DUPLICATE COLLAPSE (the 100x-probe OOM fix): docs with identical
     # text are interchangeable w.r.t. Jaccard against ANY third doc, so the
     # pair join runs on one representative per cohort and the full pair
@@ -1160,7 +1153,7 @@ def prefix_join_pairs(
         sh.select("doc_id", F.explode("sh").alias("s"))
         .select("doc_id", h32(F.col("s")).alias("h"))
         .distinct()
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     dfreq = post.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     sizes = post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -1460,14 +1453,14 @@ def dedup_clusters_bigstar(pairs: DataFrame, max_iterations: int = 20) -> DataFr
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     prev_count = edges.count()
     unchanged = prev_count == 0
     for _ in range(max_iterations):
         if unchanged:
             break
-        new_edges = _star_round(edges).localCheckpoint(eager=True)
+        new_edges = _star_round(edges).localCheckpoint()
         new_count = new_edges.count()
         unchanged = (
             new_count == prev_count

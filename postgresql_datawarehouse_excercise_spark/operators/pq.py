@@ -44,7 +44,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .clustering import SCALE, _dist2, quantize
 
@@ -177,11 +176,12 @@ def pq_train_encode(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     # corpus re-scan + re-quantize (guide §5).  Round 16 materialized the
     # N x PQ_M EXPLODED subvector relation instead: 8x the rows, measured
     # 2.7-5.2x slower cold on two hosts, and an eviction hazard at scale.
-    # MEMORY_AND_DISK so blocks spill instead of evict; localCheckpoint is
-    # the local-mode stand-in for a reliable per-stage materialization
+    # localCheckpoint (memory-and-disk by default, so blocks spill instead
+    # of being evicted) is the local-mode stand-in for a reliable
+    # per-stage materialization
     # (per-invocation lifetime -- a session-scoped persist would be reused
     # across bench iterations, which the no-caching-across-runs rule bans).
-    q = quantize(embeddings).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    q = quantize(embeddings).localCheckpoint()
     subs = _subvectors(q)
     cb = _init_codebooks(q)
     for _ in range(PQ_ROUNDS):
@@ -201,7 +201,7 @@ def pq_train_encode_split(train: DataFrame, full: DataFrame) -> tuple[DataFrame,
     train == full this is exactly pq_train_encode."""
     # same reuse shape as pq_train_encode: one N-row materialization, the
     # subvector explode derived lazily per reference (see pq_train_encode)
-    qt = quantize(train).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    qt = quantize(train).localCheckpoint()
     tsubs = _subvectors(qt)
     cb = _init_codebooks(qt)
     for _ in range(PQ_ROUNDS):

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .. import catalog
 from ..functions import fround, ratio, sql_ratio
@@ -361,8 +360,8 @@ def x_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank(t_docs: DataFrame) -> DataFrame:
-    """Core of x_dedup_pagerank over any (doc_id, text) relation (also
-    driven by scripts/scale_smoke.py on K-fold multiplied data).
+    """Core of x_dedup_pagerank over any (doc_id, text) relation (probe
+    it on K-fold multiplied data with `scripts/probe.py --scale K`).
 
     ADAPTIVE exact-copy cohort contraction, same trigger as the rest of
     the pair/graph family: members of an exact-copy cohort are structurally
@@ -606,8 +605,8 @@ def x_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_triangles(t_docs: DataFrame) -> DataFrame:
-    """Core of x_dedup_triangles over any (doc_id, text) relation (also
-    driven by scripts/scale_smoke.py on K-fold multiplied data).
+    """Core of x_dedup_triangles over any (doc_id, text) relation (probe
+    it on K-fold multiplied data with `scripts/probe.py --scale K`).
 
     Exact-copy cohort CONTRACTION (the 100x fix -- 807.5 s of raw wedge
     joins at the all-copy smoke before this): docs with identical shingle
@@ -1170,15 +1169,15 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
     # times (grams, sentinel arm, both text sides) — left lazy each
     # reference re-scanned the corpus and re-ran the md5/cohort shuffle
     # (guide §5: materialize what is reused and expensive to recompute).
-    # (MEMORY_AND_DISK on every corpus-sized checkpoint below: blocks
-    # spill instead of evict; localCheckpoint = the local-mode stand-in for
-    # a reliable per-stage materialization -- a session-scoped persist would
+    # (localCheckpoint = the local-mode stand-in for a reliable per-stage
+    # materialization; its default level is memory-and-disk, so corpus-sized
+    # blocks spill instead of being evicted -- a session-scoped persist would
     # be reused across bench iterations, which the no-caching rule bans.)
     d = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("text"),
         F.md5("text").alias("fp"),
-    ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     cohorts = d.groupBy("fp").agg(F.min("doc_id").alias("rep")).alias("c")
     repdocs = (
         cohorts.join(d.alias("dd"), F.col("c.rep") == F.col("dd.doc_id"))
@@ -1188,7 +1187,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
             F.length(F.col("dd.text")).alias("len"),
             F.col("dd.fp").alias("fp"),
         )
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     # Candidate-index grams are ENGINE-INTERNAL: candidates are verified by
     # exact levenshtein below, and the prefix-filter completeness theorem
@@ -1217,7 +1216,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
                 )
             ).alias("g"),
         )
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     dfreq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("g").asc())
@@ -1299,7 +1298,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
         cand.join(da, "ra")
         .join(db, "rb")
         .repartition(spark.sparkContext.defaultParallelism, "ra", "rb")
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     rpairs = (
         withtexts.select(

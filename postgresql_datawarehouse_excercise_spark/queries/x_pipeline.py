@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from .. import catalog
 from ..functions import dec, fround, money, sql_dec, sql_money
@@ -1153,10 +1152,10 @@ def x_pipeline_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataF
 def semantic_decontaminate(train: DataFrame, ev: DataFrame) -> DataFrame:
     """Core of x_pipeline_decontaminate_semantic: `train` carries
     (vec_id, e, n) from operators/similarity._norms, `ev` carries the eval
-    suite as (ev_e, ev_n).  scripts/scale_smoke.py drives this with a FIXED
-    eval side against a K-fold train side -- the production shape, where
-    cost is |train| x |eval| x dim with |eval| constant (linear in the
-    corpus)."""
+    suite as (ev_e, ev_n).  Cost is |train| x |eval| x dim: linear in the
+    corpus when the eval suite is fixed, the production shape.  The entry's
+    hash split makes eval a constant fraction, so `scripts/probe.py --scale
+    K` grows both sides and measures the quadratic worst case."""
     from ..operators.similarity import dot
 
     cos = dot(F.col("e"), F.col("ev_e")) / (F.col("n") * F.col("ev_n"))
@@ -1329,13 +1328,13 @@ def x_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ten 1-row aggregates held 74 Exchanges; 38 after).  Each surviving-docs
     # frame is checkpointed once — what a production curation pipeline does
     # by materializing per-stage datasets (guide §5).
-    # (MEMORY_AND_DISK on the stage frames: corpus-sized blocks spill
-    # instead of evict; localCheckpoint = local-mode stand-in for the
-    # per-stage dataset a production pipeline writes to reliable storage.)
+    # (localCheckpoint = local-mode stand-in for the per-stage dataset a
+    # production pipeline writes to reliable storage; its default level is
+    # memory-and-disk, so corpus-sized blocks spill instead of being evicted.)
     s2 = (
         s1.filter((n_tokens >= 20) & (n_punct * 20 <= F.length("text")))
         .select("doc_id", "text", "bucket")
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     fp = s2.withColumn(
         "f", F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))))
@@ -1344,14 +1343,14 @@ def x_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3 = (
         fp.join(canon.select("doc_id"), "doc_id")
         .select("doc_id", "text", "bucket")
-        .localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint()
     )
     pairs = dd.minhash_lsh_pairs(s3.select("doc_id", "text"))
     strong = pairs.filter(F.col("jaccard") >= dd.DEDUP_CLUSTER_MIN_JACCARD)
     clusters = dd.dedup_clusters(strong)
     s4 = s3.join(
         clusters.filter(~F.col("keep")).select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint(storageLevel=StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint()
     K = FUNNEL_DECON_GRAM
 
     def windows(df: DataFrame) -> DataFrame:

@@ -619,7 +619,7 @@ def x_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def unigram_logprob(documents: DataFrame) -> DataFrame:
     """Core of x_text_unigram_logprob over any (doc_id, text) relation
-    (also driven by scripts/scale_smoke.py on K-fold multiplied data)."""
+    (probe it on K-fold multiplied data with `scripts/probe.py --scale K`)."""
     toks = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.explode(
@@ -1118,7 +1118,7 @@ def x_text_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def nb_langid(documents: DataFrame) -> DataFrame:
     """Core of x_text_nb_langid over any (doc_id, lang, text) relation
-    (also driven by scripts/scale_smoke.py on K-fold multiplied data)."""
+    (probe it on K-fold multiplied data with `scripts/probe.py --scale K`)."""
     from .x_pipeline import _bucket
 
     d = documents.select(

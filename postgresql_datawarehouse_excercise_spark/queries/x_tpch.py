@@ -84,8 +84,8 @@ def x_tpch_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pricing_summary(lineitem: DataFrame) -> DataFrame:
-    """The Q1 aggregate over any lineitem-shaped input (also driven by
-    scripts/scale_smoke.py on K-fold multiplied data)."""
+    """The Q1 aggregate over any lineitem-shaped input (probe it on K-fold
+    multiplied data with `scripts/probe.py --scale K`)."""
     return (
         lineitem.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -386,8 +386,8 @@ FROM big JOIN orders   ON o_orderkey = l_orderkey
 )
 def x_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 on the co-located bucketed layout -- the lane the round-9
-    q18 plan audit (scripts/tpch_heavy_audit.py) concluded is the right
-    100 TB lever.  x_tpch_q18_large_orders pays one full lineitem shuffle
+    q18 plan audit concluded is the right 100 TB lever (rerun it with
+    `scripts/probe.py --scale K --explain DIR`).  x_tpch_q18_large_orders pays one full lineitem shuffle
     for the HAVING aggregate every run; here lineitem AND orders are both
     written bucketed (and sorted) on the order key once, so the per-order
     quantity aggregate runs WITHOUT re-hashing lineitem (the bucketed scan

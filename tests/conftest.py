@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 import pytest
 
@@ -22,3 +23,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Skip reasons grouped with counts, so a skipped family shows up even
+    under -q; the paper-golden tests get their own line."""
+    skipped = terminalreporter.stats.get("skipped", [])
+    if not skipped:
+        return
+    reasons = Counter(
+        rep.longrepr[2].removeprefix("Skipped: ") if isinstance(rep.longrepr, tuple)
+        else str(rep.longrepr)
+        for rep in skipped
+    )
+    terminalreporter.section("skip reasons")
+    for reason, n in reasons.most_common():
+        terminalreporter.write_line(f"{n:4d}  {reason}")
+    if any("test_reference_golden.py" in rep.nodeid for rep in skipped):
+        terminalreporter.write_line("paper-golden: NOT RUN (reference dump not present)")
