@@ -31,58 +31,6 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 # immediately, before any budget is spent on the long tail).
 _SENTINELS = ("q1_time_dim", "q2_avg_transaction")
 
-# Entries whose IMPLEMENTATION changed this round (verified green locally
-# against DuckDB, but the driver's own gate should confirm before their next
-# natural rotation): fronted right after any known-red entries.
-_TOUCHED_THIS_ROUND: tuple[str, ...] = (
-    # round 16 OPTIMIZATION pass (OPTIMIZATION_r16.md): entries whose
-    # operator internals changed -- reused subtrees materialized
-    # (localCheckpoint inside the timed path), simhash banding
-    # restructured to carry the signature, the edit-join q-gram index
-    # re-keyed to xxhash64 longs, approx_distinct re-aggregated over
-    # pre-deduped rows.  All value-identical by construction and locally
-    # re-verified green vs DuckDB at sf0.01; fronted so the driver's own
-    # gate confirms the changed paths first.
-    "x_dedup_simhash_pairs",
-    "x_dedup_minhash_lsh_pairs",
-    "x_dedup_clusters",
-    "x_dedup_lsh_recall",
-    "x_dedup_threshold_sweep",
-    "x_dedup_edit_join",
-    "x_dedup_prefix_join",
-    "x_dedup_pagerank",
-    "x_text_unigram_lm",
-    "x_text_unigram_encode",
-    "x_pipeline_curation_funnel",
-    "x_pipeline_canonical_docs",
-    "x_sql_approx_distinct",
-    "x_sim_ann_recall",
-    "x_sim_nndescent",
-    "x_sim_ann_pq",
-    "x_sim_ann_ivfpq",
-    "x_stream_ann_index",
-    # round 16 build: the six pred-less CEP entries ride the round-15
-    # second-wave dispatch refactor with only LOCAL preflight on the
-    # record (VERDICT r15 item 2 asks the driver to confirm) -- fronted
-    # so the driver's own gate closes that loop
-    "x_events_cep_star",
-    "x_events_cep_optional",
-    "x_events_cep_alternation",
-    "x_events_cep_skip_past",
-    "x_events_cep_permute",
-    "x_events_cep_skip_to_first",
-    "x_events_cep_skip_to_last",
-    # round 16 build: the cross-symbol anchor columns were renamed to the
-    # length-prefixed _sym_<len>_<type>_<col> form (ADVICE r15
-    # collision fix) -- value-identical, but the column plumbing under
-    # this entry changed in both compilers
-    "x_events_cep_cross_define",
-    # round 16 build: register_fd_rollup's bridge verification hardened
-    # (count(*) per fine key + MV coverage check, ADVICE r15) -- the
-    # registration path under this entry changed
-    "x_mv_catalyst_rewrite_fd",
-)
-
 # Family priority for never-verified entries (the driver's correctness budget
 # runs the dict in order; the LLM-pipeline families are graded first-class, so
 # they go before the SQL-surface and TPC-H-shape extensions).
@@ -100,6 +48,31 @@ def _family_rank(name: str) -> int:
     return len(_FAMILY_ORDER)
 
 
+def _green(row) -> bool:
+    """A correctness row that ran and matched its oracle on rows, schema
+    and value hash."""
+    return bool(
+        isinstance(row, dict)
+        and not row.get("err")
+        and row.get("rows_match")
+        and row.get("schema_match", True)
+        and row.get("hash_match", True)
+    )
+
+
+def _correctness_rounds() -> list[dict]:
+    """The committed CORRECTNESS_r*.json files in round order; an unreadable
+    file counts as a round with no rows."""
+    rounds: list[dict] = []
+    for path in sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))):
+        try:
+            with open(path) as fh:
+                rounds.append(json.load(fh))
+        except (OSError, ValueError):
+            rounds.append({})
+    return rounds
+
+
 def _verified_history() -> dict[str, tuple[int, int]]:
     """Per entry: (last green round index, count of green rounds) from the
     committed CORRECTNESS_r*.json files.
@@ -112,22 +85,9 @@ def _verified_history() -> dict[str, tuple[int, int]]:
     VERDICT item #1: 22 reference-family entries had no green row since r1).
     """
     history: dict[str, tuple[int, int]] = {}
-    for round_idx, path in enumerate(
-        sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json"))), start=1
-    ):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
+    for round_idx, data in enumerate(_correctness_rounds(), start=1):
         for name, row in data.items():
-            if (
-                isinstance(row, dict)
-                and not row.get("err")
-                and row.get("rows_match")
-                and row.get("schema_match", True)
-                and row.get("hash_match", True)
-            ):
+            if _green(row):
                 _, count = history.get(name, (0, 0))
                 history[name] = (round_idx, count + 1)
     return history
@@ -137,24 +97,13 @@ def _erred_last_round() -> set[str]:
     """Entries whose row in the LATEST committed correctness round erred or
     mismatched.  These carry a known-red signal, so after a fix they need a
     green row more urgently than anything merely unrotated -- front them."""
-    paths = sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")))
-    if not paths:
-        return set()
-    try:
-        with open(paths[-1]) as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
+    rounds = _correctness_rounds()
+    if not rounds:
         return set()
     return {
         name
-        for name, row in data.items()
-        if isinstance(row, dict)
-        and (
-            row.get("err")
-            or not row.get("rows_match")
-            or not row.get("schema_match", True)
-            or not row.get("hash_match", True)
-        )
+        for name, row in rounds[-1].items()
+        if isinstance(row, dict) and not _green(row)
     }
 
 
@@ -165,12 +114,10 @@ def _ordered_names() -> list[str]:
 
     def key(name: str):
         sentinel = 0 if name in _SENTINELS else 1
-        touched = 0 if name in _TOUCHED_THIS_ROUND else 1
         last_green, count = history.get(name, (0, 0))
         return (
             sentinel,
             0 if name in erred else 1,
-            touched,
             last_green,   # stalest hard signal first (never-green = 0)
             count,
             _family_rank(name),
@@ -189,8 +136,9 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md section 2.
 
-    Ordered never-verified-first (see _verified_counts) so the driver's
-    per-round correctness budget lands on entries without a hard signal yet.
+    Ordered sentinels, then last round's red entries, then stalest green
+    first (see _ordered_names), so each round's bounded correctness check
+    lands on the entries whose hard signal is oldest.
     """
     registry = load_all()
     return {name: registry[name].fn for name in _ordered_names()}

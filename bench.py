@@ -9,8 +9,8 @@ reproduce (assignment-5.md:628).
 Execution is timed with the noop sink (full plan runs, no driver collect).
 The graded Q4/Q5 headline entries report the MEDIAN of 5 runs (their
 BASELINE orderings separate by tens of ms; median survives bimodal host
-noise that inverted them in single runs); extension entries report
-best-of-3; streaming entries run once (startup dominates).
+noise that inverted them in single runs); streaming entries run once
+(startup dominates); every other registry entry reports best-of-3.
 
 Driver contract (VERDICT round 1, item 2): stdout carries EXACTLY ONE compact
 JSON line as its final line -- the driver's tail buffer is finite, so the
@@ -36,6 +36,7 @@ from postgresql_datawarehouse_excercise_spark import catalog, session
 from postgresql_datawarehouse_excercise_spark.functions import money
 from postgresql_datawarehouse_excercise_spark.mv.definitions import default_registry
 from postgresql_datawarehouse_excercise_spark.queries import load_all
+from postgresql_datawarehouse_excercise_spark.queries.q4_views import _geo
 
 
 def run(df_fn) -> float:
@@ -143,11 +144,6 @@ def main() -> None:
             .limit(5)
         )
 
-    def geo(t):
-        from postgresql_datawarehouse_excercise_spark.queries.q4_views import _geo
-
-        return _geo(t)
-
     t = catalog.load(spark, sf_dir)
 
     # --- Q4a best buyers: raw vs mart vs view2 (BASELINE relative order) --
@@ -164,7 +160,7 @@ def main() -> None:
     results["q4b_top_country_raw"] = timed_median(lambda: q["q4b_top_country_raw"](spark, sf_dir))
 
     def top_country_mart() -> DataFrame:
-        g = geo(t).select("customerid", "country")
+        g = _geo(t).select("customerid", "country")
         return (
             sales()
             .join(F.broadcast(g), "customerid")
@@ -175,7 +171,7 @@ def main() -> None:
         )
 
     def top_country_view3() -> DataFrame:
-        bridge = geo(t).select("district", "country").distinct()
+        bridge = _geo(t).select("district", "country").distinct()
         return (
             view3()
             .join(F.broadcast(bridge), "district")
@@ -186,7 +182,7 @@ def main() -> None:
         )
 
     def top_country_view2() -> DataFrame:
-        g = geo(t).select("customerid", "country")
+        g = _geo(t).select("customerid", "country")
         return (
             view2()
             .join(F.broadcast(g), "customerid")
@@ -217,225 +213,6 @@ def main() -> None:
     results["q5b_cumsum_from_mv"] = timed_median(q5b_from_mv)
     results["q5b_nested_windows"] = timed_median(lambda: q["q5b_nested_windows"](spark, sf_dir))
 
-    # --- ETL / aggregates / extensions ------------------------------------
-    for name in (
-        "q1_sales_fact",
-        "q2_weighted_avg",
-        "q3a_best_buyers",
-        "x_dedup_exact",
-        "x_dedup_normalized",
-        "x_dedup_minhash_signatures",
-        "x_dedup_minhash_lsh_pairs",
-        "x_dedup_simhash",
-        "x_dedup_ngram_jaccard",
-        "x_dedup_containment",
-        "x_dedup_pagerank",
-        "x_dedup_triangles",
-        "x_dedup_prefix_join",
-        "x_dedup_edit_join",
-        "x_dedup_kcore",
-        "x_dedup_lsh_recall",
-        "x_dedup_threshold_sweep",
-        "x_dedup_winnowing",
-        "x_dedup_winnowing_pairs",
-        "x_text_token_stats",
-        "x_text_quality",
-        "x_text_lang_id",
-        "x_events_tumbling_hourly",
-        "x_events_user_daily",
-        "x_events_session_windows",
-        "x_events_funnel",
-        "x_events_retention_cohorts",
-        "x_events_hourly_anomaly",
-        "x_events_gap_fill",
-        "x_events_interpolate",
-        "x_events_trailing_24h",
-        "x_events_attribution",
-        "x_events_markov_transitions",
-        "x_events_rfm",
-        "x_text_pii_redact",
-        "x_text_block_dedup",
-        "x_sim_topk_bruteforce",
-        "x_sim_knn_join",
-        "x_sim_ann_lsh",
-        "x_sim_ann_ivf",
-        "x_sim_cosine_neardup",
-        "x_sim_quantize_int8",
-        "x_sim_kmeans",
-        "x_sim_ann_recall",
-        "x_sim_semantic_dedup",
-        "x_sim_pca_power",
-        "x_sim_ann_pq",
-        "x_sim_ann_pq_recall",
-        "x_sim_ann_ivfpq",
-        "x_sim_ann_ivfpq_recall",
-        "x_sim_kcenter_coreset",
-        "x_sim_mmr_select",
-        "x_pipeline_cluster_balanced",
-        "x_pipeline_curation_funnel",
-        "x_text_pmi_bigrams",
-        "x_text_moore_lewis",
-        "x_text_countmin_hh",
-        # round 12
-        "x_text_bm25_index_refresh",
-        "x_sim_ann_index_insert",
-        "x_sim_ann_index_delete",
-        "x_text_bm25_batch",
-        "x_text_bm25_prf",
-        "x_sim_ann_batch_serve",
-        "x_sim_hybrid_rrf_persist",
-        "x_pipeline_salted_join",
-        "x_events_cep_star",
-        "x_events_cep_optional",
-        # round 15
-        "x_events_cep_cross_define",
-        "x_events_cep_running",
-        "x_events_cep_vshape",
-        "x_events_cep_next_define",
-        "x_mv_catalyst_rewrite_fd",
-        # round 14 (retrain_policy shares the memoized SPLIT-trained build
-        # with ann_index_insert -- whichever runs first pays it)
-        "x_mv_catalyst_rewrite",
-        "x_dedup_banding_policy",
-        "x_sim_ann_retrain_policy",
-        "x_events_cep_define",
-        "x_events_cep_measures",
-        "x_events_cep_all_rows",
-        "x_events_cep_skip_to_first",
-        "x_events_cep_skip_to_last",
-        # round 13 (the lifecycle entries share the memoized per-corpus
-        # index build, so after the first build the others time as serves
-        # -- the production amortization, VERDICT r12 item 6)
-        "x_sim_ann_index_compact",
-        "x_text_bm25_index_delete",
-        "x_text_bm25_index_compact",
-        "x_text_bm25_index_update",
-        "x_events_cep_alternation",
-        "x_events_cep_skip_past",
-        "x_events_cep_permute",
-        "x_pipeline_sequence_packing",
-        "x_sim_domain_centroids",
-        # round 11
-        "x_text_unigram_lm",
-        "x_text_unigram_encode",
-        "x_text_bm25",
-        "x_text_bm25_index_persist",
-        "x_sim_ann_index_persist",
-        "x_sim_nndescent",
-        "x_sim_hybrid_rrf",
-        "x_events_cep_pattern",
-        "x_dedup_qgram_policy",
-        # round 10
-        "x_text_stupid_backoff",
-        "x_pipeline_alpha_sampling",
-        "x_sim_ann_nprobe_sweep",
-        # round 9
-        "x_dedup_cc_bigstar",
-        "x_text_lr_classifier",
-        "x_text_ccnet_buckets",
-        "x_text_cdc_dedup",
-        "x_pipeline_dsir",
-        "x_pipeline_skew_report",
-        "x_sql_hll_sketch",
-        "x_sql_higher_order",
-        "x_sim_mrl_recall",
-        "x_sim_jl_projection",
-        "x_text_gopher_rules",
-        "x_text_zipf_fit",
-        "x_text_domain_divergence",
-        "x_text_rake_phrases",
-        "x_dedup_incremental",
-        "x_dedup_substring_spans",
-        "x_text_unigram_logprob",
-        "x_pipeline_decontaminate_semantic",
-        "x_pipeline_dataset_card",
-        "x_source_orc_roundtrip",
-        "x_pipeline_scd2_pointintime",
-        "x_pipeline_curriculum_shards",
-        "x_sql_recursive_cte",
-        "x_source_python_datasource",
-        "x_sql_variant_json",
-        "x_sql_udf_scalar",
-        "x_text_udtf_runs",
-        "x_text_bpe_merges",
-        "x_text_bpe_encode",
-        "x_text_nb_langid",
-        "x_text_chunk_overlap",
-        "x_asof_latest_order",
-        "x_asof_latest_order_7d",
-        "x_range_join_click_followups",
-        "x_range_interval_overlap",
-        "x_text_tfidf_top5",
-        "x_text_vocab_top50",
-        "x_text_bigram_top50",
-        "x_text_repetition",
-        "x_pipeline_canonical_docs",
-        "x_mutation_update_delete",
-        "x_mutation_time_travel",
-        "x_mutation_optimize_zorder",
-        "x_mutation_snapshot_diff",
-        "x_mutation_merge_upsert",
-        "x_mv_sketch_rollup",
-        "x_source_bucketed_join",
-        "x_source_schema_evolution",
-        "x_source_dynamic_partition_overwrite",
-        "x_source_jsonl_roundtrip",
-        "x_source_csv_roundtrip",
-        "x_source_csv_permissive",
-        "x_source_binaryfile",
-        "x_sql_approx_percentile",
-        "x_sql_runtime_bloom_join",
-        "x_sql_histogram_sketch",
-        "x_sql_market_basket",
-        "x_sql_try_arithmetic",
-        "x_sql_observe_metrics",
-        "x_pipeline_quality_gate",
-        "x_pipeline_decontaminate",
-        "x_pipeline_decontaminate_bloom",
-        "x_pipeline_pack_sequences",
-        "x_pipeline_shuffle_shards",
-        "x_pipeline_cdc_apply",
-        "x_pipeline_weighted_sample",
-        "x_pipeline_reservoir_sample",
-        "x_pipeline_scd2_history",
-        "x_pipeline_scd2_incremental",
-        "x_sql_percentiles",
-        "x_sql_stats_moments",
-        "x_events_props_json",
-        "x_events_daily_from_hourly",
-        "x_media_metadata",
-        "x_media_features",
-        "x_media_binary_dedup",
-        "x_sql_rollup",
-        "x_sql_ranking",
-        "x_sql_left_join_zero_counts",
-        "x_tpch_q1_pricing_summary",
-        "x_tpch_q2_min_cost_supplier",
-        "x_tpch_q3_shipping_priority",
-        "x_tpch_q4_order_priority",
-        "x_tpch_q5_local_supplier",
-        "x_tpch_q6_revenue_forecast",
-        "x_tpch_q7_volume_shipping",
-        "x_tpch_q8_market_share",
-        "x_tpch_q9_product_profit",
-        "x_tpch_q10_returned_items",
-        "x_tpch_q11_important_parts",
-        "x_tpch_q12_late_lines",
-        "x_tpch_q13_customer_distribution",
-        "x_tpch_q14_promo_revenue",
-        "x_tpch_q15_top_supplier",
-        "x_tpch_q16_supplier_part_counts",
-        "x_tpch_q17_small_quantity",
-        "x_tpch_q18_large_orders",
-        "x_tpch_q18_bucketed",
-        "x_tpch_q19_disjunctive_bands",
-        "x_tpch_q20_dominant_suppliers",
-        "x_tpch_q21_late_sole_supplier",
-        "x_tpch_q22_inactive_customers",
-        "x_tpch_rf_roundtrip",
-    ):
-        results[name] = timed(lambda name=name: q[name](spark, sf_dir))
-
     # --- fam_mv: the SQL rewrite itself, on a SHARED built fixture --------
     # The gated x_mv_sql_rewrite entries rebuild their own MV stack per call
     # (correctness isolation); that in-entry build + ANALYZE is ~3.3 s of
@@ -451,13 +228,13 @@ def main() -> None:
     from postgresql_datawarehouse_excercise_spark.queries.x_mv import _TEXT, _TEXT_MULTI
 
     with_count_stats(reg)
-    # Earlier bench entries may mutate sf_dir in place (the lakehouse
-    # mutation family swaps parquet files); the freshness gate then makes
-    # the rewriter (correctly) decline.  Rebuild once so the timing still
-    # measures the steady-state rewrite, and treat a residual decline as a
-    # skipped datapoint instead of a run-killing assertion (ADVICE r7).
+    # If the base tables changed on disk since mv_build_all, the freshness
+    # gate makes the rewriter (correctly) decline.  Rebuild once so the
+    # timing still measures the steady-state rewrite, and treat a residual
+    # decline as a skipped datapoint instead of a run-killing assertion
+    # (ADVICE r7).
     if not all(reg.is_fresh(sf_dir, n) for n in ("sales", "time", "view2")):
-        print("fam_mv: registry stale after earlier entries; rebuilding", file=sys.stderr)
+        print("fam_mv: registry stale; rebuilding", file=sys.stderr)
         reg.build_all(spark, sf_dir)
     reg.build(spark, sf_dir, "view2_stats")
     nav_mv = default_navigator(reg)
@@ -476,28 +253,15 @@ def main() -> None:
         except AssertionError as exc:
             print(f"{key}: rewrite declined, datapoint skipped: {exc}", file=sys.stderr)
 
-    # streaming datapoints (single run: stream startup dominates and
-    # best-of-N would triple the ~seconds-long fixed cost for no signal);
-    # x_stream_dedup doubles the input and drains via the distributed
-    # parquet sink -- the entry that used to collect O(N) rows to the driver
-    stream_entries = [name for name in registry if name.startswith("x_stream_")]
-
-    # --- full-registry micro sweep (VERDICT r14 item 6) -------------------
-    # Every registry entry not already timed above runs ONCE here, so
-    # BENCH_full.json covers the ENTIRE registry and a future entry can
-    # never be silently unbenched.  These are the sub-second micro
-    # variants (the q2/q3 report steps, the x_sql surface, the MV
-    # definitions) plus the three self-fixturing x_mv_sql_rewrite_*
-    # variants whose in-entry MV build dominates (their steady-state
-    # rewrite cost is the fam_mv block above); single-run because
-    # best-of-N would triple fixture cost for no signal on entries this
-    # small.  The tier rules live in BENCH.md.
-    for name in registry:
-        if name not in results and name not in stream_entries:
-            results[name] = timed(lambda name=name: q[name](spark, sf_dir), iters=1)
-
-    for name in stream_entries:
-        results[name] = timed(lambda name=name: q[name](spark, sf_dir), iters=1)
+    # --- every other registry entry ---------------------------------------
+    # BENCH_full.json covers the whole registry, so a new entry can never be
+    # silently unbenched.  Streams run last and once: stream startup
+    # dominates, and best-of-N would triple a fixed cost for no signal.
+    # Everything else is best-of-3.
+    for name in sorted(registry, key=lambda n: n.startswith("x_stream_")):
+        if name not in results:
+            fn = lambda name=name: q[name](spark, sf_dir)  # noqa: E731
+            results[name] = timed(fn, iters=1) if name.startswith("x_stream_") else timed(fn)
 
     total = round(sum(results.values()), 4)
 

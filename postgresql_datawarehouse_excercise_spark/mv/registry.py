@@ -330,7 +330,7 @@ class MVRegistry:
         tables._cache[mv.cache_key] = persisted
         return persisted
 
-    def build_all(self, spark: SparkSession, sf_dir: str, parallel: bool = True) -> None:
+    def build_all(self, spark: SparkSession, sf_dir: str) -> None:
         """Build every MV. Independent builds run concurrently from a thread
         pool (the Spark scheduler interleaves their jobs across cores;
         sequential small writes would otherwise pay one fixed job latency
@@ -347,13 +347,6 @@ class MVRegistry:
         callers see the ordinary parquet-backed lineage again."""
         persisted: list[DataFrame] = []
         try:
-            if not parallel:
-                for name in self.topo_order():
-                    self.build(spark, sf_dir, name)
-                    p = self._persist_shared_slot(spark, sf_dir, name)
-                    if p is not None:
-                        persisted.append(p)
-                return
             from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
             done: set[str] = set()

@@ -4,8 +4,8 @@ Drives __spark_entry__ exactly like the external driver: entry() smoke,
 then the first N entries of queries() (the driver's per-round budget
 lands on a prefix of the registry order) compared against oracle_sql()
 via DuckDB at sf0.01.  Run before a round closes so the hard gate's
-window -- sentinels, touched, new, and the stale tail the rotation
-fronts -- is known-green in advance.
+window -- sentinels, last round's red entries, and the stale tail the
+rotation fronts -- is known-green in advance.
 
 Usage: python scripts/gate_preflight.py [N] [START]   (default 52 0;
 START slices deeper into the ordering -- e.g. `110 50` pre-checks the

@@ -4,8 +4,8 @@ The driver's per-round gate checks a ~50-entry prefix of queries(); the
 ordering fronts never-green and stalest-last-green entries, so each
 round's rotation target is "the oldest tail".  This report shows, from
 the committed CORRECTNESS_r*.json files, how stale every entry is --
-the table the round-planning step reads before deciding the touched
-front's size (front + stale tail must fit one window).
+the table the round-planning step reads to see which entries the next
+window will reach.
 
 Usage: python scripts/stale_report.py [--list N]
   --list N   also list the entries whose last green round is among the
@@ -14,8 +14,6 @@ Usage: python scripts/stale_report.py [--list N]
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 from collections import Counter, defaultdict
@@ -23,29 +21,16 @@ from collections import Counter, defaultdict
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
+import __spark_entry__ as e  # noqa: E402
+
 
 def main() -> None:
-    history: dict[str, int] = {}
-    paths = sorted(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")))
-    for round_idx, path in enumerate(paths, start=1):
-        with open(path) as fh:
-            data = json.load(fh)
-        for name, row in data.items():
-            if (
-                isinstance(row, dict)
-                and not row.get("err")
-                and row.get("rows_match")
-                and row.get("schema_match", True)
-                and row.get("hash_match", True)
-            ):
-                history[name] = round_idx
-
-    from postgresql_datawarehouse_excercise_spark.queries import load_all
-
-    registry = set(load_all())
+    history = {name: last for name, (last, _) in e._verified_history().items()}
+    n_rounds = len(e._correctness_rounds())
+    registry = set(e.load_all())
     never = sorted(registry - set(history))
     dist = Counter(history[n] for n in history if n in registry)
-    print(f"registry: {len(registry)} entries; committed rounds: {len(paths)}")
+    print(f"registry: {len(registry)} entries; committed rounds: {n_rounds}")
     print(f"never green (new this round): {len(never)}")
     for n in never:
         print(f"   {n}")

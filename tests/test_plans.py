@@ -546,6 +546,16 @@ def test_bucketed_join_eliminates_input_shuffles(spark, sf_dir):
         shutil.rmtree(loc, ignore_errors=True)
 
 
+def test_partitioned_source_prunes_on_the_partition_column(spark, sf_dir):
+    """x_source_partitioned_pruned's day-range filter must reach the scan
+    as PartitionFilters (directory pruning), not a post-scan filter."""
+    import re
+
+    df = REG["x_source_partitioned_pruned"].fn(spark, sf_dir)
+    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plans.formatted_plan(df))
+    assert m and "day" in m.group(1)
+
+
 def test_q18_bucketed_layout_agg_and_join_shuffle_free(spark, sf_dir):
     """x_tpch_q18_bucketed's claim, pinned on the un-checkpointed shape:
     with lineitem and orders bucketed on the order key, the HAVING

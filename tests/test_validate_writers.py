@@ -1,15 +1,12 @@
-"""Constraint validators (SURVEY.md §2-A7/§7.3-D10) and layout-aware sinks."""
+"""Constraint validators (SURVEY.md §2-A7/§7.3-D10)."""
 
 from __future__ import annotations
-
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
-from postgresql_datawarehouse_excercise_spark import catalog, plans
+from postgresql_datawarehouse_excercise_spark import catalog
 from postgresql_datawarehouse_excercise_spark.etl import validate
-from postgresql_datawarehouse_excercise_spark.sources import writers
 
 
 def test_key_uniqueness_of_sales_fact(spark, sf_dir):
@@ -72,50 +69,3 @@ def test_one_pass_validator_matches_separate_checks(spark, sf_dir):
     assert "NULLs" in msg
     assert "n_regionkey not covered" in msg
 
-
-def test_partitioned_write_prunes(spark, sf_dir):
-    t = catalog.load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="pdwx-part-") + "/orders_by_status"
-    writers.write_partitioned(
-        t.orders.withColumn("status", F.col("o_orderstatus")), path, ["status"]
-    )
-    df = writers.read_partition_pruned(spark, path).filter(F.col("status") == "F")
-    plan = plans.formatted_plan(df)
-    # partition pruning shows up as a PartitionFilters entry on the scan
-    assert "PartitionFilters" in plan and "status" in plan
-    assert df.count() == t.orders.filter("o_orderstatus = 'F'").count()
-
-
-def test_sorted_write_roundtrip(spark, sf_dir):
-    t = catalog.load(spark, sf_dir)
-    path = tempfile.mkdtemp(prefix="pdwx-sort-") + "/lineitem_sorted"
-    writers.write_sorted(t.lineitem.select("l_orderkey", "l_quantity"), path, ["l_orderkey"])
-    assert spark.read.parquet(path).count() == t.lineitem.count()
-
-
-def test_bucketed_write_joins_without_shuffle(spark, sf_dir):
-    """The 100 TB co-location story: two tables bucketed on the join key must
-    sort-merge-join with ZERO Exchange nodes (the bucket layout replaces the
-    shuffle; the reference's index-backed repeated joins, SURVEY.md §2-A7)."""
-    t = catalog.load(spark, sf_dir)
-    writers.write_bucketed(
-        t.lineitem.select("l_orderkey", "l_quantity"),
-        "li_bkt", ["l_orderkey"], num_buckets=8, sort_cols=["l_orderkey"],
-    )
-    writers.write_bucketed(
-        t.orders.select("o_orderkey", "o_totalprice"),
-        "ord_bkt", ["o_orderkey"], num_buckets=8, sort_cols=["o_orderkey"],
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("li_bkt").join(
-            spark.table("ord_bkt"), F.col("l_orderkey") == F.col("o_orderkey")
-        )
-        assert plans.num_shuffles(joined) == 0
-        assert plans.num_sortmerge_joins(joined) == 1
-        assert joined.count() == t.lineitem.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_bkt")
-        spark.sql("DROP TABLE IF EXISTS ord_bkt")
