@@ -7,6 +7,13 @@ aggregate navigator can re-aggregate any of them; report-style MVs (top-k
 results, scalars, period-filtered reports) declare no measures and are
 therefore never navigation targets -- matching the reference, where only
 sales/View1/View2/View3 are used as rewrite sources.
+
+Every builder is ``(tables, dep)``.  The reference defines its derived MVs
+FROM already-materialized MVs (assignment-5.sql:165-170, 221-263, 401-409),
+so those builders read their inputs through ``dep(name)`` and apply the
+same step function the raw reports use (queries/q3_reports.py,
+queries/q4_views.py); the registry decides whether ``dep`` serves the
+persisted parquet or the upstream builder over lineage.
 """
 
 from __future__ import annotations
@@ -15,24 +22,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
-from ..functions import avg4_exact, ratio
+from ..functions import avg4_exact
 from ..queries.q3_reports import (
     _amount_per_order,
-    _amounts_of_best_buyer,
-    _best_buyer_id,
     _best_buyers,
+    amounts_of_best_buyer,
+    no_of_ord,
+    ord_avg_amnt,
+    perc_of_ord,
 )
-from ..queries.q4_views import _geo, _view1, _view2, _view3
+from ..queries.q4_views import _geo, _view1, _view2, view3
 from ..queries.q5_windows import _period_sales
 from .navigator import AggregateNavigator
-from .registry import MVDef, MVRegistry
+from .registry import Dep, MVDef, MVRegistry
 
 
-def _sales(t: catalog.Tables) -> DataFrame:
+def _sales(t: catalog.Tables, dep: Dep) -> DataFrame:
     return t.sales()
 
 
-def _sales_table(t: catalog.Tables) -> DataFrame:
+def _sales_table(t: catalog.Tables, dep: Dep) -> DataFrame:
     """The reference's plain-table twin of the sales MV
     (assignment-5.sql:90-112: CREATE TABLE sales_table with PK
     (customerid,timeid,isbn), NOT NULL, and FKs to customer/time/book, then
@@ -61,68 +70,28 @@ def _sales_table(t: catalog.Tables) -> DataFrame:
     return df
 
 
-def _time(t: catalog.Tables) -> DataFrame:
+def _time(t: catalog.Tables, dep: Dep) -> DataFrame:
     return t.time_dim()
 
 
-def _sum_customer_per_day(t: catalog.Tables) -> DataFrame:
+def _sum_customer_per_day(t: catalog.Tables, dep: Dep) -> DataFrame:
     return t.sales().groupBy("customerid", "timeid").agg(F.sum("amnt").alias("amnt"))
 
 
-def _daily_avg(t: catalog.Tables) -> DataFrame:
-    per_cd = _sum_customer_per_day(t)
-    return per_cd.groupBy("timeid").agg(
+def _daily_avg(t: catalog.Tables, dep: Dep) -> DataFrame:
+    return dep("sum_customer_per_day").groupBy("timeid").agg(
         F.count(F.lit(1)).alias("number_of_customer_a_day"),
         avg4_exact(F.sum("amnt"), F.count(F.lit(1))).alias("avg_spending"),
     )
 
 
-def _avg_amnt_view(t: catalog.Tables) -> DataFrame:
+def _avg_amnt_view(t: catalog.Tables, dep: Dep) -> DataFrame:
     return (
         t.sales()
         .groupBy("customerid")
         .agg(avg4_exact(F.sum("amnt"), F.count(F.lit(1))).alias("avg_amnt"))
     )
 
-
-def _best_buyers_mv(t: catalog.Tables) -> DataFrame:
-    return _best_buyers(t.spark, t.sf_dir)
-
-
-def _ord_avg_amnt(t: catalog.Tables) -> DataFrame:
-    return _amount_per_order(t).agg(
-        avg4_exact(F.sum("order_amount"), F.count(F.lit(1))).alias("ord_avg_amnt")
-    )
-
-
-def _no_of_ord(t: catalog.Tables) -> DataFrame:
-    return t.orders.join(
-        _best_buyer_id(t), t.orders.o_custkey == F.col("customerid"), "left_semi"
-    ).agg(F.count(F.lit(1)).alias("no_of_ord"))
-
-
-def _apobc(t: catalog.Tables) -> DataFrame:
-    return _amounts_of_best_buyer(t)
-
-
-def _perc_of_ord(t: catalog.Tables) -> DataFrame:
-    return (
-        _apobc(t)
-        .crossJoin(F.broadcast(_ord_avg_amnt(t)))
-        .crossJoin(F.broadcast(_no_of_ord(t)))
-        .filter(F.col("order_amount") > F.col("ord_avg_amnt"))
-        .groupBy("no_of_ord")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(ratio(F.col("cnt") * F.lit(100), F.col("no_of_ord")).alias("perc_of_ord"))
-    )
-
-
-# --- dep-reading builder twins (MVDef.builder_from_deps) -------------------
-# The reference defines these MVs FROM already-materialized MVs
-# (assignment-5.sql:221-223, 232-235, 244-250, 259-263, 165-170, 401-409);
-# each twin reproduces its pure builder's values exactly (arms pinned in
-# tests/test_mv.py) while reading the persisted dep parquet instead of
-# re-deriving the base joins.
 
 def _top_buyer_from(best_buyers: DataFrame) -> DataFrame:
     """IN (SELECT customer_id FROM best_buyers LIMIT 1): parquet preserves
@@ -137,65 +106,23 @@ def _top_buyer_from(best_buyers: DataFrame) -> DataFrame:
     )
 
 
-def _ord_avg_amnt_from(t: catalog.Tables, deps: dict[str, DataFrame]) -> DataFrame:
-    return deps["amount_per_order"].agg(
-        avg4_exact(F.sum("order_amount"), F.count(F.lit(1))).alias("ord_avg_amnt")
+def _no_of_ord(t: catalog.Tables, dep: Dep) -> DataFrame:
+    return no_of_ord(t.orders, _top_buyer_from(dep("best_buyers")))
+
+
+def _apobc(t: catalog.Tables, dep: Dep) -> DataFrame:
+    return amounts_of_best_buyer(
+        dep("amount_per_order"), t.orders, _top_buyer_from(dep("best_buyers"))
     )
 
 
-def _no_of_ord_from(t: catalog.Tables, deps: dict[str, DataFrame]) -> DataFrame:
-    best = _top_buyer_from(deps["best_buyers"])
-    return t.orders.join(
-        best, t.orders.o_custkey == F.col("customerid"), "left_semi"
-    ).agg(F.count(F.lit(1)).alias("no_of_ord"))
-
-
-def _apobc_from(t: catalog.Tables, deps: dict[str, DataFrame]) -> DataFrame:
-    apo = deps["amount_per_order"]
-    ords = t.orders.select("o_orderkey", "o_custkey").join(
-        _top_buyer_from(deps["best_buyers"]),
-        F.col("o_custkey") == F.col("customerid"),
-        "left_semi",
-    )
-    return apo.join(ords, apo.orderid == ords.o_orderkey).select(
-        "orderid", "order_amount"
+def _perc_of_ord(t: catalog.Tables, dep: Dep) -> DataFrame:
+    return perc_of_ord(
+        dep("amount_per_order_by_customer"), dep("ord_avg_amnt"), dep("no_of_ord")
     )
 
 
-def _perc_of_ord_from(t: catalog.Tables, deps: dict[str, DataFrame]) -> DataFrame:
-    return (
-        deps["amount_per_order_by_customer"]
-        .crossJoin(F.broadcast(deps["ord_avg_amnt"]))
-        .crossJoin(F.broadcast(deps["no_of_ord"]))
-        .filter(F.col("order_amount") > F.col("ord_avg_amnt"))
-        .groupBy("no_of_ord")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(ratio(F.col("cnt") * F.lit(100), F.col("no_of_ord")).alias("perc_of_ord"))
-    )
-
-
-def _daily_avg_from(t: catalog.Tables, deps: dict[str, DataFrame]) -> DataFrame:
-    return deps["sum_customer_per_day"].groupBy("timeid").agg(
-        F.count(F.lit(1)).alias("number_of_customer_a_day"),
-        avg4_exact(F.sum("amnt"), F.count(F.lit(1))).alias("avg_spending"),
-    )
-
-
-def _view3_from(t: catalog.Tables, deps: dict[str, DataFrame]) -> DataFrame:
-    return deps["view1"].groupBy("district", "timeid", "dayofweek", "partkey").agg(
-        F.sum("amnt").alias("sum_d")
-    )
-
-
-def _view1_mv(t: catalog.Tables) -> DataFrame:
-    return _view1(t)
-
-
-def _view2_mv(t: catalog.Tables) -> DataFrame:
-    return _view2(t).withColumnRenamed("sum_d", "amnt")
-
-
-def _view2_stats(t: catalog.Tables) -> DataFrame:
+def _view2_stats(t: catalog.Tables, dep: Dep) -> DataFrame:
     """Count/extrema-bearing twin of view2: same (customer, year) grain
     with SUM(amnt), COUNT(*), MAX(amnt), MIN(amnt) materialized, making
     COUNT/AVG/MAX/MIN queries navigable (AVG re-derives as SUM(sum)/
@@ -229,11 +156,7 @@ def _view2_stats(t: catalog.Tables) -> DataFrame:
     )
 
 
-def _view3_mv(t: catalog.Tables) -> DataFrame:
-    return _view3(t).withColumnRenamed("sum_d", "amnt")
-
-
-def _customer_spending(t: catalog.Tables) -> DataFrame:
+def _customer_spending(t: catalog.Tables, dep: Dep) -> DataFrame:
     return (
         _period_sales(t)
         .groupBy("customerid", "name", "city")
@@ -241,7 +164,7 @@ def _customer_spending(t: catalog.Tables) -> DataFrame:
     )
 
 
-def _sum_per_day_per_city(t: catalog.Tables) -> DataFrame:
+def _sum_per_day_per_city(t: catalog.Tables, dep: Dep) -> DataFrame:
     return (
         _period_sales(t)
         .groupBy("city", "timeid", "day")
@@ -294,51 +217,47 @@ def default_registry(warehouse: str) -> MVRegistry:
     )
     reg.register(
         MVDef("avg_spending_by_customer_on_each_day", _daily_avg, A({"timeid"}), {},
-              deps=("sum_customer_per_day",), doc="assignment-5.sql:165-170",
-              builder_from_deps=_daily_avg_from)
+              deps=("sum_customer_per_day",), doc="assignment-5.sql:165-170")
     )
     reg.register(
-        MVDef("best_buyers", _best_buyers_mv, A(), {}, deps=("sales",),
+        MVDef("best_buyers", lambda t, dep: _best_buyers(t.spark, t.sf_dir), A(), {},
+              deps=("sales",),
               doc="assignment-5.sql:191-200 (report)")
     )
     reg.register(
-        MVDef("amount_per_order", _amount_per_order, A({"orderid"}),
+        MVDef("amount_per_order", lambda t, dep: _amount_per_order(t), A({"orderid"}),
               {"order_amount": "sum"}, doc="assignment-5.sql:213-218")
     )
-    reg.register(MVDef("ord_avg_amnt", _ord_avg_amnt, A(), {}, deps=("amount_per_order",),
-                       doc="assignment-5.sql:221-223",
-                       builder_from_deps=_ord_avg_amnt_from))
+    reg.register(MVDef("ord_avg_amnt", lambda t, dep: ord_avg_amnt(dep("amount_per_order")),
+                       A(), {}, deps=("amount_per_order",), doc="assignment-5.sql:221-223"))
     reg.register(MVDef("no_of_ord", _no_of_ord, A(), {},
                        deps=("sales", "best_buyers"),
-                       doc="assignment-5.sql:232-235",
-                       builder_from_deps=_no_of_ord_from))
+                       doc="assignment-5.sql:232-235"))
     reg.register(
         MVDef("amount_per_order_by_customer", _apobc, A({"orderid"}), {},
               deps=("amount_per_order", "sales", "best_buyers"),
-              doc="assignment-5.sql:244-250",
-              builder_from_deps=_apobc_from)
+              doc="assignment-5.sql:244-250")
     )
     reg.register(MVDef("perc_of_ord", _perc_of_ord, A(), {},
                        deps=("amount_per_order_by_customer", "ord_avg_amnt", "no_of_ord"),
-                       doc="assignment-5.sql:259-263",
-                       builder_from_deps=_perc_of_ord_from))
+                       doc="assignment-5.sql:259-263"))
     reg.register(
-        MVDef("view1", _view1_mv,
+        MVDef("view1", lambda t, dep: _view1(t),
               A({"customerid", "name", "district", "timeid", "dayofweek", "partkey"}),
               {"amnt": "sum"}, deps=("sales", "time"), doc="assignment-5.sql:300-310",
               measure_exprs={"quantity * price": "amnt"})
     )
     reg.register(
-        MVDef("view2", _view2_mv, A({"customerid", "name", "year"}), {"amnt": "sum"},
+        MVDef("view2", lambda t, dep: _view2(t).withColumnRenamed("sum_d", "amnt"),
+              A({"customerid", "name", "year"}), {"amnt": "sum"},
               deps=("sales", "time"), doc="assignment-5.sql:313-321",
               measure_exprs={"quantity * price": "amnt"})
     )
     reg.register(
-        MVDef("view3", _view3_mv, A({"district", "timeid", "dayofweek", "partkey"}),
+        MVDef("view3", lambda t, dep: view3(dep("view1")).withColumnRenamed("sum_d", "amnt"),
+              A({"district", "timeid", "dayofweek", "partkey"}),
               {"amnt": "sum"}, deps=("view1",), doc="assignment-5.sql:401-409",
-              measure_exprs={"quantity * price": "amnt"},
-              builder_from_deps=lambda t, deps: _view3_from(t, deps).withColumnRenamed(
-                  "sum_d", "amnt"))
+              measure_exprs={"quantity * price": "amnt"})
     )
     reg.register(
         MVDef("customer_spending", _customer_spending, A(), {},

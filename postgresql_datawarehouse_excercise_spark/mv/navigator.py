@@ -62,16 +62,12 @@ def fd_closure(attrs: frozenset[str]) -> frozenset[str]:
 
 @dataclass(frozen=True)
 class AggQuery:
-    """Logical descriptor of 'SELECT group_cols, AGG(measure) ... WHERE
+    """Logical descriptor of 'SELECT group_cols, SUM(measure) ... WHERE
     filter_attrs ... GROUP BY group_cols'."""
 
     group_cols: frozenset[str]
-    measure: str  # measure column name, e.g. 'amnt'
-    agg: str = "sum"  # only additive aggs are navigable
+    measure: str  # measure column name of a 'sum'-kind MV measure, e.g. 'amnt'
     filter_attrs: frozenset[str] = frozenset()
-
-    def needed_attrs(self) -> frozenset[str]:
-        return self.group_cols | self.filter_attrs
 
 
 @dataclass
@@ -96,27 +92,11 @@ class AggregateNavigator:
         self.bridges[(from_attr, to_attr)] = fn
 
     def eligible(self, q: AggQuery) -> list[Candidate]:
-        """All MVs passing the four checks, cheapest first."""
-        out: list[Candidate] = []
-        for name, mv in self.registry.defs.items():
-            # Aggregate computability: measure must be an additive measure
-            # of the view (SUM re-aggregates; COUNT re-aggregates as SUM).
-            kind = mv.measures.get(q.measure)
-            if kind not in ("sum", "count") or q.agg not in ("sum", "count"):
-                continue
-            if q.agg == "count" and kind != "count":
-                continue
-            grain = mv.grain
-            reach = fd_closure(grain)
-            need = q.needed_attrs()
-            # Grouping compatibility + data sufficiency (incl. FD rescue).
-            if not need <= reach:
-                continue
-            direct = need & grain
-            via_fd = need - grain
-            out.append(Candidate(name, self.registry.rowcount(name), direct, via_fd))
-        out.sort(key=lambda c: (c.rowcount, c.mv_name))
-        return out
+        """All MVs passing the four checks for SUM(q.measure), cheapest
+        first."""
+        return self.eligible_multi(
+            q.group_cols, q.filter_attrs, frozenset({("sum", q.measure)})
+        )
 
     def choose(self, q: AggQuery) -> Candidate | None:
         cands = self.eligible(q)
@@ -134,8 +114,8 @@ class AggregateNavigator:
         / ('max', m) / ('min', m) pairs -- SUM re-aggregates an additive sum
         column, COUNT(*) re-sums a count column, AVG needs both
         (SUM(sum)/SUM(cnt)), MAX/MIN re-aggregate an extrema column
-        (max-of-max / min-of-min are lossless).  Grouping / data
-        sufficiency / FD-bridge checks are identical to ``eligible``.
+        (max-of-max / min-of-min are lossless).  Grouping compatibility
+        and data sufficiency (with FD rescue) follow below.
 
         SEMANTIC CONTRACT on MVDef.measures (holds for every registered MV;
         a violating registration would silently produce wrong rewrites):

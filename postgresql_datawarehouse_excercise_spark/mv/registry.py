@@ -1,8 +1,9 @@
 """Materialized-view registry.
 
 Spark has no MV object (SURVEY.md 7.3 D6): an MV here is a named builder
-function whose result is persisted as a parquet table under a warehouse
-directory, plus metadata the aggregate navigator uses for rewrites:
+function ``(tables, dep) -> DataFrame`` whose result is persisted as a
+parquet table under a warehouse directory, plus metadata the aggregate
+navigator uses for rewrites:
 
   * ``grain``    -- the grouping attribute set of the view (unified attribute
                     namespace, see navigator.FDS);
@@ -34,10 +35,17 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import catalog
 
 
+Dep = Callable[[str], DataFrame]  # MV name -> its rows; see MVDef.builder
+
+
 @dataclass
 class MVDef:
     name: str
-    builder: Callable[[catalog.Tables], DataFrame]
+    # (tables, dep) -> rows.  Upstream MVs are read through dep(name), as
+    # the reference defines its derived MVs FROM materialized MVs
+    # (assignment-5.sql:221-263, 401-409); MVRegistry._dep decides whether
+    # dep serves the persisted parquet or the dep's builder over lineage.
+    builder: Callable[[catalog.Tables, Dep], DataFrame]
     grain: frozenset[str]
     measures: dict[str, str]  # column -> 'sum' | 'count' | 'max' | 'min' | 'avg4'
     # ('max'/'min' columns follow the <measure>__<kind> naming convention so
@@ -64,20 +72,6 @@ class MVDef:
     # declared text and the query's measure through the same analyzer, so
     # SUM(quantity*price)-shaped texts re-aggregate from the view.
     measure_exprs: dict[str, str] = field(default_factory=dict)
-    # dep-reading twin of `builder`: (tables, {dep name -> persisted dep
-    # DataFrame}) -> result.  The reference defines its derived MVs FROM the
-    # already-materialized MVs (ord_avg_amnt FROM amount_per_order,
-    # assignment-5.sql:221-223; perc_of_ord FROM three MVs, :259-263;
-    # View3 FROM View1, :401-409), so when every dep is built AND fresh the
-    # build reads those parquet tables instead of re-deriving the whole base
-    # lineage -- the reference's own semantics, and it cuts the re-derived
-    # base joins out of build_all's critical path.  SEMANTIC CONTRACT on the
-    # declarer: output values must equal `builder`'s exactly (the arms are
-    # pinned against each other in tests).  Falls back to `builder` whenever
-    # a dep is missing or stale, which is always correct, just slower.
-    builder_from_deps: Callable[
-        [catalog.Tables, dict[str, DataFrame]], DataFrame
-    ] | None = None
 
 
 def base_fingerprint(sf_dir: str) -> tuple:
@@ -233,7 +227,23 @@ class MVRegistry:
         fp = self.versions.get(name)
         return fp is not None and fp == base_fingerprint(sf_dir)
 
+    def _dep(
+        self, spark: SparkSession, sf_dir: str, tables: catalog.Tables, persisted: bool
+    ) -> Dep:
+        """The lazy ``dep`` handed to builders: with ``persisted``, a built
+        and fresh dep is its parquet (which keeps re-derived base joins off
+        build_all's critical path); otherwise it is the dep's own builder
+        over ``tables``, resolving its deps the same way."""
+
+        def dep(name: str) -> DataFrame:
+            if persisted and self.is_built(name) and self.is_fresh(sf_dir, name):
+                return self.read(spark, name)
+            return self.defs[name].builder(tables, dep)
+
+        return dep
+
     def build(self, spark: SparkSession, sf_dir: str, name: str) -> None:
+        """Build one MV; its deps resolve through _dep(persisted=True)."""
         mv = self.defs[name]
         # capture the base snapshot BEFORE reading it: if a mutation lands
         # while the build runs, the recorded version mismatches the new
@@ -243,15 +253,8 @@ class MVRegistry:
             # an MV must not be (re)built from its own persisted output:
             # evict so the builder recomputes from base lineage
             catalog.load(spark, sf_dir)._cache.pop(mv.cache_key, None)
-        if mv.builder_from_deps is not None and all(
-            self.is_built(d) and self.is_fresh(sf_dir, d) for d in mv.deps
-        ):
-            df = mv.builder_from_deps(
-                catalog.load(spark, sf_dir),
-                {d: self.read(spark, d) for d in mv.deps},
-            )
-        else:
-            df = mv.builder(catalog.load(spark, sf_dir))
+        tables = catalog.load(spark, sf_dir)
+        df = mv.builder(tables, self._dep(spark, sf_dir, tables, persisted=True))
         if mv.link_from and self.is_built(mv.link_from):
             # builder already ran (validations fired); share the twin's files
             from ..operators.mutations import _link_tree
@@ -299,18 +302,6 @@ class MVRegistry:
             self.versions[name] = fp
         else:
             self.versions.pop(name, None)
-
-    def topo_levels(self) -> list[list[str]]:
-        """Dependency levels: every MV in a level depends only on earlier
-        levels, so a level's builds are independent."""
-        level_of: dict[str, int] = {}
-        for n in self.topo_order():
-            deps = self.defs[n].deps
-            level_of[n] = 1 + max((level_of[d] for d in deps), default=-1)
-        levels: list[list[str]] = [[] for _ in range(max(level_of.values()) + 1)]
-        for n, lv in level_of.items():
-            levels[lv].append(n)
-        return levels
 
     def _persist_shared_slot(self, spark: SparkSession, sf_dir: str, name: str) -> "DataFrame | None":
         """After an MV with a catalog cache slot builds, Spark-persist its
@@ -461,7 +452,11 @@ class MVRegistry:
                 # (e.g. a sales DF memoized by a previous refresh call)
                 delta._cache.pop("sales", None)
                 delta._cache[self.defs["time"].cache_key] = self.read(spark, "time")
-            delta_rows = mv.builder(delta)
+            # deps resolve to lineage over the delta, never to the
+            # persisted full-history MV (that would re-add old rows)
+            delta_rows = mv.builder(
+                delta, self._dep(spark, sf_dir, delta, persisted=False)
+            )
             if self.is_built(name):
                 existing = self.read(spark, name)
                 keys = [c for c in existing.columns if c not in mv.measures]

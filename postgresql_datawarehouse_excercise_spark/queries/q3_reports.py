@@ -28,24 +28,28 @@ LIMIT 5
 """
 
 
-def _best_buyers(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
-    t = catalog.load(spark, sf_dir)
-    sales = t.sales()
-    cust = t.customer.select(
-        F.col("c_custkey").alias("customerid"), F.col("c_name").alias("name")
-    )
-    per_cust = sales.groupBy("customerid").agg(F.sum("amnt").alias("spending_d"))
+def _top5_buyers(spend: DataFrame) -> DataFrame:
+    """The best-buyers report tail shared by every Q3a/Q4a form: top 5 of a
+    (customerid, name, spending_d) frame, customerid breaking ties."""
     return (
-        # customer scales with SF: no static hint; AQE broadcasts at runtime
-        per_cust.join(cust, "customerid")
-        .orderBy(F.col("spending_d").desc(), F.col("customerid").asc())
-        .limit(k)
+        spend.orderBy(F.col("spending_d").desc(), F.col("customerid").asc())
+        .limit(5)
         .select(
             F.col("customerid").alias("customer_id"),
             "name",
             money(F.col("spending_d")).alias("spending"),
         )
     )
+
+
+def _best_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = catalog.load(spark, sf_dir)
+    cust = t.customer.select(
+        F.col("c_custkey").alias("customerid"), F.col("c_name").alias("name")
+    )
+    per_cust = t.sales().groupBy("customerid").agg(F.sum("amnt").alias("spending_d"))
+    # customer scales with SF: no static hint; AQE broadcasts at runtime
+    return _top5_buyers(per_cust.join(cust, "customerid"))
 
 
 @query("q3a_best_buyers", oracle=_BEST_BUYERS_SQL)
@@ -67,7 +71,6 @@ amount_per_order AS (
 
 
 def _amount_per_order(t: catalog.Tables) -> DataFrame:
-
     line = t.lineitem.select("l_orderkey", "l_partkey", "l_quantity")
     prices = t.part.select("p_partkey", "p_retailprice")
     return (
@@ -117,6 +120,13 @@ best_buyer AS (
 )"""
 
 
+def ord_avg_amnt(apo: DataFrame) -> DataFrame:
+    """Exact 4-dp grand average of amount_per_order (assignment-5.sql:221-223)."""
+    return apo.agg(
+        avg4_exact(F.sum("order_amount"), F.count(F.lit(1))).alias("ord_avg_amnt")
+    )
+
+
 def _best_buyer_id(t: catalog.Tables) -> DataFrame:
     return (
         t.sales()
@@ -128,6 +138,14 @@ def _best_buyer_id(t: catalog.Tables) -> DataFrame:
     )
 
 
+def no_of_ord(orders: DataFrame, best: DataFrame) -> DataFrame:
+    """Order count of `best` (one customerid row) -- IN (subquery LIMIT 1)
+    as a left-semi join (assignment-5.sql:232-235, SURVEY 2 B8/C5)."""
+    return orders.join(
+        best, orders.o_custkey == F.col("customerid"), "left_semi"
+    ).agg(F.count(F.lit(1)).alias("no_of_ord"))
+
+
 @query(
     "q3b_no_of_ord",
     oracle=f"""{_W},{_BEST_ID_CTE}
@@ -136,29 +154,17 @@ FROM orders WHERE o_custkey IN (SELECT customerid FROM best_buyer)
 """,
 )
 def q3b_no_of_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Order count of the best buyer -- IN (subquery LIMIT 1) expressed as a
-    left-semi join (assignment-5.sql:232-235, SURVEY 2 B8/C5)."""
+    """Order count of the best buyer (assignment-5.sql:232-235)."""
     t = catalog.load(spark, sf_dir)
-    best = _best_buyer_id(t)
-    return (
-        t.orders.join(
-            best, t.orders.o_custkey == best.customerid, "left_semi"
-        ).agg(F.count(F.lit(1)).alias("no_of_ord"))
-    )
+    return no_of_ord(t.orders, _best_buyer_id(t))
 
 
-_APOBC_CTE = f"""
-amount_per_order_by_customer AS (
-  SELECT a.orderid, a.order_amount
-  FROM amount_per_order a JOIN orders o ON a.orderid = o.o_orderkey
-  WHERE o.o_custkey IN (SELECT customerid FROM best_buyer)
-)"""
-
-
-def _amounts_of_best_buyer(t: catalog.Tables) -> DataFrame:
-    apo = _amount_per_order(t)
-    best = _best_buyer_id(t)
-    ords = t.orders.select("o_orderkey", "o_custkey").join(
+def amounts_of_best_buyer(
+    apo: DataFrame, orders: DataFrame, best: DataFrame
+) -> DataFrame:
+    """amount_per_order rows of the orders placed by `best` (one
+    customerid row)."""
+    ords = orders.select("o_orderkey", "o_custkey").join(
         best, F.col("o_custkey") == F.col("customerid"), "left_semi"
     )
     return apo.join(ords, apo.orderid == ords.o_orderkey).select(
@@ -180,9 +186,8 @@ SELECT orderid, CAST(ROUND(order_amount, 2) AS DOUBLE) AS order_amount FROM apob
 def q3b_amounts_of_best_buyer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-order amounts of the best buyer (assignment-5.sql:244-250)."""
     t = catalog.load(spark, sf_dir)
-    return _amounts_of_best_buyer(t).select(
-        "orderid", money(F.col("order_amount")).alias("order_amount")
-    )
+    apobc = amounts_of_best_buyer(_amount_per_order(t), t.orders, _best_buyer_id(t))
+    return apobc.select("orderid", money(F.col("order_amount")).alias("order_amount"))
 
 
 _PERC_CTE = f"""{_APO_CTE},{_BEST_ID_CTE},
@@ -207,20 +212,10 @@ perc AS (
 )"""
 
 
-def _perc_of_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = catalog.load(spark, sf_dir)
-    apobc = _amounts_of_best_buyer(t)
-    # Scalar MVs joined by cartesian product -- the reference's degenerate
-    # NATURAL JOIN with no shared columns (assignment-5.sql:259-263, SURVEY
-    # 2 C3 / 7.3 D3): explicit crossJoin of 1-row DataFrames.
-    ord_avg = _amount_per_order(t).agg(
-        avg4_exact(F.sum("order_amount"), F.count(F.lit(1))).alias("ord_avg_amnt")
-    )
-    no_of_ord = (
-        t.orders.join(
-            _best_buyer_id(t), t.orders.o_custkey == F.col("customerid"), "left_semi"
-        ).agg(F.count(F.lit(1)).alias("no_of_ord"))
-    )
+def perc_of_ord(apobc: DataFrame, ord_avg: DataFrame, no_of_ord: DataFrame) -> DataFrame:
+    """Scalar MVs joined by cartesian product -- the reference's degenerate
+    NATURAL JOIN with no shared columns (assignment-5.sql:259-263, SURVEY
+    2 C3 / 7.3 D3): explicit crossJoin of 1-row DataFrames."""
     return (
         apobc.crossJoin(F.broadcast(ord_avg))
         .crossJoin(F.broadcast(no_of_ord))
@@ -230,6 +225,16 @@ def _perc_of_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             ratio(F.col("cnt") * F.lit(100), F.col("no_of_ord")).alias("perc_of_ord")
         )
+    )
+
+
+def _perc_of_ord(spark: SparkSession, sf_dir: str) -> DataFrame:
+    t = catalog.load(spark, sf_dir)
+    apo, best = _amount_per_order(t), _best_buyer_id(t)
+    return perc_of_ord(
+        amounts_of_best_buyer(apo, t.orders, best),
+        ord_avg_amnt(apo),
+        no_of_ord(t.orders, best),
     )
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from .. import catalog
 from ..etl.sales_fact import ORACLE_SALES_CTE
 from ..functions import cents_sum, money
-from .q3_reports import _BEST_BUYERS_SQL, _best_buyers
+from .q3_reports import _BEST_BUYERS_SQL, _best_buyers, _top5_buyers
 from . import query
 
 _W = f"WITH {ORACLE_SALES_CTE}"
@@ -112,11 +112,10 @@ def q4_view2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _view3(t: catalog.Tables) -> DataFrame:
-    """(district, day, book) aggregate: drops the customer grain
+def view3(view1: DataFrame) -> DataFrame:
+    """(district, day, book) aggregate of View1: drops the customer grain
     (sql:401-409)."""
-    v1 = _view1(t)
-    return v1.groupBy("district", "timeid", "dayofweek", "partkey").agg(
+    return view1.groupBy("district", "timeid", "dayofweek", "partkey").agg(
         F.sum("amnt").alias("sum_d")
     )
 
@@ -138,7 +137,7 @@ FROM view3
 def q4_view3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View3: per-(district, day, part) spending (assignment-5.sql:401-409)."""
     t = catalog.load(spark, sf_dir)
-    return _view3(t).select(
+    return view3(_view1(t)).select(
         "district", "timeid", "dayofweek", "partkey", money(F.col("sum_d")).alias("sum_amnt")
     )
 
@@ -163,16 +162,7 @@ def q4a_best_buyers_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("customerid"))
         .agg(cents_sum("l_quantity", "p_retailprice").alias("spending_d"))
     )
-    return (
-        spend.join(cust, "customerid")
-        .orderBy(F.col("spending_d").desc(), F.col("customerid").asc())
-        .limit(5)
-        .select(
-            F.col("customerid").alias("customer_id"),
-            "name",
-            money(F.col("spending_d")).alias("spending"),
-        )
-    )
+    return _top5_buyers(spend.join(cust, "customerid"))
 
 
 @query("q4a_best_buyers_mart", oracle=_BEST_BUYERS_SQL)
@@ -185,18 +175,9 @@ def q4a_best_buyers_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q4a_best_buyers_view1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best buyers from View1 (full fact grain + names already joined) --
     the join-elimination step of the MV ladder (assignment-5.sql:366-378)."""
-    t = catalog.load(spark, sf_dir)
-    v1 = _view1(t)
-    return (
-        v1.groupBy("customerid", "name")
-        .agg(F.sum("amnt").alias("spending_d"))
-        .orderBy(F.col("spending_d").desc(), F.col("customerid").asc())
-        .limit(5)
-        .select(
-            F.col("customerid").alias("customer_id"),
-            "name",
-            money(F.col("spending_d")).alias("spending"),
-        )
+    v1 = _view1(catalog.load(spark, sf_dir))
+    return _top5_buyers(
+        v1.groupBy("customerid", "name").agg(F.sum("amnt").alias("spending_d"))
     )
 
 
@@ -205,18 +186,9 @@ def q4a_best_buyers_view2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best buyers by re-aggregating View2's per-year sums -- the grouping-
     compatibility + aggregate-computability MV rewrite (assignment-5.sql:
     381-393, findings assignment-5.md:630-631)."""
-    t = catalog.load(spark, sf_dir)
-    v2 = _view2(t)
-    return (
-        v2.groupBy("customerid", "name")
-        .agg(F.sum("sum_d").alias("spending_d"))
-        .orderBy(F.col("spending_d").desc(), F.col("customerid").asc())
-        .limit(5)
-        .select(
-            F.col("customerid").alias("customer_id"),
-            "name",
-            money(F.col("spending_d")).alias("spending"),
-        )
+    v2 = _view2(catalog.load(spark, sf_dir))
+    return _top5_buyers(
+        v2.groupBy("customerid", "name").agg(F.sum("sum_d").alias("spending_d"))
     )
 
 
@@ -250,11 +222,14 @@ def _geo(t: catalog.Tables) -> DataFrame:
     )
 
 
-def _top_country_from(per_cust: DataFrame, geo: DataFrame) -> DataFrame:
+def _top_country(df: DataFrame, bridge: DataFrame, key: str, measure: str) -> DataFrame:
+    """The top-country report tail shared by every Q4b form: join `df` to a
+    geo bridge carrying `country` on `key`, sum `measure` per country and
+    keep the top one, country breaking ties."""
     return (
-        per_cust.join(geo, "customerid")
+        df.join(bridge, key)
         .groupBy("country")
-        .agg(F.sum("amnt_d").alias("spending_d"))
+        .agg(F.sum(measure).alias("spending_d"))
         .orderBy(F.col("spending_d").desc(), F.col("country").asc())
         .limit(1)
         .select("country", money(F.col("spending_d")).alias("spending"))
@@ -276,7 +251,7 @@ def q4b_top_country_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("customerid"))
         .agg(cents_sum("l_quantity", "p_retailprice").alias("amnt_d"))
     )
-    return _top_country_from(per_cust, _geo(t))
+    return _top_country(per_cust, _geo(t), "customerid", "amnt_d")
 
 
 @query("q4b_top_country_mart", oracle=_TOP_COUNTRY_SQL)
@@ -291,15 +266,8 @@ def q4b_top_country_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-customer pre-aggregation added a second shuffle the reference
     doesn't have."""
     t = catalog.load(spark, sf_dir)
-    return (
-        t.sales()
-        .join(_geo(t).select("customerid", "country"), "customerid")
-        .groupBy("country")
-        .agg(F.sum("amnt").alias("spending_d"))
-        .orderBy(F.col("spending_d").desc(), F.col("country").asc())
-        .limit(1)
-        .select("country", money(F.col("spending_d")).alias("spending"))
-    )
+    geo = _geo(t).select("customerid", "country")
+    return _top_country(t.sales(), geo, "customerid", "amnt")
 
 
 @query("q4b_top_country_view2", oracle=_TOP_COUNTRY_SQL)
@@ -313,15 +281,8 @@ def q4b_top_country_view2(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite targets, which is exactly why the reference finds View2
     cheapest (assignment-5.md:779)."""
     t = catalog.load(spark, sf_dir)
-    return (
-        _view2(t)
-        .join(_geo(t).select("customerid", "country"), "customerid")
-        .groupBy("country")
-        .agg(F.sum("sum_d").alias("spending_d"))
-        .orderBy(F.col("spending_d").desc(), F.col("country").asc())
-        .limit(1)
-        .select("country", money(F.col("spending_d")).alias("spending"))
-    )
+    geo = _geo(t).select("customerid", "country")
+    return _top_country(_view2(t), geo, "customerid", "sum_d")
 
 
 @query("q4b_top_country_view3", oracle=_TOP_COUNTRY_SQL)
@@ -330,13 +291,5 @@ def q4b_top_country_view3(spark: SparkSession, sf_dir: str) -> DataFrame:
     bridge (SELECT DISTINCT district, country), the Join-Compatibility
     rewrite (assignment-5.sql:461-469, findings assignment-5.md:825)."""
     t = catalog.load(spark, sf_dir)
-    v3 = _view3(t)
     bridge = _geo(t).select("district", "country").distinct()
-    return (
-        v3.join(F.broadcast(bridge), "district")
-        .groupBy("country")
-        .agg(F.sum("sum_d").alias("spending_d"))
-        .orderBy(F.col("spending_d").desc(), F.col("country").asc())
-        .limit(1)
-        .select("country", money(F.col("spending_d")).alias("spending"))
-    )
+    return _top_country(view3(_view1(t)), F.broadcast(bridge), "district", "sum_d")

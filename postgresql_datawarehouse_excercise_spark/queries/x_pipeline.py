@@ -674,8 +674,8 @@ def x_pipeline_incremental_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         # initial state: time + sales materialized from batch 1 only
         # (builder swap on this registry instance; restored before the delta)
-        reg.defs["time"].builder = lambda tt: build_time_dim(batch1.orders)
-        reg.defs["sales"].builder = lambda tt: batch1.sales()
+        reg.defs["time"].builder = lambda tt, dep: build_time_dim(batch1.orders)
+        reg.defs["sales"].builder = lambda tt, dep: batch1.sales()
         reg.build(spark, sf_dir, "time")
         reg.build(spark, sf_dir, "sales")
         reg.defs["time"].builder = _time

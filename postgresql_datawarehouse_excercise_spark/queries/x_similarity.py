@@ -450,18 +450,12 @@ def x_sim_ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_persisted_ann(spark, sf_dir, _persist_ann_index(spark, sf_dir))
 
 
-# One persisted build per corpus directory and process: the training is
-# fully deterministic (exact-integer-grid k-means, deterministic init --
-# the oracle replays it bit-for-bit), so every lifecycle lane
-# (persist / batch_serve / hybrid_rrf_persist / delete / compact) may
-# read the SAME index dir; at the gate the trilogy pays ONE build + three
-# serves instead of retraining per entry (VERDICT r12 item 6).  Keyed on
-# the corpus FINGERPRINT (path + embeddings.parquet mtime/size), not the
-# bare path: a corpus regenerated in-process invalidates the memo instead
-# of silently serving a stale index (ADVICE r13).
-_ANN_INDEX_CACHE: dict[tuple, str] = {}
-
-
+# The training is fully deterministic (exact-integer-grid k-means,
+# deterministic init -- the oracle replays it bit-for-bit), so every
+# lifecycle lane (persist / batch_serve / hybrid_rrf_persist / delete /
+# compact) reads ONE memoized build per corpus: at the gate the trilogy
+# pays one build + three serves instead of retraining per entry (VERDICT
+# r12 item 6).
 def _persist_ann_index(spark: SparkSession, sf_dir: str) -> str:
     """Train the IVF-PQ index and persist its four relations (+ a 1-row
     meta table) as parquet; returns the index directory.  Shared by
@@ -469,78 +463,65 @@ def _persist_ann_index(spark: SparkSession, sf_dir: str) -> str:
     x_sim_hybrid_rrf_persist, x_sim_ann_index_delete and
     x_sim_ann_index_compact -- the build is the amortized half of the
     serving story, identical whichever lane reads it back, and memoized
-    per sf_dir (deterministic training => one build serves every lane)."""
-    import os
+    per corpus (x_sources._index_memo)."""
+    from .x_sources import _corpus_fingerprint, _index_memo
 
-    from .x_sources import _corpus_fingerprint, _scratch
+    def build(loc: str) -> str:
+        emb = catalog.load(spark, sf_dir).embeddings
+        cells = similarity.ivf_cells(emb.count())
+        cents, assigned = similarity._ivf_train(similarity._ivf_base(emb), cells)
+        cb, codes = pq.pq_train_encode(emb)
+        cents.write.mode("overwrite").parquet(f"{loc}/centroids.parquet")
+        assigned.select("vec_id", "cell").write.mode("overwrite").parquet(
+            f"{loc}/postings.parquet"
+        )
+        cb.write.mode("overwrite").parquet(f"{loc}/codebooks.parquet")
+        codes.write.mode("overwrite").parquet(f"{loc}/codes.parquet")
+        spark.createDataFrame([(cells,)], "cells int").write.mode("overwrite").parquet(
+            f"{loc}/meta.parquet"
+        )
+        return loc
 
-    key = _corpus_fingerprint(sf_dir, "embeddings.parquet")
-    cached = _ANN_INDEX_CACHE.get(key)
-    if cached is not None and os.path.isdir(f"{cached}/meta.parquet"):
-        return cached
-    t = catalog.load(spark, sf_dir)
-    emb = t.embeddings
-    cells = similarity.ivf_cells(emb.count())
-    cents, assigned = similarity._ivf_train(similarity._ivf_base(emb), cells)
-    cb, codes = pq.pq_train_encode(emb)
-    loc = _scratch("pdwx-annidx-")
-    cents.write.mode("overwrite").parquet(f"{loc}/centroids.parquet")
-    assigned.select("vec_id", "cell").write.mode("overwrite").parquet(
-        f"{loc}/postings.parquet"
-    )
-    cb.write.mode("overwrite").parquet(f"{loc}/codebooks.parquet")
-    codes.write.mode("overwrite").parquet(f"{loc}/codes.parquet")
-    spark.createDataFrame([(cells,)], "cells int").write.mode("overwrite").parquet(
-        f"{loc}/meta.parquet"
-    )
-    _ANN_INDEX_CACHE[key] = loc
-    return loc
+    key = _corpus_fingerprint(sf_dir, "embeddings.parquet") + ("annidx",)
+    return _index_memo(key, "meta.parquet", build)
 
 
 # The SPLIT-trained build (trainings on the md5-bucket<80 base, every
 # vector assigned/encoded against the frozen trainings) is likewise
 # deterministic, so the three lanes that need it -- x_sim_ann_index_insert,
 # x_sim_ann_retrain_policy, and the stream-vs-batch equality pin -- share
-# ONE memoized build instead of retraining per entry (round 14, the
-# _persist_ann_index precedent; parquet roundtrips the BIGINT grid
-# losslessly, so loaded relations are bit-identical to in-plan ones).
-_SPLIT_ANN_CACHE: dict[tuple, str] = {}
-
-
+# ONE memoized build instead of retraining per entry (parquet roundtrips
+# the BIGINT grid losslessly, so loaded relations are bit-identical to
+# in-plan ones).
 def _persist_split_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Build and persist the add-without-retrain index (centroids, PQ
     codebooks trained on the base split; postings and codes covering
-    EVERY vector); returns (index dir, cells).  Memoized per corpus
-    fingerprint like _persist_ann_index."""
-    import os
-
+    EVERY vector); returns (index dir, cells).  Memoized per corpus like
+    _persist_ann_index."""
     from ..operators import clustering
     from .x_pipeline import _bucket
-    from .x_sources import _corpus_fingerprint, _scratch
+    from .x_sources import _corpus_fingerprint, _index_memo
 
-    key = _corpus_fingerprint(sf_dir, "embeddings.parquet")
-    cached = _SPLIT_ANN_CACHE.get(key)
-    if cached is not None and os.path.isdir(f"{cached[0]}/meta.parquet"):
-        return cached
-    t = catalog.load(spark, sf_dir)
-    emb = t.embeddings
-    base = emb.filter(_bucket(F.col("vec_id")) < ANN_INSERT_PCT)
-    cells = similarity.ivf_cells(base.count())
-    cents, _ = similarity._ivf_train(similarity._ivf_base(base), cells)
-    cb, codes = pq.pq_train_encode_split(base, emb)
-    postings = clustering.assign_gemm(clustering.quantize(emb), cents).select(
-        "vec_id", F.col("cid").alias("cell")
-    )
-    loc = _scratch("pdwx-annsplit-")
-    cents.write.mode("overwrite").parquet(f"{loc}/centroids.parquet")
-    postings.write.mode("overwrite").parquet(f"{loc}/postings.parquet")
-    cb.write.mode("overwrite").parquet(f"{loc}/codebooks.parquet")
-    codes.write.mode("overwrite").parquet(f"{loc}/codes.parquet")
-    spark.createDataFrame([(cells,)], "cells int").write.mode(
-        "overwrite"
-    ).parquet(f"{loc}/meta.parquet")
-    _SPLIT_ANN_CACHE[key] = (loc, cells)
-    return loc, cells
+    def build(loc: str) -> tuple[str, int]:
+        emb = catalog.load(spark, sf_dir).embeddings
+        base = emb.filter(_bucket(F.col("vec_id")) < ANN_INSERT_PCT)
+        cells = similarity.ivf_cells(base.count())
+        cents, _ = similarity._ivf_train(similarity._ivf_base(base), cells)
+        cb, codes = pq.pq_train_encode_split(base, emb)
+        postings = clustering.assign_gemm(clustering.quantize(emb), cents).select(
+            "vec_id", F.col("cid").alias("cell")
+        )
+        cents.write.mode("overwrite").parquet(f"{loc}/centroids.parquet")
+        postings.write.mode("overwrite").parquet(f"{loc}/postings.parquet")
+        cb.write.mode("overwrite").parquet(f"{loc}/codebooks.parquet")
+        codes.write.mode("overwrite").parquet(f"{loc}/codes.parquet")
+        spark.createDataFrame([(cells,)], "cells int").write.mode(
+            "overwrite"
+        ).parquet(f"{loc}/meta.parquet")
+        return loc, cells
+
+    key = _corpus_fingerprint(sf_dir, "embeddings.parquet") + ("annsplit",)
+    return _index_memo(key, "meta.parquet", build)
 
 
 def _serve_persisted_ann(

@@ -13,6 +13,8 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,6 +23,8 @@ from .. import catalog
 from ..functions import dec, money, sql_dec, sql_money, sum_c100
 from ..sources import files
 from . import query
+
+T = TypeVar("T")
 
 
 def _scratch(prefix: str) -> str:
@@ -35,19 +39,36 @@ def _scratch(prefix: str) -> str:
 
 
 def _corpus_fingerprint(sf_dir: str, table_file: str) -> tuple:
-    """Cache key for per-corpus memoized builds (the ANN / BM25 index
-    caches): (sf_dir, source file mtime_ns, size) so a corpus regenerated
-    in-process under the same path invalidates the memo instead of
-    silently serving a stale index (ADVICE r13).  A missing file keys on
-    the bare path (the loader will raise its own error downstream)."""
-    import os
-
-    path = os.path.join(sf_dir, table_file)
+    """Corpus part of an _index_memo key: (sf_dir, table_file, mtime_ns,
+    size) of the source file, so a corpus regenerated in-process under the
+    same path invalidates the memo instead of silently serving a stale
+    index (ADVICE r13).  A missing file keys with mtime_ns and size None
+    (the loader will raise its own error downstream)."""
     try:
-        st = os.stat(path)
+        st = os.stat(os.path.join(sf_dir, table_file))
         return (sf_dir, table_file, st.st_mtime_ns, st.st_size)
     except OSError:
         return (sf_dir, table_file, None, None)
+
+
+# key -> (index dir, build result); see _index_memo
+_INDEX_MEMO: dict[tuple, tuple[str, object]] = {}
+
+
+def _index_memo(key: tuple, marker: str, build: Callable[[str], T]) -> T:
+    """One persisted index build per key and process.  Every index here is
+    built deterministically, so every lane that serves it may read the SAME
+    directory: the first call runs ``build(loc)`` into a fresh scratch dir
+    and memoizes its result; later calls return that result while
+    ``loc/marker`` still exists.  ``key`` is a _corpus_fingerprint plus the
+    index kind, which also names the scratch dir."""
+    hit = _INDEX_MEMO.get(key)
+    if hit is not None and os.path.isdir(os.path.join(hit[0], marker)):
+        return hit[1]
+    loc = _scratch(f"pdwx-{key[-1]}-")
+    value = build(loc)
+    _INDEX_MEMO[key] = (loc, value)
+    return value
 
 
 @query(

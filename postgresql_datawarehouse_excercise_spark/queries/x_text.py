@@ -2517,47 +2517,35 @@ def x_text_bm25_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# One persisted inverted index per corpus directory and process: the build
-# is deterministic (tokenize + count), so every serving lane (persist /
-# batch / hybrid_rrf_persist / delete) reads the SAME index dir -- at the
-# gate the family pays one build + serves (VERDICT r12 item 6, the
-# ann-index precedent applied to the lexical side).  Keyed on the corpus
-# FINGERPRINT (path + documents.parquet mtime/size), not the bare path:
-# a corpus regenerated in-process invalidates the memo instead of
-# silently serving a stale index (ADVICE r13).
-_BM25_INDEX_CACHE: dict[tuple, str] = {}
-
-
+# The build is deterministic (tokenize + count), so every serving lane
+# (persist / batch / hybrid_rrf_persist / delete) reads ONE memoized index
+# per corpus -- at the gate the family pays one build + serves (VERDICT
+# r12 item 6, the ann-index precedent applied to the lexical side).
 def _persist_bm25_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the BM25 inverted index -- postings (term, doc_id, tf) + doc
     lengths (doc_id, dl) -- and persist both as parquet; returns the index
     directory.  Shared by x_text_bm25_index_persist, x_text_bm25_batch,
     x_text_bm25_index_delete and x_sim_hybrid_rrf_persist; memoized per
-    sf_dir (deterministic build => one index serves every lane)."""
-    import os
+    corpus (x_sources._index_memo)."""
+    from .x_sources import _corpus_fingerprint, _index_memo
 
-    from .x_sources import _corpus_fingerprint, _scratch
+    def build(loc: str) -> str:
+        toks = catalog.load(spark, sf_dir).documents.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.explode(
+                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
+            ).alias("term"),
+        )
+        toks.groupBy("term", "doc_id").agg(
+            F.count(F.lit(1)).alias("tf")
+        ).write.mode("overwrite").parquet(f"{loc}/postings.parquet")
+        toks.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("dl")
+        ).write.mode("overwrite").parquet(f"{loc}/doclen.parquet")
+        return loc
 
-    key = _corpus_fingerprint(sf_dir, "documents.parquet")
-    cached = _BM25_INDEX_CACHE.get(key)
-    if cached is not None and os.path.isdir(f"{cached}/postings.parquet"):
-        return cached
-    t = catalog.load(spark, sf_dir)
-    toks = t.documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
-    )
-    loc = _scratch("pdwx-bm25idx-")
-    toks.groupBy("term", "doc_id").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).write.mode("overwrite").parquet(f"{loc}/postings.parquet")
-    toks.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("dl")
-    ).write.mode("overwrite").parquet(f"{loc}/doclen.parquet")
-    _BM25_INDEX_CACHE[key] = loc
-    return loc
+    key = _corpus_fingerprint(sf_dir, "documents.parquet") + ("bm25idx",)
+    return _index_memo(key, "postings.parquet", build)
 
 
 def _bm25_from_index(postings: DataFrame, dl: DataFrame) -> DataFrame:

@@ -206,6 +206,7 @@ def test_lifecycle_build_memoized_per_corpus(spark):
     (VERDICT r12 item 6): two calls return the same directory."""
     from postgresql_datawarehouse_excercise_spark.queries.x_similarity import (
         _persist_ann_index,
+        _persist_split_ann_index,
     )
     from postgresql_datawarehouse_excercise_spark.queries.x_text import (
         _persist_bm25_index,
@@ -213,6 +214,13 @@ def test_lifecycle_build_memoized_per_corpus(spark):
 
     assert _persist_ann_index(spark, SF) == _persist_ann_index(spark, SF)
     assert _persist_bm25_index(spark, SF) == _persist_bm25_index(spark, SF)
+    assert _persist_split_ann_index(spark, SF) == _persist_split_ann_index(spark, SF)
+    # one memo, keyed per index kind: the three builds never share a dir
+    assert len({
+        _persist_ann_index(spark, SF),
+        _persist_bm25_index(spark, SF),
+        _persist_split_ann_index(spark, SF)[0],
+    }) == 3
 
 
 def test_stream_ann_index_identical_to_batch_insert(spark):

@@ -45,24 +45,28 @@ def test_all_mvs_built_with_stats(built):
 
 
 def test_dep_reading_builders_match_pure_builders(built, spark, sf_dir):
-    """Every MV with a builder_from_deps twin (the reference's FROM-the-MV
-    definitions, assignment-5.sql:165-170,221-223,232-235,244-250,259-263,
-    401-409) persisted EXACTLY what its pure base-lineage builder derives --
-    the arms contract of MVDef.builder_from_deps.  build_all exercised the
-    dep-reading arm (deps fresh), so the persisted parquet IS that arm's
-    output."""
-    from postgresql_datawarehouse_excercise_spark import catalog
-
-    t = catalog.load(spark, sf_dir)
+    """The dep contract of MVDef.builder, through the registry: every MV
+    with deps (the reference's FROM-the-MV definitions,
+    assignment-5.sql:165-170,221-263,401-409, and the base-derived ones)
+    holds EXACTLY the same rows after build_all, where each dep is the
+    persisted parquet, as after a lone build in an empty registry, where
+    every dep resolves to its builder over lineage.  MVs with a catalog
+    cache slot or a link twin are pinned elsewhere."""
     checked = 0
     for name, mv in built.defs.items():
-        if mv.builder_from_deps is None:
+        if not mv.deps or mv.cache_key or mv.link_from:
             continue
-        got = sorted(map(tuple, built.read(spark, name).collect()))
-        want = sorted(map(tuple, mv.builder(t).collect()))
+        lone = default_registry(tempfile.mkdtemp(prefix="pdwx-lone-"))
+        try:
+            lone.build(spark, sf_dir, name)
+            assert not any(lone.is_built(d) for d in mv.deps), name
+            got = sorted(map(tuple, built.read(spark, name).collect()))
+            want = sorted(map(tuple, lone.read(spark, name).collect()))
+        finally:
+            lone.drop_all()
         assert got == want, name
         checked += 1
-    assert checked >= 6
+    assert checked >= 13
 
 
 def test_analyze_populates_catalog_statistics(built, spark):
@@ -217,31 +221,39 @@ def _rows(df, cols):
 
 
 def test_incremental_view2_equals_full_rebuild(spark, sf_dir):
-    """Build time/sales/view2 from the pre-cutoff batch, apply the rest as a
-    delta, and require the merged view2 to equal a full one-shot rebuild
-    bit-for-bit (grain, names, years, exact-decimal sums)."""
+    """Build time/sales/view1/view2/view3 from the pre-cutoff batch, apply
+    the rest as a delta, and require each merged view to equal a full
+    one-shot rebuild bit-for-bit (grain, names, years, exact-decimal sums).
+    view3 reads view1 through dep: the delta refresh must resolve it to
+    lineage over the delta, not to the persisted full-history view1."""
     from postgresql_datawarehouse_excercise_spark.etl.time_dim import build_time_dim
 
     batch1, delta = _date_split(spark, sf_dir)
     inc = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-a-"))
     full = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-b-"))
+    views = ("view1", "view2", "view3")
     try:
-        inc.defs["time"].builder = lambda tt: build_time_dim(batch1.orders)
-        inc.defs["sales"].builder = lambda tt: batch1.sales()
-        _orig_v2 = full.defs["view2"].builder
-        inc.defs["view2"].builder = lambda tt, b=batch1: _orig_v2(b)
-        for n in ("time", "sales", "view2"):
+        inc.defs["time"].builder = lambda tt, dep: build_time_dim(batch1.orders)
+        inc.defs["sales"].builder = lambda tt, dep: batch1.sales()
+        orig = {v: full.defs[v].builder for v in views}
+        for v in views:
+            inc.defs[v].builder = lambda tt, dep, b=batch1, f=orig[v]: f(b, dep)
+        for n in ("time", "sales") + views:
             inc.build(spark, sf_dir, n)
         inc.defs["time"].builder = full.defs["time"].builder
         inc.defs["sales"].builder = full.defs["sales"].builder
-        inc.defs["view2"].builder = _orig_v2
+        for v in views:
+            inc.defs[v].builder = orig[v]
         inc.refresh_incremental(spark, sf_dir, "sales", delta)
-        inc.refresh_incremental(spark, sf_dir, "view2", delta)
+        # view3 first, while the persisted (batch-1) view1 is still fresh
+        for v in reversed(views):
+            inc.refresh_incremental(spark, sf_dir, v, delta)
 
-        for n in ("time", "sales", "view2"):
+        for n in ("time", "sales") + views:
             full.build(spark, sf_dir, n)
-        cols = sorted(full.read(spark, "view2").columns)
-        assert _rows(inc.read(spark, "view2"), cols) == _rows(full.read(spark, "view2"), cols)
+        for v in views:
+            cols = sorted(full.read(spark, v).columns)
+            assert _rows(inc.read(spark, v), cols) == _rows(full.read(spark, v), cols), v
         assert _rows(inc.read(spark, "sales"), ["customerid", "timeid", "partkey", "amnt"]) == \
                _rows(full.read(spark, "sales"), ["customerid", "timeid", "partkey", "amnt"])
     finally:
@@ -366,7 +378,7 @@ def test_sales_table_twin_equals_mv_and_validates(built, spark, sf_dir):
 
     t = catalog_load_corrupt(spark, sf_dir)
     with pytest.raises(validate.ConstraintViolation, match="duplicate key"):
-        _sales_table(t)
+        _sales_table(t, None)
 
 
 def catalog_load_corrupt(spark, sf_dir):
@@ -394,9 +406,9 @@ def test_incremental_extrema_measures_equal_full_rebuild(spark, sf_dir):
     full = with_count_stats(default_registry(tempfile.mkdtemp(prefix="pdwx-incr-y-")))
     try:
         _orig = full.defs["view2_stats"].builder
-        inc.defs["time"].builder = lambda tt: build_time_dim(batch1.orders)
-        inc.defs["sales"].builder = lambda tt: batch1.sales()
-        inc.defs["view2_stats"].builder = lambda tt, b=batch1: _orig(b)
+        inc.defs["time"].builder = lambda tt, dep: build_time_dim(batch1.orders)
+        inc.defs["sales"].builder = lambda tt, dep: batch1.sales()
+        inc.defs["view2_stats"].builder = lambda tt, dep, b=batch1: _orig(b, dep)
         for n in ("time", "sales", "view2_stats"):
             inc.build(spark, sf_dir, n)
         inc.defs["time"].builder = full.defs["time"].builder

@@ -448,7 +448,7 @@ def test_avg_headroom_guard_falls_back_on_huge_sums(spark, sf_dir):
         reg.register(
             MVDef(
                 "big",
-                lambda t, b=base: b.groupBy("year").agg(
+                lambda t, dep, b=base: b.groupBy("year").agg(
                     F.sum("amnt").alias("amnt"),
                     F.count(F.lit(1)).alias("cnt"),
                 ),
