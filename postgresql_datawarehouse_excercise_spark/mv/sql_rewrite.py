@@ -33,12 +33,14 @@ LIMIT from the rendered Catalyst expressions; otherwise the original
 column-for-column identical to executing the text directly.
 
 Divergence note (SURVEY.md section 4 option b): the by-the-book Spark
-mechanism is a logical rule injected via ``spark.sql.extensions`` so the
-OPTIMIZER performs the substitution; extension rules must be compiled JVM
-classes, which this pure-Python repo cannot ship.  The match here runs on
-the same Catalyst analyzed plan, just applied by a wrapper before
-execution -- the plan test pins the observable property (the rewritten
-query scans the MV parquet, not the fact).  :class:`RewritingSession`
+mechanism is a compiled optimizer rule, so the OPTIMIZER performs the
+substitution.  This repo ships one too -- ``catalyst/`` compiles
+``MvSubstituteRule.java`` at first use and installs it on the live
+session through ``spark.experimental.extraOptimizations``.  This module
+is the query-text layer beside it: the match runs on the same Catalyst
+analyzed plan, applied by a wrapper before execution -- the plan test
+pins the observable property (the rewritten query scans the MV parquet,
+not the fact).  :class:`RewritingSession`
 closes the remaining transparency gap from pure Python: a SparkSession
 proxy whose every ``.sql()`` call routes through the rewriter, so user
 code that only knows the SparkSession interface gets MV navigation
@@ -783,9 +785,10 @@ def spark_sql(
 
 class RewritingSession:
     """Transparent MV rewriting for arbitrary ``.sql()`` calls -- the
-    pure-Python stand-in for the ``spark.sql.extensions`` optimizer rule
-    the module docstring's divergence note describes (extension rules must
-    be compiled JVM classes, which this repo cannot ship).
+    query-text counterpart of the compiled optimizer rule in ``catalyst/``
+    (``MvSubstituteRule.java``, installed through
+    ``spark.experimental.extraOptimizations``; see the module docstring's
+    divergence note).
 
     Hand this object to code that expects a SparkSession: every
     ``.sql(text)`` call routes through :func:`spark_sql` (navigable star

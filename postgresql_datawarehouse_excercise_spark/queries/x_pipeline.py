@@ -1792,9 +1792,7 @@ def x_pipeline_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.load(spark, sf_dir)
     tok = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).cast("long").alias("n_tokens"),
+        F.size(dedup_ops.tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
     return _pack_layout(spark, tok)
 

@@ -698,13 +698,11 @@ def x_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     already scale-designed (and each with a persisted-index serving lane:
     x_text_bm25_index_persist / x_sim_ann_index_persist)."""
     from pyspark.sql.window import Window
-    from .x_text import x_text_bm25
+    from .x_text import _bm25_from_index, _bm25_index
 
-    bm = x_text_bm25(spark, sf_dir).select(
-        F.col("doc_id").alias("id"),
-        F.row_number()
-        .over(Window.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc()))
-        .alias("bm_r"),
+    docs = catalog.load(spark, sf_dir).documents
+    bm = _bm25_from_index(*_bm25_index(docs), nq=1).select(
+        F.col("doc_id").alias("id"), F.col("rank").alias("bm_r")
     )
     vs = x_sim_topk_bruteforce(spark, sf_dir).select(
         F.col("vec_id").alias("id"),
@@ -766,20 +764,13 @@ def x_sim_hybrid_rrf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT and parquet round-trips it losslessly.  At 100 TB the serving
     session reads two small index tables and touches raw data only for
     the PQ_REFINE exact re-rank lookups -- never the corpus."""
-    from pyspark.sql.window import Window
-    from .x_text import _bm25_from_index, _persist_bm25_index
+    from .x_text import _bm25_from_index, _persist_bm25_index, _read_bm25_index
 
     bm_loc = _persist_bm25_index(spark, sf_dir)
     ann_loc = _persist_ann_index(spark, sf_dir)
     s2 = spark.newSession()
-    bm = _bm25_from_index(
-        s2.read.parquet(f"{bm_loc}/postings.parquet"),
-        s2.read.parquet(f"{bm_loc}/doclen.parquet"),
-    ).select(
-        F.col("doc_id").alias("id"),
-        F.row_number()
-        .over(Window.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc()))
-        .alias("bm_r"),
+    bm = _bm25_from_index(*_read_bm25_index(s2, bm_loc), nq=1).select(
+        F.col("doc_id").alias("id"), F.col("rank").alias("bm_r")
     )
     vq = _serve_persisted_ann(spark, sf_dir, ann_loc, n_queries=1, s2=s2).select(
         F.col("vec_id").alias("id"), F.col("rank").alias("vs_r")

@@ -212,16 +212,15 @@ def x_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     are arrival-order surrogates by design -- stable once assigned, but
     not date-ordered under out-of-order arrival, so the join back through
     the time dimension is part of the proof)."""
-    import tempfile
-
     from ..functions import money
     from ..mv.definitions import default_registry
     from ..streaming import mv_maintenance as mvm
+    from .x_sources import _scratch
 
     t = catalog.load(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="pdwx-stream-orders-")
+    src = _scratch("pdwx-stream-orders-")
     t.orders.repartition(2).write.mode("overwrite").parquet(src)
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-stream-wh-"))
+    reg = default_registry(_scratch("pdwx-stream-wh-"))
     try:
         q = mvm.maintain_sales_stream(
             spark, sf_dir, reg, mvm.read_orders_stream(spark, src)
@@ -466,17 +465,16 @@ def x_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, events older than watermark - span can neither join nor
     break a revisable occurrence, so the state table compacts exactly
     like the engine's other update-mode states."""
-    import tempfile
-
     from ..streaming.cep_stream import run_cep_stream
     from .x_events import CEP_MAX_US
+    from .x_sources import _scratch
 
     t = catalog.load(spark, sf_dir)
     ev = t.events.select("user_id", "event_id", "event_type", "ts")
-    src = tempfile.mkdtemp(prefix="pdwx-cepstream-src-")
+    src = _scratch("pdwx-cepstream-src-")
     ev.repartition(2).write.mode("overwrite").parquet(src)
-    state = tempfile.mkdtemp(prefix="pdwx-cepstream-state-")
-    out = tempfile.mkdtemp(prefix="pdwx-cepstream-out-")
+    state = _scratch("pdwx-cepstream-state-")
+    out = _scratch("pdwx-cepstream-out-")
     m = run_cep_stream(
         spark,
         src,
@@ -502,26 +500,16 @@ def _stream_bm25_oracle() -> str:
 
 
 def _bm25_index_sink(spark: SparkSession, idx: str):
-    """foreachBatch sink for the streamed BM25 index: tokenize the batch
-    (only the batch) and land its postings (term, doc_id, tf) and doc
-    lengths (doc_id, dl) under ONE overwritten `_batch={epoch}` subdir
-    each -- checkpoint re-delivery rewrites its own subdir instead of
-    double-appending (which would double tf/dl and corrupt every score);
-    idempotence pinned directly in tests/test_streaming.py."""
+    """foreachBatch sink for the streamed BM25 index: index the batch
+    (only the batch) with x_text's one index build and land it as batch
+    `epoch` through the index writer -- checkpoint re-delivery rewrites
+    its own batch instead of double-appending (which would double tf/dl
+    and corrupt every score); idempotence pinned directly in
+    tests/test_streaming.py."""
+    from .x_text import _bm25_index, _write_bm25_index
 
     def sink(batch_df: DataFrame, epoch: int) -> None:
-        toks = batch_df.select(
-            "doc_id",
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-            ).alias("term"),
-        )
-        toks.groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        ).write.mode("overwrite").parquet(f"{idx}/postings/_batch={epoch}")
-        toks.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("dl")
-        ).write.mode("overwrite").parquet(f"{idx}/doclen/_batch={epoch}")
+        _write_bm25_index(idx, *_bm25_index(batch_df), batch=epoch)
 
     return sink
 
@@ -536,8 +524,8 @@ def x_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate MV.  The documents corpus arrives as a 4-file stream
     (maxFilesPerTrigger=1 -> four micro-batches); each micro-batch
     tokenizes ONLY ITSELF and lands its postings (term, doc_id, tf) and
-    doc lengths (doc_id, dl) in the index -- one OVERWRITTEN
-    `_batch={epoch}` subdirectory per relation per epoch, the
+    doc lengths (doc_id, dl) in the index as batch `epoch` -- one
+    OVERWRITTEN `_batch={epoch}` subdirectory per relation, the
     cep_stream idempotence discipline: a checkpoint-recovery re-delivery
     rewrites its own subdir instead of double-appending (which would
     double tf/dl and corrupt every score).
@@ -559,7 +547,7 @@ def x_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a periodic compaction (the x_sim_ann_index_compact /
     x_text_bm25_index_delete story) folds the accumulated epochs."""
     from .x_sources import _scratch
-    from .x_text import _bm25_from_index
+    from .x_text import _bm25_from_index, _read_bm25_index
 
     t = catalog.load(spark, sf_dir)
     docs = t.documents.select(
@@ -578,15 +566,11 @@ def x_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(sink)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{idx}-ckpt")
+        .option("checkpointLocation", f"{idx}/_checkpoint")
         .start()
     )
     q.awaitTermination()
-    s2 = spark.newSession()
-    return _bm25_from_index(
-        s2.read.parquet(f"{idx}/postings").drop("_batch"),
-        s2.read.parquet(f"{idx}/doclen").drop("_batch"),
-    )
+    return _bm25_from_index(*_read_bm25_index(spark.newSession(), idx))
 
 
 def _stream_ann_oracle() -> str:
@@ -710,7 +694,7 @@ def x_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         stream.writeStream.foreachBatch(sink)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{idx}-ckpt")
+        .option("checkpointLocation", f"{idx}/_checkpoint")
         .start()
     )
     q.awaitTermination()

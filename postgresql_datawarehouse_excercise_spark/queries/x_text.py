@@ -8,12 +8,13 @@ with input splits at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import fround, ratio, sql_ratio
 from ..operators import textlang
+from ..operators.dedup import TOKEN_RE, tokens
 from . import query
 
 
@@ -119,7 +120,7 @@ def x_text_tfidf_top5(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.load(spark, sf_dir)
     toks = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)).alias("term"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_docs = (
@@ -167,7 +168,7 @@ def x_text_vocab_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.load(spark, sf_dir)
     toks = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)).alias("term"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     return (
         toks.groupBy("term")
@@ -201,7 +202,7 @@ def x_text_bigram_top50(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tokenization (engine lesson #1) -- then exploded into one counting
     aggregate."""
     t = catalog.load(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
+    toks = tokens(F.col("text"))
     docs = t.documents.select(toks.alias("tokens"))
     n1 = F.greatest(F.size("tokens") - 1, F.lit(0))
     bigrams = F.zip_with(
@@ -296,7 +297,7 @@ def x_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with-of-slices bigrams) -- one narrow scan, no shuffle, no Python;
     the shape that holds at 100 TB because each row is independent."""
     t = catalog.load(spark, sf_dir)
-    toks = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
+    toks = tokens(F.col("text"))
     docs = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"), toks.alias("tokens")
     )
@@ -556,7 +557,7 @@ def x_text_udtf_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="run_start int, token string, run_len int", useArrow=True)
     class TokenRuns:
         def eval(self, text: str):
-            toks = re.findall(r"[a-z0-9]+", (text or "").lower())
+            toks = re.findall(TOKEN_RE, (text or "").lower())
             i, n = 0, len(toks)
             while i < n:
                 j = i
@@ -622,9 +623,7 @@ def unigram_logprob(documents: DataFrame) -> DataFrame:
     (probe it on K-fold multiplied data with `scripts/probe.py --scale K`)."""
     toks = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     tc = toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
     tot = tc.agg(F.sum("cnt").alias("total"))
@@ -907,11 +906,7 @@ def _bpe_train(documents: DataFrame, rounds: int = BPE_ROUNDS) -> list[tuple]:
     symbols_after)] -- the learned merge table, in application order (the
     encoder, x_text_bpe_encode, replays it verbatim)."""
     words = (
-        documents.select(
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-            ).alias("w")
-        )
+        documents.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(
@@ -1008,9 +1003,7 @@ def x_text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = _bpe_train(t.documents)
     docw = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("w"),
+        F.explode(tokens(F.col("text"))).alias("w"),
     )
     sym = (
         "concat('|', array_join(transform(sequence(1, length(w)),"
@@ -1125,7 +1118,7 @@ def nb_langid(documents: DataFrame) -> DataFrame:
         F.col("doc_id").cast("long").alias("doc_id"),
         "lang",
         _bucket(F.col("doc_id")).alias("bucket"),
-        F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0).alias("toks"),
+        tokens(F.col("text")).alias("toks"),
     )
     tr = d.filter(F.col("bucket") < NB_TRAIN_PCT).select(
         "lang", F.explode("toks").alias("term")
@@ -1259,7 +1252,7 @@ def x_text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     term, and a top-50 TakeOrderedAndProject -- nothing touches corpus
     text after tokenization."""
     t = catalog.load(spark, sf_dir)
-    toks_col = F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
+    toks_col = tokens(F.col("text"))
     docs = t.documents.select(toks_col.alias("tokens"))
     uni = docs.select(F.explode("tokens").alias("term"))
     c1 = uni.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
@@ -1372,9 +1365,7 @@ def moore_lewis(documents: DataFrame) -> DataFrame:
     toks = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         "lang",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     model = toks.groupBy("term").agg(
         F.sum(F.when(F.col("lang") == ML_IN_LANG, 1).otherwise(0)).alias("c_in"),
@@ -1489,9 +1480,7 @@ def x_text_countmin_hh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = catalog.load(spark, sf_dir)
     toks = t.documents.select(
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term")
+        F.explode(tokens(F.col("text"))).alias("term")
     )
     # vocabulary-bound pre-aggregation: the sketch feed and the exact top-k
     # share one term-count relation (map-side combined)
@@ -1575,9 +1564,7 @@ def x_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = catalog.load(spark, sf_dir)
     toks = t.documents.select(
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term")
+        F.explode(tokens(F.col("text"))).alias("term")
     )
     tc = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     w = Window.orderBy(F.col("c").desc(), F.col("term").asc())
@@ -1771,9 +1758,7 @@ def x_text_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = catalog.load(spark, sf_dir)
     toks = t.documents.select(
         "source",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
+        F.explode(tokens(F.col("text"))).alias("term"),
     )
     c = toks.groupBy("source", "term").agg(F.count(F.lit(1)).alias("n"))
     tot = c.groupBy("source").agg(F.sum("n").alias("t"))
@@ -2363,6 +2348,202 @@ FROM (
 
 _BM25_ORACLE = _bm25_oracle()
 
+# One index, many queries.  Every BM25 lane serves the same two doc-grain
+# relations -- postings (term, doc_id, tf) and doc lengths (doc_id, dl) --
+# built by _bm25_index, stored and loaded by _write_bm25_index /
+# _read_bm25_index, and scored by _bm25_from_index.  Corpus statistics (df,
+# the query terms, N, avgdl) are never stored: they re-derive from the
+# postings at serve time, so appending, masking or replacing a document's
+# rows keeps every score exact.
+
+
+def _bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The BM25 inverted index of docs (doc_id, text): postings (term,
+    doc_id, tf) and doc lengths (doc_id, dl).
+
+    ONE token explode and one (term, doc) map-side-combined aggregate;
+    doc lengths derive from it (the 100x probe measured the naive form --
+    dl/df/tf each re-exploding the corpus -- at 57.1 s vs 38.5 s for this
+    shape).  localCheckpoint MATERIALIZES the postings once: without it
+    every consumer (dl, df, the query-term join, N) re-executes the
+    explode+aggregate -- the round-12 re-probe found SIX documents scans in
+    the executed plan (Spark reuses an Exchange only when consumer
+    subplans match bit-for-bit, and column pruning makes each consumer's
+    scan differ).  Checkpointed, the corpus is scanned once, by a serving
+    plan and by a writer landing both relations alike."""
+    postings = (
+        docs.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.explode(tokens(F.col("text"))).alias("term"),
+        )
+        .groupBy("term", "doc_id")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint(eager=False)
+    )
+    return postings, postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+
+
+def _write_bm25_index(
+    loc: str, postings: DataFrame, dl: DataFrame, batch: int | None = None
+) -> str:
+    """Store an index under loc as parquet: loc/postings and loc/doclen
+    (this and _read_bm25_index are the only code that knows the layout).
+    A `batch` (a stream epoch, a refresh delta) lands under `_batch=N` of
+    each relation and OVERWRITES only that subdir, so a re-delivered batch
+    rewrites its own rows instead of double-appending them (which would
+    double tf/dl and corrupt every score).  Batches hold disjoint
+    documents and both relations are doc-grain, so their union is the
+    exact merge.  Returns loc."""
+    sub = "" if batch is None else f"/_batch={batch}"
+    postings.write.mode("overwrite").parquet(f"{loc}/postings{sub}")
+    dl.write.mode("overwrite").parquet(f"{loc}/doclen{sub}")
+    return loc
+
+
+def _read_bm25_index(
+    spark: SparkSession, loc: str
+) -> tuple[DataFrame, DataFrame]:
+    """(postings, dl) stored under loc by _write_bm25_index, every batch
+    merged."""
+    return tuple(
+        spark.read.parquet(f"{loc}/{rel}").drop("_batch")
+        for rel in ("postings", "doclen")
+    )
+
+
+def _persist_bm25_index(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus's BM25 index, built and stored once per corpus and
+    process (x_sources._index_memo): the build is deterministic, so every
+    serving lane (persist, batch, delete, compact, update,
+    x_sim_hybrid_rrf_persist) reads the same directory.  Returns it."""
+    from .x_sources import _corpus_fingerprint, _index_memo
+
+    key = _corpus_fingerprint(sf_dir, "documents.parquet") + ("bm25idx",)
+    return _index_memo(
+        key,
+        "postings",
+        lambda loc: _write_bm25_index(
+            loc, *_bm25_index(catalog.load(spark, sf_dir).documents)
+        ),
+    )
+
+
+def _bm25_c_micro() -> Column:
+    """The quantized BM25 contribution of one posting, over the columns
+    tf, df, dl, n_docs and total_tokens: idf(t) * tf*(k1+1) /
+    (tf + k1*(1-b+b*dl/avgdl)) evaluated in the oracle's literal order and
+    floored half-up at 1e-6.  ONE quantization per (doc, term), then exact
+    int64 sums per doc, so partition order cannot flip ranks."""
+    tf = F.col("tf").cast("double")
+    return (
+        F.floor(
+            F.log(
+                (F.col("n_docs").cast("double") - F.col("df").cast("double") + 0.5)
+                / (F.col("df").cast("double") + 0.5)
+                + 1.0
+            )
+            * (tf * F.expr(f"{BM25_K1} + 1.0"))
+            / (
+                tf
+                + F.expr(
+                    f"{BM25_K1} * (1.0 - {BM25_B} + {BM25_B}"
+                    f" * CAST(dl AS DOUBLE)"
+                    f" / (CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))"
+                )
+            )
+            * 1000000.0
+            + 0.5
+        )
+        .cast("long")
+        .alias("c_micro")
+    )
+
+
+def _bm25_contrib(
+    postings: DataFrame, dl: DataFrame, q: DataFrame, *keep: str
+) -> DataFrame:
+    """(*keep, doc_id, c_micro) for every posting of a query term.  q is a
+    small (term, df, *keep) relation (broadcast); N and avgdl come from
+    dl, a one-row aggregate (broadcast)."""
+    n = dl.agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.sum("dl").cast("long").alias("total_tokens"),
+    )
+    return (
+        postings.join(F.broadcast(q), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(n))
+        .select(*keep, "doc_id", _bm25_c_micro())
+    )
+
+
+def _bm25_query_terms(postings: DataFrame, nq: int) -> DataFrame:
+    """(query_id, term, df): the nq * BM25_QTERMS highest-df terms (ties
+    lexicographic); query q takes the q-th BM25_QTERMS of them.  The terms
+    are TakeOrdered first (scale-safe: never a global window over the
+    vocabulary), then numbered within the small frame."""
+    from pyspark.sql.window import Window
+
+    by_df = (F.col("df").desc(), F.col("term").asc())
+    top = (
+        postings.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .orderBy(*by_df)
+        .limit(nq * BM25_QTERMS)
+    )
+    return top.select(
+        F.floor((F.row_number().over(Window.orderBy(*by_df)) - 1) / BM25_QTERMS)
+        .cast("long")
+        .alias("query_id"),
+        "term",
+        "df",
+    )
+
+
+def _bm25_from_index(
+    postings: DataFrame, dl: DataFrame, nq: int | None = None
+) -> DataFrame:
+    """Serve BM25 queries off the index relations postings (term, doc_id,
+    tf) and dl (doc_id, dl); documents is never touched.
+
+    A batch of nq queries returns (query_id, doc_id, dl, n_terms_matched,
+    score_micro, score, rank), the top-BM25_TOPK of every query: scoring
+    groups by (query_id, doc_id) and ONE window partitioned by query_id
+    ranks all queries in one pass, with no per-query re-scan.  nq=None
+    serves the single query of the single-query lanes: query 0 of a batch
+    of one, with query_id and rank dropped."""
+    from pyspark.sql.window import Window
+
+    q = _bm25_query_terms(postings, nq or 1)
+    scored = (
+        _bm25_contrib(postings, dl, q, "query_id")
+        .groupBy("query_id", "doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
+            F.sum("c_micro").cast("long").alias("score_micro"),
+        )
+        .join(dl, "doc_id")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score_micro").desc(), F.col("doc_id").asc()
+    )
+    top = (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= BM25_TOPK)
+        .select(
+            "query_id",
+            "doc_id",
+            F.col("dl").cast("long").alias("dl"),
+            "n_terms_matched",
+            "score_micro",
+            fround(F.col("score_micro").cast("double") / 1000000.0, 4).alias(
+                "score"
+            ),
+            "rank",
+        )
+    )
+    return top if nq else top.drop("query_id", "rank")
+
 
 @query("x_text_bm25", oracle=_BM25_ORACLE)
 def x_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2374,119 +2555,16 @@ def x_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization that plain tf-idf (x_text_tfidf_top5) lacks.
 
     Float discipline: ONE quantization per (doc, query-term) contribution
-    -- idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)) evaluated in the
-    same literal order in both engines, floored half-up at 1e-6 -- then
-    exact int64 summation per doc, so partition order cannot flip ranks.
+    (_bm25_c_micro), then exact int64 summation per doc, so partition
+    order cannot flip ranks.
 
-    Scale shape: the query relation is BM25_QTERMS rows (broadcast); tf
-    touches only matching (doc, term) rows; doc lengths are one
-    map-side-combined aggregate; the final top-k is a single ranking over
-    per-doc 1-row aggregates (TakeOrdered shape).  At 100 TB the df/dl
-    statistics are index-build artifacts, amortized across queries (the
-    ann_index_persist argument, lexical edition)."""
-    t = catalog.load(spark, sf_dir)
-    toks = t.documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
-    )
-    # ONE token explode + one (doc, term) map-side-combined aggregate; doc
-    # lengths, document frequencies, corpus stats and the query-term tf all
-    # derive from that relation (the 100x probe measured the naive form --
-    # dl/df/tf each re-exploding the corpus -- at 57.1 s vs 38.5 s for this
-    # shape; it is also exactly the postings relation the persisted-index
-    # lane stores).  localCheckpoint MATERIALIZES it once: without it the
-    # four consumers (dl/df/qterms-tf/n) re-execute the explode+aggregate
-    # -- the round-12 re-probe found SIX documents scans in the executed
-    # plan (Spark reuses an Exchange only when consumer subplans match
-    # bit-for-bit, and column pruning makes each consumer's scan differ);
-    # checkpointed, the corpus is scanned once and the plan reads the
-    # |distinct (doc, term)| relation, the same thing the persisted lane
-    # proves by writing it to parquet (28.7 s vs 62.0 s at 100x).
-    tfall = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dl = tfall.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    n = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-    )
-    df_t = tfall.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    qterms = (
-        df_t.orderBy(F.col("df").desc(), F.col("term").asc())
-        .limit(BM25_QTERMS)
-    )
-    tf = tfall.join(F.broadcast(qterms.select("term")), "term").select(
-        "doc_id", "term", "tf"
-    )
-    return _bm25_score(tf, qterms, dl, n)
-
-
-def _bm25_score(tf, qterms, dl, n) -> DataFrame:
-    """The BM25 scoring tail over index-shaped relations -- tf (doc_id,
-    term, tf) restricted to the query terms, qterms (term, df), dl
-    (doc_id, dl), n (1-row n_docs/total_tokens) -- shared by the in-plan
-    lane (x_text_bm25) and the persisted-index lane
-    (x_text_bm25_index_persist), which must return identical rows."""
-    from pyspark.sql.window import Window
-
-    contrib = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            F.floor(
-                F.log(
-                    (
-                        F.col("n_docs").cast("double")
-                        - F.col("df").cast("double")
-                        + 0.5
-                    )
-                    / (F.col("df").cast("double") + 0.5)
-                    + 1.0
-                )
-                * (F.col("tf").cast("double") * F.expr(f"{BM25_K1} + 1.0"))
-                / (
-                    F.col("tf").cast("double")
-                    + F.expr(
-                        f"{BM25_K1} * (1.0 - {BM25_B} + {BM25_B}"
-                        f" * CAST(dl AS DOUBLE)"
-                        f" / (CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))"
-                    )
-                )
-                * 1000000.0
-                + 0.5
-            )
-            .cast("long")
-            .alias("c_micro"),
-        )
-    )
-    scored = (
-        contrib.groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
-            F.sum("c_micro").cast("long").alias("score_micro"),
-        )
-        .join(dl, "doc_id")
-    )
-    w = Window.orderBy(F.col("score_micro").desc(), F.col("doc_id").asc())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= BM25_TOPK)
-        .select(
-            "doc_id",
-            F.col("dl").cast("long").alias("dl"),
-            "n_terms_matched",
-            "score_micro",
-            fround(F.col("score_micro").cast("double") / 1000000.0, 4).alias(
-                "score"
-            ),
-        )
-    )
+    Scale shape: the query relation is BM25_QTERMS rows (broadcast); the
+    contributions touch only matching (doc, term) postings; doc lengths
+    are one aggregate over the postings; the final top-k is a single
+    ranking over per-doc 1-row aggregates.  At 100 TB the postings and doc
+    lengths are index-build artifacts, amortized across queries (the
+    persisted lanes below store exactly these two relations)."""
+    return _bm25_from_index(*_bm25_index(catalog.load(spark, sf_dir).documents))
 
 
 @query("x_text_bm25_index_persist", oracle=_BM25_ORACLE)
@@ -2510,60 +2588,7 @@ def x_text_bm25_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-grain sidecar, and index build cost amortizes across every query
     -- the ann_index_persist argument, lexical edition."""
     loc = _persist_bm25_index(spark, sf_dir)
-    s2 = spark.newSession()
-    return _bm25_from_index(
-        s2.read.parquet(f"{loc}/postings.parquet"),
-        s2.read.parquet(f"{loc}/doclen.parquet"),
-    )
-
-
-# The build is deterministic (tokenize + count), so every serving lane
-# (persist / batch / hybrid_rrf_persist / delete) reads ONE memoized index
-# per corpus -- at the gate the family pays one build + serves (VERDICT
-# r12 item 6, the ann-index precedent applied to the lexical side).
-def _persist_bm25_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build the BM25 inverted index -- postings (term, doc_id, tf) + doc
-    lengths (doc_id, dl) -- and persist both as parquet; returns the index
-    directory.  Shared by x_text_bm25_index_persist, x_text_bm25_batch,
-    x_text_bm25_index_delete and x_sim_hybrid_rrf_persist; memoized per
-    corpus (x_sources._index_memo)."""
-    from .x_sources import _corpus_fingerprint, _index_memo
-
-    def build(loc: str) -> str:
-        toks = catalog.load(spark, sf_dir).documents.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-            ).alias("term"),
-        )
-        toks.groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf")
-        ).write.mode("overwrite").parquet(f"{loc}/postings.parquet")
-        toks.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("dl")
-        ).write.mode("overwrite").parquet(f"{loc}/doclen.parquet")
-        return loc
-
-    key = _corpus_fingerprint(sf_dir, "documents.parquet") + ("bm25idx",)
-    return _index_memo(key, "postings.parquet", build)
-
-
-def _bm25_from_index(postings: DataFrame, dl: DataFrame) -> DataFrame:
-    """Serve the single top-df query off index-shaped relations: df, the
-    query-term set, corpus stats and scores all derive from the postings;
-    documents is never touched."""
-    n = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-    )
-    df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    qterms = df_t.orderBy(F.col("df").desc(), F.col("term").asc()).limit(
-        BM25_QTERMS
-    )
-    tf = postings.join(F.broadcast(qterms.select("term")), "term").select(
-        "doc_id", "term", "tf"
-    )
-    return _bm25_score(tf, qterms, dl, n)
+    return _bm25_from_index(*_read_bm25_index(spark.newSession(), loc))
 
 
 BM25_BATCH_NQ = 8   # query batch: 8 disjoint 4-term queries = top-32 df terms
@@ -2615,109 +2640,6 @@ FROM (
 ) WHERE rn <= {BM25_TOPK}
 """
 
-
-def _bm25_score_batch(tf, qterms, dl, n) -> DataFrame:
-    """The batch edition of _bm25_score: tf carries (query_id, doc_id,
-    term, tf) and qterms (query_id, term, df); scoring groups by
-    (query_id, doc_id) and the top-k window partitions by query_id, so N
-    queries rank in ONE pass with no per-query re-scan.  Shared by the
-    persisted-index batch lane and its in-plan twin (test-pinned)."""
-    from pyspark.sql.window import Window
-
-    contrib = (
-        tf.join(F.broadcast(qterms), ["query_id", "term"])
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "query_id",
-            "doc_id",
-            F.floor(
-                F.log(
-                    (
-                        F.col("n_docs").cast("double")
-                        - F.col("df").cast("double")
-                        + 0.5
-                    )
-                    / (F.col("df").cast("double") + 0.5)
-                    + 1.0
-                )
-                * (F.col("tf").cast("double") * F.expr(f"{BM25_K1} + 1.0"))
-                / (
-                    F.col("tf").cast("double")
-                    + F.expr(
-                        f"{BM25_K1} * (1.0 - {BM25_B} + {BM25_B}"
-                        f" * CAST(dl AS DOUBLE)"
-                        f" / (CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE)))"
-                    )
-                )
-                * 1000000.0
-                + 0.5
-            )
-            .cast("long")
-            .alias("c_micro"),
-        )
-    )
-    scored = (
-        contrib.groupBy("query_id", "doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
-            F.sum("c_micro").cast("long").alias("score_micro"),
-        )
-        .join(dl, "doc_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= BM25_TOPK)
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("dl").cast("long").alias("dl"),
-            "n_terms_matched",
-            "score_micro",
-            fround(F.col("score_micro").cast("double") / 1000000.0, 4).alias(
-                "score"
-            ),
-            "rank",
-        )
-    )
-
-
-def _bm25_batch_from_index(postings: DataFrame, dl: DataFrame) -> DataFrame:
-    """Serve the BM25_BATCH_NQ-query batch off index-shaped relations
-    (postings (term, doc_id, tf), doc lengths (doc_id, dl)): df, the
-    ranked query-term batch, corpus stats, and all scores derive from the
-    index -- documents is never touched.  Shared by the persisted lane
-    (x_text_bm25_batch) and the in-plan twin in tests/test_bm25_cep.py."""
-    n = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-    )
-    df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    # TakeOrdered the 32-term batch first (scale-safe: never a global
-    # window over the vocabulary), THEN window over the 32-row frame to
-    # assign query ids by df rank
-    from pyspark.sql.window import Window
-
-    top = df_t.orderBy(F.col("df").desc(), F.col("term").asc()).limit(
-        BM25_BATCH_NQ * BM25_QTERMS
-    )
-    wq = Window.orderBy(F.col("df").desc(), F.col("term").asc())
-    qterms = top.select(
-        F.floor((F.row_number().over(wq) - 1) / BM25_QTERMS)
-        .cast("long")
-        .alias("query_id"),
-        "term",
-        "df",
-    )
-    tf = postings.join(
-        F.broadcast(qterms.select("query_id", "term")), "term"
-    ).select("query_id", "doc_id", "term", "tf")
-    return _bm25_score_batch(tf, qterms, dl, n)
-
-
 @query("x_text_bm25_batch", oracle=_BM25_BATCH_ORACLE)
 def x_text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED BM25 serving off the persisted inverted index -- the
@@ -2739,10 +2661,8 @@ def x_text_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc lengths persisted as parquet, reloaded via spark.newSession(),
     documents never touched after the build."""
     loc = _persist_bm25_index(spark, sf_dir)
-    s2 = spark.newSession()
-    return _bm25_batch_from_index(
-        s2.read.parquet(f"{loc}/postings.parquet"),
-        s2.read.parquet(f"{loc}/doclen.parquet"),
+    return _bm25_from_index(
+        *_read_bm25_index(spark.newSession(), loc), nq=BM25_BATCH_NQ
     )
 
 
@@ -2756,15 +2676,16 @@ def x_text_bm25_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY A4, x_pipeline_incremental_sales) applied to the retrieval
     index: the index is built from a BASE batch (a deterministic 80% of
     documents by the shared md5 id-hash split), persisted, and then a
-    DELTA batch arrives and is merged by APPENDING its postings and doc
-    lengths -- no rebuild, no read-modify-write: (doc_id, term) rows are
-    doc-grain, so a new document's postings are disjoint from every
-    existing row by construction, making append the exact merge (the
-    same reasoning that makes the incremental MV equal its rebuild).
-    The CORPUS-level statistics (df, the top-df query set, N, avgdl) are
-    NOT stored -- they re-derive from the postings at serve time, which
-    is what makes the index refreshable: stored df would go stale with
-    every batch, re-derived df is always exact.
+    DELTA batch arrives and is merged by landing its postings and doc
+    lengths as a second batch -- no rebuild, no read-modify-write:
+    (doc_id, term) rows are doc-grain, so a new document's postings are
+    disjoint from every existing row by construction, making the union
+    the exact merge (the same reasoning that makes the incremental MV
+    equal its rebuild).  The CORPUS-level statistics (df, the top-df
+    query set, N, avgdl) are NOT stored -- they re-derive from the
+    postings at serve time, which is what makes the index refreshable:
+    stored df would go stale with every batch, re-derived df is always
+    exact.
 
     Serving happens in a fresh session off the merged index, and the
     oracle is the FULL-CORPUS bm25 replay, unchanged: incremental
@@ -2772,46 +2693,18 @@ def x_text_bm25_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at once (also pinned directly against x_text_bm25_index_persist in
     tests/test_bm25_cep.py).  At 100 TB this is the shape that keeps a
     corpus-scale index alive under ingest: each batch pays one scan of
-    ITSELF (never the corpus), appended as new parquet files under the
-    term-partitioned layout."""
-    from .x_sources import _scratch
+    ITSELF (never the corpus), landed as new parquet files beside the
+    existing ones."""
     from .x_pipeline import _bucket
+    from .x_sources import _scratch
 
-    t = catalog.load(spark, sf_dir)
-
-    def toks_of(docs):
-        return docs.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-            ).alias("term"),
-        )
-
+    docs = catalog.load(spark, sf_dir).documents
+    base = _bucket(F.col("doc_id")) < BM25_REFRESH_PCT
     loc = _scratch("pdwx-bm25ref-")
-    base = t.documents.filter(_bucket(F.col("doc_id")) < BM25_REFRESH_PCT)
-    bt = toks_of(base)
-    bt.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf")).write.mode(
-        "overwrite"
-    ).parquet(f"{loc}/postings.parquet")
-    bt.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).write.mode(
-        "overwrite"
-    ).parquet(f"{loc}/doclen.parquet")
-
-    # the delta batch: scan ONLY the new documents, append their rows
-    delta = t.documents.filter(_bucket(F.col("doc_id")) >= BM25_REFRESH_PCT)
-    dt = toks_of(delta)
-    dt.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf")).write.mode(
-        "append"
-    ).parquet(f"{loc}/postings.parquet")
-    dt.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")).write.mode(
-        "append"
-    ).parquet(f"{loc}/doclen.parquet")
-
-    s2 = spark.newSession()
-    return _bm25_from_index(
-        s2.read.parquet(f"{loc}/postings.parquet"),
-        s2.read.parquet(f"{loc}/doclen.parquet"),
-    )
+    # batch 0 is the base build; batch 1 scans ONLY the new documents
+    for batch, pred in enumerate((base, ~base)):
+        _write_bm25_index(loc, *_bm25_index(docs.filter(pred)), batch=batch)
+    return _bm25_from_index(*_read_bm25_index(spark.newSession(), loc))
 
 
 BM25_DELETE_PCT = 90   # tombstone the doc_id md5-bucket >= 90 split (10%)
@@ -2819,6 +2712,32 @@ _BM25_SURVIVOR_PRED = (
     "CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)"
     f" % 100 < {BM25_DELETE_PCT}"
 )
+
+
+def _bm25_band(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents (doc_id, text) of the md5 band >= BM25_DELETE_PCT:
+    the 10% the delete and compact lanes tombstone and the update lane
+    edits."""
+    from .x_pipeline import _bucket
+
+    return (
+        catalog.load(spark, sf_dir)
+        .documents.filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT)
+        .select(F.col("doc_id").cast("long").alias("doc_id"), "text")
+    )
+
+
+def _bm25_live(
+    spark: SparkSession, sf_dir: str, loc: str
+) -> tuple[DataFrame, DataFrame]:
+    """The index stored under loc, read in `spark`, with every row of a
+    _bm25_band document anti-joined out of both relations.  Both are
+    doc-grain, so this is PRECISELY the index of the surviving corpus."""
+    tomb = _bm25_band(spark, sf_dir).select("doc_id")
+    return tuple(
+        rel.join(tomb, "doc_id", "left_anti")
+        for rel in _read_bm25_index(spark, loc)
+    )
 
 
 @query("x_text_bm25_index_delete", oracle=_bm25_oracle(_BM25_SURVIVOR_PRED))
@@ -2851,22 +2770,8 @@ def x_text_bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     de-hinting discipline), and the term-partitioned postings rewrite
     that reclaims the space is the ANN compaction story
     (x_sim_ann_index_compact) applied to the lexical relations."""
-    from .x_pipeline import _bucket
-
     loc = _persist_bm25_index(spark, sf_dir)
-    s2 = spark.newSession()
-    tomb = (
-        catalog.load(s2, sf_dir)
-        .documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT)
-    )
-    postings = s2.read.parquet(f"{loc}/postings.parquet").join(
-        tomb, "doc_id", "left_anti"
-    )
-    dl = s2.read.parquet(f"{loc}/doclen.parquet").join(
-        tomb, "doc_id", "left_anti"
-    )
-    return _bm25_from_index(postings, dl)
+    return _bm25_from_index(*_bm25_live(spark.newSession(), sf_dir, loc))
 
 
 @query("x_text_bm25_index_compact", oracle=_bm25_oracle(_BM25_SURVIVOR_PRED))
@@ -2886,33 +2791,18 @@ def x_text_bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compacted serve must be ROW-IDENTICAL to the masked serve (and
     both to a from-scratch rebuild of the survivors -- the delete lane's
     pinned equality); the oracle is the survivor-corpus replay,
-    unchanged.  tests/test_bm25_cep.py pins the identity and that zero
-    tombstoned rows survive in either compacted relation.  At 100 TB
+    unchanged.  tests/test_bm25_cep.py pins the identity.  At 100 TB
     the rewrite is one scan of the index relations (|distinct
     (doc, term)| rows, never the corpus), embarrassingly parallel under
     the term-partitioned layout, amortized across every query served
     between compactions."""
-    from .x_pipeline import _bucket
     from .x_sources import _scratch
 
     loc = _persist_bm25_index(spark, sf_dir)
-    tomb = (
-        catalog.load(spark, sf_dir)
-        .documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT)
+    cloc = _write_bm25_index(
+        _scratch("pdwx-bm25compact-"), *_bm25_live(spark, sf_dir, loc)
     )
-    cloc = _scratch("pdwx-bm25compact-")
-    spark.read.parquet(f"{loc}/postings.parquet").join(
-        tomb, "doc_id", "left_anti"
-    ).write.mode("overwrite").parquet(f"{cloc}/postings.parquet")
-    spark.read.parquet(f"{loc}/doclen.parquet").join(
-        tomb, "doc_id", "left_anti"
-    ).write.mode("overwrite").parquet(f"{cloc}/doclen.parquet")
-    s2 = spark.newSession()
-    return _bm25_from_index(
-        s2.read.parquet(f"{cloc}/postings.parquet"),
-        s2.read.parquet(f"{cloc}/doclen.parquet"),
-    )
+    return _bm25_from_index(*_read_bm25_index(spark.newSession(), cloc))
 
 
 PRF_FB_DOCS = BM25_TOPK   # feedback set: the BM25 top-10
@@ -3003,7 +2893,6 @@ FROM (
 ) WHERE rn <= {BM25_TOPK}
 """
 
-
 @query("x_text_bm25_prf", oracle=_BM25_PRF_ORACLE)
 def x_text_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance feedback (the RM3 shape Anserini/Lucene ship as
@@ -3019,97 +2908,27 @@ def x_text_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-quantized factors floored once per (doc, term), so partition
     order cannot flip ranks).
 
-    Everything derives from the SAME (doc, term) postings relation the
-    bm25 family shares -- checkpointed once, consumed by the base
-    ranking, the feedback mining, and the expanded re-query; the
-    expansion query is <= {BM25_QTERMS} + {PRF_FB_TERMS} rows
-    (broadcast).  At 100 TB PRF costs one extra postings pass over the
-    expansion terms' posting lists -- the classic quality/latency trade
-    retrieval stacks tune; the feedback mining itself touches only
+    Everything derives from the SAME postings relation the bm25 family
+    shares (_bm25_index, checkpointed once), consumed by the base ranking
+    (the single-query scorer), the feedback mining, and the expanded
+    re-query; the expansion query is <= {BM25_QTERMS} + {PRF_FB_TERMS}
+    rows (broadcast).  At 100 TB PRF costs one extra postings pass over
+    the expansion terms' posting lists -- the classic quality/latency
+    trade retrieval stacks tune; the feedback mining itself touches only
     {PRF_FB_DOCS} documents' postings."""
-    t = catalog.load(spark, sf_dir)
-    toks = t.documents.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
-    )
-    postings = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dl = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    n = dl.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("total_tokens"),
-    )
-    df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    qterms = df_t.orderBy(F.col("df").desc(), F.col("term").asc()).limit(
-        BM25_QTERMS
-    )
-
-    def contrib_of(wq):
-        """(doc_id, term, w_micro, c_micro) for the weighted query wq
-        (term, w_micro): BM25 contribution per matched (doc, term)."""
-        return (
-            postings.join(F.broadcast(wq), "term")
-            .join(F.broadcast(df_t.join(wq.select("term"), "term")), "term")
-            .join(dl, "doc_id")
-            .crossJoin(F.broadcast(n))
-            .select(
-                "doc_id",
-                "term",
-                "w_micro",
-                F.floor(
-                    F.log(
-                        (
-                            F.col("n_docs").cast("double")
-                            - F.col("df").cast("double")
-                            + 0.5
-                        )
-                        / (F.col("df").cast("double") + 0.5)
-                        + 1.0
-                    )
-                    * (F.col("tf").cast("double") * F.expr(f"{BM25_K1} + 1.0"))
-                    / (
-                        F.col("tf").cast("double")
-                        + F.expr(
-                            f"{BM25_K1} * (1.0 - {BM25_B} + {BM25_B}"
-                            f" * CAST(dl AS DOUBLE)"
-                            f" / (CAST(total_tokens AS DOUBLE)"
-                            f" / CAST(n_docs AS DOUBLE)))"
-                        )
-                    )
-                    * 1000000.0
-                    + 0.5
-                )
-                .cast("long")
-                .alias("c_micro"),
-            )
-        )
-
     from pyspark.sql.window import Window
 
-    base = contrib_of(
-        qterms.select("term", F.lit(PRF_ORIG_W).cast("long").alias("w_micro"))
-    )
+    postings, dl = _bm25_index(catalog.load(spark, sf_dir).documents)
+    qterms = _bm25_query_terms(postings, 1).select("term")
     fb = (
-        base.groupBy("doc_id")
-        .agg(F.sum("c_micro").alias("s"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.orderBy(F.col("s").desc(), F.col("doc_id").asc())
-            ),
-        )
-        .filter(F.col("rn") <= PRF_FB_DOCS)
+        _bm25_from_index(postings, dl, nq=1)
+        .filter(F.col("rank") <= PRF_FB_DOCS)
         .select("doc_id")
     )
     exp_terms = (
         postings.join(F.broadcast(fb), "doc_id")
         .join(dl, "doc_id")
-        .join(F.broadcast(qterms.select("term")), "term", "left_anti")
+        .join(F.broadcast(qterms), "term", "left_anti")
         .select(
             "term",
             F.floor(
@@ -3131,12 +2950,11 @@ def x_text_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term", "w_micro")
     )
     wq = (
-        qterms.select(
-            "term", F.lit(PRF_ORIG_W).cast("long").alias("w_micro")
-        )
+        qterms.select("term", F.lit(PRF_ORIG_W).cast("long").alias("w_micro"))
         .unionByName(exp_terms)
         .localCheckpoint(eager=False)
     )
+    df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # floor(w*c / 1e9) exactly on both engines: subtract the mathematical
     # mod first so truncating division equals floor (the shared idiom;
     # w*c is nonnegative here -- the +1-idf variant never goes negative --
@@ -3146,7 +2964,7 @@ def x_text_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         " + 1000000000) % 1000000000) div 1000000000"
     )
     scored = (
-        contrib_of(wq)
+        _bm25_contrib(postings, dl, wq.join(df_t, "term"), "w_micro")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_terms_matched"),
@@ -3179,7 +2997,6 @@ def _bm25_update_oracle() -> str:
     assert anchor in base, "bm25 oracle anchor drifted"
     return base.replace(anchor, f"FROM ({_BM25_UPDATE_DOCS}) WHERE TRUE")
 
-
 @query("x_text_bm25_index_update", oracle=_bm25_update_oracle())
 def x_text_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RE-INGEST -- the read-modify-write the round-12 verdict named as
@@ -3206,41 +3023,16 @@ def x_text_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-update cost is one anti-join (AQE-sized tombstones) plus one
     scan of the updated batch; compaction (x_text_bm25_index_compact)
     periodically folds the masked rows away."""
-    from .x_pipeline import _bucket
-
     loc = _persist_bm25_index(spark, sf_dir)
     s2 = spark.newSession()
-    t2 = catalog.load(s2, sf_dir)
-    edited_ids = t2.documents.select(
-        F.col("doc_id").cast("long").alias("doc_id")
-    ).filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT)
-    # DELETE: mask every stale row of the edited docs
-    postings = s2.read.parquet(f"{loc}/postings.parquet").join(
-        edited_ids, "doc_id", "left_anti"
-    )
-    dl = s2.read.parquet(f"{loc}/doclen.parquet").join(
-        edited_ids, "doc_id", "left_anti"
-    )
-    # INSERT: re-tokenize ONLY the edited band, with its revised content
-    revised = (
-        t2.documents.filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.concat(
-                F.col("text"), F.lit(" revisedcontent revisedcontent")
-            ).alias("text"),
-        )
-    )
-    rt = revised.select(
+    revised = _bm25_band(s2, sf_dir).select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
+        F.concat(F.col("text"), F.lit(" revisedcontent revisedcontent")).alias(
+            "text"
+        ),
     )
-    postings = postings.unionByName(
-        rt.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    postings, dl = _bm25_live(s2, sf_dir, loc)
+    new_postings, new_dl = _bm25_index(revised)
+    return _bm25_from_index(
+        postings.unionByName(new_postings), dl.unionByName(new_dl)
     )
-    dl = dl.unionByName(
-        rt.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    )
-    return _bm25_from_index(postings, dl)

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import fround
+from ..operators.dedup import tokens
 from . import query
 
 UNI_L = 4          # max candidate piece length (chars)
@@ -268,11 +269,7 @@ def _uni_words(documents: DataFrame) -> DataFrame:
     """Distinct-word frequency table -- the vocabulary-sized trainer input
     (ONE corpus scan; checkpointed so EM rounds never re-scan the corpus)."""
     return (
-        documents.select(
-            F.explode(
-                F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-            ).alias("w")
-        )
+        documents.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
         .localCheckpoint()
@@ -448,9 +445,7 @@ def x_text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docw = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), 0)
-        ).alias("w"),
+        F.explode(tokens(F.col("text"))).alias("w"),
     )
     return (
         docw.join(seg, "w")

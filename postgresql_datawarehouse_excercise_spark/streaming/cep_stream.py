@@ -105,7 +105,8 @@ def run_cep_stream(
     epoch's match set (the revised, authoritative answer), selected by
     the epoch id the sink RECORDED for its final commit -- correct even
     when that final re-match retracted every occurrence and emitted zero
-    rows."""
+    rows.  The stream's checkpoint lives in out_dir/_checkpoint (a name
+    parquet reads of out_dir skip), so removing out_dir removes it too."""
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -115,7 +116,7 @@ def run_cep_stream(
     q = (
         stream.writeStream.foreachBatch(sink)
         .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out_dir}-ckpt")
+        .option("checkpointLocation", f"{out_dir}/_checkpoint")
         .start()
     )
     q.awaitTermination()

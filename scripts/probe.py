@@ -10,7 +10,9 @@ Each entry is timed exactly like bench.py's ``run``: construction plus one
 (``multiplied_dir``) and probes that, which answers "does this entry's
 plan survive K times the data?" on the shipped code path.  ``--explain
 DIR`` runs each entry once more, untimed, and writes its AQE-final
-formatted plan to DIR/<entry>.txt.
+formatted plan to DIR/<entry>.txt and its optimized logical plan, with
+the ``#<id>`` expression ids stripped, to DIR/<entry>.logical.txt, so
+comparing the plans of two checkouts is one ``diff -r``.
 
 Example: python scripts/probe.py --scale 10 --iters 3 'x_tpch_q*' x_dedup_edit_join
 """
@@ -21,6 +23,7 @@ import argparse
 import fnmatch
 import glob
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -107,7 +110,8 @@ def select_entries(registry: dict[str, QueryDef], patterns: list[str]) -> list[s
 
 def write_plan(spark: SparkSession, qd: QueryDef, sf_dir: str, out_dir: str) -> tuple[int, str]:
     """Execute the entry's own plan once (so AQE finalizes it), then write
-    its formatted plan.  Returns the row count and the file written."""
+    its formatted plan and its id-free optimized logical plan.  Returns
+    the row count and the formatted plan's file."""
     # AQE skips plans without an exchange (e.g. a checkpointed result);
     # forcing it gives every file the same isFinalPlan=true root and
     # changes nothing else in such plans.
@@ -118,6 +122,8 @@ def write_plan(spark: SparkSession, qd: QueryDef, sf_dir: str, out_dir: str) -> 
         rows = qe.toRdd().count()
     finally:
         spark.conf.unset("spark.sql.adaptive.forceApply")
+    with open(os.path.join(out_dir, f"{qd.name}.logical.txt"), "w") as fh:
+        fh.write(re.sub(r"#\d+L?", "", qe.optimizedPlan().toString()))
     path = os.path.join(out_dir, f"{qd.name}.txt")
     with open(path, "w") as fh:
         fh.write(spark.sparkContext._jvm.PythonSQLUtils.explainString(qe, "formatted"))

@@ -352,7 +352,7 @@ def test_bm25_compact_identical_to_masked_serve_and_tombstone_free(spark):
     }
     assert tomb
     loc = _persist_bm25_index(spark, SF)
-    live_postings = spark.read.parquet(f"{loc}/postings.parquet").join(
+    live_postings = spark.read.parquet(f"{loc}/postings").join(
         t.documents.select(F.col("doc_id").cast("long").alias("doc_id"))
         .filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT),
         "doc_id",

@@ -19,9 +19,25 @@ from postgresql_datawarehouse_excercise_spark.sources import bookorders
 
 @pytest.fixture(scope="module")
 def customer_raw(spark):
-    if not bookorders.available():
-        pytest.skip("reference dump not present")
-    return bookorders.load_bookorders(spark)["customer"]
+    """Raw book-orders customers built in-repo (bookorders.SCHEMAS
+    ["customer"]): ids 1-120 over four countries.  Every 7th customer
+    lives in 'Sidney' (so the Sydney cleanup touches all four country
+    partitions), every 11th has no first name, and customers 96 and 100
+    exist for the reference's district fixes."""
+    countries = ["Australia", "Hungary", "New Zealand", "North Macedonia"]
+    cities = ["Sydney", "Budapest", "Auckland", "Skopje"]
+    rows = [
+        (
+            i,
+            f"Surname{i}",
+            None if i % 11 == 0 else f"Name{i}",
+            "Sidney" if i % 7 == 0 else cities[i % 4],
+            f"District{i % 5}",
+            countries[i % 4],
+        )
+        for i in range(1, 121)
+    ]
+    return spark.createDataFrame(rows, schema=bookorders.SCHEMAS["customer"])
 
 
 def _table(spark, df, tmp_path, **kw):

@@ -4,6 +4,7 @@ result as its batch twin when drained over the same finite input
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from postgresql_datawarehouse_excercise_spark import catalog
@@ -525,3 +526,38 @@ def test_ann_index_sink_idempotent_under_redelivery(spark, tmp_path, sf_dir):
     for rel, before in snap.items():
         after = sorted(map(tuple, spark.read.parquet(f"{idx}/{rel}").collect()))
         assert after == before, rel
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        "x_stream_bm25_index",
+        "x_stream_ann_index",
+        "x_stream_cep",
+        "x_stream_incremental_mv",
+    ],
+)
+def test_stream_entry_leaves_no_dir_outside_scratch(spark, sf_dir, monkeypatch, entry):
+    """Every directory a streaming entry creates -- sources, sinks, state
+    and the stream's checkpoint -- lives in a scratch dir, so the scratch
+    cleanup at exit removes all of it.  A checkpoint placed beside a
+    scratch dir (`<dir>-ckpt`) or a bare mkdtemp would be left behind."""
+    import glob
+    import os
+    import tempfile
+
+    from postgresql_datawarehouse_excercise_spark.queries import load_all, x_sources
+
+    made = []
+    scratch = x_sources._scratch
+
+    def recording_scratch(prefix):
+        made.append(scratch(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(x_sources, "_scratch", recording_scratch)
+    pattern = os.path.join(tempfile.gettempdir(), "pdwx-*")
+    before = set(glob.glob(pattern))
+    load_all()[entry].fn(spark, sf_dir).collect()
+    assert made
+    assert set(glob.glob(pattern)) - before - set(made) == set()
