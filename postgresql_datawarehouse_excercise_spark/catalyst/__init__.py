@@ -36,9 +36,10 @@ import glob
 import os
 import shutil
 import subprocess
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .. import session
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "MvSubstituteRule.java")
 
@@ -70,7 +71,7 @@ def build_classes() -> str:
             "rule needs a JDK (the pure-Python RewritingSession in "
             "mv/sql_rewrite.py covers the same semantics without one)"
         )
-    out = tempfile.mkdtemp(prefix="pdwx-catalyst-")
+    out = session.scratch("pdwx-catalyst-")
     proc = subprocess.run(
         [javac, "-cp", _spark_jars_classpath(), "-d", out, _SRC],
         capture_output=True,

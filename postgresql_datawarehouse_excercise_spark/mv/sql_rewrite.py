@@ -67,6 +67,19 @@ STAR_VIEW = "sales_star"
 LINES_VIEW = "sales_lines"
 
 
+def _star_dims(t) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The dimension frames both star views join onto their fact rows:
+    (time: timeid + its date attributes, customer: customerid -> name,
+    geography: customerid -> district, country)."""
+    from ..queries.q4_views import _geo
+
+    tdim = t.time_dim().select("timeid", "orderdate", "dayofweek", "month", "year")
+    cust = t.customer.select(
+        F.col("c_custkey").alias("customerid"), F.col("c_name").alias("name")
+    )
+    return tdim, cust, _geo(t)
+
+
 def register_star_view(
     spark: SparkSession, sf_dir: str, name: str = STAR_VIEW
 ) -> DataFrame:
@@ -75,13 +88,7 @@ def register_star_view(
     joins the fact to every dimension -- exactly what an MV rewrite should
     avoid."""
     t = catalog.load(spark, sf_dir)
-    from ..queries.q4_views import _geo
-
-    cust = t.customer.select(
-        F.col("c_custkey").alias("customerid"), F.col("c_name").alias("name")
-    )
-    geo = _geo(t)
-    tdim = t.time_dim().select("timeid", "orderdate", "dayofweek", "month", "year")
+    tdim, cust, geo = _star_dims(t)
     star = (
         t.sales()
         .join(cust, "customerid")
@@ -110,13 +117,7 @@ def register_lines_view(
     from ..functions import dec
 
     t = catalog.load(spark, sf_dir)
-    from ..queries.q4_views import _geo
-
-    tdim = t.time_dim().select("timeid", "orderdate", "dayofweek", "month", "year")
-    cust = t.customer.select(
-        F.col("c_custkey").alias("customerid"), F.col("c_name").alias("name")
-    )
-    geo = _geo(t)
+    tdim, cust, geo = _star_dims(t)
     lines = (
         t.lineitem.select("l_orderkey", "l_partkey", dec("l_quantity").alias("quantity"))
         .join(

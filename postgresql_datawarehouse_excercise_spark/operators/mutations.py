@@ -52,11 +52,12 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .. import session
 
 
 class CheckViolation(RuntimeError):
@@ -555,7 +556,7 @@ def temp_table(
     """Materialize df as a throwaway ManagedParquetTable (tests/demos)."""
     t = ManagedParquetTable(
         spark,
-        tempfile.mkdtemp(prefix="pdwx-managed-"),
+        session.scratch("pdwx-managed-"),
         partition_by=partition_by,
         checks=checks,
         retain=retain,

@@ -42,10 +42,12 @@ vector-search surface the LLM-pipeline north star needs.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .clustering import SCALE, _dist2, quantize
+from .clustering import SCALE, _dist2, assign_gemm, quantize
 
 PQ_M = 8         # subspaces
 PQ_SUB = 8       # dims per subspace (PQ_M * PQ_SUB = 64, the corpus dim)
@@ -163,12 +165,18 @@ def _recompute(subs: DataFrame, assigned: DataFrame) -> DataFrame:
     )
 
 
-def pq_train_encode(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(codebooks, codes): PQ_ROUNDS Lloyd rounds per subspace, then the
-    final encode.  codebooks = (m, cid, csv); codes = (vec_id, m, code).
-    Each round's codebook is localCheckpoint'd: the lineage would otherwise
-    double per round (assign reads codebook, recompute reads assign), and
-    the checkpoint is PQ_M x PQ_K rows -- trivially small."""
+def pq_train_encode(
+    train: DataFrame, full: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """(codebooks, codes): PQ_ROUNDS Lloyd rounds per subspace on `train`
+    (init + every round), then the final encode of every vector of `full`
+    against the trained codebooks -- the FAISS add / add-without-retrain
+    lifecycle.  With `full` omitted the training population itself is
+    encoded, from its already-materialized quantization.  codebooks =
+    (m, cid, csv); codes = (vec_id, m, code).  Each round's codebook is
+    localCheckpoint'd: the lineage would otherwise double per round
+    (assign reads codebook, recompute reads assign), and the checkpoint is
+    PQ_M x PQ_K rows -- trivially small."""
     # The N-row QUANTIZED relation is materialized once and every Lloyd
     # round + the final encode (2*PQ_ROUNDS + 1 references) derive the
     # subvector explode from it lazily -- a narrow per-row slice, no
@@ -181,45 +189,69 @@ def pq_train_encode(embeddings: DataFrame) -> tuple[DataFrame, DataFrame]:
     # per-stage materialization
     # (per-invocation lifetime -- a session-scoped persist would be reused
     # across bench iterations, which the no-caching-across-runs rule bans).
-    q = quantize(embeddings).localCheckpoint()
+    q = quantize(train).localCheckpoint()
     subs = _subvectors(q)
     cb = _init_codebooks(q)
     for _ in range(PQ_ROUNDS):
         a = _assign_gemm(subs, cb)
         cb = _recompute(subs, a).localCheckpoint()
-    codes = _assign_gemm(subs, cb).select(
-        "vec_id", "m", F.col("cid").alias("code")
-    )
-    return cb, codes
+    if full is not None:
+        return cb, pq_encode(full, cb)
+    return cb, _encode(subs, cb)
 
 
-def pq_train_encode_split(train: DataFrame, full: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """pq_train_encode with the training population split from the encode
-    population: codebooks train on `train` only (init + every Lloyd
-    round), then EVERY vector of `full` encodes against the trained
-    codebooks -- the FAISS add / add-without-retrain lifecycle.  With
-    train == full this is exactly pq_train_encode."""
-    # same reuse shape as pq_train_encode: one N-row materialization, the
-    # subvector explode derived lazily per reference (see pq_train_encode)
-    qt = quantize(train).localCheckpoint()
-    tsubs = _subvectors(qt)
-    cb = _init_codebooks(qt)
-    for _ in range(PQ_ROUNDS):
-        a = _assign_gemm(tsubs, cb)
-        cb = _recompute(tsubs, a).localCheckpoint()
-    codes = _assign_gemm(_subvectors(quantize(full)), cb).select(
-        "vec_id", "m", F.col("cid").alias("code")
-    )
-    return cb, codes
+def _encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
+    return _assign_gemm(subs, cb).select("vec_id", "m", F.col("cid").alias("code"))
 
 
 def pq_encode(vectors: DataFrame, cb: DataFrame) -> DataFrame:
     """Encode `vectors` against EXISTING codebooks -- the per-batch half of
-    the add-without-retrain lifecycle (pq_train_encode_split's encode leg,
-    exposed for streaming ingest where each micro-batch encodes itself
-    against the frozen trainings).  codes = (vec_id, m, code)."""
-    return _assign_gemm(_subvectors(quantize(vectors)), cb).select(
-        "vec_id", "m", F.col("cid").alias("code")
+    the add-without-retrain lifecycle.  codes = (vec_id, m, code)."""
+    return _encode(_subvectors(quantize(vectors)), cb)
+
+
+class IvfPq(NamedTuple):
+    """The IVF-PQ index: IVF centroids (cid, cq), postings (vec_id, cell),
+    PQ codebooks (m, cid, csv), PQ codes (vec_id, m, code) and the cell
+    count the centroids were trained for.  Every component is exact
+    BIGINT, so a parquet round-trip leaves it bit-identical."""
+
+    cents: DataFrame
+    postings: DataFrame
+    cb: DataFrame
+    codes: DataFrame
+    cells: int
+
+
+def _postings(vectors: DataFrame, cents: DataFrame) -> DataFrame:
+    return assign_gemm(quantize(vectors), cents).select(
+        "vec_id", F.col("cid").alias("cell")
+    )
+
+
+def ivfpq_build(train: DataFrame, full: DataFrame | None = None) -> IvfPq:
+    """Train the index on `train` -- IVF centroids for the cell count its
+    size derives (similarity.ivf_cells) and the PQ codebooks -- then assign
+    every vector of `full` (default: `train`) to its nearest centroid and
+    encode it with the codebooks.  A `full` larger than `train` is the
+    add-without-retrain lifecycle: the added vectors never touch the
+    trainings.  The DuckDB oracle replays both forms
+    (ivfpq_topk_sql(train_pred=...))."""
+    from . import similarity
+
+    cells = similarity.ivf_cells(train.count())
+    cents, _ = similarity._ivf_train(similarity._ivf_base(train), cells)
+    cb, codes = pq_train_encode(train, full)
+    postings = _postings(train if full is None else full, cents)
+    return IvfPq(cents, postings, cb, codes, cells)
+
+
+def ivfpq_add(index: IvfPq, vectors: DataFrame) -> IvfPq:
+    """`index` with its postings and codes replaced by those of `vectors`,
+    assigned to the frozen centroids and encoded with the frozen codebooks
+    (FAISS add): one centroid argmin and one codebook argmin per vector."""
+    return index._replace(
+        postings=_postings(vectors, index.cents), codes=pq_encode(vectors, index.cb)
     )
 
 
@@ -411,9 +443,9 @@ approx AS (
 """
 
 
-def pq_topk_sql(n_queries: int = PQ_QUERIES, k: int = PQ_TOPK) -> str:
-    return f"""
-WITH {_sql_q()},
+def _sql_pq_approx(n_queries: int, k: int) -> str:
+    """pq_topk's CTE chain, ending in ``approx``."""
+    return f"""{_sql_q()},
 tbl AS (
   SELECT s.vec_id AS query_id, s.m, cbf.cid,
          CAST(SUM((s.x - cbf.c) * (s.x - cbf.c)) AS BIGINT) AS d
@@ -427,78 +459,32 @@ scores AS (
   WHERE codes.vec_id <> tbl.query_id
   GROUP BY 1, 2
 ),
-{_sql_refine_ctes("", k)}
-SELECT query_id, vec_id, adc_dist2, dist2, CAST(rank AS INT) AS rank FROM approx
+{_sql_refine_ctes("", k)}"""
+
+
+_SQL_APPROX = (
+    "SELECT query_id, vec_id, adc_dist2, dist2, CAST(rank AS INT) AS rank FROM approx"
+)
+
+
+def pq_topk_sql(n_queries: int = PQ_QUERIES, k: int = PQ_TOPK) -> str:
+    return f"""
+WITH {_sql_pq_approx(n_queries, k)}
+{_SQL_APPROX}
 """
 
 
-def pq_recall(
-    embeddings: DataFrame, n_queries: int = PQ_QUERIES, k: int = PQ_TOPK
-) -> DataFrame:
-    """(query_id, n_hits, recall): recall@k of the ADC ranking against the
-    EXACT integer squared-L2 top-k over the same query set -- the
-    compression-quality measurement (how much ranking fidelity the 32x
-    compression costs), twin of the IVF family's ann_recall.  Both arms are
-    exact BIGINT with the same (distance, vec_id) tie-break, so recall is
-    bit-exact cross-engine."""
-    from pyspark.sql.window import Window
-
-    approx = pq_topk(embeddings, n_queries, k).select("query_id", "vec_id")
-    q = quantize(embeddings)
-    qs = q.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
-    )
-    d = (
-        q.crossJoin(qs)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _dist2(F.col("qv"), F.col("qqv")).alias("d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("vec_id").asc())
-    exact = (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id")
-    )
-    hits = approx.join(exact, ["query_id", "vec_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    from ..functions import ratio
-
-    return (
-        approx.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            ratio(F.coalesce("n_hits", F.lit(0)), F.lit(k)).alias("recall"),
-        )
-    )
-
-
-def pq_recall_sql(n_queries: int = PQ_QUERIES, k: int = PQ_TOPK) -> str:
+def _sql_recall(P: str, n_queries: int, k: int) -> str:
+    """The recall tail appended after an ``approx`` CTE: the exact integer
+    top-k over the ``{P}subs`` components (the n_queries lowest ids, self
+    excluded), then per-query hits and recall -- the SQL twin of
+    _recall."""
     from ..functions import sql_ratio
 
-    return f"""
-WITH {_sql_q()},
-tbl AS (
-  SELECT s.vec_id AS query_id, s.m, cbf.cid,
-         CAST(SUM((s.x - cbf.c) * (s.x - cbf.c)) AS BIGINT) AS d
-  FROM subs s JOIN cbf ON s.m = cbf.m AND s.i = cbf.i
-  WHERE s.vec_id < {n_queries}
-  GROUP BY 1, 2, 3
-),
-scores AS (
-  SELECT tbl.query_id, codes.vec_id, CAST(SUM(tbl.d) AS BIGINT) AS adc_dist2
-  FROM codes JOIN tbl ON codes.m = tbl.m AND codes.code = tbl.cid
-  WHERE codes.vec_id <> tbl.query_id
-  GROUP BY 1, 2
-),
-{_sql_refine_ctes("", k)},
-exact_d AS (
+    return f"""exact_d AS (
   SELECT qs.vec_id AS query_id, s.vec_id,
          CAST(SUM((qs.x - s.x) * (qs.x - s.x)) AS BIGINT) AS d2
-  FROM subs qs JOIN subs s ON qs.m = s.m AND qs.i = s.i AND s.vec_id <> qs.vec_id
+  FROM {P}subs qs JOIN {P}subs s ON qs.m = s.m AND qs.i = s.i AND s.vec_id <> qs.vec_id
   WHERE qs.vec_id < {n_queries}
   GROUP BY 1, 2
 ),
@@ -520,6 +506,72 @@ FROM (SELECT DISTINCT query_id FROM approx) q LEFT JOIN hits h USING (query_id)
 """
 
 
+def exact_topk(q: DataFrame, qs: DataFrame, k: int) -> DataFrame:
+    """(query_id, vec_id): the EXACT integer squared-L2 top-k of every query
+    in `qs` (query_id, qqv) over the quantized corpus `q`, self excluded,
+    ties to the lowest vec_id -- the reference arm of every recall
+    measurement here.  A broadcast hint on `qs` is the caller's: only a
+    caller that bounds the query set may place one."""
+    from pyspark.sql.window import Window
+
+    d = (
+        q.crossJoin(qs)
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select("query_id", "vec_id", _dist2(F.col("qv"), F.col("qqv")).alias("d2"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("vec_id").asc())
+    return (
+        d.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "vec_id")
+    )
+
+
+def _recall(
+    embeddings: DataFrame, approx: DataFrame, n_queries: int, k: int
+) -> DataFrame:
+    """(query_id, n_hits, recall): recall@k of the approximate top-k
+    `approx` (query_id, vec_id) against exact_topk over the same query set
+    (the n_queries lowest vec_ids).  Both arms are exact BIGINT with the
+    same (distance, vec_id) tie-break, so recall is bit-exact
+    cross-engine."""
+    from ..functions import ratio
+
+    q = quantize(embeddings)
+    qs = q.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
+    )
+    hits = approx.join(exact_topk(q, qs, k), ["query_id", "vec_id"]).groupBy(
+        "query_id"
+    ).agg(F.count(F.lit(1)).alias("n_hits"))
+    return (
+        approx.select("query_id")
+        .distinct()
+        .join(hits, "query_id", "left")
+        .select(
+            "query_id",
+            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
+            ratio(F.coalesce("n_hits", F.lit(0)), F.lit(k)).alias("recall"),
+        )
+    )
+
+
+def pq_recall(
+    embeddings: DataFrame, n_queries: int = PQ_QUERIES, k: int = PQ_TOPK
+) -> DataFrame:
+    """Recall@k of the ADC ranking (pq_topk) -- the compression-quality
+    measurement (how much ranking fidelity the 32x compression costs),
+    twin of the IVF family's ann_recall."""
+    approx = pq_topk(embeddings, n_queries, k).select("query_id", "vec_id")
+    return _recall(embeddings, approx, n_queries, k)
+
+
+def pq_recall_sql(n_queries: int = PQ_QUERIES, k: int = PQ_TOPK) -> str:
+    return f"""
+WITH {_sql_pq_approx(n_queries, k)},
+{_sql_recall("", n_queries, k)}"""
+
+
 def ivfpq_topk(
     embeddings: DataFrame, n_queries: int = PQ_QUERIES, k: int = PQ_TOPK
 ) -> DataFrame:
@@ -537,32 +589,18 @@ def ivfpq_topk(
     distance (_refine).  Both index trainings, the probe, the encode, the
     scan and the refine replay bit-for-bit in the DuckDB oracle
     (ivfpq_topk_sql)."""
-    from . import similarity
-
-    base = similarity._ivf_base(embeddings)
-    cells = similarity.ivf_cells(embeddings.count())
-    cents, assigned = similarity._ivf_train(base, cells)
-    cb, codes = pq_train_encode(embeddings)
-    return ivfpq_serve(
-        embeddings, cents, assigned.select("vec_id", "cell"), cb, codes,
-        cells, n_queries, k,
-    )
+    return ivfpq_serve(embeddings, ivfpq_build(embeddings), n_queries, k)
 
 
 def ivfpq_serve(
     embeddings: DataFrame,
-    cents: DataFrame,
-    postings: DataFrame,
-    cb: DataFrame,
-    codes: DataFrame,
-    cells: int,
+    index: IvfPq,
     n_queries: int = PQ_QUERIES,
     k: int = PQ_TOPK,
     qids: DataFrame | None = None,
 ) -> DataFrame:
-    """The SERVING half of the IVF-PQ index, taking the four trained index
-    relations as inputs (centroids, (vec_id, cell) postings, PQ codebooks,
-    PQ codes) so the same path runs off an in-plan training
+    """The SERVING half of the IVF-PQ index, taking the trained index as
+    input so the same path runs off an in-plan training
     (ivfpq_topk) or a persisted-and-reloaded index
     (queries/x_similarity.x_sim_ann_index_persist) -- the answers must be
     bit-identical because every index component is exact BIGINT (parquet
@@ -584,23 +622,25 @@ def ivfpq_serve(
     qset = qvecs.select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
     )
-    qcells = similarity._probe_cells(qset, cents, similarity.ivf_nprobe(cells))
+    qcells = similarity._probe_cells(
+        qset, index.cents, similarity.ivf_nprobe(index.cells)
+    )
     cand = (
-        postings.join(qcells, "cell")
+        index.postings.join(qcells, "cell")
         .select("query_id", "vec_id")
         .filter(F.col("vec_id") != F.col("query_id"))
     )
     qsubs = _subvectors(qvecs).select(
         F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qsv")
     )
-    tbl = qsubs.join(F.broadcast(cb), "m").select(
+    tbl = qsubs.join(F.broadcast(index.cb), "m").select(
         "query_id",
         "m",
         F.col("cid").alias("code"),
         _dist2(F.col("qsv"), F.col("csv")).alias("d"),
     )
     scores = (
-        cand.join(codes, "vec_id")
+        cand.join(index.codes, "vec_id")
         .join(F.broadcast(tbl), ["query_id", "m", "code"])
         .groupBy("query_id", "vec_id")
         .agg(F.sum("d").alias("adc_dist2"))
@@ -610,21 +650,14 @@ def ivfpq_serve(
     )
 
 
-def ivfpq_topk_sql(
-    n_queries: int = PQ_QUERIES,
-    k: int = PQ_TOPK,
+def _sql_ivfpq_approx(
+    n_queries: int,
+    k: int,
     train_pred: str = "TRUE",
     exclude_pred: str = "FALSE",
     query_filter: str | None = None,
 ) -> str:
-    """`exclude_pred` (a SQL predicate over vec_id) marks DELETED vectors:
-    they are filtered from the candidate relation -- the tombstone mask of
-    x_sim_ann_index_delete -- so they can never reach the ADC scan or the
-    refine shortlist; the trainings are untouched (deletes do not retrain,
-    exactly like inserts do not).  `query_filter` (a SQL predicate over
-    vec_id) replaces the default lowest-id evaluation set with the
-    n_queries lowest ids SATISFYING it -- the retrain-policy entry's
-    drifted-split query population."""
+    """ivfpq_topk's CTE chain, ending in ``approx``."""
     from .similarity import _sql_ivf_index
 
     if query_filter is None:
@@ -639,8 +672,7 @@ def ivfpq_topk_sql(
             f" WHERE {query_filter} ORDER BY vec_id LIMIT {n_queries}"
         )
         tbl_filter = "s.vec_id IN (SELECT query_id FROM qset)"
-    return f"""
-WITH {_sql_ivf_index(train_pred)},
+    return f"""{_sql_ivf_index(train_pred)},
 qset AS ({qset_sql}),
 qcells AS (
   SELECT query_id, cell FROM (
@@ -672,113 +704,43 @@ scores AS (
   JOIN tbl ON tbl.query_id = cand.query_id AND tbl.m = c.m AND tbl.code = c.code
   GROUP BY 1, 2
 ),
-{_sql_refine_ctes("pq_", k)}
-SELECT query_id, vec_id, adc_dist2, dist2, CAST(rank AS INT) AS rank FROM approx
+{_sql_refine_ctes("pq_", k)}"""
+
+
+def ivfpq_topk_sql(
+    n_queries: int = PQ_QUERIES,
+    k: int = PQ_TOPK,
+    train_pred: str = "TRUE",
+    exclude_pred: str = "FALSE",
+    query_filter: str | None = None,
+) -> str:
+    """`exclude_pred` (a SQL predicate over vec_id) marks DELETED vectors:
+    they are filtered from the candidate relation -- the tombstone mask of
+    x_sim_ann_index_delete -- so they can never reach the ADC scan or the
+    refine shortlist; the trainings are untouched (deletes do not retrain,
+    exactly like inserts do not).  `query_filter` (a SQL predicate over
+    vec_id) replaces the default lowest-id evaluation set with the
+    n_queries lowest ids SATISFYING it -- the retrain-policy entry's
+    drifted-split query population."""
+    chain = _sql_ivfpq_approx(n_queries, k, train_pred, exclude_pred, query_filter)
+    return f"""
+WITH {chain}
+{_SQL_APPROX}
 """
 
 
 def ivfpq_recall(
     embeddings: DataFrame, n_queries: int = PQ_QUERIES, k: int = PQ_TOPK
 ) -> DataFrame:
-    """(query_id, n_hits, recall): recall@k of the composed IVF x PQ index
-    vs the exact integer-L2 top-k -- the end-to-end answer-quality number
-    (cell pruning loss + code distortion together), completing the
-    evaluator trio with ann_recall (pruning only) and pq_recall
-    (distortion only)."""
-    from pyspark.sql.window import Window
-
+    """Recall@k of the composed IVF x PQ index (ivfpq_topk) -- the
+    end-to-end answer-quality number (cell pruning loss + code distortion
+    together), completing the evaluator trio with ann_recall (pruning
+    only) and pq_recall (distortion only)."""
     approx = ivfpq_topk(embeddings, n_queries, k).select("query_id", "vec_id")
-    q = quantize(embeddings)
-    qs = q.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
-    )
-    d = (
-        q.crossJoin(qs)
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _dist2(F.col("qv"), F.col("qqv")).alias("d2"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("vec_id").asc())
-    exact = (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id")
-    )
-    hits = approx.join(exact, ["query_id", "vec_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    from ..functions import ratio
-
-    return (
-        approx.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
-            ratio(F.coalesce("n_hits", F.lit(0)), F.lit(k)).alias("recall"),
-        )
-    )
+    return _recall(embeddings, approx, n_queries, k)
 
 
 def ivfpq_recall_sql(n_queries: int = PQ_QUERIES, k: int = PQ_TOPK) -> str:
-    from ..functions import sql_ratio
-
-    from .similarity import _SQL_IVF_INDEX
-
     return f"""
-WITH {_SQL_IVF_INDEX},
-qset AS (SELECT vec_id AS query_id, qv AS qqv FROM qz WHERE vec_id < {n_queries}),
-qcells AS (
-  SELECT query_id, cell FROM (
-    SELECT qset.query_id, cent2.cid AS cell,
-           row_number() OVER (
-             PARTITION BY qset.query_id
-             ORDER BY CAST(SUM((qset.qqv[cent2.i] - cent2.c) * (qset.qqv[cent2.i] - cent2.c)) AS BIGINT) ASC,
-                      cent2.cid ASC) AS rn
-    FROM qset, cent2 GROUP BY qset.query_id, cent2.cid
-  ) r, p WHERE r.rn <= p.nprobe
-),
-cand AS (
-  SELECT qc.query_id, a.vec_id
-  FROM assigned a JOIN qcells qc USING (cell)
-  WHERE a.vec_id <> qc.query_id
-),
-{_sql_q("pq_")},
-tbl AS (
-  SELECT s.vec_id AS query_id, s.m, cbf.cid AS code,
-         CAST(SUM((s.x - cbf.c) * (s.x - cbf.c)) AS BIGINT) AS d
-  FROM pq_subs s JOIN pq_cbf cbf ON s.m = cbf.m AND s.i = cbf.i
-  WHERE s.vec_id < {n_queries}
-  GROUP BY 1, 2, 3
-),
-scores AS (
-  SELECT cand.query_id, cand.vec_id, CAST(SUM(tbl.d) AS BIGINT) AS adc_dist2
-  FROM cand
-  JOIN pq_codes c ON cand.vec_id = c.vec_id
-  JOIN tbl ON tbl.query_id = cand.query_id AND tbl.m = c.m AND tbl.code = c.code
-  GROUP BY 1, 2
-),
-{_sql_refine_ctes("pq_", k)},
-exact_d AS (
-  SELECT qs.vec_id AS query_id, s.vec_id,
-         CAST(SUM((qs.x - s.x) * (qs.x - s.x)) AS BIGINT) AS d2
-  FROM pq_subs qs JOIN pq_subs s ON qs.m = s.m AND qs.i = s.i AND s.vec_id <> qs.vec_id
-  WHERE qs.vec_id < {n_queries}
-  GROUP BY 1, 2
-),
-exact AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id ORDER BY d2, vec_id) AS rn
-    FROM exact_d) WHERE rn <= {k}
-),
-hits AS (
-  SELECT a.query_id, COUNT(*) AS n_hits
-  FROM approx a JOIN exact e ON a.query_id = e.query_id AND a.vec_id = e.vec_id
-  GROUP BY 1
-)
-SELECT q.query_id,
-       CAST(COALESCE(h.n_hits, 0) AS BIGINT) AS n_hits,
-       {sql_ratio("COALESCE(h.n_hits, 0)", str(k))} AS recall
-FROM (SELECT DISTINCT query_id FROM approx) q LEFT JOIN hits h USING (query_id)
-"""
+WITH {_sql_ivfpq_approx(n_queries, k)},
+{_sql_recall("pq_", n_queries, k)}"""

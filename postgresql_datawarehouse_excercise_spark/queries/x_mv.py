@@ -11,12 +11,10 @@ that its values hash-match the relationally-stated DuckDB oracle.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..etl.sales_fact import ORACLE_SALES_CTE
 from ..functions import money
 from ..mv import sql_rewrite
@@ -32,6 +30,39 @@ FROM sales_star WHERE year >= 1996 GROUP BY name, year
 HAVING COUNT(*) > 1 ORDER BY total_amnt DESC, name, year LIMIT 100"""
 
 
+def _rewrite_entry(
+    spark: SparkSession,
+    sf_dir: str,
+    text: str,
+    target: str,
+    shape: list,
+    publish=sql_rewrite.register_star_view,
+    view_name: str = sql_rewrite.STAR_VIEW,
+) -> DataFrame:
+    """Answer SQL `text` through the rewriter from a scratch warehouse that
+    holds only the `target` MV's dependency chain, after `publish`
+    registered the relation the text reads; RAISES unless the rewrite
+    landed on `target`.  The result is selected as `shape` and
+    materialized before the warehouse is dropped."""
+    reg = default_registry(session.scratch("pdwx-sqlrw-"))
+    if target not in reg.defs:
+        with_count_stats(reg)
+    try:
+        for name in ("time", "sales", target):
+            reg.build(spark, sf_dir, name)
+        nav = default_navigator(reg)
+        publish(spark, sf_dir)
+        explain: list[str] = []
+        df = sql_rewrite.spark_sql(
+            spark, sf_dir, text, reg, nav, view_name=view_name, explain=explain
+        )
+        if not any(f"rewriting onto MV '{target}'" in e for e in explain):
+            raise AssertionError(f"MV rewrite onto {target!r} did not fire: {explain}")
+        return df.select(*shape).localCheckpoint()
+    finally:
+        reg.drop_all(spark)
+
+
 @query(
     "x_mv_sql_rewrite",
     oracle=f"""WITH {_VIEW2_CTE}
@@ -43,22 +74,9 @@ def x_mv_sql_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL text answered from an MV: the analyzed-plan matcher routes the
     star-view aggregate onto view2 (cheapest sufficient materialization),
     and the result must equal the query's relational statement."""
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrw-entry-"))
-    try:
-        for name in ("time", "sales", "view2"):  # the rewrite target's dep chain
-            reg.build(spark, sf_dir, name)
-        nav = default_navigator(reg)
-        sql_rewrite.register_star_view(spark, sf_dir)
-        explain: list[str] = []
-        df = sql_rewrite.spark_sql(spark, sf_dir, _TEXT, reg, nav, explain=explain)
-        if not any("rewriting onto MV 'view2'" in e for e in explain):
-            raise AssertionError(f"MV rewrite did not fire: {explain}")
-        # materialize before the temp warehouse is dropped
-        return df.select(
-            "name", "year", money(F.col("amnt")).alias("amnt")
-        ).localCheckpoint()
-    finally:
-        reg.drop_all()
+    return _rewrite_entry(
+        spark, sf_dir, _TEXT, "view2", ["name", "year", money(F.col("amnt")).alias("amnt")]
+    )
 
 
 @query(
@@ -99,26 +117,20 @@ def x_mv_sql_rewrite_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (correctly-rounded decimal quotient -- see mv/sql_rewrite.py), and the
     oracle replicates that rounding with exact integer arithmetic
     ((2*S*10^4 + C) // (2*C) = half-up at scale 8 for positive sums)."""
-    reg = with_count_stats(default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrwm-")))
-    try:
-        for name in ("time", "sales", "view2_stats"):
-            reg.build(spark, sf_dir, name)
-        nav = default_navigator(reg)
-        sql_rewrite.register_star_view(spark, sf_dir)
-        explain: list[str] = []
-        df = sql_rewrite.spark_sql(spark, sf_dir, _TEXT_MULTI, reg, nav, explain=explain)
-        if not any("rewriting onto MV 'view2_stats'" in e for e in explain):
-            raise AssertionError(f"MV rewrite did not fire: {explain}")
-        return df.select(
+    return _rewrite_entry(
+        spark,
+        sf_dir,
+        _TEXT_MULTI,
+        "view2_stats",
+        [
             "name",
             "year",
             money(F.col("total_amnt")).alias("total_amnt"),
             "n_rows",
             F.col("avg_amnt").cast("double").alias("avg_amnt"),
             money(F.col("max_amnt")).alias("max_amnt"),
-        ).localCheckpoint()
-    finally:
-        reg.drop_all()
+        ],
+    )
 
 
 _TEXT_JOIN = """SELECT customerid, SUM(amnt) AS spending
@@ -145,21 +157,14 @@ def x_mv_sql_rewrite_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join tree (time attaches 1:1 on its unique surrogate key), strips
     the leaf qualifiers from the rendered WHERE, and answers from the
     cheapest sufficient MV.  The entry RAISES unless the rewrite fired."""
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrwj-"))
-    try:
-        for name in ("time", "sales", "view2"):
-            reg.build(spark, sf_dir, name)
-        nav = default_navigator(reg)
-        catalog.register_views(spark, sf_dir)
-        explain: list[str] = []
-        df = sql_rewrite.spark_sql(spark, sf_dir, _TEXT_JOIN, reg, nav, explain=explain)
-        if not any("rewriting onto MV 'view2'" in e for e in explain):
-            raise AssertionError(f"join-text rewrite did not fire: {explain}")
-        return df.select(
-            "customerid", money(F.col("spending")).alias("spending")
-        ).localCheckpoint()
-    finally:
-        reg.drop_all(spark)
+    return _rewrite_entry(
+        spark,
+        sf_dir,
+        _TEXT_JOIN,
+        "view2",
+        ["customerid", money(F.col("spending")).alias("spending")],
+        publish=catalog.register_views,
+    )
 
 
 _TEXT_DISTINCT = """SELECT year, COUNT(DISTINCT customerid) AS n_customers,
@@ -186,23 +191,13 @@ def x_mv_sql_rewrite_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     customerid is part of view2's GRAIN -- the MV holds every distinct
     (customer, year) combination once, so the per-year distinct customer
     count re-derives exactly.  The entry RAISES unless the rewrite fired."""
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrwd-"))
-    try:
-        for name in ("time", "sales", "view2"):
-            reg.build(spark, sf_dir, name)
-        nav = default_navigator(reg)
-        sql_rewrite.register_star_view(spark, sf_dir)
-        explain: list[str] = []
-        df = sql_rewrite.spark_sql(
-            spark, sf_dir, _TEXT_DISTINCT, reg, nav, explain=explain
-        )
-        if not any("rewriting onto MV 'view2'" in e for e in explain):
-            raise AssertionError(f"COUNT(DISTINCT) rewrite did not fire: {explain}")
-        return df.select(
-            "year", "n_customers", money(F.col("total")).alias("total")
-        ).localCheckpoint()
-    finally:
-        reg.drop_all(spark)
+    return _rewrite_entry(
+        spark,
+        sf_dir,
+        _TEXT_DISTINCT,
+        "view2",
+        ["year", "n_customers", money(F.col("total")).alias("total")],
+    )
 
 
 _TEXT_EXPR = """SELECT year, SUM(quantity * price) AS revenue,
@@ -235,26 +230,19 @@ def x_mv_sql_rewrite_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure expr (MVDef.measure_exprs) canonicalizes identically; direct
     execution would join every order line to part/time/customer.  The
     entry RAISES unless the rewrite fired."""
-    reg = with_count_stats(default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrwe-")))
-    try:
-        for name in ("time", "sales", "view2_stats"):
-            reg.build(spark, sf_dir, name)
-        nav = default_navigator(reg)
-        sql_rewrite.register_lines_view(spark, sf_dir)
-        explain: list[str] = []
-        df = sql_rewrite.spark_sql(
-            spark, sf_dir, _TEXT_EXPR, reg, nav,
-            view_name=sql_rewrite.LINES_VIEW, explain=explain,
-        )
-        if not any("rewriting onto MV 'view2_stats'" in e for e in explain):
-            raise AssertionError(f"expression-measure rewrite did not fire: {explain}")
-        return df.select(
+    return _rewrite_entry(
+        spark,
+        sf_dir,
+        _TEXT_EXPR,
+        "view2_stats",
+        [
             "year",
             money(F.col("revenue")).alias("revenue"),
             money(F.col("sat_revenue")).alias("sat_revenue"),
-        ).localCheckpoint()
-    finally:
-        reg.drop_all()
+        ],
+        publish=sql_rewrite.register_lines_view,
+        view_name=sql_rewrite.LINES_VIEW,
+    )
 
 
 @query(
@@ -358,7 +346,6 @@ def x_mv_catalyst_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     methodology."""
     from .. import catalyst as cat
     from ..functions import dec
-    from .x_sources import _scratch
 
     s2 = spark.newSession()
     t = catalog.load(s2, sf_dir)
@@ -372,7 +359,7 @@ def x_mv_catalyst_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(money(F.sum(dec("l_extendedprice"))).alias("spending"))
     )
-    mv_path = _scratch("pdwx-mvcat-") + "/customer_day_spending.parquet"
+    mv_path = session.scratch("pdwx-mvcat-") + "/customer_day_spending.parquet"
     defining.write.mode("overwrite").parquet(mv_path)
     replacement = s2.read.parquet(mv_path)
 
@@ -449,7 +436,6 @@ def x_mv_catalyst_rewrite_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .. import catalyst as cat
     from ..functions import dec
     from .q4_views import _geo
-    from .x_sources import _scratch
 
     s2 = spark.newSession()
     t = catalog.load(s2, sf_dir)
@@ -468,7 +454,7 @@ def x_mv_catalyst_rewrite_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("district")
         .agg(money(F.sum(dec("l_extendedprice"))).alias("spending"))
     )
-    scratch = _scratch("pdwx-mvcatfd-")
+    scratch = session.scratch("pdwx-mvcatfd-")
     mv_path = scratch + "/district_spending.parquet"
     bridge_path = scratch + "/geo_bridge.parquet"
     defining_fine.write.mode("overwrite").parquet(mv_path)

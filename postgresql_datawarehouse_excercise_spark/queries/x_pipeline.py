@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..functions import dec, fround, money, sql_dec, sql_money
 from ..operators import dedup as dedup_ops
 from . import query
@@ -650,7 +650,6 @@ def x_pipeline_incremental_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental == rebuild.  This is the REFRESH MATERIALIZED VIEW a
     100 TB warehouse actually runs: per-batch cost is |delta| joined +
     |MV| rewritten, never a rescan of full history."""
-    import tempfile
 
     from ..etl.time_dim import build_time_dim
     from ..mv.definitions import _sales, _time, default_registry
@@ -670,7 +669,7 @@ def x_pipeline_incremental_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders=orders2,
         lineitem=t.lineitem.join(keys2, t.lineitem.l_orderkey == keys2.o_orderkey, "left_semi"),
     )
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-"))
+    reg = default_registry(session.scratch("pdwx-incr-"))
     try:
         # initial state: time + sales materialized from batch 1 only
         # (builder swap on this registry instance; restored before the delta)

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..functions import fround
 from ..operators import clustering, pca, pq, similarity
 from . import query
@@ -447,111 +447,99 @@ def x_sim_ann_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     reading THEM, never re-deriving the index from the raw vectors.  Only
     the refine pass touches exact vectors, PQ_REFINE point-lookups per
     query against the cold store."""
-    return _serve_persisted_ann(spark, sf_dir, _persist_ann_index(spark, sf_dir))
+    return _serve_persisted_ann(
+        spark.newSession(), sf_dir, _persist_ann_index(spark, sf_dir)
+    )
+
+
+def _write_ann_index(loc: str, index: pq.IvfPq, batch: int | None = None) -> str:
+    """Store an IVF-PQ index under loc as parquet (this and _read_ann_index
+    are the only code that knows the layout): the trainings (centroids,
+    codebooks, a 1-row meta with the cell count) and the vector-grain
+    postings and codes.  A `batch` (a stream epoch) lands the vector-grain
+    relations under `_batch=N` and OVERWRITES only that subdir, so a
+    re-delivered batch rewrites its own rows instead of double-appending
+    them; batches hold disjoint vectors, so their union is the exact
+    merge.  Batch 0 writes the trainings too; a later batch only adds
+    vectors to the frozen index and leaves the stored trainings as they
+    are.  meta goes last: its presence marks a complete build
+    (_persist_ann_index's memo marker).  Returns loc."""
+    sub = "" if batch is None else f"/_batch={batch}"
+    if not batch:
+        index.cents.write.mode("overwrite").parquet(f"{loc}/centroids")
+        index.cb.write.mode("overwrite").parquet(f"{loc}/codebooks")
+    index.postings.write.mode("overwrite").parquet(f"{loc}/postings{sub}")
+    index.codes.write.mode("overwrite").parquet(f"{loc}/codes{sub}")
+    if not batch:
+        index.cents.sparkSession.createDataFrame(
+            [(index.cells,)], "cells int"
+        ).write.mode("overwrite").parquet(f"{loc}/meta")
+    return loc
+
+
+def _read_ann_index(spark: SparkSession, loc: str) -> pq.IvfPq:
+    """The index stored under loc by _write_ann_index, read in `spark`,
+    every batch merged."""
+
+    def rel(name: str) -> DataFrame:
+        return spark.read.parquet(f"{loc}/{name}").drop("_batch")
+
+    return pq.IvfPq(
+        rel("centroids"),
+        rel("postings"),
+        rel("codebooks"),
+        rel("codes"),
+        int(rel("meta").collect()[0]["cells"]),
+    )
 
 
 # The training is fully deterministic (exact-integer-grid k-means,
 # deterministic init -- the oracle replays it bit-for-bit), so every
-# lifecycle lane (persist / batch_serve / hybrid_rrf_persist / delete /
-# compact) reads ONE memoized build per corpus: at the gate the trilogy
-# pays one build + three serves instead of retraining per entry (VERDICT
-# r12 item 6).
-def _persist_ann_index(spark: SparkSession, sf_dir: str) -> str:
-    """Train the IVF-PQ index and persist its four relations (+ a 1-row
-    meta table) as parquet; returns the index directory.  Shared by
-    x_sim_ann_index_persist, x_sim_ann_batch_serve,
-    x_sim_hybrid_rrf_persist, x_sim_ann_index_delete and
-    x_sim_ann_index_compact -- the build is the amortized half of the
-    serving story, identical whichever lane reads it back, and memoized
-    per corpus (x_sources._index_memo)."""
+# lifecycle lane reads ONE memoized build per corpus and training
+# population instead of retraining per entry.
+def _persist_ann_index(spark: SparkSession, sf_dir: str, split: bool = False) -> str:
+    """Build the corpus's IVF-PQ index (pq.ivfpq_build) and store it
+    (_write_ann_index); returns the index directory, memoized per corpus
+    and training population (x_sources._index_memo).  With `split` the
+    trainings see only the md5-bucket < ANN_INSERT_PCT base and every
+    vector is assigned and encoded against them -- the
+    add-without-retrain index of the insert and retrain-policy lanes."""
+    from .x_pipeline import _bucket
     from .x_sources import _corpus_fingerprint, _index_memo
 
     def build(loc: str) -> str:
         emb = catalog.load(spark, sf_dir).embeddings
-        cells = similarity.ivf_cells(emb.count())
-        cents, assigned = similarity._ivf_train(similarity._ivf_base(emb), cells)
-        cb, codes = pq.pq_train_encode(emb)
-        cents.write.mode("overwrite").parquet(f"{loc}/centroids.parquet")
-        assigned.select("vec_id", "cell").write.mode("overwrite").parquet(
-            f"{loc}/postings.parquet"
-        )
-        cb.write.mode("overwrite").parquet(f"{loc}/codebooks.parquet")
-        codes.write.mode("overwrite").parquet(f"{loc}/codes.parquet")
-        spark.createDataFrame([(cells,)], "cells int").write.mode("overwrite").parquet(
-            f"{loc}/meta.parquet"
-        )
-        return loc
-
-    key = _corpus_fingerprint(sf_dir, "embeddings.parquet") + ("annidx",)
-    return _index_memo(key, "meta.parquet", build)
-
-
-# The SPLIT-trained build (trainings on the md5-bucket<80 base, every
-# vector assigned/encoded against the frozen trainings) is likewise
-# deterministic, so the three lanes that need it -- x_sim_ann_index_insert,
-# x_sim_ann_retrain_policy, and the stream-vs-batch equality pin -- share
-# ONE memoized build instead of retraining per entry (parquet roundtrips
-# the BIGINT grid losslessly, so loaded relations are bit-identical to
-# in-plan ones).
-def _persist_split_ann_index(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Build and persist the add-without-retrain index (centroids, PQ
-    codebooks trained on the base split; postings and codes covering
-    EVERY vector); returns (index dir, cells).  Memoized per corpus like
-    _persist_ann_index."""
-    from ..operators import clustering
-    from .x_pipeline import _bucket
-    from .x_sources import _corpus_fingerprint, _index_memo
-
-    def build(loc: str) -> tuple[str, int]:
-        emb = catalog.load(spark, sf_dir).embeddings
+        if not split:
+            return _write_ann_index(loc, pq.ivfpq_build(emb))
         base = emb.filter(_bucket(F.col("vec_id")) < ANN_INSERT_PCT)
-        cells = similarity.ivf_cells(base.count())
-        cents, _ = similarity._ivf_train(similarity._ivf_base(base), cells)
-        cb, codes = pq.pq_train_encode_split(base, emb)
-        postings = clustering.assign_gemm(clustering.quantize(emb), cents).select(
-            "vec_id", F.col("cid").alias("cell")
-        )
-        cents.write.mode("overwrite").parquet(f"{loc}/centroids.parquet")
-        postings.write.mode("overwrite").parquet(f"{loc}/postings.parquet")
-        cb.write.mode("overwrite").parquet(f"{loc}/codebooks.parquet")
-        codes.write.mode("overwrite").parquet(f"{loc}/codes.parquet")
-        spark.createDataFrame([(cells,)], "cells int").write.mode(
-            "overwrite"
-        ).parquet(f"{loc}/meta.parquet")
-        return loc, cells
+        return _write_ann_index(loc, pq.ivfpq_build(base, emb))
 
-    key = _corpus_fingerprint(sf_dir, "embeddings.parquet") + ("annsplit",)
-    return _index_memo(key, "meta.parquet", build)
+    kind = "annsplit" if split else "annidx"
+    key = _corpus_fingerprint(sf_dir, "embeddings.parquet") + (kind,)
+    return _index_memo(key, "meta", build)
 
 
 def _serve_persisted_ann(
-    spark: SparkSession,
+    s2: SparkSession,
     sf_dir: str,
     loc: str,
     n_queries: int = pq.PQ_QUERIES,
-    s2: SparkSession | None = None,
+    qids: DataFrame | None = None,
     postings_transform=None,
 ) -> DataFrame:
-    """Reload the persisted IVF-PQ index in a FRESH SparkSession and serve
-    the first `n_queries` query vectors entirely off the loaded relations
-    (pq.ivfpq_serve); only the refine pass touches exact vectors.  Pass
-    `s2` to share one fresh session across lanes (frames from different
-    sessions cannot join); `postings_transform` lets the delete lane
-    apply its tombstone mask to the loaded postings before serving."""
-    if s2 is None:
-        s2 = spark.newSession()
-    meta = s2.read.parquet(f"{loc}/meta.parquet").collect()[0]
-    postings = s2.read.parquet(f"{loc}/postings.parquet")
+    """Read the index stored under loc in session `s2` and serve the first
+    `n_queries` query vectors (or the `qids` population) entirely off the
+    loaded relations (pq.ivfpq_serve); only the refine pass touches exact
+    vectors.  Pass `spark.newSession()` for the fresh-session reload (one
+    such session shared across lanes: frames from different sessions
+    cannot join), or the session a `qids` frame lives in.
+    `postings_transform` lets the delete lane apply its tombstone mask to
+    the loaded postings before serving."""
+    index = _read_ann_index(s2, loc)
     if postings_transform is not None:
-        postings = postings_transform(postings)
+        index = index._replace(postings=postings_transform(index.postings))
     return pq.ivfpq_serve(
-        catalog.load(s2, sf_dir).embeddings,
-        s2.read.parquet(f"{loc}/centroids.parquet"),
-        postings,
-        s2.read.parquet(f"{loc}/codebooks.parquet"),
-        s2.read.parquet(f"{loc}/codes.parquet"),
-        int(meta["cells"]),
-        n_queries,
+        catalog.load(s2, sf_dir).embeddings, index, n_queries, qids=qids
     )
 
 
@@ -596,7 +584,7 @@ def x_sim_ann_batch_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     are independent of batch width because every ranking window
     partitions by query_id."""
     return _serve_persisted_ann(
-        spark, sf_dir, _persist_ann_index(spark, sf_dir), ANN_BATCH_NQ
+        spark.newSession(), sf_dir, _persist_ann_index(spark, sf_dir), ANN_BATCH_NQ
     )
 
 
@@ -772,7 +760,7 @@ def x_sim_hybrid_rrf_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = _bm25_from_index(*_read_bm25_index(s2, bm_loc), nq=1).select(
         F.col("doc_id").alias("id"), F.col("rank").alias("bm_r")
     )
-    vq = _serve_persisted_ann(spark, sf_dir, ann_loc, n_queries=1, s2=s2).select(
+    vq = _serve_persisted_ann(s2, sf_dir, ann_loc, n_queries=1).select(
         F.col("vec_id").alias("id"), F.col("rank").alias("vs_r")
     )
     return _rrf_fuse(bm, vq, "ivfpq_rank")
@@ -797,7 +785,7 @@ def x_sim_ann_index_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors are INSERTED into the index without touching the trainings --
     each new vector is assigned to its nearest EXISTING centroid
     (clustering.assign_gemm against the frozen cents) and encoded with
-    the EXISTING codebooks (pq.pq_train_encode_split), exactly the two
+    the EXISTING codebooks (pq.ivfpq_build over (base, corpus)), exactly the two
     point operations a production vector store runs per ingested batch.
     Serving then answers the standard query set over the merged postings
     and codes through the unchanged pq.ivfpq_serve path.
@@ -814,23 +802,10 @@ def x_sim_ann_index_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid argmin + one codebook argmin per new vector (two broadcast
     GEMM maps over the batch, never the corpus), with a periodic retrain
     only when recall drift says so (x_sim_ann_retrain_policy makes that
-    decision executable).
-
-    Round 14: the split-trained build (trainings on the base, every
-    vector assigned/encoded) is memoized per corpus and SHARED with the
-    retrain-policy lane (_persist_split_ann_index) -- one build, two
-    serves at the gate; values unchanged (deterministic training +
-    lossless BIGINT parquet roundtrip, the _persist_ann_index
-    precedent)."""
-    t = catalog.load(spark, sf_dir)
-    loc, cells = _persist_split_ann_index(spark, sf_dir)
-    return pq.ivfpq_serve(
-        t.embeddings,
-        spark.read.parquet(f"{loc}/centroids.parquet"),
-        spark.read.parquet(f"{loc}/postings.parquet"),
-        spark.read.parquet(f"{loc}/codebooks.parquet"),
-        spark.read.parquet(f"{loc}/codes.parquet"),
-        cells,
+    decision executable).  The split-trained build is memoized per corpus
+    and shared with the retrain-policy lane (_persist_ann_index(split=True))."""
+    return _serve_persisted_ann(
+        spark, sf_dir, _persist_ann_index(spark, sf_dir, split=True)
     )
 
 
@@ -866,20 +841,14 @@ def x_sim_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join is deliberately UN-hinted -- AQE broadcasts while it
     fits, the registry's de-hinting discipline, guard-enforced); the
     periodic OPTIMIZE that reclaims the space is x_sim_ann_index_compact.
-
-    Round 13: the lane reads the SHARED memoized persisted build
-    (_persist_ann_index) instead of retraining in-plan -- the lifecycle
-    entries now pay one build + serves at the gate (VERDICT r12 item 6);
-    values are unchanged (same deterministic training, pinned in
-    tests/test_ann_persist.py)."""
+    The lane reads the shared memoized build (_persist_ann_index)."""
     loc = _persist_ann_index(spark, sf_dir)
     s2 = spark.newSession()
     tomb = _ann_tombstones(s2, sf_dir)
     return _serve_persisted_ann(
-        spark,
+        s2,
         sf_dir,
         loc,
-        s2=s2,
         postings_transform=lambda p: p.join(tomb, "vec_id", "left_anti"),
     )
 
@@ -901,8 +870,8 @@ def x_sim_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mechanics: read the shared persisted build (the same memoized
     _persist_ann_index dir the delete lane masks), rewrite the two
     vector-grain relations -- postings (vec_id, cell) and PQ codes --
-    with the tombstoned ids anti-joined OUT, copy the vector-count-
-    independent trainings (centroids, codebooks, meta) unchanged, and
+    with the tombstoned ids anti-joined OUT, carry the vector-count-
+    independent trainings over unchanged (_compact_ann_index), and
     serve from the compacted directory with NO mask.  Deletes never
     retrain: the centroids and codebooks are byte-identical before and
     after, only membership changed.
@@ -916,24 +885,25 @@ def x_sim_ann_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, never the raw vectors), amortized across every query served
     between compactions; partition-aligned writes make it an
     embarrassingly parallel rewrite of the cell-partitioned postings."""
-    from .x_sources import _scratch
+    return _serve_persisted_ann(
+        spark.newSession(), sf_dir, _compact_ann_index(spark, sf_dir)
+    )
 
-    loc = _persist_ann_index(spark, sf_dir)
+
+def _compact_ann_index(spark: SparkSession, sf_dir: str) -> str:
+    """The compaction rewrite: the shared persisted build, stored again in
+    a fresh scratch dir with every tombstoned id anti-joined out of both
+    vector-grain relations (postings, codes); the trainings carry over
+    unchanged.  Returns the compacted dir."""
+    index = _read_ann_index(spark, _persist_ann_index(spark, sf_dir))
     tomb = _ann_tombstones(spark, sf_dir)
-    cloc = _scratch("pdwx-anncompact-")
-    # vector-grain relations: rewrite WITHOUT the tombstoned ids
-    spark.read.parquet(f"{loc}/postings.parquet").join(
-        tomb, "vec_id", "left_anti"
-    ).write.mode("overwrite").parquet(f"{cloc}/postings.parquet")
-    spark.read.parquet(f"{loc}/codes.parquet").join(
-        tomb, "vec_id", "left_anti"
-    ).write.mode("overwrite").parquet(f"{cloc}/codes.parquet")
-    # trainings + meta: byte-for-byte carry-over (compaction never retrains)
-    for rel in ("centroids", "codebooks", "meta"):
-        spark.read.parquet(f"{loc}/{rel}.parquet").write.mode(
-            "overwrite"
-        ).parquet(f"{cloc}/{rel}.parquet")
-    return _serve_persisted_ann(spark, sf_dir, cloc)
+    return _write_ann_index(
+        session.scratch("pdwx-anncompact-"),
+        index._replace(
+            postings=index.postings.join(tomb, "vec_id", "left_anti"),
+            codes=index.codes.join(tomb, "vec_id", "left_anti"),
+        ),
+    )
 
 
 # dim=64 in the driver's embeddings table (TESTDATA.md); the oracle's
@@ -1138,30 +1108,19 @@ def x_sim_ann_retrain_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     property is pinned in tests/test_ann_persist.py: an engineered corpus
     whose delta lives in an unseen region drives recall below the floor
     and the emitted decision flips to 'retrain'."""
-    from pyspark.sql.window import Window
-
     from ..functions import ratio
     from .x_pipeline import _bucket
 
     k = pq.PQ_TOPK
-    t = catalog.load(spark, sf_dir)
-    emb = t.embeddings
-    in_base = _bucket(F.col("vec_id")) < ANN_INSERT_PCT
-    loc, cells = _persist_split_ann_index(spark, sf_dir)
+    emb = catalog.load(spark, sf_dir).embeddings
     qids = (
-        emb.filter(~in_base)
+        emb.filter(~(_bucket(F.col("vec_id")) < ANN_INSERT_PCT))
         .select(F.col("vec_id").cast("long").alias("vec_id"))
         .orderBy("vec_id")
         .limit(pq.PQ_QUERIES)
     )
-    approx = pq.ivfpq_serve(
-        emb,
-        spark.read.parquet(f"{loc}/centroids.parquet"),
-        spark.read.parquet(f"{loc}/postings.parquet"),
-        spark.read.parquet(f"{loc}/codebooks.parquet"),
-        spark.read.parquet(f"{loc}/codes.parquet"),
-        cells,
-        qids=qids,
+    approx = _serve_persisted_ann(
+        spark, sf_dir, _persist_ann_index(spark, sf_dir, split=True), qids=qids
     ).select("query_id", "vec_id")
 
     q = clustering.quantize(emb)
@@ -1170,23 +1129,7 @@ def x_sim_ann_retrain_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     qs = q.join(F.broadcast(qids), "vec_id").limit(pq.PQ_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
     )
-    d = (
-        q.crossJoin(F.broadcast(qs))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            pq._dist2(F.col("qv"), F.col("qqv")).alias("d2"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("vec_id").asc()
-    )
-    exact = (
-        d.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "vec_id")
-    )
+    exact = pq.exact_topk(q, F.broadcast(qs), k)
     hits = approx.join(exact, ["query_id", "vec_id"]).agg(
         F.count(F.lit(1)).cast("long").alias("n_hits")
     )

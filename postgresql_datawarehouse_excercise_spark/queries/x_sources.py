@@ -9,33 +9,20 @@ therefore proves the round-trip is lossless (values, types, row multiplicity)
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..functions import dec, money, sql_dec, sql_money, sum_c100
 from ..sources import files
 from . import query
 
 T = TypeVar("T")
-
-
-def _scratch(prefix: str) -> str:
-    """mkdtemp with an atexit rmtree: the round-trip dirs must OUTLIVE the
-    query call (the returned DataFrame's lineage reads them lazily, often
-    from a later bench/gate action), so cleanup happens at process exit --
-    repeated bench/gate runs in one interpreter no longer accumulate
-    orphaned fixture data (ADVICE r8)."""
-    out = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return out
 
 
 def _corpus_fingerprint(sf_dir: str, table_file: str) -> tuple:
@@ -65,7 +52,7 @@ def _index_memo(key: tuple, marker: str, build: Callable[[str], T]) -> T:
     hit = _INDEX_MEMO.get(key)
     if hit is not None and os.path.isdir(os.path.join(hit[0], marker)):
         return hit[1]
-    loc = _scratch(f"pdwx-{key[-1]}-")
+    loc = session.scratch(f"pdwx-{key[-1]}-")
     value = build(loc)
     _INDEX_MEMO[key] = (loc, value)
     return value
@@ -87,7 +74,7 @@ def x_source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source) aggregate with an order-canonical content hash: hash equality
     proves the JSONL sink/source round-trip preserved every text byte."""
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-jsonl-")
+    out = session.scratch("pdwx-jsonl-")
     files.write_jsonl(t.documents, out)
     back = files.read_jsonl(spark, out, t.documents.schema)
     return (
@@ -122,7 +109,7 @@ def x_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     slim = t.orders.select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    out = _scratch("pdwx-csv-")
+    out = session.scratch("pdwx-csv-")
     files.write_csv(slim, out)
     back = files.read_csv(spark, out, slim.schema)
     return back.groupBy("o_orderstatus", "o_orderpriority").agg(
@@ -150,7 +137,7 @@ def x_source_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     against computing the same aggregate straight off the unpartitioned
     parquet in DuckDB)."""
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-part-")
+    out = session.scratch("pdwx-part-")
     t.events.withColumn(
         "day", F.date_trunc("day", F.col("ts")).cast("date")
     ).write.mode("overwrite").partitionBy("day").parquet(out)
@@ -191,7 +178,7 @@ def x_source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = catalog.load(spark, sf_dir)
     tag = uuid.uuid4().hex[:8]
-    loc = _scratch("pdwx-bucketed-")
+    loc = session.scratch("pdwx-bucketed-")
     lt, ot = f"pdwx_bl_{tag}", f"pdwx_bo_{tag}"
     try:
         files.write_bucketed(
@@ -237,7 +224,7 @@ def x_source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     The NULL status group in the result IS the old batch, pinned by the
     oracle's CASE restatement."""
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-evo-")
+    out = session.scratch("pdwx-evo-")
     t.orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     ).write.mode("overwrite").parquet(f"{out}/batch=1")
@@ -274,7 +261,7 @@ def x_source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import pyds
 
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-pyds-")
+    out = session.scratch("pdwx-pyds-")
     files.write_jsonl(t.documents, out)
     spark.dataSource.register(pyds.JsonlDataSource)
     back = (
@@ -327,7 +314,7 @@ def x_source_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> Da
     of the same restatement; the untouched days double-check that nothing
     else was clobbered."""
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-dynpart-")
+    out = session.scratch("pdwx-dynpart-")
     cents = F.floor(F.col("value").cast("double") * 100.0 + F.lit(0.5)).cast("long")
     base = t.events.select(
         F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
@@ -381,7 +368,7 @@ def x_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     slim = t.lineitem.select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_linestatus"
     )
-    out = _scratch("pdwx-orc-")
+    out = session.scratch("pdwx-orc-")
     slim.write.mode("overwrite").option("compression", "zlib").orc(out)
     back = spark.read.schema(slim.schema).orc(out)
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -415,7 +402,7 @@ def x_source_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-permissive-")
+    out = session.scratch("pdwx-permissive-")
     lines = t.documents.select(
         F.when(
             F.col("doc_id") % 10 == 0,
@@ -471,7 +458,7 @@ def x_source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale -- exactly how image/audio corpora enter a multimodal pipeline
     before operators/multimodal.py takes over."""
     t = catalog.load(spark, sf_dir)
-    out = _scratch("pdwx-binfile-")
+    out = session.scratch("pdwx-binfile-")
     sample = t.documents.filter(F.col("doc_id") % BINFILE_MOD == 0).select(
         "doc_id", "text"
     )

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..streaming import events as se
 from . import query
 
@@ -215,12 +215,11 @@ def x_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions import money
     from ..mv.definitions import default_registry
     from ..streaming import mv_maintenance as mvm
-    from .x_sources import _scratch
 
     t = catalog.load(spark, sf_dir)
-    src = _scratch("pdwx-stream-orders-")
+    src = session.scratch("pdwx-stream-orders-")
     t.orders.repartition(2).write.mode("overwrite").parquet(src)
-    reg = default_registry(_scratch("pdwx-stream-wh-"))
+    reg = default_registry(session.scratch("pdwx-stream-wh-"))
     try:
         q = mvm.maintain_sales_stream(
             spark, sf_dir, reg, mvm.read_orders_stream(spark, src)
@@ -467,14 +466,13 @@ def x_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the engine's other update-mode states."""
     from ..streaming.cep_stream import run_cep_stream
     from .x_events import CEP_MAX_US
-    from .x_sources import _scratch
 
     t = catalog.load(spark, sf_dir)
     ev = t.events.select("user_id", "event_id", "event_type", "ts")
-    src = _scratch("pdwx-cepstream-src-")
+    src = session.scratch("pdwx-cepstream-src-")
     ev.repartition(2).write.mode("overwrite").parquet(src)
-    state = _scratch("pdwx-cepstream-state-")
-    out = _scratch("pdwx-cepstream-out-")
+    state = session.scratch("pdwx-cepstream-state-")
+    out = session.scratch("pdwx-cepstream-out-")
     m = run_cep_stream(
         spark,
         src,
@@ -546,16 +544,15 @@ def x_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     the postings land under the term-partitioned layout as new files,
     and a periodic compaction (the x_sim_ann_index_compact /
     x_text_bm25_index_delete story) folds the accumulated epochs."""
-    from .x_sources import _scratch
     from .x_text import _bm25_from_index, _read_bm25_index
 
     t = catalog.load(spark, sf_dir)
     docs = t.documents.select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
-    src = _scratch("pdwx-bm25stream-src-")
+    src = session.scratch("pdwx-bm25stream-src-")
     docs.repartition(4).write.mode("overwrite").parquet(src)
-    idx = _scratch("pdwx-bm25stream-idx-")
+    idx = session.scratch("pdwx-bm25stream-idx-")
     sink = _bm25_index_sink(spark, idx)
 
     stream = (
@@ -581,44 +578,30 @@ def _stream_ann_oracle() -> str:
 
 
 def _ann_index_sink(spark: SparkSession, idx: str):
-    """foreachBatch sink for the streamed IVF-PQ index: epoch 0 trains on
-    its batch (cells derive from ITS count -- the split-lifecycle
-    contract) and persists the trainings; every epoch assigns and encodes
-    its OWN vectors against the frozen centroids/codebooks into one
-    overwritten `_batch={epoch}` subdir per relation.  Idempotent under
-    checkpoint re-delivery including epoch 0: the retrain is
-    deterministic, so rewriting the trainings reproduces them
-    byte-for-byte (pinned in tests/test_streaming.py).
+    """foreachBatch sink for the streamed IVF-PQ index: epoch 0 builds the
+    index from its batch (cells derive from ITS count -- the
+    split-lifecycle contract); every later epoch adds its OWN vectors to
+    the frozen index (pq.ivfpq_add).  Each epoch lands through the index
+    writer as batch `epoch`, one overwritten `_batch={epoch}` subdir per
+    vector-grain relation.  Idempotent under checkpoint re-delivery
+    including epoch 0: the retrain is deterministic, so rewriting the
+    trainings reproduces them byte-for-byte (pinned in
+    tests/test_streaming.py).
 
     All reads and createDataFrame inside the sink go through
     ``batch_df.sparkSession`` -- the micro-batch runs in a CLONED session,
     and frames from different sessions cannot join (the
     _serve_persisted_ann contract); closing over the outer session happens
-    to work in classic local mode but breaks under Spark Connect
-    (ADVICE r13)."""
-    from ..operators import clustering, pq, similarity
+    to work in classic local mode but breaks under Spark Connect."""
+    from ..operators import pq
+    from .x_similarity import _read_ann_index, _write_ann_index
 
     def sink(batch_df: DataFrame, epoch: int) -> None:
-        bs = batch_df.sparkSession
         if epoch == 0:
-            cells = similarity.ivf_cells(batch_df.count())
-            cents, _ = similarity._ivf_train(
-                similarity._ivf_base(batch_df), cells
-            )
-            cb, _ = pq.pq_train_encode(batch_df)
-            cents.write.mode("overwrite").parquet(f"{idx}/centroids.parquet")
-            cb.write.mode("overwrite").parquet(f"{idx}/codebooks.parquet")
-            bs.createDataFrame([(cells,)], "cells int").write.mode(
-                "overwrite"
-            ).parquet(f"{idx}/meta.parquet")
-        cents = bs.read.parquet(f"{idx}/centroids.parquet")
-        cb = bs.read.parquet(f"{idx}/codebooks.parquet")
-        clustering.assign_gemm(clustering.quantize(batch_df), cents).select(
-            "vec_id", F.col("cid").alias("cell")
-        ).write.mode("overwrite").parquet(f"{idx}/postings/_batch={epoch}")
-        pq.pq_encode(batch_df, cb).write.mode("overwrite").parquet(
-            f"{idx}/codes/_batch={epoch}"
-        )
+            index = pq.ivfpq_build(batch_df)
+        else:
+            index = pq.ivfpq_add(_read_ann_index(batch_df.sparkSession, idx), batch_df)
+        _write_ann_index(idx, index, batch=epoch)
 
     return sink
 
@@ -641,7 +624,7 @@ def x_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent).
 
     Serving reads the accumulated index in a fresh session through the
-    unchanged pq.ivfpq_serve path.  The oracle is the SPLIT-lifecycle
+    one persisted-index serve path (x_similarity._serve_persisted_ann).  The oracle is the SPLIT-lifecycle
     replay (ivfpq_topk_sql(train_pred=base): trainings see only the base,
     assignment/encode cover every vector) -- exactly
     x_sim_ann_index_insert's oracle, because streamed per-batch
@@ -659,14 +642,12 @@ def x_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..operators import pq
     from .x_pipeline import _bucket
-    from .x_similarity import ANN_INSERT_PCT
-    from .x_sources import _scratch
+    from .x_similarity import ANN_INSERT_PCT, _serve_persisted_ann
 
     t = catalog.load(spark, sf_dir)
     emb = t.embeddings
-    src = _scratch("pdwx-annstream-src-")
+    src = session.scratch("pdwx-annstream-src-")
     for sub, pred, name, mtime in (
         ("b", _bucket(F.col("vec_id")) < ANN_INSERT_PCT, "0_base.parquet",
          1_000_000_000),
@@ -683,7 +664,7 @@ def x_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(f"{src}/{sub}")
         os.utime(f"{src}/{name}", (mtime, mtime))
 
-    idx = _scratch("pdwx-annstream-idx-")
+    idx = session.scratch("pdwx-annstream-idx-")
     sink = _ann_index_sink(spark, idx)
 
     stream = (
@@ -698,13 +679,4 @@ def x_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    s2 = spark.newSession()
-    meta = s2.read.parquet(f"{idx}/meta.parquet").collect()[0]
-    return pq.ivfpq_serve(
-        catalog.load(s2, sf_dir).embeddings,
-        s2.read.parquet(f"{idx}/centroids.parquet"),
-        s2.read.parquet(f"{idx}/postings").drop("_batch"),
-        s2.read.parquet(f"{idx}/codebooks.parquet"),
-        s2.read.parquet(f"{idx}/codes").drop("_batch"),
-        int(meta["cells"]),
-    )
+    return _serve_persisted_ann(spark.newSession(), sf_dir, idx)

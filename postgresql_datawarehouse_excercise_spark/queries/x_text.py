@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..functions import fround, ratio, sql_ratio
 from ..operators import textlang
 from ..operators.dedup import TOKEN_RE, tokens
@@ -2696,11 +2696,10 @@ def x_text_bm25_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ITSELF (never the corpus), landed as new parquet files beside the
     existing ones."""
     from .x_pipeline import _bucket
-    from .x_sources import _scratch
 
     docs = catalog.load(spark, sf_dir).documents
     base = _bucket(F.col("doc_id")) < BM25_REFRESH_PCT
-    loc = _scratch("pdwx-bm25ref-")
+    loc = session.scratch("pdwx-bm25ref-")
     # batch 0 is the base build; batch 1 scans ONLY the new documents
     for batch, pred in enumerate((base, ~base)):
         _write_bm25_index(loc, *_bm25_index(docs.filter(pred)), batch=batch)
@@ -2796,13 +2795,19 @@ def x_text_bm25_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, term)| rows, never the corpus), embarrassingly parallel under
     the term-partitioned layout, amortized across every query served
     between compactions."""
-    from .x_sources import _scratch
 
-    loc = _persist_bm25_index(spark, sf_dir)
-    cloc = _write_bm25_index(
-        _scratch("pdwx-bm25compact-"), *_bm25_live(spark, sf_dir, loc)
-    )
+    cloc = _compact_bm25_index(spark, sf_dir)
     return _bm25_from_index(*_read_bm25_index(spark.newSession(), cloc))
+
+
+def _compact_bm25_index(spark: SparkSession, sf_dir: str) -> str:
+    """The compaction rewrite: the shared persisted build, stored again in
+    a fresh scratch dir with every tombstoned document anti-joined out of
+    both doc-grain relations (_bm25_live).  Returns the compacted dir."""
+    loc = _persist_bm25_index(spark, sf_dir)
+    return _write_bm25_index(
+        session.scratch("pdwx-bm25compact-"), *_bm25_live(spark, sf_dir, loc)
+    )
 
 
 PRF_FB_DOCS = BM25_TOPK   # feedback set: the BM25 top-10

@@ -35,9 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import catalog
+from .. import catalog, session
 from ..sources import files
-from .x_sources import _scratch
 from ..functions import (
     c100,
     cents_sum,
@@ -403,7 +402,7 @@ def x_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = catalog.load(spark, sf_dir)
     tag = uuid.uuid4().hex[:8]
-    loc = _scratch("pdwx-q18bkt-")
+    loc = session.scratch("pdwx-q18bkt-")
     lt, ot = f"pdwx_q18l_{tag}", f"pdwx_q18o_{tag}"
     try:
         files.write_bucketed(

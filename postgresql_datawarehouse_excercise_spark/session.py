@@ -7,7 +7,10 @@ whatever the deployment provides.  All query code is master-agnostic.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +36,17 @@ RUNTIME_CONFS: dict[str, str] = {
     # rejects; read as long and convert (catalog normalizes to micros).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+def scratch(prefix: str) -> str:
+    """mkdtemp with an atexit rmtree -- the one way package code makes a
+    temporary directory.  The dirs must OUTLIVE the call that makes them
+    (a returned DataFrame's lineage reads them lazily, often from a later
+    bench/gate action), so cleanup happens at process exit and repeated
+    runs in one interpreter leave nothing behind."""
+    out = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    return out
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

@@ -35,6 +35,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .. import session
+
+
 def _events_raw_schema(sf_dir: str) -> StructType:
     """Read-schema for the events stream, matched to the file's actual ts
     physical type.  The driver's generator has shipped ts as both
@@ -192,9 +195,7 @@ def run_finite_to_sink(stream_df: DataFrame, output_mode: str = "update") -> Dat
     epoch column lets update-mode consumers keep the last emission per key
     (`F.row_number` over `_epoch` desc) without any ordering assumption on
     the sink files."""
-    import tempfile
-
-    sink_dir = tempfile.mkdtemp(prefix="pdwx-stream-sink-")
+    sink_dir = session.scratch("pdwx-stream-sink-")
 
     def sink(batch_df: DataFrame, epoch: int) -> None:
         batch_df.withColumn("_epoch", F.lit(epoch)).write.mode("append").parquet(sink_dir)

@@ -177,7 +177,9 @@ def test_compact_identical_to_tombstone_masked_serve(spark):
     rows -- the space-reclaim promise the delete lane defers."""
     from postgresql_datawarehouse_excercise_spark.queries.x_similarity import (
         _ann_tombstones,
+        _compact_ann_index,
         _persist_ann_index,
+        _read_ann_index,
         x_sim_ann_index_compact,
         x_sim_ann_index_delete,
     )
@@ -187,18 +189,15 @@ def test_compact_identical_to_tombstone_masked_serve(spark):
     assert len(masked) == pq.PQ_QUERIES * pq.PQ_TOPK
     assert compacted == masked
 
-    # zero tombstoned rows survive in the vector-grain relations: re-run
-    # the compaction rewrite and check membership directly
-    loc = _persist_ann_index(spark, SF)
+    # zero tombstoned rows survive in the vector-grain relations of the
+    # directory the compaction rewrite stored
     tomb = {r["vec_id"] for r in _ann_tombstones(spark, SF).collect()}
     assert tomb
-    full_postings = spark.read.parquet(f"{loc}/postings.parquet")
-    n_dropped = full_postings.count()
-    live = full_postings.join(
-        _ann_tombstones(spark, SF), "vec_id", "left_anti"
-    )
-    assert not tomb & {r["vec_id"] for r in live.select("vec_id").distinct().collect()}
-    assert live.count() == n_dropped - len(tomb)  # one posting per vec
+    full = _read_ann_index(spark, _persist_ann_index(spark, SF))
+    index = _read_ann_index(spark, _compact_ann_index(spark, SF))
+    for rel in (index.postings, index.codes):
+        assert not tomb & {r["vec_id"] for r in rel.select("vec_id").distinct().collect()}
+    assert index.postings.count() == full.postings.count() - len(tomb)  # one posting per vec
 
 
 def test_lifecycle_build_memoized_per_corpus(spark):
@@ -206,7 +205,6 @@ def test_lifecycle_build_memoized_per_corpus(spark):
     (VERDICT r12 item 6): two calls return the same directory."""
     from postgresql_datawarehouse_excercise_spark.queries.x_similarity import (
         _persist_ann_index,
-        _persist_split_ann_index,
     )
     from postgresql_datawarehouse_excercise_spark.queries.x_text import (
         _persist_bm25_index,
@@ -214,12 +212,12 @@ def test_lifecycle_build_memoized_per_corpus(spark):
 
     assert _persist_ann_index(spark, SF) == _persist_ann_index(spark, SF)
     assert _persist_bm25_index(spark, SF) == _persist_bm25_index(spark, SF)
-    assert _persist_split_ann_index(spark, SF) == _persist_split_ann_index(spark, SF)
+    assert _persist_ann_index(spark, SF, split=True) == _persist_ann_index(spark, SF, split=True)
     # one memo, keyed per index kind: the three builds never share a dir
     assert len({
         _persist_ann_index(spark, SF),
         _persist_bm25_index(spark, SF),
-        _persist_split_ann_index(spark, SF)[0],
+        _persist_ann_index(spark, SF, split=True),
     }) == 3
 
 

@@ -331,7 +331,8 @@ def test_bm25_compact_identical_to_masked_serve_and_tombstone_free(spark):
     )
     from postgresql_datawarehouse_excercise_spark.queries.x_text import (
         BM25_DELETE_PCT,
-        _persist_bm25_index,
+        _compact_bm25_index,
+        _read_bm25_index,
         x_text_bm25_index_compact,
         x_text_bm25_index_delete,
     )
@@ -351,17 +352,11 @@ def test_bm25_compact_identical_to_masked_serve_and_tombstone_free(spark):
         ).filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT).collect()
     }
     assert tomb
-    loc = _persist_bm25_index(spark, SF)
-    live_postings = spark.read.parquet(f"{loc}/postings").join(
-        t.documents.select(F.col("doc_id").cast("long").alias("doc_id"))
-        .filter(_bucket(F.col("doc_id")) >= BM25_DELETE_PCT),
-        "doc_id",
-        "left_anti",
-    )
-    assert not tomb & {
-        r["doc_id"]
-        for r in live_postings.select("doc_id").distinct().collect()
-    }
+    # zero tombstoned docs in the doc-grain relations the rewrite stored
+    for rel in _read_bm25_index(spark, _compact_bm25_index(spark, SF)):
+        assert not tomb & {
+            r["doc_id"] for r in rel.select("doc_id").distinct().collect()
+        }
 
 
 def test_bm25_update_identical_to_revised_rebuild(spark):

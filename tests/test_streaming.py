@@ -519,8 +519,7 @@ def test_ann_index_sink_idempotent_under_redelivery(spark, tmp_path, sf_dir):
     sink(batch, 0)
     snap = {
         rel: sorted(map(tuple, spark.read.parquet(f"{idx}/{rel}").collect()))
-        for rel in ("centroids.parquet", "codebooks.parquet",
-                    "postings", "codes")
+        for rel in ("centroids", "codebooks", "postings", "codes")
     }
     sink(batch, 0)  # re-delivery, retrains + rewrites
     for rel, before in snap.items():
@@ -535,27 +534,31 @@ def test_ann_index_sink_idempotent_under_redelivery(spark, tmp_path, sf_dir):
         "x_stream_ann_index",
         "x_stream_cep",
         "x_stream_incremental_mv",
+        "x_stream_tumbling_hourly",
+        "x_mutation_merge_upsert",
+        "x_mv_sql_rewrite",
     ],
 )
 def test_stream_entry_leaves_no_dir_outside_scratch(spark, sf_dir, monkeypatch, entry):
-    """Every directory a streaming entry creates -- sources, sinks, state
-    and the stream's checkpoint -- lives in a scratch dir, so the scratch
-    cleanup at exit removes all of it.  A checkpoint placed beside a
+    """Every directory an entry creates -- sources, sinks, state, the
+    stream's checkpoint, table and MV warehouse dirs -- lives in a scratch
+    dir, so the scratch cleanup at exit removes all of it.  A checkpoint placed beside a
     scratch dir (`<dir>-ckpt`) or a bare mkdtemp would be left behind."""
     import glob
     import os
     import tempfile
 
-    from postgresql_datawarehouse_excercise_spark.queries import load_all, x_sources
+    from postgresql_datawarehouse_excercise_spark import session
+    from postgresql_datawarehouse_excercise_spark.queries import load_all
 
     made = []
-    scratch = x_sources._scratch
+    scratch = session.scratch
 
     def recording_scratch(prefix):
         made.append(scratch(prefix))
         return made[-1]
 
-    monkeypatch.setattr(x_sources, "_scratch", recording_scratch)
+    monkeypatch.setattr(session, "scratch", recording_scratch)
     pattern = os.path.join(tempfile.gettempdir(), "pdwx-*")
     before = set(glob.glob(pattern))
     load_all()[entry].fn(spark, sf_dir).collect()
