@@ -240,7 +240,8 @@ def main() -> None:
     for name in sorted(registry, key=lambda n: n.startswith("x_stream_")):
         if name not in results:
             fn = lambda name=name: q[name](spark, sf_dir)  # noqa: E731
-            results[name] = timed(fn, iters=1) if name.startswith("x_stream_") else timed(fn)
+            with session.job_label(name):
+                results[name] = timed(fn, iters=1) if name.startswith("x_stream_") else timed(fn)
 
     total = round(sum(results.values()), 4)
 
@@ -306,23 +307,13 @@ def main() -> None:
 
 
 def bench_session() -> SparkSession:
-    """The bench session on local[$SPARK_GRAFT_CPUS], with its confs echoed
-    to stderr."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName("pdwx-bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-    )
-    # Round-1 root cause of the 12-24x bench outliers: this session was
-    # built WITHOUT the engine runtime confs, so it ran with the 10MB default
-    # broadcast threshold and no AQE while local snapshots had both.  Build
-    # the bench session exactly like the engine session (session.py).
-    for k, v in session.RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = session.apply_runtime_confs(builder.getOrCreate())
+    """The engine session (session.get_spark) on local[$SPARK_GRAFT_CPUS]
+    (32 when unset) with one shuffle partition per core and a 16g driver
+    unless SPARK_DRIVER_MEMORY says otherwise; its confs are echoed to
+    stderr."""
+    cpus = os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "16g")
+    spark = session.get_spark("pdwx-bench", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
     for k in sorted(session.RUNTIME_CONFS):
         print(f"conf {k} = {spark.conf.get(k, '<unset>')}", file=sys.stderr)

@@ -130,6 +130,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import materialize
+
 # (event_type or "a|b" alternation, quantifier[, DEFINE predicate])
 Stage = tuple
 
@@ -955,7 +957,7 @@ def cep_match(
         F.unix_micros("ts").alias("t_us"),
         F.row_number().over(w).alias("seq"),
         *extra,
-    ).localCheckpoint(eager=False)
+    ).transform(materialize, "cep_sequenced", eager=False)
 
     def stage_filter(etype: str, pred):
         cond = F.col("event_type").isin(*_alts(etype))

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import materialize
 SCALE = 1_000_000
 
 
@@ -212,7 +214,7 @@ def kcenter_coreset(embeddings: DataFrame, k: int = KCENTER_K) -> DataFrame:
     selected center).  Selection: seed = lowest vec_id, then k-1 rounds of
     argmax over the running min-distance (ties to lowest vec_id).
 
-    localCheckpoint after each round's `least` update keeps the plan one
+    Materializing each round's `least` update keeps the plan one
     map deep instead of k maps deep AND materializes the state the 1-row
     argmax and the next round both read (without it every round re-derives
     the whole prefix chain)."""
@@ -222,7 +224,7 @@ def kcenter_coreset(embeddings: DataFrame, k: int = KCENTER_K) -> DataFrame:
     lit0 = F.array(*[F.lit(v) for v in centers[0][2]])
     mind = q.select(
         "vec_id", "qv", _dist2(F.col("qv"), lit0).alias("mind")
-    ).localCheckpoint()
+    ).transform(materialize, "kcenter_mind")
     for r in range(1, k):
         top = mind.orderBy(F.col("mind").desc(), F.col("vec_id").asc()).limit(1).collect()[0]
         centers.append((r, int(top.vec_id), [int(v) for v in top.qv]))
@@ -231,7 +233,7 @@ def kcenter_coreset(embeddings: DataFrame, k: int = KCENTER_K) -> DataFrame:
             "vec_id",
             "qv",
             F.least(F.col("mind"), _dist2(F.col("qv"), litr)).alias("mind"),
-        ).localCheckpoint()
+        ).transform(materialize, "kcenter_mind")
     cents = q.sparkSession.createDataFrame(
         [(r, vid, qv) for r, vid, qv in centers],
         "center_rank int, center_id long, cq array<bigint>",
@@ -371,7 +373,7 @@ def mmr_select(
     qlit = F.array(*[F.lit(int(v)) for v in qrow.qv])
     cands = q.filter(F.col("vec_id") != query_vec_id).select(
         "vec_id", "qv", _dot(F.col("qv"), qlit).alias("rel")
-    ).withColumn("ms", F.lit(None).cast("long")).localCheckpoint()
+    ).withColumn("ms", F.lit(None).cast("long")).transform(materialize, "mmr_candidates")
     out = []
     for r in range(k):
         score = F.col("rel") - F.coalesce(F.col("ms"), F.lit(0))
@@ -393,7 +395,7 @@ def mmr_select(
                     _dot(F.col("qv"), slit),
                 ).alias("ms"),
             )
-            .localCheckpoint()
+            .transform(materialize, "mmr_candidates")
         )
     return q.sparkSession.createDataFrame(
         out, "mmr_rank int, vec_id long, relevance long, max_sim long"

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import fround, ratio, sql_ratio
+from ..session import materialize
 
 # ---------------------------------------------------------------------------
 # Shared parameters (Spark fns and SQL twins must agree on these literals).
@@ -214,15 +215,10 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     materialization the signature aggregation ran twice and the
     shingling twice more (4 corpus scans in the plan).  The signature
     relation (docs × 32 longs) and the distinct-shingle-set relation are
-    each computed ONCE and localCheckpoint'd; every consumer — this
+    each computed ONCE and materialized; every consumer — this
     operator, dedup_clusters, lsh_recall, threshold_sweep, the curation
     funnel — inherits the single-scan shape."""
-    # localCheckpoint's default level is memory-and-disk, so corpus-sized
-    # blocks spill instead of being evicted; it is the local-mode stand-in
-    # for a reliable per-stage materialization (a session-scoped persist
-    # would be reused across bench iterations -- the no-caching-across-runs
-    # rule)
-    sigs = minhash_signature_df(documents).localCheckpoint()
+    sigs = materialize(minhash_signature_df(documents), "lsh_signatures")
     keys = lsh_band_keys(sigs)
     cand = (
         keys.alias("x")
@@ -233,7 +229,7 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    sets_ = shingled(documents).localCheckpoint()
+    sets_ = materialize(shingled(documents), "lsh_shingle_sets")
     return (
         cand.join(sets_.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sha"), "doc_a")
         .join(sets_.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "shb"), "doc_b")
@@ -286,13 +282,13 @@ def simhash_pairs(documents: DataFrame) -> DataFrame:
     dominant cost and DataFrame branch reuse recomputes it — the old
     banding self-join plus the two verify joins evaluated simhash_df FOUR
     times (4 parquet scans in the plan).  Now the fold runs ONCE over a
-    localCheckpoint'd (doc_id, simhash) relation — two longs per doc, the
+    materialized (doc_id, simhash) relation — two longs per doc, the
     lightweight-proxy shape of guide §8 — and the signature RIDES the
     banding rows, so verification needs no join back at all: hamming is
     computed directly on the self-join output and the distinct runs on the
     already-filtered pairs.  Measured sf0.1/local[32]: 15.6 → 2.0 s warm;
     plan 4 scans/2 verify joins → 1 scan/0 verify joins."""
-    sh = simhash_df(documents).localCheckpoint()
+    sh = materialize(simhash_df(documents), "simhash")
     chunks = F.array(
         *[
             F.struct(
@@ -613,51 +609,49 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 15) -> DataFrame:
     edges = edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct()
-    # The loop references `edges` every iteration; without persistence each
+    # The loop references `edges` every iteration; unmaterialized, each
     # join would re-run the WHOLE upstream lineage (minhash signatures +
-    # LSH banding over the full corpus) per iteration.  The skinny (a, b)
-    # edge list is the thing to keep: persist it once, and localCheckpoint
-    # the labels each round so the plan doesn't grow with the iteration
-    # count -- the standard large-scale connected-components loop shape.
-    edges = edges.persist()
+    # LSH banding over the full corpus) per iteration.  Keep the skinny
+    # (a, b) edge list once, and each round's labels, so the plan doesn't
+    # grow with the iteration count -- the standard large-scale
+    # connected-components loop shape.
+    edges = materialize(edges, "cc_edges", eager=False)
     labels = (
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
+        .transform(materialize, "cc_labels")
     )
-    try:
-        # Convergence test: labels only ever DECREASE (least of self and
-        # neighbor minimum), so the label total is strictly monotone until
-        # the fixpoint -- one aggregate over the checkpointed labels per
-        # iteration instead of a join+shuffle diff.  decimal(38,0) keeps the
-        # total exact at any doc_id magnitude.
-        def label_total(df: DataFrame) -> int:
-            return df.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
 
-        prev_total = label_total(labels)
-        for _ in range(max_iterations):
-            neighbor_min = (
-                edges.join(labels, edges.b == labels.doc_id)
-                .groupBy(F.col("a").alias("doc_id"))
-                .agg(F.min("label").alias("nlabel"))
+    # Convergence test: labels only ever DECREASE (least of self and
+    # neighbor minimum), so the label total is strictly monotone until the
+    # fixpoint -- one aggregate over the materialized labels per iteration
+    # instead of a join+shuffle diff.  decimal(38,0) keeps the total exact
+    # at any doc_id magnitude.
+    def label_total(df: DataFrame) -> int:
+        return df.agg(
+            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+        ).collect()[0]["s"]
+
+    prev_total = label_total(labels)
+    for _ in range(max_iterations):
+        neighbor_min = (
+            edges.join(labels, edges.b == labels.doc_id)
+            .groupBy(F.col("a").alias("doc_id"))
+            .agg(F.min("label").alias("nlabel"))
+        )
+        labels = (
+            labels.join(neighbor_min, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
             )
-            labels = (
-                labels.join(neighbor_min, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
-                )
-                .localCheckpoint()
-            )
-            total = label_total(labels)
-            if total == prev_total:
-                break
-            prev_total = total
-    finally:
-        edges.unpersist()
+            .transform(materialize, "cc_labels")
+        )
+        total = label_total(labels)
+        if total == prev_total:
+            break
+        prev_total = total
     return labels.select(
         "doc_id",
         F.col("label").alias("cluster_id"),
@@ -1124,8 +1118,7 @@ def prefix_join_pairs(
     from pyspark.sql import Window
 
     # referenced by all_hsets AND the posting explode: shingle once
-    # (guide §5; localCheckpoint = local-mode stand-in, see minhash_lsh_pairs)
-    sh = shingled(documents).localCheckpoint()
+    sh = materialize(shingled(documents), "join_shingles")
     # EXACT-DUPLICATE COLLAPSE (the 100x-probe OOM fix): docs with identical
     # text are interchangeable w.r.t. Jaccard against ANY third doc, so the
     # pair join runs on one representative per cohort and the full pair
@@ -1153,7 +1146,7 @@ def prefix_join_pairs(
         sh.select("doc_id", F.explode("sh").alias("s"))
         .select("doc_id", h32(F.col("s")).alias("h"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, "join_postings")
     )
     dfreq = post.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     sizes = post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -1360,7 +1353,7 @@ _COHORT_REL_CACHE: dict[tuple[int, int], DataFrame] = {}
 
 
 def exact_cohorts_shared(documents: DataFrame) -> DataFrame:
-    """exact_cohorts(), locally checkpointed and memoized per (session,
+    """exact_cohorts(), materialized and memoized per (session,
     input-plan semantic hash) -- what the contraction call sites use so a
     session computes the cohort relation once, not once per entry."""
     try:
@@ -1369,7 +1362,7 @@ def exact_cohorts_shared(documents: DataFrame) -> DataFrame:
         key = None
     if key is not None and key in _COHORT_REL_CACHE:
         return _COHORT_REL_CACHE[key]
-    rel = exact_cohorts(documents).localCheckpoint()
+    rel = materialize(exact_cohorts(documents), "exact_cohorts")
     if key is not None:
         _COHORT_REL_CACHE[key] = rel
     return rel
@@ -1439,7 +1432,7 @@ def dedup_clusters_bigstar(pairs: DataFrame, max_iterations: int = 20) -> DataFr
     emptiness probe on the (u, v) set, both O(|E|) with |E| shrinking
     every round -- not a hash-total heuristic, because star rounds are
     not label-monotone the way min-propagation is.  Each round's edge set
-    is localCheckpoint'd so the plan does not grow with the iteration
+    is materialized so the plan does not grow with the iteration
     count (the same discipline as dedup_clusters)."""
     nodes = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -1453,14 +1446,14 @@ def dedup_clusters_bigstar(pairs: DataFrame, max_iterations: int = 20) -> DataFr
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .transform(materialize, "star_edges")
     )
     prev_count = edges.count()
     unchanged = prev_count == 0
     for _ in range(max_iterations):
         if unchanged:
             break
-        new_edges = _star_round(edges).localCheckpoint()
+        new_edges = materialize(_star_round(edges), "star_edges")
         new_count = new_edges.count()
         unchanged = (
             new_count == prev_count

@@ -310,7 +310,7 @@ class ManagedParquetTable:
         Source keys must be unique -- duplicate SOURCE keys make the merge
         ambiguous, so they are rejected, mirroring Delta's
         multiple-source-rows-matched error.  The aligned source is lazily
-        localCheckpoint-ed, so an expensive source lineage (a CDC join,
+        materialized, so an expensive source lineage (a CDC join,
         say) computes once across the merge's passes.  An empty or
         all-miss source no-ops and returns (0, 0) without committing.
         Partition-pruned COW: the touched partitions are those carrying
@@ -321,7 +321,7 @@ class ManagedParquetTable:
         current = self.read()
         # align order (missing column -> analysis error) and pin ONE
         # physical computation of the source lineage
-        source = source.select(*current.columns).localCheckpoint(eager=False)
+        source = session.materialize(source.select(*current.columns), "merge_source", eager=False)
         keys = [*key_cols]
 
         # collision-PROOF aliases, not .count() and not fixed reserved

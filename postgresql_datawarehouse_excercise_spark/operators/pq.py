@@ -47,6 +47,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
 from .clustering import SCALE, _dist2, assign_gemm, quantize
 
 PQ_M = 8         # subspaces
@@ -174,7 +175,7 @@ def pq_train_encode(
     lifecycle.  With `full` omitted the training population itself is
     encoded, from its already-materialized quantization.  codebooks =
     (m, cid, csv); codes = (vec_id, m, code).  Each round's codebook is
-    localCheckpoint'd: the lineage would otherwise double per round
+    materialized: the lineage would otherwise double per round
     (assign reads codebook, recompute reads assign), and the checkpoint is
     PQ_M x PQ_K rows -- trivially small."""
     # The N-row QUANTIZED relation is materialized once and every Lloyd
@@ -184,17 +185,12 @@ def pq_train_encode(
     # corpus re-scan + re-quantize (guide §5).  Round 16 materialized the
     # N x PQ_M EXPLODED subvector relation instead: 8x the rows, measured
     # 2.7-5.2x slower cold on two hosts, and an eviction hazard at scale.
-    # localCheckpoint (memory-and-disk by default, so blocks spill instead
-    # of being evicted) is the local-mode stand-in for a reliable
-    # per-stage materialization
-    # (per-invocation lifetime -- a session-scoped persist would be reused
-    # across bench iterations, which the no-caching-across-runs rule bans).
-    q = quantize(train).localCheckpoint()
+    q = materialize(quantize(train), "pq_quantized")
     subs = _subvectors(q)
     cb = _init_codebooks(q)
     for _ in range(PQ_ROUNDS):
         a = _assign_gemm(subs, cb)
-        cb = _recompute(subs, a).localCheckpoint()
+        cb = materialize(_recompute(subs, a), "pq_codebooks")
     if full is not None:
         return cb, pq_encode(full, cb)
     return cb, _encode(subs, cb)

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import fround, ratio
+from ..session import materialize
 from .clustering import SCALE
 
 NEARDUP_THRESHOLD = 0.35
@@ -829,9 +830,8 @@ def ann_recall(
     base = _ivf_base(embeddings)
     cents, assigned = _ivf_train(base, cells)
     # `assigned` feeds BOTH ranking arms (exact + approx); left lazy the
-    # k-means assignment GEMM ran twice (ann_recall_sweep already
-    # checkpoints for the same reason; guide §5)
-    assigned = assigned.localCheckpoint()
+    # k-means assignment GEMM ran twice
+    assigned = materialize(assigned, "ivf_assigned")
     q = base.filter(F.col("vec_id") < n_queries).limit(n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -1135,7 +1135,7 @@ def ann_recall_sweep(
     cells = ivf_cells(embeddings.count())
     base = _ivf_base(embeddings)
     cents, assigned = _ivf_train(base, cells)
-    assigned = assigned.localCheckpoint()
+    assigned = materialize(assigned, "ivf_assigned")
     q = base.filter(F.col("vec_id") < n_queries).limit(n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
@@ -1157,7 +1157,7 @@ def ann_recall_sweep(
         )
 
     qvecs = q.select("query_id", "qe", "qn")
-    exact = topk(assigned.crossJoin(F.broadcast(qvecs))).localCheckpoint()
+    exact = materialize(topk(assigned.crossJoin(F.broadcast(qvecs))), "sweep_exact")
     out = None
     for np_ in sweep:
         qc = _probe_cells(q, cents, np_)
@@ -1568,7 +1568,7 @@ def nndescent_recall(
     ivf_cells pattern), so seed blocks stay ~ND_BUCKET rows at any scale;
     every round is two vec_id-keyed equi-joins with fanout bounded by
     (2k)^2 per node and a per-node top-k window; the graph relation is
-    N x k rows, localCheckpoint'd per round (bounded, like the kmeans
+    N x k rows, materialized per round (bounded, like the kmeans
     centroids).  No stage touches N^2: the exact arm ranks only the
     n_queries evaluation rows.  Output: (query_id, seed_hits, hits,
     recall_seed, recall)."""
@@ -1580,8 +1580,8 @@ def nndescent_recall(
     n_buckets = max(1, n // ND_BUCKET)
     # the quantized corpus is referenced by every round's two distance-join
     # sides, the seed bucketings and the exact arm (~12 references); left
-    # lazy each one re-scanned and re-quantized the corpus (guide §5)
-    qv = quantize(embeddings).localCheckpoint()
+    # lazy each one re-scanned and re-quantized the corpus
+    qv = materialize(quantize(embeddings), "nnd_quantized")
     qa = qv.select(F.col("vec_id").alias("v"), F.col("qv").alias("_qa"))
     qb = qv.select(F.col("vec_id").alias("n"), F.col("qv").alias("_qb"))
 
@@ -1616,22 +1616,17 @@ def nndescent_recall(
             & (F.col("a.vec_id") != F.col("b.vec_id")),
         ).select(F.col("a.vec_id").alias("v"), F.col("b.vec_id").alias("n"))
         seedp = sp if seedp is None else seedp.union(sp)
-    g0 = topk(with_d2(seedp.distinct())).localCheckpoint()
+    g0 = materialize(topk(with_d2(seedp.distinct())), "nnd_seed_graph")
     g = g0
     for _ in range(rounds):
         # the undirected edge set feeds BOTH sides of the 2-hop self-join
-        # plus the candidate union; checkpoint so the union+distinct shuffle
-        # runs once per round, not three times (N x 2k skinny rows)
-        # (Per-round blocks are N x 2k skinny rows -- bounded like the
-        # k-means centroids.  localCheckpoint here is the local-mode
-        # stand-in for a reliable per-round materialization; a production
-        # run would persist each round to reliable storage and drop the
-        # previous round's blocks once the new round materializes.)
+        # plus the candidate union; materialize so the union+distinct
+        # shuffle runs once per round, not three times (N x 2k skinny rows)
         und = (
             g.select("v", "n")
             .union(g.select(F.col("n").alias("v"), F.col("v").alias("n")))
             .distinct()
-            .localCheckpoint()
+            .transform(materialize, "nnd_undirected")
         )
         ua, ub = und.alias("ua"), und.alias("ub")
         twohop = (
@@ -1640,7 +1635,7 @@ def nndescent_recall(
             .filter(F.col("v") != F.col("n"))
         )
         cand = und.union(twohop).distinct()
-        g = topk(with_d2(cand)).localCheckpoint()
+        g = materialize(topk(with_d2(cand)), "nnd_graph")
 
     qids = qv.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("v")

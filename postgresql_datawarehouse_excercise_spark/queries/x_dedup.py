@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import fround, ratio, sql_ratio
+from ..session import materialize
 from ..operators import dedup
 from . import query
 
@@ -378,26 +379,25 @@ def pagerank(t_docs: DataFrame) -> DataFrame:
     return _pagerank_contracted(t_docs)
 
 
+def _both_ways(strong: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """Every (doc_a, doc_b) pair in both directions, as columns (a, b)."""
+    return strong.union(
+        strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+    ).select(F.col("doc_a").alias(a), F.col("doc_b").alias(b))
+
+
 def _pagerank_direct(t_docs: DataFrame) -> DataFrame:
     pairs = dedup.minhash_lsh_pairs(t_docs)
     strong = pairs.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
     # the loop references the edge list PR_ITERS times (x2: messages + deg);
-    # eager localCheckpoint materializes the LSH pipeline ONCE and cuts the
-    # lineage so each iteration plans one equi-join over stored blocks
-    # (dedup_clusters' persisted-edges discipline, sized for a no-action
-    # builder: blocks are freed when the plan is garbage-collected)
-    edges = (
-        strong.union(
-            strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .localCheckpoint()
-    )
+    # materializing it runs the LSH pipeline ONCE and cuts the lineage so
+    # each iteration plans one equi-join over stored blocks
+    edges = materialize(_both_ways(strong), "pr_edges")
     # deg is read by every iteration's message join plus the final report
     # (PR_ITERS + 1 references); checkpoint the skinny (src, deg) relation
     # so each reference reads stored blocks instead of re-aggregating the
     # edge list (the contracted path already does this)
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint()
+    deg = materialize(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), "pr_degree")
     nodes = t_docs.select(F.col("doc_id").cast("long").alias("doc_id"))
     ranks = nodes.select("doc_id", F.lit(PR_SCALE).cast("long").alias("r"))
     for _ in range(PR_ITERS):
@@ -458,13 +458,7 @@ def _pagerank_contracted(t_docs: DataFrame) -> DataFrame:
         .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")
     )
-    edges = (
-        strong.union(
-            strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .localCheckpoint()
-    )
+    edges = materialize(_both_ways(strong), "pr_edges")
     w = (
         edges.join(
             sizes.select(F.col("v").alias("src"), F.col("s").alias("ss")), "src"
@@ -479,7 +473,7 @@ def _pagerank_contracted(t_docs: DataFrame) -> DataFrame:
             "s",
             ((F.col("s") - 1) + F.coalesce("w", F.lit(0))).cast("long").alias("deg"),
         )
-        .localCheckpoint()
+        .transform(materialize, "pr_degree")
     )
     ranks = deg.select("v", F.lit(PR_SCALE).cast("long").alias("r"))
     for _ in range(PR_ITERS):
@@ -599,7 +593,7 @@ def x_dedup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by its oriented out-degree, O(sqrt(m)) -- the property that
     keeps the two equi-joins feasible on a power-law dup graph at 100 TB
     where a naive neighbor self-join explodes on hub nodes.  The oriented
-    edge list is localCheckpoint'd once (three joins reference it)."""
+    edge list is materialized once (three joins reference it)."""
     t = catalog.load(spark, sf_dir)
     return dedup_triangles(t.documents)
 
@@ -647,9 +641,7 @@ def dedup_triangles(t_docs: DataFrame) -> DataFrame:
     )
     pairs = dedup.minhash_lsh_pairs(rep_docs)
     strong = pairs.filter(F.col("jaccard") >= 0.5).select("doc_a", "doc_b")
-    und = strong.union(
-        strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    und = _both_ways(strong, "a", "b")
     sizes = cohorts.select(F.col("rep").alias("v"), F.col("s")).distinct()
     # per-cohort neighbor aggregates: W_A and sum of C(s_B, 2)
     sym = und.join(sizes.withColumnRenamed("v", "b").withColumnRenamed("s", "sb"), "b")
@@ -669,7 +661,7 @@ def dedup_triangles(t_docs: DataFrame) -> DataFrame:
             | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
         )
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .localCheckpoint()
+        .transform(materialize, "tri_oriented_edges")
     )
     e1 = o.select(F.col("src").alias("x"), F.col("dst").alias("y"))
     e2 = o.select(F.col("src").alias("y"), F.col("dst").alias("z"))
@@ -725,9 +717,7 @@ def _triangles_direct(strong: "DataFrame", _ratio) -> "DataFrame":
     triangle enumerated once, out-degree bounded O(sqrt(m)).  Taken when
     every exact-copy cohort is a singleton; shares output semantics with
     the contracted path (tests pin both against the same oracle)."""
-    und = strong.union(
-        strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+    und = _both_ways(strong, "a", "b")
     deg = und.groupBy(F.col("a").alias("v")).agg(F.count(F.lit(1)).alias("deg"))
     o = (
         und.join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
@@ -737,7 +727,7 @@ def _triangles_direct(strong: "DataFrame", _ratio) -> "DataFrame":
             | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
         )
         .select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .localCheckpoint()
+        .transform(materialize, "tri_oriented_edges")
     )
     e1 = o.select(F.col("src").alias("x"), F.col("dst").alias("y"))
     e2 = o.select(F.col("src").alias("y"), F.col("dst").alias("z"))
@@ -852,13 +842,7 @@ def dedup_kcore(t_docs: DataFrame, rounds: int = KCORE_ROUNDS) -> DataFrame:
         .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b")
     )
-    edges = (
-        strong.union(
-            strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .localCheckpoint()
-    )
+    edges = materialize(_both_ways(strong), "kcore_edges")
 
     def weighted_deg(e: DataFrame, alive: DataFrame) -> DataFrame:
         # deg(member of A) = (s_A - 1) + sum of alive neighbor sizes
@@ -880,12 +864,12 @@ def dedup_kcore(t_docs: DataFrame, rounds: int = KCORE_ROUNDS) -> DataFrame:
     e = edges
     for _ in range(rounds):
         d = weighted_deg(e, alive)
-        alive = d.filter(F.col("deg") >= KCORE_K).select("v", "s").localCheckpoint()
+        alive = materialize(d.filter(F.col("deg") >= KCORE_K).select("v", "s"), "kcore_alive")
         e = (
             e.join(alive.select(F.col("v").alias("src")), "src")
             .join(alive.select(F.col("v").alias("dst")), "dst")
             .select("src", "dst")
-            .localCheckpoint()
+            .transform(materialize, "kcore_edges")
         )
     final = weighted_deg(e, alive).filter(F.col("deg") >= 1)
     per_cohort = final.select(F.col("v").alias("rep"), F.col("deg").alias("degree_core")).join(
@@ -904,13 +888,7 @@ def dedup_kcore(t_docs: DataFrame, rounds: int = KCORE_ROUNDS) -> DataFrame:
 
 def _kcore_direct(strong: DataFrame, rounds: int = KCORE_ROUNDS) -> DataFrame:
     """The raw per-node peeling (pre-contraction path)."""
-    edges = (
-        strong.union(
-            strong.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .localCheckpoint()
-    )
+    edges = materialize(_both_ways(strong), "kcore_edges")
     deg0 = edges.groupBy("src").agg(F.count(F.lit(1)).alias("degree_full"))
     e = edges
     for _ in range(rounds):
@@ -920,7 +898,7 @@ def _kcore_direct(strong: DataFrame, rounds: int = KCORE_ROUNDS) -> DataFrame:
             e.join(keep.withColumnRenamed("v", "src"), "src")
             .join(keep.withColumnRenamed("v", "dst"), "dst")
             .select("src", "dst")
-            .localCheckpoint()
+            .transform(materialize, "kcore_edges")
         )
     final = e.groupBy("src").agg(F.count(F.lit(1)).alias("degree_core"))
     return (
@@ -1035,7 +1013,7 @@ def x_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined on an inequality against skinny (pair, jaccard) rows -- cost is
     |pairs| x |thresholds|, never a recompute per threshold."""
     t = catalog.load(spark, sf_dir)
-    pairs = dedup.minhash_lsh_pairs(t.documents).localCheckpoint()
+    pairs = materialize(dedup.minhash_lsh_pairs(t.documents), "lsh_pairs")
     thr = spark.createDataFrame(
         [(float(x),) for x in SWEEP_THRESHOLDS], "thr double"
     )
@@ -1168,16 +1146,11 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
     # two member-expansion sides, the within-cohort arm) and `repdocs` four
     # times (grams, sentinel arm, both text sides) — left lazy each
     # reference re-scanned the corpus and re-ran the md5/cohort shuffle
-    # (guide §5: materialize what is reused and expensive to recompute).
-    # (localCheckpoint = the local-mode stand-in for a reliable per-stage
-    # materialization; its default level is memory-and-disk, so corpus-sized
-    # blocks spill instead of being evicted -- a session-scoped persist would
-    # be reused across bench iterations, which the no-caching rule bans.)
     d = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("text"),
         F.md5("text").alias("fp"),
-    ).localCheckpoint()
+    ).transform(materialize, "ed_docs")
     cohorts = d.groupBy("fp").agg(F.min("doc_id").alias("rep")).alias("c")
     repdocs = (
         cohorts.join(d.alias("dd"), F.col("c.rep") == F.col("dd.doc_id"))
@@ -1187,7 +1160,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
             F.length(F.col("dd.text")).alias("len"),
             F.col("dd.fp").alias("fp"),
         )
-        .localCheckpoint()
+        .transform(materialize, "ed_rep_docs")
     )
     # Candidate-index grams are ENGINE-INTERNAL: candidates are verified by
     # exact levenshtein below, and the prefix-filter completeness theorem
@@ -1216,7 +1189,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
                 )
             ).alias("g"),
         )
-        .localCheckpoint()
+        .transform(materialize, "ed_grams")
     )
     dfreq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("g").asc())
@@ -1298,7 +1271,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
         cand.join(da, "ra")
         .join(db, "rb")
         .repartition(spark.sparkContext.defaultParallelism, "ra", "rb")
-        .localCheckpoint()
+        .transform(materialize, "ed_rep_pair_texts")
     )
     rpairs = (
         withtexts.select(
@@ -1307,7 +1280,7 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
         )
         .filter(F.col("edit_distance") <= ED_D)
         # drop the texts before expansion; skinny bounded rep-pair relation
-        .localCheckpoint()
+        .transform(materialize, "ed_rep_pairs")
     )
     ma = d.alias("ma")
     mb = d.alias("mb")

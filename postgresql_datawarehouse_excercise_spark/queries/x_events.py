@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import dec, money
+from ..session import materialize
 from . import query
 
 
@@ -454,7 +455,7 @@ def x_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     last-observation-carried-forward value per type.
 
     Scale shape: the only |events|-sized job is the hourly pre-aggregate
-    (one shuffle, map-side partial), computed ONCE via lazy localCheckpoint
+    (one shuffle, map-side partial), computed ONCE via a lazy materialize
     and shared by every downstream branch.  The hour spine is generated
     DISTRIBUTED via F.sequence+explode on the 1-row bounds aggregate (no
     driver-side range materialization), the type dimension is a tiny
@@ -477,11 +478,10 @@ def x_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the raw distinct).  Without intervention Catalyst pushes column
     # pruning through each branch and the |events| scan runs three times
     # (column-disjoint copies, so ReuseExchange cannot fire); the lazy
-    # localCheckpoint pins ONE physical computation of the aggregate-sized
+    # materialize pins ONE physical computation of the aggregate-sized
     # hourly relation that all three branches then read -- one raw scan
-    # total, the same persist-the-shared-frontier pattern operators/dedup.py
-    # uses for its edge list.
-    hourly = hourly.localCheckpoint(eager=False)
+    # total.
+    hourly = materialize(hourly, "hourly", eager=False)
     bounds = hourly.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
     hours = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h")
@@ -668,7 +668,7 @@ def x_events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     half-up floored quotient, so both engines produce identical values.
 
     Scale shape: identical to gap_fill -- one |events|-sized aggregate
-    shared via lazy localCheckpoint, a distributed hour spine, and two
+    shared via a lazy materialize, a distributed hour spine, and two
     window passes per type (prev/next observed neighbor), state bounded by
     the spine length per type partition."""
     from pyspark.sql.window import Window
@@ -679,7 +679,7 @@ def x_events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = t.events.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("h"), "event_type"
     ).agg(F.sum(c100("value")).alias("cents"))
-    hourly = hourly.localCheckpoint(eager=False)
+    hourly = materialize(hourly, "hourly", eager=False)
     bounds = hourly.agg(F.min("h").alias("lo"), F.max("h").alias("hi"))
     hours = bounds.select(
         F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h")

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import money, sql_dec, sql_money, sum_c100
+from ..session import materialize
 from ..operators import mutations
 from . import query
 
@@ -242,5 +243,5 @@ def x_mutation_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_inserted"),
         )
-        .localCheckpoint()
+        .transform(materialize, "result")
     )

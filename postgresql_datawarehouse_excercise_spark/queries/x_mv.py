@@ -58,7 +58,7 @@ def _rewrite_entry(
         )
         if not any(f"rewriting onto MV '{target}'" in e for e in explain):
             raise AssertionError(f"MV rewrite onto {target!r} did not fire: {explain}")
-        return df.select(*shape).localCheckpoint()
+        return df.select(*shape).transform(session.materialize, "result")
     finally:
         reg.drop_all(spark)
 
@@ -380,7 +380,7 @@ def x_mv_catalyst_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize UNDER the rule; the returned frame reads the
         # checkpoint, so the driver's later collect is rewrite-independent
-        out = user.localCheckpoint()
+        out = session.materialize(user, "result")
         plan = user._jdf.queryExecution().executedPlan().toString()
     if rule.hits() < 1:
         raise AssertionError("catalyst MV rule did not fire")
@@ -487,7 +487,7 @@ def x_mv_catalyst_rewrite_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("country")
             .agg(money(F.sum(dec("l_extendedprice"))).alias("spending"))
         )
-        out = user.localCheckpoint()
+        out = session.materialize(user, "result")
         plan = user._jdf.queryExecution().executedPlan().toString()
     if rule.hits() < 1:
         raise AssertionError("catalyst FD rollup rule did not fire")

@@ -683,7 +683,7 @@ def x_pipeline_incremental_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged = reg.read(spark, "sales")
         return merged.select(
             "customerid", "timeid", "partkey", money(F.col("amnt")).alias("amnt")
-        ).localCheckpoint()
+        ).transform(session.materialize, "result")
     finally:
         reg.drop_all()
 
@@ -874,8 +874,8 @@ def x_pipeline_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFram
         .withColumn("h", h60(F.col("g")))
         .drop("g")
         # the gram set feeds three passes (bloom build, probe, confirm):
-        # persist so shingling runs once; LRU-evicted with the session
-        .persist()
+        # materialize so shingling runs once
+        .transform(session.materialize, "bloom_grams", eager=False)
     )
     eval_grams = grams.filter(F.col("bucket") >= TRAIN_PCT).select("h").distinct()
     bloom = bloomfilter.build(eval_grams, "h")
@@ -1325,15 +1325,12 @@ def x_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stage frames feed BOTH the next stage and the attrition counts below;
     # left lazy, every count re-ran the whole funnel above it (the union of
     # ten 1-row aggregates held 74 Exchanges; 38 after).  Each surviving-docs
-    # frame is checkpointed once — what a production curation pipeline does
-    # by materializing per-stage datasets (guide §5).
-    # (localCheckpoint = local-mode stand-in for the per-stage dataset a
-    # production pipeline writes to reliable storage; its default level is
-    # memory-and-disk, so corpus-sized blocks spill instead of being evicted.)
+    # frame is materialized once — what a production curation pipeline does
+    # by writing per-stage datasets.
     s2 = (
         s1.filter((n_tokens >= 20) & (n_punct * 20 <= F.length("text")))
         .select("doc_id", "text", "bucket")
-        .localCheckpoint()
+        .transform(session.materialize, "funnel_quality")
     )
     fp = s2.withColumn(
         "f", F.md5(F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))))
@@ -1342,14 +1339,14 @@ def x_pipeline_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     s3 = (
         fp.join(canon.select("doc_id"), "doc_id")
         .select("doc_id", "text", "bucket")
-        .localCheckpoint()
+        .transform(session.materialize, "funnel_exact_dedup")
     )
     pairs = dd.minhash_lsh_pairs(s3.select("doc_id", "text"))
     strong = pairs.filter(F.col("jaccard") >= dd.DEDUP_CLUSTER_MIN_JACCARD)
     clusters = dd.dedup_clusters(strong)
     s4 = s3.join(
         clusters.filter(~F.col("keep")).select("doc_id"), "doc_id", "left_anti"
-    ).localCheckpoint()
+    ).transform(session.materialize, "funnel_near_dedup")
     K = FUNNEL_DECON_GRAM
 
     def windows(df: DataFrame) -> DataFrame:
@@ -1512,7 +1509,7 @@ def x_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # skinny (doc_id, lang, bucket) rows so the per-bigram md5 runs once,
     # not once per consumer (100x probe: 172 s -> the hash was ~half).  At
     # 100 TB the same move is a scratch-table write of the ~17-byte rows.
-    big = big.localCheckpoint(eager=False)
+    big = session.materialize(big, "dsir_bigrams", eager=False)
     # null-safe target test: NULL lang is raw-pool on BOTH sides (the oracle
     # uses IS DISTINCT FROM) -- a plain != would silently DROP NULL-lang rows
     # from the scoring/raw filters while the model's otherwise(1) counted them
@@ -1556,7 +1553,7 @@ def x_pipeline_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # raw (doc-grain, skinny) feeds three consumers: the budget count, the
     # top-k, and the final join -- checkpoint so the scoring join runs once
-    raw = raw.localCheckpoint(eager=False)
+    raw = session.materialize(raw, "dsir_scores", eager=False)
     n_raw = raw.count()
     k = max(16, n_raw // DSIR_FRACTION)
     top = (

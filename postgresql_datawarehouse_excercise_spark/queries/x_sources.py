@@ -48,12 +48,14 @@ def _index_memo(key: tuple, marker: str, build: Callable[[str], T]) -> T:
     directory: the first call runs ``build(loc)`` into a fresh scratch dir
     and memoizes its result; later calls return that result while
     ``loc/marker`` still exists.  ``key`` is a _corpus_fingerprint plus the
-    index kind, which also names the scratch dir."""
+    index kind, which also names the scratch dir and labels the build's
+    jobs ``fixture:<kind>``."""
     hit = _INDEX_MEMO.get(key)
     if hit is not None and os.path.isdir(os.path.join(hit[0], marker)):
         return hit[1]
     loc = session.scratch(f"pdwx-{key[-1]}-")
-    value = build(loc)
+    with session.job_label(f"fixture:{key[-1]}"):
+        value = build(loc)
     _INDEX_MEMO[key] = (loc, value)
     return value
 
@@ -198,7 +200,7 @@ def x_source_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_lines"),
                 money(F.sum(dec("l_extendedprice"))).alias("total_price"),
             )
-            .localCheckpoint()
+            .transform(session.materialize, "result")
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {lt}")

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import c100, dec, fround, money, ratio, sql_dec, sql_money
+from ..session import materialize
 from . import query
 
 
@@ -1276,7 +1277,7 @@ def x_sql_runtime_bloom_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_lines"),
                 money(F.sum(dec("l_extendedprice"))).alias("total_price"),
             )
-            .localCheckpoint()
+            .transform(materialize, "result")
         )
     finally:
         for k, v in old.items():

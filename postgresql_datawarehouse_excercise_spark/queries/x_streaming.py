@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog, session
+from ..streaming import drain, read_files
 from ..streaming import events as se
 from . import query
 
@@ -221,17 +222,14 @@ def x_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.orders.repartition(2).write.mode("overwrite").parquet(src)
     reg = default_registry(session.scratch("pdwx-stream-wh-"))
     try:
-        q = mvm.maintain_sales_stream(
-            spark, sf_dir, reg, mvm.read_orders_stream(spark, src)
-        )
-        q.awaitTermination()
+        mvm.maintain_sales_stream(spark, sf_dir, reg, mvm.read_orders_stream(spark, src))
         merged = reg.read(spark, "sales")
         tdim = reg.read(spark, "time").select("timeid", "orderdate")
         return (
             merged.join(F.broadcast(tdim), "timeid")
             .groupBy("customerid", "orderdate", "partkey")
             .agg(money(F.sum("amnt")).alias("amnt"))
-            .localCheckpoint()
+            .transform(session.materialize, "result")
         )
     finally:
         reg.drop_all()
@@ -488,7 +486,7 @@ def x_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t_last_us").alias("t_purchase_us"),
         F.col("n_stage1").alias("n_clicks"),
         "duration_us",
-    ).localCheckpoint()
+    ).transform(session.materialize, "result")
 
 
 def _stream_bm25_oracle() -> str:
@@ -553,20 +551,7 @@ def x_stream_bm25_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = session.scratch("pdwx-bm25stream-src-")
     docs.repartition(4).write.mode("overwrite").parquet(src)
     idx = session.scratch("pdwx-bm25stream-idx-")
-    sink = _bm25_index_sink(spark, idx)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{idx}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_files(spark, docs.schema, src), _bm25_index_sink(spark, idx), checkpoint=idx)
     return _bm25_from_index(*_read_bm25_index(spark.newSession(), idx))
 
 
@@ -665,18 +650,5 @@ def x_stream_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(f"{src}/{name}", (mtime, mtime))
 
     idx = session.scratch("pdwx-annstream-idx-")
-    sink = _ann_index_sink(spark, idx)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{idx}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_files(spark, emb.schema, src), _ann_index_sink(spark, idx), checkpoint=idx)
     return _serve_persisted_ann(spark.newSession(), sf_dir, idx)

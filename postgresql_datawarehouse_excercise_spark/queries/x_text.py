@@ -1935,66 +1935,63 @@ def x_text_lr_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     grades the exact distributed-training mechanics, which is the part
     that must be right before any real labels arrive."""
     t = catalog.load(spark, sf_dir)
-    feats = _lr_features(t.documents).persist()
-    try:
-        nf = len(LR_WORDS) + 2
-        w = [0] * nf
-        n_docs = None
-        for _ in range(LR_ITERS):
-            z = None
-            for j in range(nf):
-                term = F.lit(w[j]) * F.col(f"x{j}")
-                z = term if z is None else z + term
-            p4 = F.least(
-                F.greatest(z + F.lit(2_000_000_000), F.lit(0)),
-                F.lit(4_000_000_000),
-            )
-            err4 = p4 - F.col("y") * F.lit(4_000_000_000)
-            aggs = [
-                F.sum(
-                    F.floor(err4 * F.col(f"x{j}") / 40_000_000.0 + 0.5).cast("long")
-                ).alias(f"g{j}")
-                for j in range(nf)
-            ] + [F.count(F.lit(1)).alias("n")]
-            row = feats.agg(*aggs).collect()[0]
-            n_docs = row["n"]
-            import math as _math
-
-            w = [
-                w[j] - int(_math.floor(LR_LR10 * row[f"g{j}"] / n_docs + 0.5))
-                for j in range(nf)
-            ]
+    feats = session.materialize(_lr_features(t.documents), "lr_features", eager=False)
+    nf = len(LR_WORDS) + 2
+    w = [0] * nf
+    n_docs = None
+    for _ in range(LR_ITERS):
         z = None
         for j in range(nf):
             term = F.lit(w[j]) * F.col(f"x{j}")
             z = term if z is None else z + term
-        pred = (z >= 0).cast("long")
-        out = feats.agg(
-            F.sum(F.when((pred == 1) & (F.col("y") == 1), 1).otherwise(0))
-            .cast("long")
-            .alias("tp"),
-            F.sum(F.when((pred == 1) & (F.col("y") == 0), 1).otherwise(0))
-            .cast("long")
-            .alias("fp"),
-            F.sum(F.when((pred == 0) & (F.col("y") == 0), 1).otherwise(0))
-            .cast("long")
-            .alias("tn"),
-            F.sum(F.when((pred == 0) & (F.col("y") == 1), 1).otherwise(0))
-            .cast("long")
-            .alias("fn"),
-            F.floor(
-                10000.0
-                * F.sum((pred == F.col("y")).cast("long"))
-                / F.count(F.lit(1))
-                + 0.5
-            )
-            .cast("long")
-            .alias("accuracy_bp"),
+        p4 = F.least(
+            F.greatest(z + F.lit(2_000_000_000), F.lit(0)),
+            F.lit(4_000_000_000),
         )
-        sel = [F.lit(w[j]).cast("long").alias(f"w{j}") for j in range(nf)]
-        return out.select(*sel, "tp", "fp", "tn", "fn", "accuracy_bp")
-    finally:
-        feats.unpersist()
+        err4 = p4 - F.col("y") * F.lit(4_000_000_000)
+        aggs = [
+            F.sum(
+                F.floor(err4 * F.col(f"x{j}") / 40_000_000.0 + 0.5).cast("long")
+            ).alias(f"g{j}")
+            for j in range(nf)
+        ] + [F.count(F.lit(1)).alias("n")]
+        row = feats.agg(*aggs).collect()[0]
+        n_docs = row["n"]
+        import math as _math
+
+        w = [
+            w[j] - int(_math.floor(LR_LR10 * row[f"g{j}"] / n_docs + 0.5))
+            for j in range(nf)
+        ]
+    z = None
+    for j in range(nf):
+        term = F.lit(w[j]) * F.col(f"x{j}")
+        z = term if z is None else z + term
+    pred = (z >= 0).cast("long")
+    out = feats.agg(
+        F.sum(F.when((pred == 1) & (F.col("y") == 1), 1).otherwise(0))
+        .cast("long")
+        .alias("tp"),
+        F.sum(F.when((pred == 1) & (F.col("y") == 0), 1).otherwise(0))
+        .cast("long")
+        .alias("fp"),
+        F.sum(F.when((pred == 0) & (F.col("y") == 0), 1).otherwise(0))
+        .cast("long")
+        .alias("tn"),
+        F.sum(F.when((pred == 0) & (F.col("y") == 1), 1).otherwise(0))
+        .cast("long")
+        .alias("fn"),
+        F.floor(
+            10000.0
+            * F.sum((pred == F.col("y")).cast("long"))
+            / F.count(F.lit(1))
+            + 0.5
+        )
+        .cast("long")
+        .alias("accuracy_bp"),
+    )
+    sel = [F.lit(w[j]).cast("long").alias(f"w{j}") for j in range(nf)]
+    return out.select(*sel, "tp", "fp", "tn", "fn", "accuracy_bp")
 
 
 @query(
@@ -2364,7 +2361,7 @@ def _bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     ONE token explode and one (term, doc) map-side-combined aggregate;
     doc lengths derive from it (the 100x probe measured the naive form --
     dl/df/tf each re-exploding the corpus -- at 57.1 s vs 38.5 s for this
-    shape).  localCheckpoint MATERIALIZES the postings once: without it
+    shape).  The postings are MATERIALIZED once: without it
     every consumer (dl, df, the query-term join, N) re-executes the
     explode+aggregate -- the round-12 re-probe found SIX documents scans in
     the executed plan (Spark reuses an Exchange only when consumer
@@ -2378,7 +2375,7 @@ def _bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(session.materialize, "bm25_postings", eager=False)
     )
     return postings, postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
 
@@ -2957,7 +2954,7 @@ def x_text_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = (
         qterms.select("term", F.lit(PRF_ORIG_W).cast("long").alias("w_micro"))
         .unionByName(exp_terms)
-        .localCheckpoint(eager=False)
+        .transform(session.materialize, "prf_query_terms", eager=False)
     )
     df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # floor(w*c / 1e9) exactly on both engines: subtract the mathematical

@@ -431,7 +431,7 @@ def x_tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "c_custkey", "c_name", "o_orderkey",
                 "o_orderdate", "o_totalprice", "total_qty",
             )
-            .localCheckpoint()
+            .transform(session.materialize, "result")
         )
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {lt}")

@@ -37,7 +37,7 @@ Scale shape (100 TB lens): training runs on the DISTINCT-word frequency
 table -- vocabulary-sized, not corpus-sized (the classic trainer input,
 same as BPE) -- so after the ONE corpus-wide word-count scan+groupBy,
 every EM round touches |vocab| rows; the per-round model (piece, cost) is
-a few-hundred-row relation, localCheckpoint'd so lineage stays bounded.
+a few-hundred-row relation, materialized so lineage stays bounded.
 The encode entry is the only doc-grain pass: the corpus word stream joins
 the per-word segmentation on the word key (shuffle keyed by word, never
 by doc pair) and aggregates once per doc.
@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import fround
+from ..session import materialize
 from ..operators.dedup import tokens
 from . import query
 
@@ -272,7 +273,7 @@ def _uni_words(documents: DataFrame) -> DataFrame:
         documents.select(F.explode(tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint()
+        .transform(materialize, "uni_words")
     )
 
 
@@ -341,13 +342,12 @@ def _uni_mstep(words: DataFrame, seg: DataFrame) -> DataFrame:
     see module docstring's monotonicity argument)."""
     # `used` feeds three consumers (m_used, the m_chars anti-join, and the
     # total); left lazy, each consumer re-ran the ENTIRE Viterbi E-step
-    # above it (guide §5: reused + expensive to recompute = materialize).
-    # Vocabulary-sized (one row per used piece), so the checkpoint is tiny.
+    # above it.  Vocabulary-sized (one row per used piece), so it is tiny.
     used = (
         seg.select("freq", F.explode("pieces").alias("p"))
         .groupBy("p")
         .agg(F.sum("freq").alias("u"))
-        .localCheckpoint()
+        .transform(materialize, "uni_used_pieces")
     )
     tot = used.agg(F.sum("u").alias("total"))
     m_used = used.crossJoin(F.broadcast(tot)).select(
@@ -363,7 +363,7 @@ def _uni_mstep(words: DataFrame, seg: DataFrame) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select("p", _cost_col(F.lit(1.0), F.col("total")).alias("cost"))
     )
-    return m_used.unionByName(m_chars).localCheckpoint()
+    return materialize(m_used.unionByName(m_chars), "uni_model")
 
 
 def unigram_train_rounds(
@@ -376,18 +376,14 @@ def unigram_train_rounds(
     pattern); final_model = (p, cost) after the last M-step."""
     spark = documents.sparkSession
     words = _uni_words(documents)
-    model = _uni_seed_model(words).localCheckpoint()
+    model = materialize(_uni_seed_model(words), "uni_model")
     stats = None
     for r in range(1, rounds + 1):
         vocab = model.agg(F.count(F.lit(1)).cast("long").alias("vocab_size"))
         # the round's E-step feeds three consumers (word_stats, used_stats,
-        # the M-step); checkpoint the vocabulary-sized segmentation so the
-        # Viterbi DP fold runs once per round, not three times (guide §5).
-        # (Vocabulary-sized blocks, one per round: bounded.  localCheckpoint
-        # is the local-mode stand-in for a reliable per-round
-        # materialization; a production trainer would persist each round
-        # reliably and unpersist the previous round once the next lands.)
-        seg = _uni_segment(words, model).localCheckpoint()
+        # the M-step); materialize the vocabulary-sized segmentation so the
+        # Viterbi DP fold runs once per round, not three times.
+        seg = materialize(_uni_segment(words, model), "uni_segmentation")
         word_stats = seg.agg(
             F.sum(F.col("freq") * F.size("pieces")).cast("long").alias("tokens_total"),
             F.sum(F.col("freq") * F.col("wcost")).cast("long").alias("total_cost_micro"),
@@ -437,7 +433,7 @@ def x_text_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Viterbi cost (micro-nats), tokens-per-char compression at 4dp."""
     t = catalog.load(spark, sf_dir)
     words = _uni_words(t.documents)
-    model = _uni_seed_model(words).localCheckpoint()
+    model = materialize(_uni_seed_model(words), "uni_model")
     for _ in range(UNI_ROUNDS):
         model = _uni_mstep(words, _uni_segment(words, model))
     seg = _uni_segment(words, model).select(

@@ -11,8 +11,11 @@ import atexit
 import os
 import shutil
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime SQL confs we want regardless of who created the session (the driver
 # hands us its own session).  These are all runtime-settable.
@@ -47,6 +50,45 @@ def scratch(prefix: str) -> str:
     out = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     return out
+
+
+JOB_DESCRIPTION = "spark.job.description"
+
+
+@contextmanager
+def job_label(label: str) -> Iterator[None]:
+    """Describe the Spark jobs started inside the block as
+    ``<outer description>:<label>`` (just ``label`` when none is set), so a
+    status-store reader can tell which entry and stage ran each job.  The
+    outer description comes back afterwards, also when the block raises.
+    Only the description is set: jobs in a job group would drop out of
+    ``getJobIdsForGroup(None)``, which the job counters read."""
+    sc = SparkContext._active_spark_context
+    outer = sc.getLocalProperty(JOB_DESCRIPTION)
+    sc.setJobDescription(f"{outer}:{label}" if outer else label)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(JOB_DESCRIPTION, outer)
+
+
+def materialize(df: DataFrame, label: str, eager: bool = True) -> DataFrame:
+    """Compute ``df`` once and return a frame that reads the stored result --
+    the one way package code pins a relation that is reused (several
+    consumers, an iteration's next round, a frame that must outlive the
+    inputs a ``finally`` deletes) and expensive to recompute.
+
+    It is ``localCheckpoint``: its storage level is memory-and-disk, so
+    large relations spill instead of being evicted, and the blocks live as
+    long as the returned frame (no session-scoped cache is shared between
+    timed runs).  The truncated lineage also keeps an iterative plan from
+    growing with its round count.  An eager checkpoint runs its job now,
+    under ``job_label(label)``; with ``eager=False`` the materializing job
+    runs later, under whatever action consumes the frame first."""
+    if not eager:
+        return df.localCheckpoint(eager=False)
+    with job_label(label):
+        return df.localCheckpoint()
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:

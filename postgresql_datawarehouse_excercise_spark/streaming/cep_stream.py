@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cep import Stage, cep_match
+from . import drain, read_files
 
 
 class CepReplaySink:
@@ -107,19 +108,8 @@ def run_cep_stream(
     when that final re-match retracted every occurrence and emitted zero
     rows.  The stream's checkpoint lives in out_dir/_checkpoint (a name
     parquet reads of out_dir skip), so removing out_dir removes it too."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_src)
-    )
     sink = cep_replay_sink(spark, state_dir, out_dir, pattern, max_span_us)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{out_dir}/_checkpoint")
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_files(spark, schema, events_src), sink, checkpoint=out_dir)
     epochs = list(sink.epochs)
     if not epochs:
         # Restart against an existing checkpoint with no new files: zero

@@ -19,6 +19,8 @@ shard by file listing, so input parallelism = number of files.
 
 from __future__ import annotations
 
+import glob
+import os
 from collections.abc import Iterable, Iterator
 from typing import Any
 
@@ -36,6 +38,7 @@ from pyspark.sql.types import (
 )
 
 from .. import session
+from . import drain
 
 
 def _events_raw_schema(sf_dir: str) -> StructType:
@@ -47,9 +50,6 @@ def _events_raw_schema(sf_dir: str) -> StructType:
     testdata moved to micros)."""
     ts_type: Any = TimestampType()
     try:
-        import glob
-        import os
-
         import pyarrow.parquet as pq
 
         path = f"{sf_dir}/events.parquet"
@@ -200,23 +200,10 @@ def run_finite_to_sink(stream_df: DataFrame, output_mode: str = "update") -> Dat
     def sink(batch_df: DataFrame, epoch: int) -> None:
         batch_df.withColumn("_epoch", F.lit(epoch)).write.mode("append").parquet(sink_dir)
 
-    q = (
-        stream_df.writeStream.foreachBatch(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(stream_df, sink, output_mode=output_mode)
     spark = stream_df.sparkSession
-    import glob
-    import os
-
     if not glob.glob(os.path.join(sink_dir, "*.parquet")):
-        from pyspark.sql.types import LongType, StructField
-
-        schema = StructType(
-            [*stream_df.schema.fields, StructField("_epoch", LongType())]
-        )
+        schema = StructType([*stream_df.schema.fields, StructField("_epoch", LongType())])
         return spark.createDataFrame([], schema=schema)
     return spark.read.parquet(sink_dir)
 

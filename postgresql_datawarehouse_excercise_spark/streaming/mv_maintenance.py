@@ -28,6 +28,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from .. import catalog
 from ..mv.registry import MVRegistry
+from . import drain, read_files
 
 ORDERS_SCHEMA = (
     "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
@@ -36,14 +37,10 @@ ORDERS_SCHEMA = (
 
 
 def read_orders_stream(spark: SparkSession, path: str) -> DataFrame:
-    """File-source stream of order batches: one micro-batch per file with
-    maxFilesPerTrigger=1 (tests lay the batches down as separate files; in
-    production the directory keeps growing)."""
-    return (
-        spark.readStream.schema(ORDERS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(path)
-    )
+    """File-source stream of order batches, one micro-batch per file
+    (tests lay the batches down as separate files; in production the
+    directory keeps growing)."""
+    return read_files(spark, ORDERS_SCHEMA, path)
 
 
 def maintain_sales_stream(
@@ -53,9 +50,9 @@ def maintain_sales_stream(
     orders_stream: DataFrame,
     mv_name: str = "sales",
 ) -> StreamingQuery:
-    """Start a stream that applies every arriving orders micro-batch as an
+    """Drain a stream that applies every arriving orders micro-batch as an
     incremental delta to ``mv_name`` (and, transitively, to the time
-    dimension).  Returns the query; callers awaitTermination()."""
+    dimension).  Returns the finished query."""
 
     def apply_batch(batch_orders: DataFrame, _epoch: int) -> None:
         if not batch_orders.head(1):
@@ -72,8 +69,4 @@ def maintain_sales_stream(
         )
         reg.refresh_incremental(spark, sf_dir, mv_name, delta)
 
-    return (
-        orders_stream.writeStream.foreachBatch(apply_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(orders_stream, apply_batch)

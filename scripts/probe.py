@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 import bench  # noqa: E402
-from postgresql_datawarehouse_excercise_spark import catalog  # noqa: E402
+from postgresql_datawarehouse_excercise_spark import catalog, session  # noqa: E402
 from postgresql_datawarehouse_excercise_spark.queries import QueryDef, load_all  # noqa: E402
 
 # Key columns of the tables that grow with the data.  Copy i shifts every
@@ -153,17 +153,17 @@ def main() -> None:
     try:
         bench.warm_up(spark, probe_dir)
         for name in names:
-            spark.sparkContext.setJobDescription(f"probe:{name}")
             try:
-                ts = sorted(
-                    bench.run(lambda: registry[name].fn(spark, probe_dir))
-                    for _ in range(args.iters)
-                )
-                line = (f"{name} x{args.scale}: best={ts[0]:.3f}s "
-                        f"median={ts[len(ts) // 2]:.3f}s")
-                if args.explain:
-                    rows, path = write_plan(spark, registry[name], probe_dir, args.explain)
-                    line += f" rows={rows} plan={path}"
+                with session.job_label(f"probe:{name}"):
+                    ts = sorted(
+                        bench.run(lambda: registry[name].fn(spark, probe_dir))
+                        for _ in range(args.iters)
+                    )
+                    line = (f"{name} x{args.scale}: best={ts[0]:.3f}s "
+                            f"median={ts[len(ts) // 2]:.3f}s")
+                    if args.explain:
+                        rows, path = write_plan(spark, registry[name], probe_dir, args.explain)
+                        line += f" rows={rows} plan={path}"
                 print(line, flush=True)
             except Exception:
                 failed.append(name)

@@ -28,9 +28,5 @@ def test_oracle_parity(spark, sf_dir, duck, name):
     compare(df, duck, qd.oracle)
 
 
-@pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(spark, sf_dir, name):
-    qd = REGISTRY[name]
-    df = qd.fn(spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+def test_every_entry_has_an_oracle():
+    assert ROWS_ONLY == []

@@ -300,8 +300,6 @@ def test_stream_drives_incremental_mv_maintenance(spark, sf_dir, tmp_path):
     date-keyed grain (timeids may legitimately differ from a rebuild when
     batches arrive out of date order -- stable surrogate keys -- so the
     comparison joins each fact to ITS OWN time dimension)."""
-    import tempfile
-
     from postgresql_datawarehouse_excercise_spark.mv.definitions import default_registry
     from postgresql_datawarehouse_excercise_spark.streaming.mv_maintenance import (
         maintain_sales_stream,
@@ -316,7 +314,7 @@ def test_stream_drives_incremental_mv_maintenance(spark, sf_dir, tmp_path):
         "b"
     ).write.parquet(in_dir)
 
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-cmv-"))
+    reg = default_registry(str(tmp_path / "cmv"))
     try:
         q = maintain_sales_stream(spark, sf_dir, reg, read_orders_stream(spark, in_dir))
         q.awaitTermination()
@@ -539,11 +537,13 @@ def test_ann_index_sink_idempotent_under_redelivery(spark, tmp_path, sf_dir):
         "x_mv_sql_rewrite",
     ],
 )
-def test_stream_entry_leaves_no_dir_outside_scratch(spark, sf_dir, monkeypatch, entry):
+def test_stream_entry_leaves_no_dir_outside_scratch(spark, sf_dir, monkeypatch, tmp_path, entry):
     """Every directory an entry creates -- sources, sinks, state, the
     stream's checkpoint, table and MV warehouse dirs -- lives in a scratch
     dir, so the scratch cleanup at exit removes all of it.  A checkpoint placed beside a
-    scratch dir (`<dir>-ckpt`) or a bare mkdtemp would be left behind."""
+    scratch dir (`<dir>-ckpt`) or a bare mkdtemp would be left behind.  The
+    temp dir is the test's own, so other processes sharing the system temp
+    dir cannot add entries to the comparison."""
     import glob
     import os
     import tempfile
@@ -559,6 +559,7 @@ def test_stream_entry_leaves_no_dir_outside_scratch(spark, sf_dir, monkeypatch, 
         return made[-1]
 
     monkeypatch.setattr(session, "scratch", recording_scratch)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     pattern = os.path.join(tempfile.gettempdir(), "pdwx-*")
     before = set(glob.glob(pattern))
     load_all()[entry].fn(spark, sf_dir).collect()
