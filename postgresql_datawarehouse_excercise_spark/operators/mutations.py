@@ -261,13 +261,23 @@ class ManagedParquetTable:
             writer = writer.partitionBy(*self.partition_by)
         writer.parquet(dest)
 
+    def _new_dir(self, kind: str) -> str:
+        """A fresh hidden directory name under the root, where a snapshot
+        is assembled before _commit publishes it."""
+        return os.path.join(self.root, f".{kind}-{uuid.uuid4().hex[:8]}")
+
+    def _commit_rows(self, df: DataFrame) -> None:
+        """Write df as a complete new snapshot and commit it: the one
+        full-snapshot commit of every writer here."""
+        os.makedirs(self.root, exist_ok=True)
+        staging = self._new_dir("staging")
+        self._write_snapshot(df, staging)
+        self._commit(staging)
+
     def overwrite(self, df: DataFrame) -> None:
         """CREATE or full replace (checks validated first)."""
         self._validate(df)
-        os.makedirs(self.root, exist_ok=True)
-        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:8]}")
-        self._write_snapshot(df, staging)
-        self._commit(staging)
+        self._commit_rows(df)
 
     # -- mutations --------------------------------------------------------
     def update_where(
@@ -374,9 +384,7 @@ class ManagedParquetTable:
         merged = updated.unionByName(inserts)
         self._validate(merged)
         if not self.partition_by:
-            staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:8]}")
-            self._write_snapshot(merged, staging)
-            self._commit(staging)
+            self._commit_rows(merged)
             return n_matched, n_inserted
         touched = [
             tuple(r)
@@ -421,9 +429,7 @@ class ManagedParquetTable:
         if not cluster_by:
             if not num_files:
                 raise ValueError("compaction without cluster keys needs num_files")
-            staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:8]}")
-            self._write_snapshot(df.repartition(num_files), staging)
-            self._commit(staging)
+            self._commit_rows(df.repartition(num_files))
             return
         if zorder:
             bounds = df.agg(
@@ -450,9 +456,7 @@ class ManagedParquetTable:
             .sortWithinPartitions(*cluster_expr)
             .select(*df.columns)  # the helper key never reaches the files
         )
-        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:8]}")
-        self._write_snapshot(clustered, staging)
-        self._commit(staging)
+        self._commit_rows(clustered)
 
     def _rewrite_touched(
         self, pred: Column, new_rows: DataFrame, prune: bool = True
@@ -465,9 +469,7 @@ class ManagedParquetTable:
             return 0
         self._validate(new_rows)
         if not self.partition_by or not prune:
-            staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:8]}")
-            self._write_snapshot(new_rows, staging)
-            self._commit(staging)
+            self._commit_rows(new_rows)
             return n_touched
 
         # Partition-pruned COW.  The touched partition-value set is small by
@@ -513,9 +515,9 @@ class ManagedParquetTable:
         # Stage replacement rows for ONLY the touched partitions, assemble
         # the complete new snapshot (links for untouched partitions, staged
         # directories for touched ones), then commit with one pointer flip.
-        staging = os.path.join(self.root, f".staging-{uuid.uuid4().hex[:8]}")
+        staging = self._new_dir("staging")
         self._write_snapshot(new_rows.filter(in_touched), staging)
-        build = os.path.join(self.root, f".build-{uuid.uuid4().hex[:8]}")
+        build = self._new_dir("build")
         _link_tree(self.data_path, build, skip_rel=touched_rel)
         for rel in touched_rel:
             src = os.path.join(staging, rel)

@@ -10,9 +10,10 @@ continuous-aggregate / REFRESH-on-ingest pattern a 100 TB warehouse runs;
 the same code path bootstraps the MV from nothing on the first batch.
 
 Scale notes: per-batch cost is |batch| joined against broadcast dims plus
-one rewrite of the MV parquet; at very large MV sizes the rewrite becomes
-the bottleneck and the MV should be partitioned (MVDef.partition_by) so the
-swap touches only the partitions the batch's keys land in.  In production
+one full new snapshot of the MV, committed with a pointer flip while the
+previous snapshot stays readable; at very large MV sizes writing that
+snapshot becomes the bottleneck, and the next step is a commit that
+rewrites only the partitions the batch's keys land in.  In production
 the stream would carry orders WITH their lines (one topic), dropping the
 static semi join this module does for the file-source shape of the testdata.
 

@@ -5,7 +5,7 @@ with answers identical to base-table computation."""
 
 from __future__ import annotations
 
-import tempfile
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,9 +26,8 @@ REGISTRY_NAMES = {
 
 
 @pytest.fixture(scope="module")
-def built(spark, sf_dir):
-    tmp = tempfile.mkdtemp(prefix="pdwx-wh-")
-    reg = default_registry(tmp)
+def built(spark, sf_dir, tmp_path_factory):
+    reg = default_registry(str(tmp_path_factory.mktemp("wh")))
     reg.build_all(spark, sf_dir)
     yield reg
     reg.drop_all()
@@ -44,7 +43,7 @@ def test_all_mvs_built_with_stats(built):
         assert built.stats[name] >= 0
 
 
-def test_dep_reading_builders_match_pure_builders(built, spark, sf_dir):
+def test_dep_reading_builders_match_pure_builders(built, spark, sf_dir, tmp_path):
     """The dep contract of MVDef.builder, through the registry: every MV
     with deps (the reference's FROM-the-MV definitions,
     assignment-5.sql:165-170,221-263,401-409, and the base-derived ones)
@@ -56,7 +55,7 @@ def test_dep_reading_builders_match_pure_builders(built, spark, sf_dir):
     for name, mv in built.defs.items():
         if not mv.deps or mv.cache_key or mv.link_from:
             continue
-        lone = default_registry(tempfile.mkdtemp(prefix="pdwx-lone-"))
+        lone = default_registry(str(tmp_path / f"lone-{name}"))
         try:
             lone.build(spark, sf_dir, name)
             assert not any(lone.is_built(d) for d in mv.deps), name
@@ -220,7 +219,7 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def test_incremental_view2_equals_full_rebuild(spark, sf_dir):
+def test_incremental_view2_equals_full_rebuild(spark, sf_dir, tmp_path):
     """Build time/sales/view1/view2/view3 from the pre-cutoff batch, apply
     the rest as a delta, and require each merged view to equal a full
     one-shot rebuild bit-for-bit (grain, names, years, exact-decimal sums).
@@ -229,8 +228,8 @@ def test_incremental_view2_equals_full_rebuild(spark, sf_dir):
     from postgresql_datawarehouse_excercise_spark.etl.time_dim import build_time_dim
 
     batch1, delta = _date_split(spark, sf_dir)
-    inc = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-a-"))
-    full = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-b-"))
+    inc = default_registry(str(tmp_path / "inc"))
+    full = default_registry(str(tmp_path / "full"))
     views = ("view1", "view2", "view3")
     try:
         inc.defs["time"].builder = lambda tt, dep: build_time_dim(batch1.orders)
@@ -261,22 +260,20 @@ def test_incremental_view2_equals_full_rebuild(spark, sf_dir):
         full.drop_all()
 
 
-def test_rebuild_with_stale_dep_stays_unfresh(spark, sf_dir):
+def test_rebuild_with_stale_dep_stays_unfresh(spark, sf_dir, tmp_path):
     """Freshness hole via MV deps (ADVICE r7 medium): after a base mutation,
     refresh() of a downstream MV rebuilds it from the STALE upstream MV
     parquet/cache — the registry must NOT stamp it fresh, or the rewriter
     would serve pre-mutation aggregates while is_fresh lies True.  Only a
     dependency-ordered rebuild (build_all / refresh of the stale root)
     restores the stamp."""
-    import os
     import shutil
 
     from postgresql_datawarehouse_excercise_spark import catalog
 
-    tmp_sf = tempfile.mkdtemp(prefix="pdwx-depfresh-sf-")
-    shutil.rmtree(tmp_sf)
+    tmp_sf = str(tmp_path / "sf")
     shutil.copytree(sf_dir, tmp_sf)
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-depfresh-wh-"))
+    reg = default_registry(str(tmp_path / "wh"))
     try:
         reg.build_all(spark, tmp_sf)
         assert reg.is_fresh(tmp_sf, "view2")
@@ -302,17 +299,16 @@ def test_rebuild_with_stale_dep_stays_unfresh(spark, sf_dir):
         assert reg.is_fresh(tmp_sf, "view3")
     finally:
         reg.drop_all(spark)
-        shutil.rmtree(tmp_sf, ignore_errors=True)
         catalog._TABLES_CACHE.clear()
 
 
-def test_incremental_refresh_never_stamps_fresh(spark, sf_dir):
+def test_incremental_refresh_never_stamps_fresh(spark, sf_dir, tmp_path):
     """ADVICE r7 low: refresh_incremental merges delta rows passed
     IN-MEMORY — not necessarily present in the base parquet — so the MV
     must not read as fresh afterwards (a rewrite onto it could return rows
     a direct execution of the same SQL cannot see)."""
     _, delta = _date_split(spark, sf_dir)
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-f-"))
+    reg = default_registry(str(tmp_path / "wh"))
     try:
         for n in ("time", "sales", "view2"):
             reg.build(spark, sf_dir, n)
@@ -325,10 +321,59 @@ def test_incremental_refresh_never_stamps_fresh(spark, sf_dir):
         reg.drop_all()
 
 
-def test_incremental_rejects_non_additive(spark, sf_dir):
+def test_refresh_keeps_prior_snapshot_readable(spark, sf_dir, tmp_path):
+    """A frame read before a refresh keeps returning its pre-refresh rows
+    after it, across refresh_incremental and refresh(): every commit
+    writes a new snapshot and flips a pointer, so the files an earlier
+    reader planned over stay in place.  The catalog table behind table()
+    follows every commit, refreshes included."""
+    from postgresql_datawarehouse_excercise_spark.etl.time_dim import build_time_dim
+    from postgresql_datawarehouse_excercise_spark.operators.mutations import (
+        ManagedParquetTable,
+    )
+
+    def rows(df):
+        return _rows(df, df.columns)
+
+    def catalog_location(name):
+        desc = spark.sql(f"DESCRIBE TABLE EXTENDED {reg.table_name(name)}").collect()
+        return next(r.data_type for r in desc if r.col_name == "Location")
+
+    batch1, delta = _date_split(spark, sf_dir)
+    reg = default_registry(str(tmp_path / "wh"))
+    try:
+        orig = {n: reg.defs[n].builder for n in ("time", "sales", "view2")}
+        reg.defs["time"].builder = lambda tt, dep: build_time_dim(batch1.orders)
+        reg.defs["sales"].builder = lambda tt, dep: batch1.sales()
+        reg.defs["view2"].builder = lambda tt, dep, f=orig["view2"]: f(batch1, dep)
+        for n in ("time", "sales", "view2"):
+            reg.build(spark, sf_dir, n)
+        for n, f in orig.items():
+            reg.defs[n].builder = f
+
+        old = reg.read(spark, "view2")
+        before = rows(old)
+        reg.refresh_incremental(spark, sf_dir, "sales", delta)
+        reg.refresh_incremental(spark, sf_dir, "view2", delta)
+        assert rows(old) == before
+        after = rows(reg.read(spark, "view2"))
+        assert after != before
+        assert rows(reg.table(spark, "view2")) == after
+
+        old = reg.read(spark, "view2")
+        reg.refresh(spark, sf_dir, "view2")
+        assert rows(old) == after
+        assert rows(reg.table(spark, "view2")) == rows(reg.read(spark, "view2"))
+        current = ManagedParquetTable(spark, reg.path("view2")).data_path
+        assert catalog_location("view2").endswith(os.path.abspath(current))
+    finally:
+        reg.drop_all(spark)
+
+
+def test_incremental_rejects_non_additive(spark, sf_dir, tmp_path):
     """avg-bearing / report MVs must refuse incremental maintenance."""
     _, delta = _date_split(spark, sf_dir)
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-incr-c-"))
+    reg = default_registry(str(tmp_path / "wh"))
     try:
         reg.build(spark, sf_dir, "time")
         reg.build(spark, sf_dir, "sales")
@@ -381,6 +426,37 @@ def test_sales_table_twin_equals_mv_and_validates(built, spark, sf_dir):
         _sales_table(t, None)
 
 
+def test_sales_table_link_shares_sales_files(spark, sf_dir, tmp_path):
+    """The link twin's build commits hardlinks to the files of sales'
+    committed snapshot instead of rewriting the same bytes, and its rows
+    survive sales being rebuilt until that snapshot is vacuumed."""
+    from postgresql_datawarehouse_excercise_spark.operators.mutations import (
+        ManagedParquetTable,
+    )
+
+    def part_files(name):
+        d = ManagedParquetTable(spark, reg.path(name)).data_path
+        return [os.path.join(d, f) for f in os.listdir(d) if f.startswith("part-")]
+
+    reg = default_registry(str(tmp_path / "wh"))
+    try:
+        for n in ("time", "sales", "sales_table"):
+            reg.build(spark, sf_dir, n)
+        twin = part_files("sales_table")
+        assert twin
+        assert any(os.path.samefile(twin[0], f) for f in part_files("sales"))
+        cols = ["customerid", "timeid", "partkey", "amnt"]
+        want = _rows(reg.read(spark, "sales_table"), cols)
+        sales = ManagedParquetTable(spark, reg.path("sales"))
+        shared = sales.version()
+        for _ in range(sales.retain):
+            reg.build(spark, sf_dir, "sales")
+        assert shared not in sales.versions()
+        assert _rows(reg.read(spark, "sales_table"), cols) == want
+    finally:
+        reg.drop_all(spark)
+
+
 def catalog_load_corrupt(spark, sf_dir):
     """Tables facade whose sales() has a duplicated PK tuple."""
     from postgresql_datawarehouse_excercise_spark import catalog as cat
@@ -392,7 +468,7 @@ def catalog_load_corrupt(spark, sf_dir):
     return t
 
 
-def test_incremental_extrema_measures_equal_full_rebuild(spark, sf_dir):
+def test_incremental_extrema_measures_equal_full_rebuild(spark, sf_dir, tmp_path):
     """Max/min measures must survive incremental maintenance: view2_stats
     (sum + count + max + min) built from the pre-cutoff batch and merged
     with the delta must equal a full one-shot rebuild bit-for-bit -- the
@@ -402,8 +478,8 @@ def test_incremental_extrema_measures_equal_full_rebuild(spark, sf_dir):
     from postgresql_datawarehouse_excercise_spark.mv.definitions import with_count_stats
 
     batch1, delta = _date_split(spark, sf_dir)
-    inc = with_count_stats(default_registry(tempfile.mkdtemp(prefix="pdwx-incr-x-")))
-    full = with_count_stats(default_registry(tempfile.mkdtemp(prefix="pdwx-incr-y-")))
+    inc = with_count_stats(default_registry(str(tmp_path / "inc")))
+    full = with_count_stats(default_registry(str(tmp_path / "full")))
     try:
         _orig = full.defs["view2_stats"].builder
         inc.defs["time"].builder = lambda tt, dep: build_time_dim(batch1.orders)

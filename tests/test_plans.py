@@ -25,16 +25,14 @@ def test_best_buyers_broadcasts_dimensions(spark, sf_dir):
     assert plans.num_sortmerge_joins(df) == 0
 
 
-def test_q4a_raw_vs_persisted_view_shuffle_ordering(spark, sf_dir):
+def test_q4a_raw_vs_persisted_view_shuffle_ordering(spark, sf_dir, tmp_path):
     """The MV hierarchy must reduce plan work: answering best-buyers from the
     PERSISTED View2 takes strictly fewer exchanges than from raw tables.
     (Inline-derived views legitimately shuffle more -- materialization is the
     point; this mirrors BASELINE.md's raw > mart > view ordering.)"""
-    import tempfile
-
     from postgresql_datawarehouse_excercise_spark.mv.definitions import default_registry
 
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-plans-wh-"))
+    reg = default_registry(str(tmp_path / "wh"))
     reg.build(spark, sf_dir, "time")
     reg.build(spark, sf_dir, "sales")
     reg.build(spark, sf_dir, "view2")
@@ -504,18 +502,17 @@ def test_kmeans_centroids_broadcast_never_shuffled(spark, sf_dir):
     assert "Window" not in p
 
 
-def test_bucketed_join_eliminates_input_shuffles(spark, sf_dir):
+def test_bucketed_join_eliminates_input_shuffles(spark, sf_dir, tmp_path):
     """Co-located bucketed layout: the fact-fact merge join over tables
     bucketed (and sorted) on the join key must contain ZERO shuffle
     exchanges on its inputs -- the write-time shuffle is amortized across
     every subsequent join -- while the identical unbucketed join shuffles
     both sides."""
-    import tempfile
     import uuid
 
     t = catalog.load(spark, sf_dir)
     tag = uuid.uuid4().hex[:8]
-    loc = tempfile.mkdtemp(prefix="pdwx-bkt-plan-")
+    loc = str(tmp_path)
     lt, ot = f"pdwx_pbl_{tag}", f"pdwx_pbo_{tag}"
     try:
         from postgresql_datawarehouse_excercise_spark.sources import files
@@ -541,9 +538,6 @@ def test_bucketed_join_eliminates_input_shuffles(spark, sf_dir):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {lt}")
         spark.sql(f"DROP TABLE IF EXISTS {ot}")
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
 
 
 def test_partitioned_source_prunes_on_the_partition_column(spark, sf_dir):
@@ -556,19 +550,18 @@ def test_partitioned_source_prunes_on_the_partition_column(spark, sf_dir):
     assert m and "day" in m.group(1)
 
 
-def test_q18_bucketed_layout_agg_and_join_shuffle_free(spark, sf_dir):
+def test_q18_bucketed_layout_agg_and_join_shuffle_free(spark, sf_dir, tmp_path):
     """x_tpch_q18_bucketed's claim, pinned on the un-checkpointed shape:
     with lineitem and orders bucketed on the order key, the HAVING
     aggregate AND the big-orders join contain ZERO shuffle exchanges --
     the bucketed scan satisfies the aggregate's distribution, and the
     aggregate's output partitioning co-locates with the orders buckets.
     (The plain Q18 pays a full lineitem exchange for the same aggregate.)"""
-    import tempfile
     import uuid
 
     t = catalog.load(spark, sf_dir)
     tag = uuid.uuid4().hex[:8]
-    loc = tempfile.mkdtemp(prefix="pdwx-q18bkt-plan-")
+    loc = str(tmp_path)
     lt, ot = f"pdwx_pq18l_{tag}", f"pdwx_pq18o_{tag}"
     try:
         from postgresql_datawarehouse_excercise_spark.sources import files
@@ -604,9 +597,6 @@ def test_q18_bucketed_layout_agg_and_join_shuffle_free(spark, sf_dir):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {lt}")
         spark.sql(f"DROP TABLE IF EXISTS {ot}")
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)
 
 
 def test_pca_projection_pass_is_shuffle_free(spark, sf_dir):

@@ -9,8 +9,6 @@ the compiled-JVM extension rule (documented divergence in the module)."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from postgresql_datawarehouse_excercise_spark.mv import sql_rewrite
@@ -21,8 +19,8 @@ from postgresql_datawarehouse_excercise_spark.mv.definitions import (
 
 
 @pytest.fixture(scope="module")
-def built(spark, sf_dir):
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrw-"))
+def built(spark, sf_dir, tmp_path_factory):
+    reg = default_registry(str(tmp_path_factory.mktemp("sqlrw")))
     reg.build_all(spark, sf_dir)
     nav = default_navigator(reg)
     sql_rewrite.register_star_view(spark, sf_dir)
@@ -89,12 +87,12 @@ def test_time_fd_picks_cheapest_sufficient_mv(spark, sf_dir, built):
 
 
 @pytest.fixture(scope="module")
-def built_stats(spark, sf_dir):
+def built_stats(spark, sf_dir, tmp_path_factory):
     """Registry extended with the count-bearing view2 twin (opt-in), making
     COUNT(*) / AVG / multi-measure texts navigable."""
     from postgresql_datawarehouse_excercise_spark.mv.definitions import with_count_stats
 
-    reg = with_count_stats(default_registry(tempfile.mkdtemp(prefix="pdwx-sqlrw-st-")))
+    reg = with_count_stats(default_registry(str(tmp_path_factory.mktemp("sqlrw-st"))))
     for name in ("time", "sales", "view2_stats"):
         reg.build(spark, sf_dir, name)
     nav = default_navigator(reg)
@@ -426,13 +424,12 @@ def test_join_text_rewrite_matrix(spark, sf_dir, built_views, text, expect_rewri
         assert sorted(map(_norm_row, df.collect())) == sorted(map(_norm_row, direct.collect())), text
 
 
-def test_avg_headroom_guard_falls_back_on_huge_sums(spark, sf_dir):
+def test_avg_headroom_guard_falls_back_on_huge_sums(spark, sf_dir, tmp_path):
     """The AVG re-derivation's decimal(38, s_out+12) cast leaves ~18 integer
     digits; an MV whose sums approach that must fall back to direct
     execution instead of silently returning NULL / last-digit-divergent
     averages (ADVICE regression).  A small-valued twin proves the guard
     does not fire spuriously."""
-    import tempfile as _tf
     from decimal import Decimal
 
     from pyspark.sql import functions as F
@@ -444,7 +441,7 @@ def test_avg_headroom_guard_falls_back_on_huge_sums(spark, sf_dir):
         rows = [(1996 + i % 2, v) for i, v in enumerate(amnt_values)]
         base = spark.createDataFrame(rows, "year BIGINT, amnt DECIMAL(38,4)")
         base.createOrReplaceTempView(view)
-        reg = MVRegistry(_tf.mkdtemp(prefix="pdwx-headroom-"))
+        reg = MVRegistry(str(tmp_path / view))
         reg.register(
             MVDef(
                 "big",
@@ -544,20 +541,18 @@ def test_rewriting_session_is_transparent(spark, sf_dir, built_views):
 _FRESH_TEXT = "SELECT name, year, SUM(amnt) AS amnt FROM sales_star GROUP BY name, year"
 
 
-def test_stale_mv_declines_rewrite_until_refreshed(spark, sf_dir):
+def test_stale_mv_declines_rewrite_until_refreshed(spark, sf_dir, tmp_path):
     """Mutate a base table after the build: the rewriter must DECLINE the
     (now stale) MV and execute directly against the mutated base — never
     serve a pre-mutation aggregate — then rewrite again after refresh()."""
     import os
     import shutil
-    import tempfile
 
     from postgresql_datawarehouse_excercise_spark import catalog
 
-    tmp_sf = tempfile.mkdtemp(prefix="pdwx-fresh-sf-")
-    shutil.rmtree(tmp_sf)
+    tmp_sf = str(tmp_path / "sf")
     shutil.copytree(sf_dir, tmp_sf)
-    reg = default_registry(tempfile.mkdtemp(prefix="pdwx-fresh-wh-"))
+    reg = default_registry(str(tmp_path / "wh"))
     try:
         reg.build_all(spark, tmp_sf)
         nav = default_navigator(reg)
@@ -596,7 +591,6 @@ def test_stale_mv_declines_rewrite_until_refreshed(spark, sf_dir):
         assert sorted(map(tuple, df3.collect())) == got
     finally:
         reg.drop_all(spark)
-        shutil.rmtree(tmp_sf, ignore_errors=True)
         catalog._TABLES_CACHE.clear()
         # restore the module-level star view other tests read
         sql_rewrite.register_star_view(spark, sf_dir)
