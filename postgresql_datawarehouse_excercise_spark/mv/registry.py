@@ -120,6 +120,9 @@ class MVRegistry:
     # assignment-5.sql:17-27, but RewritingSession users get transparent
     # answers and deserve a freshness guarantee)
     versions: dict[str, tuple] = field(default_factory=dict)
+    # schema of each MV's committed rows: read() declares it, so no job
+    # reads a parquet footer to infer it
+    schemas: dict[str, StructType] = field(default_factory=dict)
     # session that _analyze registered catalog tables into: drop_all uses it
     # so bare drop_all() cannot leak dead external-table entries pointing at
     # deleted temp dirs (field excluded from equality/repr by being mutable
@@ -297,6 +300,7 @@ class MVRegistry:
             obs = Observation()
             table._commit_rows(df.observe(obs, F.count(F.lit(1)).alias("rows")))
             self.stats[name] = obs.get["rows"]
+        self.schemas[name] = df.schema
         self._analyze(spark, name, df.schema)
         if mv.cache_key:
             catalog.load(spark, sf_dir)._cache[mv.cache_key] = self.read(spark, name)
@@ -499,8 +503,14 @@ class MVRegistry:
                 self.build(spark, sf_dir, n)
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
-        """The MV's current snapshot (stats-free, path-based)."""
-        return self._table(spark, name).read()
+        """The MV's current snapshot (stats-free, path-based), declared with
+        the schema its commit recorded; an MV this registry did not commit
+        infers it from the files."""
+        table = self._table(spark, name)
+        schema = self.schemas.get(name)
+        if schema is None:
+            return table.read()
+        return spark.read.schema(schema).parquet(table.data_path)
 
     def drop_all(self, spark: SparkSession | None = None) -> None:
         """DROP ... CASCADE analog: remove in reverse dependency order plus
@@ -521,6 +531,7 @@ class MVRegistry:
             shutil.rmtree(self.path(name), ignore_errors=True)
         self.stats.clear()
         self.versions.clear()
+        self.schemas.clear()
         # evict any catalog cache slots now pointing at deleted files
         keys = {mv.cache_key for mv in self.defs.values() if mv.cache_key}
         for tables in catalog._TABLES_CACHE.values():

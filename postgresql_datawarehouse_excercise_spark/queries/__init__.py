@@ -2,8 +2,8 @@
 
 Every operator/query from SURVEY.md section 2 is registered here as a
 ``QueryDef``: a DataFrame-producing function ``(spark, sf_dir) -> DataFrame``
-plus (where SQL-expressible) a DuckDB oracle SQL twin over the same parquet
-views.  ``__spark_entry__.queries()/oracle_sql()`` read this registry.
+plus a DuckDB oracle SQL twin over the same parquet views.
+``__spark_entry__.queries()/oracle_sql()`` read this registry.
 
 Conventions (driver compare = row-count + schema + order-insensitive value
 hash, columns sorted by name):
@@ -27,7 +27,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QueryDef:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL; None => driver does rows-only check
+    oracle: str | None  # DuckDB SQL; every entry registers one
     doc: str = ""
 
 

@@ -1,6 +1,10 @@
 """Extension: event-stream analytics over `events` (batch twins of the
 streaming/ operators; streaming versions use readStream + watermark on the
 same logic -- see streaming/events.py).
+
+A compiler-backed CEP entry is one `_cep_entry(name, (matcher, compiler),
+args, kwargs, columns, doc)` spec: it yields both the Spark match and its
+DuckDB oracle, so the pattern and the projection are written once.
 """
 
 from __future__ import annotations
@@ -10,6 +14,7 @@ from pyspark.sql import functions as F
 
 from .. import catalog
 from ..functions import dec, money
+from ..operators import cep
 from ..session import materialize
 from . import query
 
@@ -853,6 +858,44 @@ CEP_MAX_US = 24 * 3600 * 1000000  # purchase within 24 h of the view
 # constraint would admit zero matches; 24 h keeps the predicate selective --
 # it rejects roughly half the consecutive triples -- while testable)
 
+# `view (click)+ purchase`: x_events_cep_pattern and x_stream_cep match it
+# and project CEP_PATTERN_COLS; the ALL ROWS entries emit its rows.
+CEP_PATTERN = [("view", "1"), ("click", "+"), ("purchase", "1")]
+CEP_PATTERN_COLS = [
+    "user_id", ("t_view_us", "t_first_us"), ("t_purchase_us", "t_last_us"),
+    ("n_clicks", "n_stage1"), "duration_us",
+]
+
+# (matcher, compiler) pairs of operators/cep.py: each compiler takes the
+# matcher's arguments after `events` and replays its match in DuckDB SQL.
+_MATCH = (cep.cep_match, cep.compile_sql)
+_SKIP_PAST = (cep.cep_match_skip_past, cep.compile_sql_skip_past)
+_SKIP_TO = (cep.cep_match_skip_to, cep.compile_sql_skip_to)
+_PERMUTE = (cep.cep_match_permute, cep.compile_sql_permute)
+_ROWS = (cep.cep_match_rows, cep.compile_sql_rows)
+
+
+def cep_columns(cols: list) -> list:
+    """The Spark projection of a CEP column list, whose items are a name or
+    an (alias, source) pair."""
+    return [F.col(c) if isinstance(c, str) else F.col(c[1]).alias(c[0]) for c in cols]
+
+
+def _cep_entry(name: str, pair: tuple, args: tuple, kw: dict, cols: list, doc: str) -> None:
+    """Register a compiler-backed CEP entry from one spec: the Spark side
+    runs the matcher over `events`, the DuckDB oracle selects from the
+    compiler's replay of the same arguments, and both project `cols`."""
+    match, compile_sql = pair
+    sql_cols = ", ".join(c if isinstance(c, str) else f"{c[1]} AS {c[0]}" for c in cols)
+
+    def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+        events = catalog.load(spark, sf_dir).events
+        return match(events, *args, **kw).select(*cep_columns(cols))
+
+    fn.__doc__ = doc
+    query(name, oracle=f"SELECT {sql_cols}\nFROM ({compile_sql(*args, **kw)})")(fn)
+
+
 _CEP_ORACLE = f"""
 WITH ev AS (
   SELECT user_id, event_id, event_type, ts,
@@ -909,38 +952,19 @@ def x_events_cep_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern compiler (this entry = cep_match(events, [view, (click)+,
     purchase]), values unchanged and pinned by the unchanged oracle);
     x_events_cep_star exercises the compiler's optional-stage arm."""
-    from ..operators.cep import cep_match
-
     t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events,
-        [("view", "1"), ("click", "+"), ("purchase", "1")],
-        CEP_MAX_US,
-    )
-    return m.select(
-        "user_id",
-        F.col("t_first_us").alias("t_view_us"),
-        F.col("t_last_us").alias("t_purchase_us"),
-        F.col("n_stage1").alias("n_clicks"),
-        "duration_us",
+    return cep.cep_match(t.events, CEP_PATTERN, CEP_MAX_US).select(
+        *cep_columns(CEP_PATTERN_COLS)
     )
 
 
-def _cep_star_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(
-        [("signup", "1"), ("view", "*"), ("purchase", "1")], CEP_MAX_US
-    )
-    return f"""
-SELECT user_id, t_first_us AS t_signup_us, t_last_us AS t_purchase_us,
-       duration_us, n_stage1 AS n_views, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_star", oracle=_cep_star_oracle())
-def x_events_cep_star(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_star",
+    _MATCH,
+    ([("signup", "1"), ("view", "*"), ("purchase", "1")], CEP_MAX_US),
+    {},
+    ["user_id", ("t_signup_us", "t_first_us"), ("t_purchase_us", "t_last_us"),
+     "duration_us", ("n_views", "n_stage1"), "n_events"],
     """Second CEP pattern -- `signup (view)* purchase`, strictly
     consecutive, purchase within 24 h of the signup -- proving the
     operators/cep.py pattern COMPILER on a quantifier x_events_cep_pattern
@@ -958,40 +982,17 @@ def x_events_cep_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     run aggregate, and (user_id, seq)-keyed equi-joins only -- the skip
     arm adds a union of two bounded relations, never a new shuffle key.
     At sf0.1 the two arms contribute 579 (run) + 3589 (empty) = 4168
-    matches, linear in corpus size."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events,
-        [("signup", "1"), ("view", "*"), ("purchase", "1")],
-        CEP_MAX_US,
-    )
-    return m.select(
-        "user_id",
-        F.col("t_first_us").alias("t_signup_us"),
-        F.col("t_last_us").alias("t_purchase_us"),
-        "duration_us",
-        F.col("n_stage1").alias("n_views"),
-        "n_events",
-    )
+    matches, linear in corpus size.""",
+)
 
 
-def _cep_opt_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(
-        [("signup", "1"), ("error", "?"), ("purchase", "1")], CEP_MAX_US
-    )
-    return f"""
-SELECT user_id, t_first_us AS t_signup_us, t_last_us AS t_purchase_us,
-       duration_us, n_stage1 AS n_errors
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_optional", oracle=_cep_opt_oracle())
-def x_events_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_optional",
+    _MATCH,
+    ([("signup", "1"), ("error", "?"), ("purchase", "1")], CEP_MAX_US),
+    {},
+    ["user_id", ("t_signup_us", "t_first_us"), ("t_purchase_us", "t_last_us"),
+     "duration_us", ("n_errors", "n_stage1")],
     """Third CEP pattern -- `signup (error)? purchase` -- putting the
     compiler's remaining quantifier on the hard gate: `?` consumes exactly
     ONE event or none (where `*` consumes a maximal run or none), so its
@@ -1000,39 +1001,17 @@ def x_events_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     defines: `1` and `+` (cep_pattern), `*` (cep_star), `?` (here); the
     skip/consume arms stay mutually exclusive per start position by the
     adjacent-types-differ rule, so each occurrence is emitted once.
-    Oracle = compile_sql's 2-arm expansion of the same pattern."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events,
-        [("signup", "1"), ("error", "?"), ("purchase", "1")],
-        CEP_MAX_US,
-    )
-    return m.select(
-        "user_id",
-        F.col("t_first_us").alias("t_signup_us"),
-        F.col("t_last_us").alias("t_purchase_us"),
-        "duration_us",
-        F.col("n_stage1").alias("n_errors"),
-    )
+    Oracle = compile_sql's 2-arm expansion of the same pattern.""",
+)
 
 
-def _cep_alt_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(
-        [("signup", "1"), ("view|click", "+"), ("purchase", "1")], CEP_MAX_US
-    )
-    return f"""
-SELECT user_id, t_first_us AS t_signup_us, t_last_us AS t_purchase_us,
-       duration_us, n_stage1 AS n_browse
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_alternation", oracle=_cep_alt_oracle())
-def x_events_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_alternation",
+    _MATCH,
+    ([("signup", "1"), ("view|click", "+"), ("purchase", "1")], CEP_MAX_US),
+    {},
+    ["user_id", ("t_signup_us", "t_first_us"), ("t_purchase_us", "t_last_us"),
+     "duration_us", ("n_browse", "n_stage1")],
     """Fourth CEP construct on the hard gate -- ALTERNATION, the SQL:2016
     row-pattern `(A|B)` the round-12 verdict named as the next
     MATCH_RECOGNIZE construct a real pattern hits: `signup (view|click)+
@@ -1053,39 +1032,17 @@ def x_events_cep_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     compile_sql's independent replay with IN-list membership (event types
     are validated to identifier characters before being interpolated --
     the ADVICE r12 injection guard).  Scale shape identical to the other
-    CEP entries: no global sorts, every join keyed by (user_id, seq)."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events,
-        [("signup", "1"), ("view|click", "+"), ("purchase", "1")],
-        CEP_MAX_US,
-    )
-    return m.select(
-        "user_id",
-        F.col("t_first_us").alias("t_signup_us"),
-        F.col("t_last_us").alias("t_purchase_us"),
-        "duration_us",
-        F.col("n_stage1").alias("n_browse"),
-    )
+    CEP entries: no global sorts, every join keyed by (user_id, seq).""",
+)
 
 
-def _cep_skip_oracle() -> str:
-    from ..operators.cep import compile_sql_skip_past
-
-    inner = compile_sql_skip_past(
-        [("purchase", "1"), ("error", "+"), ("purchase", "1")], CEP_MAX_US
-    )
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage1 AS n_errors, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_skip_past", oracle=_cep_skip_oracle())
-def x_events_cep_skip_past(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_skip_past",
+    _SKIP_PAST,
+    ([("purchase", "1"), ("error", "+"), ("purchase", "1")], CEP_MAX_US),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_errors", "n_stage1"), "n_events"],
     """AFTER MATCH SKIP PAST LAST ROW -- the second canonical
     MATCH_RECOGNIZE after-match mode (every other CEP entry is SKIP TO
     NEXT ROW: all occurrences): on `purchase (error)+ purchase`, where
@@ -1105,40 +1062,17 @@ def x_events_cep_skip_past(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the chain with a recursive CTE over compile_sql's seq-bounded
     occurrence set; well-defined because at most one occurrence starts at
     any position (arm mutual exclusion).  At sf0.01 the full set has 49
-    occurrences with 4 overlapping pairs; the chain keeps 47."""
-    from ..operators.cep import cep_match_skip_past
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match_skip_past(
-        t.events,
-        [("purchase", "1"), ("error", "+"), ("purchase", "1")],
-        CEP_MAX_US,
-    )
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage1").alias("n_errors"),
-        "n_events",
-    )
+    occurrences with 4 overlapping pairs; the chain keeps 47.""",
+)
 
 
-def _cep_permute_oracle() -> str:
-    from ..operators.cep import compile_sql_permute
-
-    inner = compile_sql_permute(
-        [("signup", "1")], ["view", "click"], [("purchase", "1")], CEP_MAX_US
-    )
-    return f"""
-SELECT user_id, t_first_us AS t_signup_us, t_last_us AS t_purchase_us,
-       duration_us, n_events, perm
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_permute", oracle=_cep_permute_oracle())
-def x_events_cep_permute(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_permute",
+    _PERMUTE,
+    ([("signup", "1")], ["view", "click"], [("purchase", "1")], CEP_MAX_US),
+    {},
+    ["user_id", ("t_signup_us", "t_first_us"), ("t_purchase_us", "t_last_us"),
+     "duration_us", "n_events", "perm"],
     """PERMUTE -- the third SQL:2016 row-pattern construct on the gate
     (after quantifiers and alternation): `signup PERMUTE(view, click)
     purchase` matches when BOTH a view and a click occur, each exactly
@@ -1157,25 +1091,8 @@ def x_events_cep_permute(spark: SparkSession, sf_dir: str) -> DataFrame:
     the optional arms), each arm the standard no-global-sort islands +
     keyed-join plan, the union a bounded fanout of per-user-partitioned
     relations.  Oracle = compile_sql_permute's independent UNION ALL
-    replay."""
-    from ..operators.cep import cep_match_permute
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match_permute(
-        t.events,
-        [("signup", "1")],
-        ["view", "click"],
-        [("purchase", "1")],
-        CEP_MAX_US,
-    )
-    return m.select(
-        "user_id",
-        F.col("t_first_us").alias("t_signup_us"),
-        F.col("t_last_us").alias("t_purchase_us"),
-        "duration_us",
-        "n_events",
-        "perm",
-    )
+    replay.""",
+)
 
 
 # SQL:2016 DEFINE: symbols are row PREDICATES, not just types.  The gated
@@ -1193,19 +1110,13 @@ CEP_DEFINE_PATTERN = [
 ]
 
 
-def _cep_define_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(CEP_DEFINE_PATTERN, CEP_MAX_US)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage1 AS n_rising, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_define", oracle=_cep_define_oracle())
-def x_events_cep_define(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_define",
+    _MATCH,
+    (CEP_DEFINE_PATTERN, CEP_MAX_US),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_rising", "n_stage1"), "n_events"],
     """Predicate-DEFINEd CEP symbols (VERDICT r13 item 2) -- the step from
     "pattern over event types" to real SQL:2016 MATCH_RECOGNIZE, where
     DEFINE gives each symbol a row predicate that may reference PREV():
@@ -1229,19 +1140,8 @@ def x_events_cep_define(spark: SparkSession, sf_dir: str) -> DataFrame:
     same lag column in its ev CTE; the 3-way model/Spark/SQL property
     test (tests/test_cep_compiler.py) runs DEFINE patterns over seeded
     synthetic streams where rising ties and stream-head NULLs are
-    engineered dense."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(t.events, CEP_DEFINE_PATTERN, CEP_MAX_US)
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage1").alias("n_rising"),
-        "n_events",
-    )
+    engineered dense.""",
+)
 
 
 # AFTER MATCH SKIP TO FIRST <symbol>: `purchase view+ purchase view+`
@@ -1261,24 +1161,13 @@ CEP_SKIP_LAST_PATTERN = [("purchase", "1"), ("view", "+"), ("purchase", "1")]
 CEP_SKIP_LAST_TARGET = 1
 
 
-def _cep_skip_to_oracle(pattern, target, which, n1_alias) -> str:
-    from ..operators.cep import compile_sql_skip_to
-
-    inner = compile_sql_skip_to(pattern, CEP_MAX_US, target, which)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage1 AS {n1_alias}, n_events
-FROM ({inner})
-"""
-
-
-@query(
+_cep_entry(
     "x_events_cep_skip_to_first",
-    oracle=_cep_skip_to_oracle(
-        CEP_SKIP_FIRST_PATTERN, CEP_SKIP_FIRST_TARGET, "first", "n_views_1"
-    ),
-)
-def x_events_cep_skip_to_first(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _SKIP_TO,
+    (CEP_SKIP_FIRST_PATTERN, CEP_MAX_US, CEP_SKIP_FIRST_TARGET, "first"),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_views_1", "n_stage1"), "n_events"],
     """AFTER MATCH SKIP TO FIRST <symbol> (VERDICT r13 item 3) -- with
     SKIP TO LAST below, this completes the SQL:2016 after-match quartet
     (NEXT ROW = cep_match, PAST LAST ROW = cep_match_skip_past).  The
@@ -1295,27 +1184,17 @@ def x_events_cep_skip_to_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     errors (target could map zero rows / resume could equal the match
     start).  Same Arrow lane and user partitioning as skip_past; the
     oracle is an independent recursive-CTE replay chaining on
-    start_seq >= resume (where skip_past chains on > end_seq)."""
-    from ..operators.cep import cep_match_skip_to
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match_skip_to(
-        t.events, CEP_SKIP_FIRST_PATTERN, CEP_MAX_US,
-        CEP_SKIP_FIRST_TARGET, "first",
-    )
-    return m.select(
-        "user_id", "t_first_us", "t_last_us", "duration_us",
-        F.col("n_stage1").alias("n_views_1"), "n_events",
-    )
-
-
-@query(
-    "x_events_cep_skip_to_last",
-    oracle=_cep_skip_to_oracle(
-        CEP_SKIP_LAST_PATTERN, CEP_SKIP_LAST_TARGET, "last", "n_views"
-    ),
+    start_seq >= resume (where skip_past chains on > end_seq).""",
 )
-def x_events_cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
+
+
+_cep_entry(
+    "x_events_cep_skip_to_last",
+    _SKIP_TO,
+    (CEP_SKIP_LAST_PATTERN, CEP_MAX_US, CEP_SKIP_LAST_TARGET, "last"),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_views", "n_stage1"), "n_events"],
     """AFTER MATCH SKIP TO LAST <symbol> over `purchase view+ purchase`,
     resuming at the LAST row of the view run (stage 1) -- targeting a
     MULTI-ROW '+' symbol, where FIRST and LAST genuinely pick different
@@ -1327,18 +1206,8 @@ def x_events_cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Machinery shared with x_events_cep_skip_to_first (one operator
     parameterized by target stage and first/last); oracle = the same
-    recursive-CTE replay with the LAST resume locator."""
-    from ..operators.cep import cep_match_skip_to
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match_skip_to(
-        t.events, CEP_SKIP_LAST_PATTERN, CEP_MAX_US,
-        CEP_SKIP_LAST_TARGET, "last",
-    )
-    return m.select(
-        "user_id", "t_first_us", "t_last_us", "duration_us",
-        F.col("n_stage1").alias("n_views"), "n_events",
-    )
+    recursive-CTE replay with the LAST resume locator.""",
+)
 
 
 # SQL:2016 MEASURES over the rising-run DEFINE pattern: per-symbol
@@ -1353,19 +1222,13 @@ CEP_MEASURES = [
 ]
 
 
-def _cep_measures_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(CEP_DEFINE_PATTERN, CEP_MAX_US, measures=CEP_MEASURES)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, n_stage1 AS n_rising,
-       anchor_value_c, run_sum_c, run_min_c, run_last_c
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_measures", oracle=_cep_measures_oracle())
-def x_events_cep_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_measures",
+    _MATCH,
+    (CEP_DEFINE_PATTERN, CEP_MAX_US),
+    {"measures": CEP_MEASURES},
+    ["user_id", "t_first_us", "t_last_us", ("n_rising", "n_stage1"),
+     "anchor_value_c", "run_sum_c", "run_min_c", "run_last_c"],
     """SQL:2016 MEASURES beyond the one summary row (the gap VERDICT r13
     named): per-symbol aggregates over the rows each stage consumed --
     FIRST(A.value), SUM(B.value), MIN(B.value), LAST(B.value) over the
@@ -1381,39 +1244,17 @@ def x_events_cep_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate columns -- zero new shuffles, zero new joins; single-row
     stages pass their value through (every aggregate of one row IS the
     row).  Oracle = compile_sql's replay with the same cents columns in
-    its ev CTE and min_by/max_by in its run CTEs."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events, CEP_DEFINE_PATTERN, CEP_MAX_US, measures=CEP_MEASURES
-    )
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        F.col("n_stage1").alias("n_rising"),
-        "anchor_value_c",
-        "run_sum_c",
-        "run_min_c",
-        "run_last_c",
-    )
+    its ev CTE and min_by/max_by in its run CTEs.""",
+)
 
 
-def _cep_all_rows_oracle() -> str:
-    from ..operators.cep import compile_sql_rows
-
-    inner = compile_sql_rows(
-        [("view", "1"), ("click", "+"), ("purchase", "1")], CEP_MAX_US
-    )
-    return f"""
-SELECT user_id, match_no, seq, event_id, event_type, t_us, classifier
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_all_rows", oracle=_cep_all_rows_oracle())
-def x_events_cep_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_all_rows",
+    _ROWS,
+    (CEP_PATTERN, CEP_MAX_US),
+    {},
+    ["user_id", "match_no", "seq", "event_id", "event_type", "t_us",
+     "classifier"],
     """ALL ROWS PER MATCH -- SQL:2016's row-level output mode, completing
     the output-shape pair (every other CEP entry is ONE ROW PER MATCH):
     each input row of `view (click)+ purchase` occurrences is emitted
@@ -1427,14 +1268,8 @@ def x_events_cep_all_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter (both sides inside the sessionization partitioning), one
     user-partitioned match-number window -- no theta join, no global
     sort.  Oracle = compile_sql_rows' independent replay (its own ev
-    CTE, row_number and CASE)."""
-    from ..operators.cep import cep_match_rows
-
-    t = catalog.load(spark, sf_dir)
-    return cep_match_rows(
-        t.events, [("view", "1"), ("click", "+"), ("purchase", "1")],
-        CEP_MAX_US,
-    )
+    CTE, row_number and CASE).""",
+)
 
 
 # Cross-symbol DEFINE (round 15): the standard's own headline idiom --
@@ -1450,19 +1285,13 @@ CEP_CROSS_PATTERN = [
 ]
 
 
-def _cep_cross_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(CEP_CROSS_PATTERN, CEP_MAX_US)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage0 AS n_purchases, n_stage1 AS n_above, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_cross_define", oracle=_cep_cross_oracle())
-def x_events_cep_cross_define(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_cross_define",
+    _MATCH,
+    (CEP_CROSS_PATTERN, CEP_MAX_US),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_purchases", "n_stage0"), ("n_above", "n_stage1"), "n_events"],
     """CROSS-SYMBOL DEFINE references (VERDICT r14 item 5 -- the largest
     remaining MATCH_RECOGNIZE gap): `B.value > A.value`, a symbol
     predicate reading ANOTHER symbol's rows.  Gated as `purchase+
@@ -1493,20 +1322,8 @@ def x_events_cep_cross_define(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = compile_sql's independent replay with the same
     last_value(CASE ...) IGNORE NULLS anchor in its ev CTE; 3-way
     model/Spark/SQL tests incl. an independent run-last anchor walk in
-    tests/test_cep_compiler.py."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(t.events, CEP_CROSS_PATTERN, CEP_MAX_US)
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage0").alias("n_purchases"),
-        F.col("n_stage1").alias("n_above"),
-        "n_events",
-    )
+    tests/test_cep_compiler.py.""",
+)
 
 
 # RUNNING measures (round 15): RUNNING vs FINAL only differ in ALL ROWS
@@ -1517,23 +1334,13 @@ CEP_RUNNING = [
 ]
 
 
-def _cep_running_oracle() -> str:
-    from ..operators.cep import compile_sql_rows
-
-    inner = compile_sql_rows(
-        [("view", "1"), ("click", "+"), ("purchase", "1")],
-        CEP_MAX_US,
-        running=CEP_RUNNING,
-    )
-    return f"""
-SELECT user_id, match_no, seq, event_id, event_type, t_us, classifier,
-       run_sum_c, run_max_c
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_running", oracle=_cep_running_oracle())
-def x_events_cep_running(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_running",
+    _ROWS,
+    (CEP_PATTERN, CEP_MAX_US),
+    {"running": CEP_RUNNING},
+    ["user_id", "match_no", "seq", "event_id", "event_type", "t_us",
+     "classifier", "run_sum_c", "run_max_c"],
     """RUNNING measure semantics (VERDICT r14 item 4, closing the last
     MEASURES asterisk): SQL:2016's RUNNING SUM/MAX over `view (click)+
     purchase` in ALL ROWS PER MATCH mode -- each emitted row carries the
@@ -1548,16 +1355,8 @@ def x_events_cep_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; values quantize to integer cents before aggregation (the
     MEASURES discipline), so the running sums are bit-stable
     cross-engine.  Oracle = compile_sql_rows' independent replay with
-    the same window in SQL."""
-    from ..operators.cep import cep_match_rows
-
-    t = catalog.load(spark, sf_dir)
-    return cep_match_rows(
-        t.events,
-        [("view", "1"), ("click", "+"), ("purchase", "1")],
-        CEP_MAX_US,
-        running=CEP_RUNNING,
-    )
+    the same window in SQL.""",
+)
 
 
 # The SQL:2016 standard's own headline MATCH_RECOGNIZE example: the
@@ -1573,19 +1372,13 @@ CEP_VSHAPE_PATTERN = [
 ]
 
 
-def _cep_vshape_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(CEP_VSHAPE_PATTERN, CEP_MAX_US)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage1 AS n_down, n_stage2 AS n_up, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_vshape", oracle=_cep_vshape_oracle())
-def x_events_cep_vshape(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_vshape",
+    _MATCH,
+    (CEP_VSHAPE_PATTERN, CEP_MAX_US),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_down", "n_stage1"), ("n_up", "n_stage2"), "n_events"],
     """The V-shape / double-bottom ticker -- the SQL:2016 standard's own
     MATCH_RECOGNIZE flagship (`PATTERN (STRT DOWN+ UP+)` with
     DOWN.price < PREV(price), UP.price > PREV(price)): a non-falling
@@ -1604,20 +1397,8 @@ def x_events_cep_vshape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle = compile_sql's independent arm replay; 3-way model test in
     tests/test_cep_compiler.py re-derives V-occurrences by direct
-    walk."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(t.events, CEP_VSHAPE_PATTERN, CEP_MAX_US)
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage1").alias("n_down"),
-        F.col("n_stage2").alias("n_up"),
-        "n_events",
-    )
+    walk.""",
+)
 
 
 # SUBSET union symbols (round 15): SQL:2016's SUBSET clause declares a
@@ -1633,24 +1414,14 @@ CEP_SUBSET_MEAS = [
 ]
 
 
-def _cep_subset_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(
-        CEP_SUBSET_PATTERN,
-        CEP_MAX_US,
-        measures=CEP_SUBSET_MEAS,
-        subsets=CEP_SUBSETS,
-    )
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us, n_events,
-       n_stage1 AS n_views, pre_sum_c, pre_last_c, pre_max_c, purchase_c
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_subset", oracle=_cep_subset_oracle())
-def x_events_cep_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_subset",
+    _MATCH,
+    (CEP_SUBSET_PATTERN, CEP_MAX_US),
+    {"measures": CEP_SUBSET_MEAS, "subsets": CEP_SUBSETS},
+    ["user_id", "t_first_us", "t_last_us", "duration_us", "n_events",
+     ("n_views", "n_stage1"), "pre_sum_c", "pre_last_c", "pre_max_c",
+     "purchase_c"],
     """SUBSET union symbols (round 15) -- SQL:2016's `SUBSET W = (A, B)`
     clause: MEASURES referencing a subset aggregate over the UNION of
     the rows its member stages consumed.  Gated as `signup view*
@@ -1668,29 +1439,8 @@ def x_events_cep_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates the union DIRECTLY from the consumed rows, so agreement
     proves the composition itself.  Oracle = compile_sql's replay
     (CASE/LEAST/GREATEST/COALESCE over the per-arm stage
-    expressions)."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events,
-        CEP_SUBSET_PATTERN,
-        CEP_MAX_US,
-        measures=CEP_SUBSET_MEAS,
-        subsets=CEP_SUBSETS,
-    )
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        "n_events",
-        F.col("n_stage1").alias("n_views"),
-        "pre_sum_c",
-        "pre_last_c",
-        "pre_max_c",
-        "purchase_c",
-    )
+    expressions).""",
+)
 
 
 # OR in DEFINE (round 15): the band-escape detector -- a maximal run of
@@ -1704,19 +1454,13 @@ CEP_OR_PATTERN = [
 ]
 
 
-def _cep_or_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(CEP_OR_PATTERN, CEP_MAX_US)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage0 AS n_in_band, n_stage1 AS n_out_band, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_or_define", oracle=_cep_or_oracle())
-def x_events_cep_or_define(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_or_define",
+    _MATCH,
+    (CEP_OR_PATTERN, CEP_MAX_US),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_in_band", "n_stage0"), ("n_out_band", "n_stage1"), "n_events"],
     """OR in DEFINE (round 15) -- closing the round-14 scope-out under a
     decidable fragment: `view (10 <= value <= 100)+ view (value < 10 OR
     value > 100)+`, a band-escape detector whose two same-type stages
@@ -1739,20 +1483,8 @@ def x_events_cep_or_define(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle = compile_sql's independent replay (OR-joined COALESCE
     boolean in the runs CTE); 3-way membership-model test + prover
-    positive/negative cases in tests/test_cep_compiler.py."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(t.events, CEP_OR_PATTERN, CEP_MAX_US)
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage0").alias("n_in_band"),
-        F.col("n_stage1").alias("n_out_band"),
-        "n_events",
-    )
+    positive/negative cases in tests/test_cep_compiler.py.""",
+)
 
 
 # Bounded quantifiers (round 15): SQL:2016 row-pattern bounded repetition
@@ -1772,21 +1504,14 @@ CEP_BOUNDED_PATTERN = [
 CEP_BOUNDED_MEAS = [(1, "sum", "value", "mid_sum_c")]
 
 
-def _cep_bounded_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(
-        CEP_BOUNDED_PATTERN, CEP_MAX_US, measures=CEP_BOUNDED_MEAS
-    )
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage1 AS n_mid, n_stage2 AS n_purchases, n_events, mid_sum_c
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_bounded", oracle=_cep_bounded_oracle())
-def x_events_cep_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_bounded",
+    _MATCH,
+    (CEP_BOUNDED_PATTERN, CEP_MAX_US),
+    {"measures": CEP_BOUNDED_MEAS},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_mid", "n_stage1"), ("n_purchases", "n_stage2"), "n_events",
+     "mid_sum_c"],
     """BOUNDED quantifiers {n,m} (round 15) -- SQL:2016 row-pattern
     bounded repetition, the last quantifier form the compiler lacked
     (after 1 ? + * and alternation/PERMUTE): `(view|signup)
@@ -1812,23 +1537,8 @@ def x_events_cep_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle = compile_sql's independent replay (run-length conditions in
     the bracketing joins; LEAST(n, m) cap + seq-keyed end join for the
     final stage); 3-way model test + pinned final-cap semantics in
-    tests/test_cep_compiler.py."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events, CEP_BOUNDED_PATTERN, CEP_MAX_US, measures=CEP_BOUNDED_MEAS
-    )
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage1").alias("n_mid"),
-        F.col("n_stage2").alias("n_purchases"),
-        "n_events",
-        "mid_sum_c",
-    )
+    tests/test_cep_compiler.py.""",
+)
 
 
 # NEXT() -- SQL:2016's one-row lookahead in DEFINE, PREV's mirror: a
@@ -1843,19 +1553,13 @@ CEP_NEXT_PATTERN = [
 ]
 
 
-def _cep_next_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(CEP_NEXT_PATTERN, CEP_MAX_US)
-    return f"""
-SELECT user_id, t_first_us, t_last_us, duration_us,
-       n_stage0 AS n_rising, n_events
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_next_define", oracle=_cep_next_oracle())
-def x_events_cep_next_define(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_next_define",
+    _MATCH,
+    (CEP_NEXT_PATTERN, CEP_MAX_US),
+    {},
+    ["user_id", "t_first_us", "t_last_us", "duration_us",
+     ("n_rising", "n_stage0"), "n_events"],
     """NEXT() in DEFINE (round 15) -- the standard's one-row LOOKAHEAD,
     completing the PREV/NEXT navigation pair: `purchase (value <
     NEXT(value))+ purchase (NOT ...)` -- a maximal run of purchases each
@@ -1869,19 +1573,8 @@ def x_events_cep_next_define(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate correctly admits a stream-final purchase.  Disjointness
     between run and peak is the round-14 exact-negation proof -- NEXT
     adds a navigation form, not new validation machinery.  Oracle =
-    compile_sql's replay with the same lead column in its ev CTE."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(t.events, CEP_NEXT_PATTERN, CEP_MAX_US)
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        "duration_us",
-        F.col("n_stage0").alias("n_rising"),
-        "n_events",
-    )
+    compile_sql's replay with the same lead column in its ev CTE.""",
+)
 
 
 # Cross-symbol arithmetic in MEASURES (round 16): the one remaining
@@ -1905,25 +1598,14 @@ CEP_MEXPR_EXPRS = [
 ]
 
 
-def _cep_measure_expr_oracle() -> str:
-    from ..operators.cep import compile_sql
-
-    inner = compile_sql(
-        CEP_VSHAPE_PATTERN,
-        CEP_MAX_US,
-        measures=CEP_MEXPR_MEAS,
-        measure_exprs=CEP_MEXPR_EXPRS,
-    )
-    return f"""
-SELECT user_id, t_first_us, t_last_us,
-       n_stage1 AS n_down, n_stage2 AS n_up,
-       strt_c, bottom_c, top_c, drop_c, rebound_c, net_c, swing2x_c
-FROM ({inner})
-"""
-
-
-@query("x_events_cep_measure_expr", oracle=_cep_measure_expr_oracle())
-def x_events_cep_measure_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
+_cep_entry(
+    "x_events_cep_measure_expr",
+    _MATCH,
+    (CEP_VSHAPE_PATTERN, CEP_MAX_US),
+    {"measures": CEP_MEXPR_MEAS, "measure_exprs": CEP_MEXPR_EXPRS},
+    ["user_id", "t_first_us", "t_last_us", ("n_down", "n_stage1"),
+     ("n_up", "n_stage2"), "strt_c", "bottom_c", "top_c", "drop_c",
+     "rebound_c", "net_c", "swing2x_c"],
     """Cross-symbol ARITHMETIC in MEASURES (round 16) -- SQL:2016's
     `LAST(UP.price) - FIRST(DOWN.price)` idiom on the V-shape ticker:
     per match, the drop (anchor minus bottom), the rebound (top minus
@@ -1945,28 +1627,5 @@ def x_events_cep_measure_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     operands (empty optional stage) propagate through the arithmetic
     identically in both engines -- the standard's expression-over-
     empty-aggregate reading.  Oracle = compile_sql's replay with the
-    identical outer-select arithmetic."""
-    from ..operators.cep import cep_match
-
-    t = catalog.load(spark, sf_dir)
-    m = cep_match(
-        t.events,
-        CEP_VSHAPE_PATTERN,
-        CEP_MAX_US,
-        measures=CEP_MEXPR_MEAS,
-        measure_exprs=CEP_MEXPR_EXPRS,
-    )
-    return m.select(
-        "user_id",
-        "t_first_us",
-        "t_last_us",
-        F.col("n_stage1").alias("n_down"),
-        F.col("n_stage2").alias("n_up"),
-        "strt_c",
-        "bottom_c",
-        "top_c",
-        "drop_c",
-        "rebound_c",
-        "net_c",
-        "swing2x_c",
-    )
+    identical outer-select arithmetic.""",
+)

@@ -635,10 +635,17 @@ INCR_SPLIT_DATE = "1998-07-01"  # batch 1 = orders before, batch 2 = from
 # (driver orders span 1995-01-01 .. 2001-08-01; median ~1998-04)
 
 
-@query(
-    "x_pipeline_incremental_sales",
-    oracle=None,  # assigned below: the FULL-rebuild sales fact is the oracle
-)
+def _incremental_sales_oracle() -> str:
+    from ..etl.sales_fact import ORACLE_SALES_CTE
+
+    return f"""
+WITH {ORACLE_SALES_CTE}
+SELECT customerid, timeid, partkey, CAST(ROUND(amnt, 2) AS DOUBLE) AS amnt
+FROM sales
+"""
+
+
+@query("x_pipeline_incremental_sales", oracle=_incremental_sales_oracle())
 def x_pipeline_incremental_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MV maintenance, end to end: build the sales fact from
     orders before {INCR_SPLIT_DATE} only, then apply the remaining orders
@@ -686,21 +693,6 @@ def x_pipeline_incremental_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).transform(session.materialize, "result")
     finally:
         reg.drop_all()
-
-
-def _incremental_sales_oracle() -> str:
-    from ..etl.sales_fact import ORACLE_SALES_CTE
-
-    return f"""
-WITH {ORACLE_SALES_CTE}
-SELECT customerid, timeid, partkey, CAST(ROUND(amnt, 2) AS DOUBLE) AS amnt
-FROM sales
-"""
-
-
-from . import REGISTRY as _REG_INCR  # noqa: E402
-
-_REG_INCR["x_pipeline_incremental_sales"].oracle = _incremental_sales_oracle()
 
 
 @query(

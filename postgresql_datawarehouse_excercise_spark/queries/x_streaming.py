@@ -463,7 +463,7 @@ def x_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     break a revisable occurrence, so the state table compacts exactly
     like the engine's other update-mode states."""
     from ..streaming.cep_stream import run_cep_stream
-    from .x_events import CEP_MAX_US
+    from .x_events import CEP_MAX_US, CEP_PATTERN, CEP_PATTERN_COLS, cep_columns
 
     t = catalog.load(spark, sf_dir)
     ev = t.events.select("user_id", "event_id", "event_type", "ts")
@@ -477,16 +477,12 @@ def x_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.schema,
         state,
         out,
-        [("view", "1"), ("click", "+"), ("purchase", "1")],
+        CEP_PATTERN,
         CEP_MAX_US,
     )
-    return m.select(
-        "user_id",
-        F.col("t_first_us").alias("t_view_us"),
-        F.col("t_last_us").alias("t_purchase_us"),
-        F.col("n_stage1").alias("n_clicks"),
-        "duration_us",
-    ).transform(session.materialize, "result")
+    return m.select(*cep_columns(CEP_PATTERN_COLS)).transform(
+        session.materialize, "result"
+    )
 
 
 def _stream_bm25_oracle() -> str:

@@ -22,6 +22,7 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
 import __spark_entry__ as e  # noqa: E402
+from postgresql_datawarehouse_excercise_spark import session  # noqa: E402
 from tests.oracle_harness import compare, duck_connect  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
@@ -30,14 +31,7 @@ SF = "/root/testdata/sf0.01"
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 52
     start = int(sys.argv[2]) if len(sys.argv) > 2 else 0
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session.get_spark("pdwx-gate", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     rows = e.entry(spark).collect()
     assert len(rows) >= 1, "entry() smoke failed"

@@ -43,6 +43,24 @@ def test_all_mvs_built_with_stats(built):
         assert built.stats[name] >= 0
 
 
+def test_read_runs_no_spark_job(built, spark):
+    """reg.read declares the schema the registry recorded at commit, so
+    reading a built MV starts no Spark job (inferring the schema from a
+    parquet footer would start one per read), and the declared schema
+    equals the inferred one, nullability included."""
+    from postgresql_datawarehouse_excercise_spark.operators.mutations import (
+        ManagedParquetTable,
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
+    frames = {name: built.read(spark, name) for name in built.defs}
+    assert set(tracker.getJobIdsForGroup(None)) - jobs_before == set()
+    for name, df in frames.items():
+        inferred = ManagedParquetTable(spark, built.path(name)).read().schema
+        assert df.schema == inferred, name
+
+
 def test_dep_reading_builders_match_pure_builders(built, spark, sf_dir, tmp_path):
     """The dep contract of MVDef.builder, through the registry: every MV
     with deps (the reference's FROM-the-MV definitions,

@@ -1,5 +1,6 @@
 """Run every registered query against its DuckDB oracle at the test SF --
-the local mirror of the driver's t2 correctness gate."""
+the local mirror of the driver's t2 correctness gate -- after the
+registry-wide plan guards on the same frame."""
 
 from __future__ import annotations
 
@@ -7,7 +8,7 @@ import pytest
 
 from postgresql_datawarehouse_excercise_spark.queries import load_all
 
-from .oracle_harness import compare, duck_connect
+from .oracle_harness import check_plan_guards, compare, duck_connect
 
 REGISTRY = load_all()
 WITH_ORACLE = sorted(n for n, qd in REGISTRY.items() if qd.oracle)
@@ -25,6 +26,7 @@ def duck(sf_dir):
 def test_oracle_parity(spark, sf_dir, duck, name):
     qd = REGISTRY[name]
     df = qd.fn(spark, sf_dir)
+    check_plan_guards(name, df)
     compare(df, duck, qd.oracle)
 
 

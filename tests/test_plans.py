@@ -184,102 +184,6 @@ def test_explain_analyze_reports_per_node_actuals(spark, sf_dir):
     assert actuals and n_groups in actuals, (actuals, n_groups)
 
 
-# Side-effectful families skipped by BOTH registry-wide plan guards (stream
-# drains, mutations, source round-trips do real work at construction and are
-# audited separately; the bloom entry eagerly builds + persists; q18_bucketed
-# writes bucketed tables and is merge-hinted by design, pinned in
-# test_q18_bucketed_layout).  One shared constant so the two audits can
-# never drift apart.
-SIDE_EFFECTFUL_PREFIXES = (
-    "x_stream_", "x_mutation_", "x_source_", "x_mv_",
-    "x_pipeline_incremental",
-    "x_pipeline_decontaminate_bloom",
-    "x_tpch_q18_bucketed",
-    # returns a localCheckpoint(), so the registry guard would audit only a
-    # checkpoint scan (vacuous); the REAL un-checkpointed shape is pinned in
-    # test_runtime_bloom_filter_injects_in_conf_window
-    "x_sql_runtime_bloom_join",
-    # trains + writes the index parquet at construction; the serving plan is
-    # pinned bit-identical to the audited x_sim_ann_ivfpq lane in
-    # tests/test_ann_persist.py
-    "x_sim_ann_index_persist",
-    # writes the inverted index at construction; row-identical to the
-    # audited x_text_bm25 lane (tests/test_bm25_cep.py)
-    "x_text_bm25_index_persist",
-    # round-12 persisted-index serving lanes: each writes its index
-    # parquet at construction; serving plans are pinned against audited
-    # in-plan twins (tests/test_ann_persist.py, tests/test_bm25_cep.py)
-    "x_text_bm25_batch",
-    "x_sim_ann_batch_serve",
-    "x_sim_hybrid_rrf_persist",
-    "x_text_bm25_index_refresh",
-)
-
-# Documented Arrow lanes allowed to carry Python nodes: the blocked-GEMM
-# numpy kernels (operators/similarity.py -- MapInPandas over vector blocks),
-# the one imperative row generator (Arrow-optimized UDTF), and the
-# multimodal pandas-UDF decoders.
-ARROW_LANES = {
-    "x_sim_ann_ivf", "x_sim_ann_ivfpq", "x_sim_ann_ivfpq_recall",
-    "x_sim_ann_index_insert",
-    "x_sim_ann_index_delete",
-    "x_sim_ann_pq", "x_sim_ann_pq_recall", "x_sim_ann_recall",
-    "x_sim_cosine_neardup", "x_sim_semantic_dedup",
-    "x_pipeline_decontaminate_semantic",
-    "x_text_udtf_runs",
-    "x_media_features", "x_media_frames", "x_media_metadata",
-    "x_media_binary_dedup",
-    # AFTER MATCH SKIP PAST LAST ROW: the greedy leftmost non-overlapping
-    # chain is a per-user sequential fold -- one applyInPandas over
-    # user_id groups (operators/cep.cep_match_skip_past)
-    "x_events_cep_skip_past",
-    # AFTER MATCH SKIP TO FIRST/LAST: the same per-user sequential fold
-    # with the prefix-sum resume locator (operators/cep.cep_match_skip_to)
-    "x_events_cep_skip_to_first",
-    "x_events_cep_skip_to_last",
-}
-
-
-def test_registry_plan_guards(spark, sf_dir):
-    """One sweep, two registry-wide pins (each entry is constructed ONCE --
-    several do eager training/checkpoint work at construction):
-
-    1. NO lazy entry may pin an EXPLICIT broadcast hint onto a relation
-       that SCALES WITH SF (an explicit hint overrides the size threshold
-       and AQE never demotes it -- at 100x a filtered slice of such a table
-       is tens of GB and the hint OOMs every executor).  That is not just
-       orders/lineitem: customer, part, supplier, events, documents and
-       embeddings all grow linearly; only nation/region are constant.
-       Hints over an Aggregate / Deduplicate / Limit of a scaling relation
-       are allowed: the broadcast payload is the reduced output.
-
-    2. UDF discipline: row-at-a-time Python (BatchEvalPython, including
-       the non-Arrow UDTF fallback) is banned EVERYWHERE -- whitelist
-       included; any other Python boundary (ArrowEvalPython, MapInPandas,
-       grouped/window/cogrouped pandas, PythonMapInArrow) may appear only
-       in the documented ARROW_LANES."""
-    import re
-
-    row_udf = re.compile(r"^\(\d+\) BatchEvalPython", re.MULTILINE)
-    python_node = re.compile(
-        r"^\(\d+\) (\w*EvalPython\w*|MapInPandas|PythonMapInArrow|"
-        r"FlatMapGroupsInPandas|FlatMapCoGroupsInPandas|AggregateInPandas|"
-        r"WindowInPandas)",
-        re.MULTILINE,
-    )
-    for name in sorted(REG):
-        if name.startswith(SIDE_EFFECTFUL_PREFIXES):
-            continue
-        df = REG[name].fn(spark, sf_dir)
-        offenders = plans.fact_broadcast_hints(df)
-        assert not offenders, f"{name}: static broadcast hint on fact-side {offenders}"
-        plan = plans.formatted_plan(df)
-        assert not row_udf.search(plan), f"{name}: row-at-a-time Python UDF"
-        if name not in ARROW_LANES:
-            m = python_node.search(plan)
-            assert not m, f"{name}: unexpected Python node {m.group(0) if m else ''}"
-
-
 def test_tpch_q1_single_shuffle_with_pushed_filter(spark, sf_dir):
     """Q1: one exchange (the 6-group aggregate; partials map-side) and the
     shipdate predicate at the parquet reader."""
