@@ -6,13 +6,17 @@ Runs the named registry entries (or every entry matching an fnmatch
 pattern, in registry order) against the sf-dir named by $SPARK_GRAFT_SF_DIR
 (required) in bench.py's session after bench.py's warm-up.
 Each entry is timed exactly like bench.py's ``run``: construction plus one
-``noop`` write.  ``--scale K`` first writes a K-fold copy of the sf-dir
-(``multiplied_dir``) and probes that, which answers "does this entry's
-plan survive K times the data?" on the shipped code path.  ``--explain
-DIR`` runs each entry once more, untimed, and writes its AQE-final
-formatted plan to DIR/<entry>.txt and its optimized logical plan, with
-the ``#<id>`` expression ids stripped, to DIR/<entry>.logical.txt, so
-comparing the plans of two checkouts is one ``diff -r``.
+``noop`` write.  ``compiles=F/L`` counts the Janino compilations
+(``session.codegen_compiles``, read outside the timed region) of the
+first and the last iteration: a last count above 0 means the entry
+recompiled code it had already compiled.  ``--scale K`` first writes a
+K-fold copy of the sf-dir (``multiplied_dir``) and probes that, which
+answers "does this entry's plan survive K times the data?" on the
+shipped code path.  ``--explain DIR`` runs each entry once more,
+untimed, and writes its AQE-final formatted plan to DIR/<entry>.txt and
+its optimized logical plan, with the ``#<id>`` expression ids stripped,
+to DIR/<entry>.logical.txt, so comparing the plans of two checkouts is
+one ``diff -r``.
 
 Example: python scripts/probe.py --scale 10 --iters 3 'x_tpch_q*' x_dedup_edit_join
 """
@@ -155,12 +159,15 @@ def main() -> None:
         for name in names:
             try:
                 with session.job_label(f"probe:{name}"):
-                    ts = sorted(
-                        bench.run(lambda: registry[name].fn(spark, probe_dir))
-                        for _ in range(args.iters)
-                    )
+                    ts, compiles = [], []
+                    for _ in range(args.iters):
+                        before = session.codegen_compiles(spark)
+                        ts.append(bench.run(lambda: registry[name].fn(spark, probe_dir)))
+                        compiles.append(session.codegen_compiles(spark) - before)
+                    ts.sort()
                     line = (f"{name} x{args.scale}: best={ts[0]:.3f}s "
-                            f"median={ts[len(ts) // 2]:.3f}s")
+                            f"median={ts[len(ts) // 2]:.3f}s "
+                            f"compiles={compiles[0]}/{compiles[-1]}")
                     if args.explain:
                         rows, path = write_plan(spark, registry[name], probe_dir, args.explain)
                         line += f" rows={rows} plan={path}"

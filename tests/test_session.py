@@ -1,12 +1,19 @@
 """session.materialize / session.job_label: the one way package code pins a
-reused relation, and the label its jobs carry in the status store."""
+reused relation, and the label its jobs carry in the status store; the
+session's generated-code cache keeps every compiled class of a working
+set larger than Spark's default bound."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from postgresql_datawarehouse_excercise_spark.session import JOB_DESCRIPTION, materialize
+from postgresql_datawarehouse_excercise_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    JOB_DESCRIPTION,
+    codegen_compiles,
+    materialize,
+)
 
 
 def _job_ids(sc) -> set[int]:
@@ -49,3 +56,21 @@ def test_materialize_without_outer_description_uses_the_bare_label(spark):
     materialize(spark.range(10), "probe_label")
     assert _descriptions(sc, _job_ids(sc) - before) == {"probe_label"}
     assert sc.getLocalProperty(JOB_DESCRIPTION) is None
+
+
+def test_codegen_cache_keeps_a_working_set_above_the_spark_default(spark):
+    # 75 queries with distinct generated code, two classes each: 150 cache
+    # entries, over Spark's default bound of 100, under which the second
+    # round recompiles all 150.  The engine's bound must keep them all.
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+    def one_round() -> None:
+        for i in range(75):
+            spark.range(10).selectExpr(f"id * {i + 2} + {i + 3} AS v").write.format(
+                "noop"
+            ).mode("overwrite").save()
+
+    one_round()
+    before = codegen_compiles(spark)
+    one_round()
+    assert codegen_compiles(spark) - before <= 5
