@@ -63,6 +63,16 @@ def ratio(num: Column, den: Column, scale: int = 4) -> Column:
     return fround(num.cast("double") / den.cast("double"), scale)
 
 
+def floor_div(a: Column, b: Column) -> Column:
+    """floor(a / b) exactly on integers.  Spark's `div` and DuckDB's `//`
+    both truncate toward zero, so subtracting the mathematical remainder
+    first (a - ((a % b + b) % b): exactly divisible, where truncation and
+    floor coincide) gives the floor on both engines; the oracles spell the
+    same expression in SQL.  With a = 2s + n and b = 2n it is the half-up
+    integer mean of n values summing to s."""
+    return F.call_function("div", a - ((a % b + b) % b), b)
+
+
 # Oracle-side (DuckDB SQL) fragments mirroring the helpers above.
 SQL_DEC = "CAST({x} AS DECIMAL(18,2))"
 

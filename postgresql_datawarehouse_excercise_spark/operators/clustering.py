@@ -1,14 +1,27 @@
-"""Exact-arithmetic k-means over the embedding column (IVF training step).
+"""The one exact-arithmetic k-means over the embedding column.
 
-The IVF ANN entry (operators/similarity.py) coarse-quantizes with
-DETERMINISTIC centroids; this module supplies the training loop that would
-produce such centroids -- Lloyd's algorithm expressed as DataFrame ops:
+Lloyd's algorithm as DataFrame ops, keyed by optional group columns
+(`by`): every k-means in the package runs through `lloyd` here --
 
-  assign     broadcast the K-row centroid relation against the vector scan,
-             squared-L2 per pair via zip_with/aggregate (JVM codegen, no
-             UDF), keep each vector's argmin by (dist, centroid id);
-  recompute  posexplode components -> per-(cluster, position) exact sums ->
-             half-up integer mean -> regroup to arrays.
+  kmeans_assignments   x_sim_kmeans and cluster_balanced_sample (fold
+                       kernel); semantic_dedup (GEMM kernel);
+  similarity._ivf_train  the IVF coarse quantizer (GEMM);
+  pq.pq_train_encode   the PQ codebooks, keyed by subspace m (GEMM).
+
+  init_centroids  the k lowest vec_ids, one collect (PQ slices it per
+                  subspace);
+  assign          broadcast the centroid relation against the vector scan,
+                  squared-L2 per pair via zip_with/aggregate (JVM codegen,
+                  no UDF), keep each vector's argmin by (dist, centroid id);
+  assign_gemm     the same argmin as one int64 numpy GEMM per batch and
+                  group (bit-identical; the kernel for every caller but the
+                  two Spark-native fold entries);
+  recompute       posexplode components -> per-(group, cluster, position)
+                  exact sums -> half-up integer mean -> collected and
+                  regrouped to arrays on the driver;
+  lloyd           `iters` assignments with a recompute between each pair;
+                  centroids pass between rounds collected to the driver
+                  (recompute returns a LocalRelation).
 
 Cross-engine determinism (the DuckDB oracle must reproduce every
 assignment bit-for-bit) comes from running entirely on an exact integer
@@ -20,12 +33,13 @@ that x_events_user_daily established.  Floating-point k-means is NOT
 reproducible across engines (sum order, tie handling); quantized k-means
 is, and 1e-6 resolution is far below any clustering-relevant signal.
 
-Scale design (100 TB): centroids are always a K-row relation -- broadcast,
-never shuffled; the assign step is a map over vector splits; recompute
-shuffles |V| x dim skinny (cluster, pos, component) rows with map-side
-partial aggregation.  Iteration count here is FIXED (2) for the oracled
-entry; an open-ended loop would drive convergence from a 1-row aggregate
-per round exactly like dedup's label propagation (operators/dedup.py).
+Scale design (100 TB): centroids are always a K-row relation per group --
+held on the driver between rounds and broadcast, never shuffled; the
+assign step is a map over vector splits; recompute shuffles |V| x dim
+skinny (cluster, pos, component) rows with map-side partial aggregation.
+Iteration counts are FIXED per caller so the oracles can replay them; an
+open-ended loop would drive convergence from a 1-row aggregate per round
+exactly like dedup's label propagation (operators/dedup.py).
 
 Empty-cluster semantics: a centroid that attracts no members in iteration
 1 simply drops out (standard Lloyd's degeneracy handling); both engines
@@ -37,7 +51,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import floor_div
 from ..session import materialize
+
 SCALE = 1_000_000
 
 
@@ -58,14 +74,24 @@ def quantize(embeddings: DataFrame, col: str = "embedding") -> DataFrame:
     )
 
 
+def _local(spark, rows: list[dict], ddl: str) -> DataFrame:
+    """`rows` as a LocalRelation.  Built through Arrow: a frame built from a
+    Python list is an RDD that runs a job on every read, while a
+    LocalRelation is read (collected, broadcast) from the driver's copy."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(pa.Table.from_pylist(rows), ddl)
+
+
 def init_centroids(q: DataFrame, k: int) -> DataFrame:
     """Deterministic init: the k lowest vec_ids, cid = 0..k-1 by that order.
     The k-row result is materialized through the driver -- k is a
     hyperparameter (bounded, tiny), and building the relation directly
     avoids a single-partition ranking window in every plan."""
-    rows = q.orderBy("vec_id").limit(k).collect()
-    return q.sparkSession.createDataFrame(
-        [(i, list(r.qv)) for i, r in enumerate(sorted(rows, key=lambda r: r.vec_id))],
+    rows = sorted(q.orderBy("vec_id").limit(k).collect(), key=lambda r: r.vec_id)
+    return _local(
+        q.sparkSession,
+        [{"cid": i, "cq": list(r.qv)} for i, r in enumerate(rows)],
         "cid int, cq array<bigint>",
     )
 
@@ -79,115 +105,135 @@ def _dist2(qcol, ccol):
     )
 
 
-def assign(q: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cid, dist2): each vector's nearest centroid, ties to the
-    lowest cid.  Broadcast cross join (K rows against the vector scan),
-    then argmin as MIN over (dist2, cid) structs -- lexicographic struct
-    ordering IS the (distance, centroid-id) tie-break, and the aggregate
-    combines map-side, so the shuffle carries |V| pre-reduced rows rather
-    than the K-expanded set a ranking window would sort."""
-    j = q.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", _dist2(F.col("qv"), F.col("cq")).alias("dist2")
+def _ddl(df: DataFrame, cols) -> str:
+    return ", ".join(f"{c} {df.schema[c].dataType.simpleString()}" for c in cols)
+
+
+def assign(q: DataFrame, cents: DataFrame, by=()) -> DataFrame:
+    """(vec_id, *by, cid, dist2): each vector's nearest centroid of its
+    group, ties to the lowest cid.  Broadcast join of the centroid relation
+    (a cross join when ungrouped) against the vector scan, then argmin as
+    MIN over (dist2, cid) structs -- lexicographic struct ordering IS the
+    (distance, centroid-id) tie-break, and the aggregate combines map-side,
+    so the shuffle carries |V| pre-reduced rows rather than the K-expanded
+    set a ranking window would sort."""
+    cb = F.broadcast(cents)
+    j = (q.join(cb, list(by)) if by else q.crossJoin(cb)).select(
+        "vec_id", *by, "cid", _dist2(F.col("qv"), F.col("cq")).alias("dist2")
     )
-    best = j.groupBy("vec_id").agg(F.min(F.struct("dist2", "cid")).alias("_m"))
+    best = j.groupBy("vec_id", *by).agg(F.min(F.struct("dist2", "cid")).alias("_m"))
     return best.select(
-        "vec_id", F.col("_m.cid").alias("cid"), F.col("_m.dist2").alias("dist2")
+        "vec_id", *by, F.col("_m.cid").alias("cid"), F.col("_m.dist2").alias("dist2")
     )
 
 
-def recompute(q: DataFrame, assigned: DataFrame) -> DataFrame:
-    """New centroids: per-(cluster, position) exact component sums ->
-    half-up integer mean -> arrays re-assembled in position order."""
-    a = assigned.select("vec_id", "cid").join(q, "vec_id")
-    comp = a.select("cid", F.posexplode("qv").alias("pos", "x"))
-    sums = comp.groupBy("cid", "pos").agg(
-        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    mean = sums.select(
-        "cid",
-        "pos",
-        (2 * F.col("s") + F.col("n")).alias("_a"),
-        (2 * F.col("n")).alias("_b"),
-    ).select(
-        "cid",
-        "pos",
-        F.expr("(_a - ((_a % _b + _b) % _b)) div _b").alias("c"),
-    )
-    return mean.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda st: st.getField("c"),
-        ).alias("cq")
-    )
-
-
-def kmeans_assignments(
-    embeddings: DataFrame, k: int = 8, iters: int = 2
-) -> DataFrame:
-    """Run `iters` Lloyd's rounds; return the final exact assignment
-    (vec_id, cluster, dist2_q)."""
-    q = quantize(embeddings)
-    cents = init_centroids(q, k)
-    assigned = assign(q, cents)
-    for _ in range(iters - 1):
-        cents = recompute(q, assigned)
-        assigned = assign(q, cents)
-    return assigned.select(
-        "vec_id", F.col("cid").alias("cluster"), F.col("dist2").alias("dist2_q")
-    )
-
-
-def assign_gemm(q: DataFrame, cents: DataFrame) -> DataFrame:
-    """assign()'s large-k fast path: the same EXACT integer argmin
-    (squared L2 on the micro-unit grid, ties to the lowest cid), computed
-    as ||q||^2 - 2 qC^T + ||c||^2 with int64 numpy GEMM inside mapInPandas
+def assign_gemm(q: DataFrame, cents: DataFrame, by=()) -> DataFrame:
+    """assign()'s GEMM kernel: the same EXACT integer argmin (squared L2 on
+    the micro-unit grid, ties to the lowest cid), computed per group as
+    ||q||^2 - 2 qC^T + ||c||^2 with int64 numpy GEMM inside mapInPandas
     instead of k per-row fold expressions.  Output is bit-identical to
-    assign(); per-vector cost drops from k interpreted 64-element folds to
-    one BLAS row.  The k-row centroid relation ships to executors as a
-    closure-captured array (k is a bounded hyperparameter).  Overflow
-    bound: |q| <= ~2^21 micro-units keeps every term under 2^63 for
-    dim 64."""
+    assign(); per-vector cost drops from k interpreted folds to one BLAS
+    row.  The centroids ship to executors as closure-captured arrays (k is
+    a bounded hyperparameter).  Overflow bound: |q| <= ~2^21 micro-units
+    keeps every term under 2^63 for dim 64."""
     import numpy as np
     import pandas as pd
 
-    crows = sorted(cents.collect(), key=lambda r: r.cid)
-    cent_mat = np.array([list(r.cq) for r in crows], dtype=np.int64)
-    cids = np.array([r.cid for r in crows], dtype=np.int64)
-    c2 = (cent_mat * cent_mat).sum(axis=1)
+    groups: dict[tuple, list] = {}
+    for r in sorted(cents.collect(), key=lambda r: r.cid):
+        groups.setdefault(tuple(r[c] for c in by), []).append(r)
+    mats = {}
+    for key, rows in groups.items():
+        mat = np.array([list(r.cq) for r in rows], dtype=np.int64)
+        cids = np.array([r.cid for r in rows], dtype=np.int64)
+        mats[key] = (cids, mat, (mat * mat).sum(axis=1))
 
     def kern(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            qm = np.array(pdf["qv"].tolist(), dtype=np.int64)
-            q2 = (qm * qm).sum(axis=1)
-            d2 = q2[:, None] - 2 * (qm @ cent_mat.T) + c2[None, :]
-            # cids ascend, np.argmin returns the FIRST minimum -> ties break
-            # to the lowest cid, matching assign()'s MIN(struct(dist2, cid))
-            best = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cid": cids[best].astype("int32"),
-                    "dist2": d2[np.arange(len(best)), best],
-                }
-            )
+            outs = []
+            for key, grp in pdf.groupby(list(by)) if by else [((), pdf)]:
+                cids, mat, c2 = mats[key]
+                qm = np.array(grp["qv"].tolist(), dtype=np.int64)
+                q2 = (qm * qm).sum(axis=1)
+                d2 = q2[:, None] - 2 * (qm @ mat.T) + c2[None, :]
+                # cids ascend, np.argmin returns the FIRST minimum -> ties
+                # break to the lowest cid, matching assign()'s
+                # MIN(struct(dist2, cid))
+                best = np.argmin(d2, axis=1)
+                out = grp[["vec_id", *by]].reset_index(drop=True)
+                out["cid"] = cids[best].astype("int32")
+                out["dist2"] = d2[np.arange(len(best)), best]
+                outs.append(out)
+            yield pd.concat(outs)
 
-    return q.select("vec_id", "qv").mapInPandas(kern, "vec_id long, cid int, dist2 long")
+    return q.select("vec_id", *by, "qv").mapInPandas(
+        kern, f"vec_id long, {_ddl(q, by) + ', ' if by else ''}cid int, dist2 long"
+    )
 
 
-def kmeans_assignments_gemm(
-    embeddings: DataFrame, k: int = 8, iters: int = 2
-) -> DataFrame:
-    """kmeans_assignments with the GEMM assignment path -- identical
-    output; the form to use when k is large (SemDeDup-style clustering
-    where k scales with the corpus)."""
-    q = quantize(embeddings)
-    cents = init_centroids(q, k)
-    assigned = assign_gemm(q, cents)
+def recompute(q: DataFrame, assigned: DataFrame, by=()) -> DataFrame:
+    """(*by, cid, cq), the new centroids: per-(group, cluster, position)
+    exact component sums -> floored half-up integer mean, collected to the
+    driver (k x dim rows per group, bounded by k, never by N) and
+    re-assembled into position-ordered arrays as a LocalRelation, so the
+    next round plans against the driver's copy instead of re-deriving
+    this one.  A centroid with no members drops out (both engines derive
+    the surviving clusters from the same exact assignment, so they
+    agree)."""
+    a = assigned.select("vec_id", *by, "cid").join(q, ["vec_id", *by])
+    comp = a.select(*by, "cid", F.posexplode("qv").alias("pos", "x"))
+    sums = comp.groupBy(*by, "cid", "pos").agg(
+        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
+    )
+    mean = sums.select(
+        *by,
+        "cid",
+        "pos",
+        (2 * F.col("s") + F.col("n")).alias("_a"),
+        (2 * F.col("n")).alias("_b"),
+    ).select(*by, "cid", "pos", floor_div(F.col("_a"), F.col("_b")).alias("c"))
+    key = (*by, "cid")
+    comps: dict[tuple, dict[int, int]] = {}
+    for r in mean.collect():
+        comps.setdefault(tuple(r[col] for col in key), {})[r.pos] = r.c
+    return _local(
+        q.sparkSession,
+        [
+            {**dict(zip(key, kv)), "cq": [cs[p] for p in sorted(cs)]}
+            for kv, cs in comps.items()
+        ],
+        f"{_ddl(mean, key)}, cq array<bigint>",
+    )
+
+
+def lloyd(
+    q: DataFrame, cents: DataFrame, iters: int, kernel, by=()
+) -> tuple[DataFrame, DataFrame]:
+    """THE exact k-means loop: `iters` assignments of `q` (vec_id, *by, qv)
+    with a recompute between each pair, starting from `cents` (*by, cid,
+    cq).  Returns (cents, assigned): the centroids of the last assignment
+    and that assignment (vec_id, *by, cid, dist2).  `kernel` is assign or
+    assign_gemm (bit-identical).  Centroids pass between rounds one way:
+    recompute collects them to the driver."""
+    assigned = kernel(q, cents, by)
     for _ in range(iters - 1):
-        cents = recompute(q, assigned)
-        assigned = assign_gemm(q, cents)
+        cents = recompute(q, assigned, by)
+        assigned = kernel(q, cents, by)
+    return cents, assigned
+
+
+def kmeans_assignments(
+    embeddings: DataFrame, k: int = 8, iters: int = 2, kernel=assign
+) -> DataFrame:
+    """Run `iters` Lloyd's rounds; return the final exact assignment
+    (vec_id, cluster, dist2_q).  The fold kernel is the default: it keeps
+    x_sim_kmeans and x_pipeline_cluster_balanced Spark-native; pass
+    kernel=assign_gemm when k is large (SemDeDup, where k scales with the
+    corpus) -- the output is identical."""
+    q = quantize(embeddings)
+    _, assigned = lloyd(q, init_centroids(q, k), iters, kernel)
     return assigned.select(
         "vec_id", F.col("cid").alias("cluster"), F.col("dist2").alias("dist2_q")
     )

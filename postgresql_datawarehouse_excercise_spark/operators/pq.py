@@ -10,11 +10,13 @@ PQ_M x PQ_K exact squared-L2 entries between the query's subvectors and the
 codebooks; a candidate's approximate distance is then PQ_M integer table
 lookups summed -- no per-pair vector arithmetic at all.
 
-Training = PQ_ROUNDS Lloyd rounds per subspace, entirely on clustering.py's
-micro-unit integer grid (quantize -> deterministic first-PQ_K init ->
-exact-int argmin assign -> floored half-up mean recompute, repeated -> final
-encode), so every codebook component, code and ADC distance is an exact
-BIGINT and the DuckDB oracle replays the whole pipeline bit-for-bit -- the
+Training = PQ_ROUNDS rounds of clustering.lloyd, the one exact k-means,
+keyed by the subspace column m (quantize -> clustering.init_centroids'
+first-PQ_K init sliced per subspace -> GEMM argmin assign -> floored
+half-up mean recompute, repeated -> final encode as the loop's last
+assignment); pq_encode runs the same keyed assign_gemm against frozen
+codebooks.  Every codebook component, code and ADC distance is an exact
+BIGINT, so the DuckDB oracle replays the whole pipeline bit-for-bit -- the
 same determinism argument as operators/clustering.py, per subspace.
 
 Answer quality: ADC ranking alone bottoms out at recall@10 ~0.3-0.5 on this
@@ -48,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import materialize
-from .clustering import SCALE, _dist2, assign_gemm, quantize
+from .clustering import SCALE, _dist2, assign_gemm, init_centroids, lloyd, quantize
 
 PQ_M = 8         # subspaces
 PQ_SUB = 8       # dims per subspace (PQ_M * PQ_SUB = 64, the corpus dim)
@@ -59,110 +61,15 @@ PQ_QUERIES = 8   # evaluation query set: vec_id < PQ_QUERIES
 PQ_TOPK = 10
 
 
-def _subvectors(q: DataFrame) -> DataFrame:
-    """(vec_id, m, sv): each vector's PQ_M subvectors of PQ_SUB micro-unit
-    components (one explode of a constant array -- no shuffle)."""
+def _subvectors(q: DataFrame, key: str = "vec_id", col: str = "qv") -> DataFrame:
+    """(key, m, col): each row's PQ_M subvectors of PQ_SUB micro-unit
+    components (one explode of a constant array -- no shuffle).  Slices
+    vectors and the k-means init centroids alike."""
     ms = F.array(*[F.lit(m) for m in range(PQ_M)])
-    return q.select("vec_id", "qv", F.explode(ms).alias("m")).select(
-        "vec_id",
+    return q.select(key, col, F.explode(ms).alias("m")).select(
+        key,
         "m",
-        F.slice("qv", F.col("m") * PQ_SUB + 1, PQ_SUB).alias("sv"),
-    )
-
-
-def _init_codebooks(q: DataFrame) -> DataFrame:
-    """(m, cid, csv): deterministic init -- the PQ_K lowest vec_ids supply
-    codeword cid = 0..PQ_K-1 in each subspace (clustering.init_centroids'
-    recipe, sliced per subspace).  PQ_M x PQ_K rows via the driver."""
-    rows = q.orderBy("vec_id").limit(PQ_K).collect()
-    rows = sorted(rows, key=lambda r: r.vec_id)
-    data = [
-        (m, i, list(r.qv[m * PQ_SUB : (m + 1) * PQ_SUB]))
-        for m in range(PQ_M)
-        for i, r in enumerate(rows)
-    ]
-    return q.sparkSession.createDataFrame(data, "m int, cid int, csv array<bigint>")
-
-
-def _assign(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, m, cid): nearest codeword per subvector, exact integer
-    squared-L2, ties to the lowest cid (the min-over-structs idiom --
-    map-side combinable, no ranking window)."""
-    j = subs.join(F.broadcast(cb), "m").select(
-        "vec_id", "m", "cid", _dist2(F.col("sv"), F.col("csv")).alias("d2")
-    )
-    best = j.groupBy("vec_id", "m").agg(F.min(F.struct("d2", "cid")).alias("_m"))
-    return best.select("vec_id", "m", F.col("_m.cid").alias("cid"))
-
-
-def _assign_gemm(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """_assign()'s fast path (clustering.assign_gemm per subspace): the
-    same EXACT int64 argmin computed as ||q||^2 - 2 qC^T + ||c||^2 with
-    numpy GEMM inside mapInPandas -- bit-identical output (np.argmin's
-    first-minimum over ascending cids IS the lowest-cid tie-break), one
-    BLAS row per subvector instead of PQ_K interpreted folds.  The
-    codebooks (<= PQ_M x PQ_K rows, a bounded hyperparameter) ship as a
-    closure-captured dict.  Measured on the 100x smoke: the expression
-    path's 162.6 s ann_pq_topk drops to ~25 s."""
-    import numpy as np
-    import pandas as pd
-
-    rows = cb.collect()
-    mats: dict[int, tuple] = {}
-    for m in sorted({r.m for r in rows}):
-        mr = sorted((r for r in rows if r.m == m), key=lambda r: r.cid)
-        mat = np.array([list(r.csv) for r in mr], dtype=np.int64)
-        cids = np.array([r.cid for r in mr], dtype=np.int64)
-        mats[m] = (cids, mat, (mat * mat).sum(axis=1))
-
-    def kern(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            outs = []
-            for m, grp in pdf.groupby("m"):
-                cids, mat, c2 = mats[int(m)]
-                qm = np.array(grp["sv"].tolist(), dtype=np.int64)
-                q2 = (qm * qm).sum(axis=1)
-                d2 = q2[:, None] - 2 * (qm @ mat.T) + c2[None, :]
-                best = np.argmin(d2, axis=1)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "vec_id": grp["vec_id"].to_numpy(),
-                            "m": np.full(len(grp), int(m), dtype="int32"),
-                            "cid": cids[best].astype("int32"),
-                        }
-                    )
-                )
-            yield pd.concat(outs)
-
-    return subs.mapInPandas(kern, "vec_id long, m int, cid int")
-
-
-def _recompute(subs: DataFrame, assigned: DataFrame) -> DataFrame:
-    """New codebooks: per-(m, cid, position) exact component sums ->
-    floored half-up integer mean -> arrays (clustering.recompute per
-    subspace; codewords with no members drop out, both engines agree)."""
-    a = assigned.join(subs, ["vec_id", "m"])
-    comp = a.select("m", "cid", F.posexplode("sv").alias("pos", "x"))
-    sums = comp.groupBy("m", "cid", "pos").agg(
-        F.sum("x").alias("s"), F.count(F.lit(1)).alias("n")
-    )
-    mean = sums.select(
-        "m",
-        "cid",
-        "pos",
-        (2 * F.col("s") + F.col("n")).alias("_a"),
-        (2 * F.col("n")).alias("_b"),
-    ).select(
-        "m", "cid", "pos", F.expr("(_a - ((_a % _b + _b) % _b)) div _b").alias("c")
-    )
-    return mean.groupBy("m", "cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))),
-            lambda st: st.getField("c"),
-        ).alias("csv")
+        F.slice(col, F.col("m") * PQ_SUB + 1, PQ_SUB).alias(col),
     )
 
 
@@ -170,14 +77,12 @@ def pq_train_encode(
     train: DataFrame, full: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
     """(codebooks, codes): PQ_ROUNDS Lloyd rounds per subspace on `train`
-    (init + every round), then the final encode of every vector of `full`
-    against the trained codebooks -- the FAISS add / add-without-retrain
-    lifecycle.  With `full` omitted the training population itself is
-    encoded, from its already-materialized quantization.  codebooks =
-    (m, cid, csv); codes = (vec_id, m, code).  Each round's codebook is
-    materialized: the lineage would otherwise double per round
-    (assign reads codebook, recompute reads assign), and the checkpoint is
-    PQ_M x PQ_K rows -- trivially small."""
+    -- clustering.lloyd keyed by the subspace column m, from
+    clustering.init_centroids sliced per subspace -- then the final encode
+    of every vector of `full` against the trained codebooks (the FAISS add
+    / add-without-retrain lifecycle).  With `full` omitted the training
+    population itself is encoded: that encode is the loop's last
+    assignment.  codebooks = (m, cid, csv); codes = (vec_id, m, code)."""
     # The N-row QUANTIZED relation is materialized once and every Lloyd
     # round + the final encode (2*PQ_ROUNDS + 1 references) derive the
     # subvector explode from it lazily -- a narrow per-row slice, no
@@ -186,24 +91,20 @@ def pq_train_encode(
     # N x PQ_M EXPLODED subvector relation instead: 8x the rows, measured
     # 2.7-5.2x slower cold on two hosts, and an eviction hazard at scale.
     q = materialize(quantize(train), "pq_quantized")
-    subs = _subvectors(q)
-    cb = _init_codebooks(q)
-    for _ in range(PQ_ROUNDS):
-        a = _assign_gemm(subs, cb)
-        cb = materialize(_recompute(subs, a), "pq_codebooks")
+    init = _subvectors(init_centroids(q, PQ_K), "cid", "cq")
+    cb, a = lloyd(_subvectors(q), init, PQ_ROUNDS + 1, assign_gemm, by=("m",))
+    cb = cb.withColumnRenamed("cq", "csv")
     if full is not None:
         return cb, pq_encode(full, cb)
-    return cb, _encode(subs, cb)
-
-
-def _encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    return _assign_gemm(subs, cb).select("vec_id", "m", F.col("cid").alias("code"))
+    return cb, a.select("vec_id", "m", F.col("cid").alias("code"))
 
 
 def pq_encode(vectors: DataFrame, cb: DataFrame) -> DataFrame:
     """Encode `vectors` against EXISTING codebooks -- the per-batch half of
     the add-without-retrain lifecycle.  codes = (vec_id, m, code)."""
-    return _encode(_subvectors(quantize(vectors)), cb)
+    return assign_gemm(
+        _subvectors(quantize(vectors)), cb.withColumnRenamed("csv", "cq"), by=("m",)
+    ).select("vec_id", "m", F.col("cid").alias("code"))
 
 
 class IvfPq(NamedTuple):
@@ -310,7 +211,7 @@ def pq_topk(embeddings: DataFrame, n_queries: int = PQ_QUERIES, k: int = PQ_TOPK
     # between any hint and an SF-scaling scan (same idiom as cosine_topk)
     qsubs = _subvectors(
         q.filter(F.col("vec_id") < n_queries).limit(n_queries)
-    ).select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qsv"))
+    ).select(F.col("vec_id").alias("query_id"), "m", F.col("qv").alias("qsv"))
     # per-query distance table: PQ_M x PQ_K exact entries
     tbl = qsubs.join(F.broadcast(cb), "m").select(
         "query_id", "m", "cid", _dist2(F.col("qsv"), F.col("csv")).alias("d")
@@ -627,7 +528,7 @@ def ivfpq_serve(
         .filter(F.col("vec_id") != F.col("query_id"))
     )
     qsubs = _subvectors(qvecs).select(
-        F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qsv")
+        F.col("vec_id").alias("query_id"), "m", F.col("qv").alias("qsv")
     )
     tbl = qsubs.join(F.broadcast(index.cb), "m").select(
         "query_id",

@@ -325,36 +325,30 @@ def _ivf_base(embeddings: DataFrame) -> DataFrame:
 
 
 def _ivf_train(base: DataFrame, cells: int) -> tuple[DataFrame, DataFrame]:
-    """K-means IVF training (IVF_ROUNDS exact Lloyd rounds, clustering.py):
+    """K-means IVF training (IVF_ROUNDS exact Lloyd rounds, clustering.lloyd):
     returns (cents, assigned) where cents is the final `cells`-row centroid
     relation and assigned carries every vector's cell WITH its ranking
     payload (e, n).
 
-    Centroids materialize through the driver each round (cells x dim
-    longs -- bounded by the cell count, never by N; the standard k-means
-    training shape), so downstream plans see a LocalRelation instead of
-    re-deriving two full corpus passes per reference.  Against the round-5
-    first-16-vectors pivot quantizer (recall@10 0.0-0.4 on the synthetic
-    near-orthogonal embeddings), data-derived centroids measure >= 0.8 on
-    the x_sim_ann_recall evaluator."""
+    Centroids pass between rounds through the driver (cells x dim longs --
+    bounded by the cell count, never by N), so downstream plans see a
+    LocalRelation instead of re-deriving two full corpus passes per
+    reference.  Against the round-5 first-16-vectors pivot quantizer
+    (recall@10 0.0-0.4 on the synthetic near-orthogonal embeddings),
+    data-derived centroids measure >= 0.8 on the x_sim_ann_recall
+    evaluator."""
     from . import clustering
 
     q = base.select("vec_id", "qv")
-    cents = clustering.init_centroids(q, cells)
-    # assignments run through the int64 GEMM kernel (assign_gemm): with the
-    # N-DERIVED cell count (~sqrt(N), dozens-to-thousands of cells) the
-    # expression-fold path pays cells interpreted 64-element folds per
-    # vector; the BLAS row is bit-identical (pinned by
+    # assignments run through the int64 GEMM kernel: with the N-DERIVED
+    # cell count (~sqrt(N), dozens-to-thousands of cells) the fold kernel
+    # pays cells interpreted 64-element folds per vector; the BLAS row is
+    # bit-identical (tests/test_clustering.py::
     # test_assign_gemm_bit_identical_to_expression_assign) and flat in the
     # cell count
-    assigned_ids = clustering.assign_gemm(q, cents)
-    for i in range(IVF_ROUNDS - 1):
-        rows = clustering.recompute(q, assigned_ids).collect()
-        cents = base.sparkSession.createDataFrame(
-            [(int(r.cid), list(r.cq)) for r in sorted(rows, key=lambda r: r.cid)],
-            "cid int, cq array<bigint>",
-        )
-        assigned_ids = clustering.assign_gemm(q, cents)
+    cents, assigned_ids = clustering.lloyd(
+        q, clustering.init_centroids(q, cells), IVF_ROUNDS, clustering.assign_gemm
+    )
     # attach the ranking payload to the final assignment: one vec_id
     # equi-join of skinny (vec_id, cell) rows against the payload relation
     assigned = base.select("vec_id", "e", "n").join(
@@ -677,15 +671,15 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    from .clustering import kmeans_assignments_gemm
+    from .clustering import assign_gemm, kmeans_assignments
 
     from pyspark.sql.window import Window
 
     if k is None:
         k = semdedup_k(embeddings.count())
-    assigned = kmeans_assignments_gemm(embeddings, k=k, iters=2).select(
-        "vec_id", "cluster"
-    )
+    assigned = kmeans_assignments(
+        embeddings, k=k, iters=2, kernel=assign_gemm
+    ).select("vec_id", "cluster")
     base = _norms(embeddings).join(assigned, "vec_id")
     # blocks are RANK-within-cluster, not global vec_id ranges: cluster
     # members have scattered ids, so global blocks would hold ~1 vector

@@ -26,16 +26,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE) physical plan string; runs the query."""
-    df.write.format("noop").mode("overwrite").save()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def count_occurrences(plan: str, token: str) -> int:
-    return len(re.findall(re.escape(token), plan))
-
-
 def _count_nodes(df: DataFrame, operator: str) -> int:
     """Count physical nodes by their detail-section header `(N) Operator`
     (each node appears twice in a formatted plan: tree + details)."""
@@ -234,16 +224,6 @@ def fact_broadcast_hints(df: DataFrame) -> list[str]:
             if not reduced:
                 offenders.append(line.strip())
     return offenders
-
-
-def assert_broadcasts_dims(df: DataFrame, at_least: int = 1) -> None:
-    n = num_broadcast_joins(df)
-    assert n >= at_least, f"expected >= {at_least} broadcast joins, plan has {n}"
-
-
-def assert_max_shuffles(df: DataFrame, at_most: int) -> None:
-    n = num_shuffles(df)
-    assert n <= at_most, f"expected <= {at_most} exchanges, plan has {n}"
 
 
 def assert_pushed_filter(df: DataFrame, fragment: str) -> None:

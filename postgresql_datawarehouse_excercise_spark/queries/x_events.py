@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog
-from ..functions import dec, money
+from ..functions import dec, floor_div, money
 from ..operators import cep
 from ..session import materialize
 from . import query
@@ -76,7 +76,8 @@ def x_events_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch at sf0.1.  The division must FLOOR on BOTH sides: Spark's
     `div` AND DuckDB's `//` each truncate toward zero (probe: DuckDB
     (-7)//2 = -3), so a negative-sum day would round differently without
-    care; the mathematical-mod subtraction (applied on both engines) makes
+    care; the mathematical-mod subtraction (functions.floor_div; the oracle
+    spells the same expression) makes
     the numerator exactly divisible, where truncation and floor coincide
     (exact long arithmetic, no double in the hot path)."""
     t = catalog.load(spark, sf_dir)
@@ -96,9 +97,7 @@ def x_events_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
             "n_events",
             (
-                F.expr(
-                    "(_num - ((_num % _den + _den) % _den)) div _den"
-                ).cast("double")
+                floor_div(F.col("_num"), F.col("_den")).cast("double")
                 / F.lit(10000.0)
             ).alias("avg_value"),
         )
@@ -729,7 +728,7 @@ def x_events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("cents").isNotNull(), F.col("cents"))
             .when(
                 F.col("pv").isNotNull() & F.col("nv").isNotNull(),
-                F.expr("(_a - ((_a % _b + _b) % _b)) div _b"),
+                floor_div(F.col("_a"), F.col("_b")),
             )
             .cast("double")
             / 100.0

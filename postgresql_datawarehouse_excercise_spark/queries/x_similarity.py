@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog, session
-from ..functions import fround
+from ..functions import floor_div, fround
 from ..operators import clustering, pca, pq, similarity
 from . import query
 
@@ -987,7 +987,7 @@ def x_sim_domain_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "source",
         "pos",
-        F.expr("(_a - ((_a % _b + _b) % _b)) div _b").alias("c"),
+        floor_div(F.col("_a"), F.col("_b")).alias("c"),
     )
     a = cent.select(
         F.col("source").alias("source_a"), "pos", F.col("c").alias("ca")

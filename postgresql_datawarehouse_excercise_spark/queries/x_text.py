@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import catalog, session
-from ..functions import fround, ratio, sql_ratio
+from ..functions import floor_div, fround, ratio, sql_ratio
 from ..operators import textlang
 from ..operators.dedup import TOKEN_RE, tokens
 from . import query
@@ -2961,10 +2961,7 @@ def x_text_bm25_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mod first so truncating division equals floor (the shared idiom;
     # w*c is nonnegative here -- the +1-idf variant never goes negative --
     # so this is belt-and-braces)
-    milli = F.expr(
-        "(w_micro * c_micro - ((w_micro * c_micro) % 1000000000"
-        " + 1000000000) % 1000000000) div 1000000000"
-    )
+    milli = floor_div(F.col("w_micro") * F.col("c_micro"), F.lit(1000000000))
     scored = (
         _bm25_contrib(postings, dl, wq.join(df_t, "term"), "w_micro")
         .groupBy("doc_id")

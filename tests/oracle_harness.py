@@ -88,7 +88,10 @@ def rows_multiset(cols: list[str], rows: list[tuple]) -> Counter:
     return Counter(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
-def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> None:
+def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> int:
+    """Assert the Spark frame equals the oracle's rows (column names, row
+    count, order-insensitive typed values); returns the number of rows
+    compared, so a caller can tell a comparison of two empty results."""
     s_cols = list(spark_df.columns)
     s_rows = [tuple(r) for r in spark_df.collect()]
     rel = con.sql(sql)
@@ -122,6 +125,7 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> None:
             f"value mismatch (cols sorted={sorted(s_cols)}):\n"
             f"  spark-only sample: {only_s}\n  duckdb-only sample: {only_d}"
         )
+    return len(d_rows)
 
 
 # Side-effectful families skipped by BOTH registry-wide plan guards (stream

@@ -88,25 +88,56 @@ def test_semdedup_k_scales_with_corpus():
 
 
 def test_pq_assign_gemm_bit_identical_to_expression_assign(spark, sf_dir):
-    """operators/pq._assign_gemm must produce the EXACT same (vec_id, m,
-    cid) assignment as the expression-fold _assign on the driver data --
-    the per-subspace twin of the k-means assign_gemm pin."""
-    from postgresql_datawarehouse_excercise_spark import catalog
+    """The keyed kernels clustering.assign / assign_gemm with by=("m",) --
+    PQ's per-subspace assignment -- must agree row for row on the sliced
+    init codebooks AND on the round-1 recomputed books."""
     from postgresql_datawarehouse_excercise_spark.operators import pq
-    from postgresql_datawarehouse_excercise_spark.operators.clustering import quantize
 
     t = catalog.load(spark, sf_dir)
-    q = quantize(t.embeddings)
+    q = clustering.quantize(t.embeddings)
     subs = pq._subvectors(q)
-    cb1 = pq._init_codebooks(q)
-    # round-1 assignment AND the final encode off the recomputed books
-    cb2 = pq._recompute(subs, pq._assign_gemm(subs, cb1))
+    by = ("m",)
+    cb1 = pq._subvectors(clustering.init_centroids(q, pq.PQ_K), "cid", "cq")
+    cb2 = clustering.recompute(subs, clustering.assign_gemm(subs, cb1, by), by)
     for cb in (cb1, cb2):
-        expr = {
-            (r["vec_id"], r["m"]): r["cid"] for r in pq._assign(subs, cb).collect()
-        }
-        gemm = {
-            (r["vec_id"], r["m"]): r["cid"]
-            for r in pq._assign_gemm(subs, cb).collect()
-        }
+        expr = sorted(map(tuple, clustering.assign(subs, cb, by).collect()))
+        gemm = sorted(map(tuple, clustering.assign_gemm(subs, cb, by).collect()))
         assert expr == gemm
+
+
+def test_keyed_lloyd_equals_each_group_alone(spark):
+    """clustering.lloyd keyed by a group column must equal running it on
+    each group alone.  The two groups hold the SAME vector ids with
+    independent components in the same range, so a row that leaks across
+    groups -- a vector scored against the other group's centroids in
+    either kernel, or joined to the other group's vector in recompute --
+    changes an assignment or a centroid and the comparison fails."""
+    import random
+
+    rng = random.Random(7)
+    rows = [
+        (v, g, [rng.randrange(-100, 100) for _ in range(4)])
+        for g in (0, 1)
+        for v in range(40)
+    ]
+    pts = spark.createDataFrame(rows, "vec_id long, g int, qv array<bigint>")
+    by = ("g",)
+    for kernel in (clustering.assign, clustering.assign_gemm):
+        init = pts.filter(F.col("vec_id") < 3).select(
+            "g", F.col("vec_id").cast("int").alias("cid"), F.col("qv").alias("cq")
+        )
+        cents, assigned = clustering.lloyd(pts, init, 3, kernel, by)
+        for g in (0, 1):
+            alone = pts.filter(F.col("g") == g).drop("g")
+            c1, a1 = clustering.lloyd(
+                alone, init.filter(F.col("g") == g).drop("g"), 3, kernel
+            )
+            keyed_c = sorted(
+                (r.cid, list(r.cq)) for r in cents.filter(F.col("g") == g).collect()
+            )
+            assert keyed_c == sorted((r.cid, list(r.cq)) for r in c1.collect())
+            keyed_a = sorted(
+                (r.vec_id, r.cid, r.dist2)
+                for r in assigned.filter(F.col("g") == g).collect()
+            )
+            assert keyed_a == sorted(map(tuple, a1.collect()))

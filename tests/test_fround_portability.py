@@ -15,7 +15,7 @@ import random
 import duckdb
 import pytest
 
-from postgresql_datawarehouse_excercise_spark.functions import fround, sql_floor_round
+from postgresql_datawarehouse_excercise_spark.functions import floor_div, fround, sql_floor_round
 
 
 def _py_floor_round(x: float, scale: int) -> float:
@@ -56,6 +56,29 @@ def test_fround_matches_duckdb_and_ieee(spark, scale):
     want = [_py_floor_round(v, scale) for v in vals]
     assert got_spark == want, "Spark fround diverges from the IEEE formula"
     assert got_duck == want, "DuckDB floor-form diverges from the IEEE formula"
+
+
+def test_floor_div_matches_duckdb_and_python_floor(spark):
+    """functions.floor_div must equal DuckDB's (a - ((a % b + b) % b)) // b
+    -- the oracles' spelling -- and Python's a // b on signed inputs:
+    negative numerators and divisors, exact multiples, and the half-up-mean
+    ties (2s + n) / (2n) at s / n = k + 1/2 for negative and positive k."""
+    pairs = [(a, b) for a in range(-13, 14) for b in (-4, -3, -1, 1, 2, 3, 7)]
+    pairs += [(2 * s + n, 2 * n) for n in (1, 2, 4) for s in range(-9, 10)]
+    pairs += [(-(10**12) - 1, 10**9), (10**12 + 1, 10**9), (-(10**9), 10**9)]
+    df = spark.createDataFrame(pairs, "a long, b long")
+    got_spark = sorted(
+        tuple(r) for r in df.select("a", "b", floor_div(df.a, df.b)).collect()
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(a BIGINT, b BIGINT)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", pairs)
+    got_duck = sorted(
+        con.sql("SELECT a, b, (a - ((a % b + b) % b)) // b FROM t").fetchall()
+    )
+    want = sorted((a, b, a // b) for a, b in pairs)
+    assert got_spark == want, "Spark floor_div diverges from floor division"
+    assert got_duck == want, "DuckDB floor form diverges from floor division"
 
 
 def test_plain_round_is_not_portable_on_ties(spark):
