@@ -659,36 +659,26 @@ def spark_sql(
     # s_out+12 inside decimal(38, sq), leaving 38-sq integer digits, and its
     # no-double-rounding proof needs group count < 2e11.  Both bounds hold
     # for any realistic aggregate, but "realistic" is an assumption -- so
-    # ENFORCE it: one scalar aggregate over the (small, pre-aggregated) MV
-    # bounds every output group's |sum| by SUM(abs(m)) and its count by
-    # SUM(cnt); if either could breach, execute as written instead of
-    # risking a NULL/last-digit-divergent average.
+    # ENFORCE it: the MV's SUM(abs(m)) bounds every output group's |sum|
+    # and its SUM(cnt) bounds the count (over the whole MV, so also over
+    # any filtered subset; FD bridges are 1:1); if either could breach,
+    # execute as written instead of risking a NULL/last-digit-divergent
+    # average.  The registry observed both bounds when it committed the MV,
+    # so the guard starts no job.
     avg_specs = [s for s in out_specs if s[1] == "avg"]
     if avg_specs and cnt_col is not None:
-        # enumerate the FILTERED list so the __s{i} aliases and the
-        # read-back below use the same numbering (a non-decimal AVG ahead
-        # of a decimal one must not shift the indices apart)
         dec_specs = [s for s in avg_specs if _dec_scale(s[3]) is not None]
-        checks = [
-            F.sum(F.abs(F.col(src)).cast("decimal(38,0)")).alias(f"__s{i}")
-            for i, (_, _, src, _, _) in enumerate(dec_specs)
-        ]
-        if checks:
-            bound = out.agg(*checks, F.sum(cnt_col).alias("__n")).collect()[0]
-            total_cnt = bound["__n"] or 0
-            ok = total_cnt < 2 * 10**11
-            for idx, (_, _, src, out_dt, _) in enumerate(dec_specs):
-                s_out = _dec_scale(out_dt)
-                sq = _avg_quotient_scale(s_out)
-                s_abs = bound[f"__s{idx}"]
-                # SUM(m) per output group is bounded by SUM(abs(m)) over the
-                # whole MV; it must fit the 38-sq integer digits of the cast.
-                # A NULL bound with rows present means the bound aggregate
-                # itself overflowed decimal(38,0) -- certainly too large.
-                if s_abs is None:
-                    ok = ok and total_cnt == 0
-                elif int(s_abs) >= 10 ** (38 - sq):
-                    ok = False
+        if dec_specs:
+            bound = registry.measure_bounds(spark, cand.mv_name)
+
+            def fits(value, limit: int) -> bool:
+                # a NULL bound over rows is an overflowed sum: too large
+                return bound["__rows"] == 0 if value is None else int(value) < limit
+
+            ok = fits(bound.get(cnt_col), 2 * 10**11) and all(
+                fits(bound.get(src), 10 ** (38 - _avg_quotient_scale(_dec_scale(out_dt))))
+                for _, _, src, out_dt, _ in dec_specs
+            )
             if not ok:
                 if explain is not None:
                     explain.append(

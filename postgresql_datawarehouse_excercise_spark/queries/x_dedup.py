@@ -1138,63 +1138,56 @@ SELECT doc_a, doc_b, edit_distance FROM within
 
 def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
     """Core of x_dedup_edit_join over an arbitrary (doc_id, text) relation
-    -- factored out so the short-doc completeness test can drive it with a
+    -- factored out so the completeness tests can drive it with a
     constructed corpus (tests/test_selection_ops.py)."""
     from pyspark.sql.window import Window
 
-    # `d` is referenced five times downstream (cohort build, rep join, the
-    # two member-expansion sides, the within-cohort arm) and `repdocs` four
-    # times (grams, sentinel arm, both text sides) — left lazy each
-    # reference re-scanned the corpus and re-ran the md5/cohort shuffle
+    # AQE coalesces a shuffle below its advisory size into ONE partition,
+    # which ran each CPU-heavy stage here (gram explode, df and prefix
+    # windows, candidate self-join) as one task; a repartition with an
+    # explicit count is never coalesced.
+    n = spark.sparkContext.defaultParallelism
+    # `d` feeds the cohort aggregate, both member-expansion sides and the
+    # within-cohort arm, `repdocs` the grams, the sentinel arm and both
+    # text sides: left lazy, each reference re-ran the scan and the md5
     d = documents.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.col("text"),
         F.md5("text").alias("fp"),
     ).transform(materialize, "ed_docs")
-    cohorts = d.groupBy("fp").agg(F.min("doc_id").alias("rep")).alias("c")
+    # one row per distinct content: its lowest doc_id and that doc's text
     repdocs = (
-        cohorts.join(d.alias("dd"), F.col("c.rep") == F.col("dd.doc_id"))
-        .select(
-            F.col("c.rep").alias("doc_id"),
-            F.col("dd.text").alias("text"),
-            F.length(F.col("dd.text")).alias("len"),
-            F.col("dd.fp").alias("fp"),
-        )
+        d.repartition(n, "fp")
+        .groupBy("fp")
+        .agg(F.min("doc_id").alias("doc_id"), F.min_by("text", "doc_id").alias("text"))
+        .withColumn("len", F.length("text"))
         .transform(materialize, "ed_rep_docs")
     )
-    # Candidate-index grams are ENGINE-INTERNAL: candidates are verified by
-    # exact levenshtein below, and the prefix-filter completeness theorem
-    # (two strings within distance d share one of the q*d+1 rarest grams
-    # under ANY globally consistent ordering) survives hashing — collisions
-    # only merge df counts consistently and add candidates the verify
-    # rejects.  So the index shuffles 8-byte xxhash64 longs instead of
-    # 10-char strings (guide §2.3: narrower types), and the gram relation
-    # is checkpointed once instead of exploding twice (dfreq + pref).
-    # The final output is unchanged: both engines emit exactly the pairs
-    # within distance d, each from its own complete candidate set.
-    # array_distinct runs on the HASHED longs (not the strings), so a
-    # within-doc 64-bit collision cannot double-count dfreq or burn one of
-    # the ED_PREFIX slots -- the prefix-filter completeness bound stays
-    # airtight under ANY collision (ADVICE r16); per-row op, no extra shuffle
-    grams = (
-        repdocs.select(
-            "doc_id",
-            "len",
-            F.explode(
-                F.expr(
-                    f"array_distinct(CASE WHEN length(text) >= {ED_Q} THEN"
-                    f" transform(sequence(1, length(text) - {ED_Q - 1}),"
-                    f" i -> xxhash64(substring(text, i, {ED_Q})))"
-                    " ELSE array() END)"
-                )
-            ).alias("g"),
-        )
-        .transform(materialize, "ed_grams")
+    # Index grams are xxhash64 longs, not 12-char strings (narrower
+    # shuffles): candidates are verified by levenshtein below, and the
+    # prefix-filter theorem holds under ANY globally consistent order, so a
+    # collision only merges df counts consistently and adds candidates the
+    # verify rejects.  array_distinct runs on the hashes, so a within-doc
+    # collision cannot double-count a df or burn an ED_PREFIX slot.  A
+    # gram's df is a count window over the exploded rows: the grams are
+    # read once, by the windows that rank each doc's prefix.
+    grams = repdocs.select(
+        "doc_id",
+        "len",
+        F.explode(
+            F.expr(
+                f"array_distinct(CASE WHEN length(text) >= {ED_Q} THEN"
+                f" transform(sequence(1, length(text) - {ED_Q - 1}),"
+                f" i -> xxhash64(substring(text, i, {ED_Q})))"
+                " ELSE array() END)"
+            )
+        ).alias("g"),
     )
-    dfreq = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("g").asc())
     pref = (
-        grams.join(dfreq, "g")
+        grams.repartition(n, "g")
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("g")))
+        .repartition(n, "doc_id")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= ED_PREFIX)
         .select("doc_id", "len", "g")
@@ -1231,12 +1224,10 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
             F.xxhash64(F.concat(F.lit("#S"), F.col("b").cast("string"))).alias("g"),
         )
     )
-    idx = pref.unionByName(sent)
-    a = idx.alias("a")
-    b = idx.alias("b")
+    idx = pref.unionByName(sent).repartition(n, "g")
     cand = (
-        a.join(
-            b,
+        idx.alias("a").join(
+            idx.alias("b"),
             (F.col("a.g") == F.col("b.g"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & (F.abs(F.col("a.len") - F.col("b.len")) <= ED_D),
@@ -1251,9 +1242,9 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
         F.col("doc_id").alias("rb"), F.col("text").alias("tb"), F.col("fp").alias("fb")
     )
     # Materialize the candidate pairs WITH their texts, partitioning pinned,
-    # BEFORE the quadratic-DP levenshtein evaluates.  Two distinct scale
-    # traps force this barrier:
-    #  (1) parallelism: the threshold filter `edit_distance <= ED_D` pushes
+    # BEFORE the levenshtein verify evaluates.  Two distinct scale traps
+    # force this barrier:
+    #  (1) parallelism: the threshold filter `edit_distance >= 0` pushes
     #      through any Project/Repartition down INTO the text join's
     #      condition, and the join's input exchanges are AQE-coalescible
     #      (two-long rows look tiny), so without a barrier the whole DP can
@@ -1270,35 +1261,33 @@ def edit_join_pairs(spark: SparkSession, documents: DataFrame) -> DataFrame:
     withtexts = (
         cand.join(da, "ra")
         .join(db, "rb")
-        .repartition(spark.sparkContext.defaultParallelism, "ra", "rb")
+        .repartition(n, "ra", "rb")
         .transform(materialize, "ed_rep_pair_texts")
     )
+    # levenshtein's threshold form computes a diagonal band of width
+    # 2*ED_D+1 and returns -1 past ED_D: every distance it keeps is exact
     rpairs = (
         withtexts.select(
             "ra", "rb", "fa", "fb",
-            F.levenshtein("ta", "tb").cast("long").alias("edit_distance"),
+            F.levenshtein("ta", "tb", ED_D).cast("long").alias("edit_distance"),
         )
-        .filter(F.col("edit_distance") <= ED_D)
+        .filter(F.col("edit_distance") >= 0)
         # drop the texts before expansion; skinny bounded rep-pair relation
         .transform(materialize, "ed_rep_pairs")
     )
-    ma = d.alias("ma")
-    mb = d.alias("mb")
     cross = (
         rpairs.alias("r")
-        .join(ma, F.col("ma.fp") == F.col("r.fa"))
-        .join(mb, F.col("mb.fp") == F.col("r.fb"))
+        .join(d.alias("ma"), F.col("ma.fp") == F.col("r.fa"))
+        .join(d.alias("mb"), F.col("mb.fp") == F.col("r.fb"))
         .select(
             F.least(F.col("ma.doc_id"), F.col("mb.doc_id")).alias("doc_a"),
             F.greatest(F.col("ma.doc_id"), F.col("mb.doc_id")).alias("doc_b"),
             F.col("r.edit_distance").alias("edit_distance"),
         )
     )
-    w1 = d.alias("w1")
-    w2 = d.alias("w2")
     within = (
-        w1.join(
-            w2,
+        d.alias("w1").join(
+            d.alias("w2"),
             (F.col("w1.fp") == F.col("w2.fp"))
             & (F.col("w1.doc_id") < F.col("w2.doc_id")),
         )
@@ -1321,11 +1310,14 @@ def x_dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-filtering discipline: every doc's q-grams sort by ascending
     global document frequency and only the ED_PREFIX = ED_Q*ED_D + 1
     rarest are indexed (one edit op destroys at most q grams, so two
-    strings within distance d MUST collide inside any common
-    (q*d+1)-sized prefix under a shared order); a length filter
+    strings within distance d that each have more than q*d grams MUST
+    collide inside any common (q*d+1)-sized prefix under a shared order;
+    a pair of shorter strings whose edits touch every gram shares no gram
+    and is not found, in either engine); a length filter
     |len_a - len_b| <= d prunes before the verify; survivors verify with
-    ONE exact levenshtein each -- identical unit-cost DP in both engines.
-    Docs too short to emit q-grams (len < ED_Q) route through a
+    ONE levenshtein each, banded at threshold ED_D on the Spark side and
+    the full DP in the oracle -- the same unit-cost distance for every
+    pair kept.  Docs too short to emit q-grams (len < ED_Q) route through a
     length-bucketed sentinel arm (see edit_join_pairs) so short-short and
     short-long pairs are NOT silently missed.  Empirical completeness vs
     brute force is pinned in tests/test_selection_ops.py, including a
@@ -1333,8 +1325,8 @@ def x_dedup_edit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The family's exact-copy cohort contraction is ALWAYS ON here (not
     probe-gated): identical texts share every edit distance by symmetry,
-    so the gram index, candidate join, and the quadratic-cost levenshtein
-    verify all run on distinct-CONTENT representatives only; member pairs
+    so the gram index, candidate join, and the levenshtein verify all run
+    on distinct-CONTENT representatives only; member pairs
     re-expand closed-form (cross-cohort pairs inherit the rep distance,
     within-cohort pairs are distance 0) -- the 100x all-copy probe shape
     would otherwise spend ~25M levenshteins proving copies are copies.

@@ -38,6 +38,11 @@ RUNTIME_CONFS: dict[str, str] = {
     # events.parquet stores TIMESTAMP(NANOS) which the vectorized reader
     # rejects; read as long and convert (catalog normalizes to micros).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated classes are named without their whole-stage codegen id.
+    # AQE numbers codegen stages in the order it plans them, and that order
+    # changes from run to run, so with the id in the name the same pipeline
+    # is new code (and compiles again) each time its number moves.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

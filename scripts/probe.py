@@ -9,7 +9,12 @@ Each entry is timed exactly like bench.py's ``run``: construction plus one
 ``noop`` write.  ``compiles=F/L`` counts the Janino compilations
 (``session.codegen_compiles``, read outside the timed region) of the
 first and the last iteration: a last count above 0 means the entry
-recompiled code it had already compiled.  ``--scale K`` first writes a
+recompiled code it had already compiled.  ``jobs=F/L`` counts the Spark
+jobs of the first and the last iteration the same way, from the driver's
+status store, whatever their job group (micro-batch jobs count too), and
+``mat=<label>:<jobs>,...`` splits the last iteration's jobs by the
+``session.materialize`` label in their ``<entry>:<label>`` description
+(one label per eager materialization).  ``--scale K`` first writes a
 K-fold copy of the sf-dir (``multiplied_dir``) and probes that, which
 answers "does this entry's plan survive K times the data?" on the
 shipped code path.  ``--explain DIR`` runs each entry once more,
@@ -32,6 +37,7 @@ import shutil
 import sys
 import tempfile
 import traceback
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -112,6 +118,30 @@ def select_entries(registry: dict[str, QueryDef], patterns: list[str]) -> list[s
     return names
 
 
+def last_job_id(spark: SparkSession) -> int:
+    """The newest job id in the driver's status store (-1 before any job),
+    read once the listener bus has delivered every event.  Job ids count
+    up by one per submitted job, so a region's jobs are the ids past the
+    mark taken before it, whatever their job group."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+
+def jobs_by_label(spark: SparkSession, first: int, last: int, entry: str) -> Counter:
+    """Jobs ``first+1 .. last`` per label of their ``<entry>:<label>``
+    description; jobs described by ``entry`` alone are not counted."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    prefix = f"{entry}:"
+    out: Counter = Counter()
+    for jid in range(first + 1, last + 1):
+        desc = store.job(jid).description()
+        if desc.isDefined() and desc.get().startswith(prefix):
+            out[desc.get().removeprefix(prefix)] += 1
+    return out
+
+
 def write_plan(spark: SparkSession, qd: QueryDef, sf_dir: str, out_dir: str) -> tuple[int, str]:
     """Execute the entry's own plan once (so AQE finalizes it), then write
     its formatted plan and its id-free optimized logical plan.  Returns
@@ -159,15 +189,21 @@ def main() -> None:
         for name in names:
             try:
                 with session.job_label(f"probe:{name}"):
-                    ts, compiles = [], []
+                    ts, compiles, jobs = [], [], []
                     for _ in range(args.iters):
                         before = session.codegen_compiles(spark)
+                        first_job = last_job_id(spark)
                         ts.append(bench.run(lambda: registry[name].fn(spark, probe_dir)))
                         compiles.append(session.codegen_compiles(spark) - before)
+                        last_job = last_job_id(spark)
+                        jobs.append(last_job - first_job)
+                    mats = jobs_by_label(spark, first_job, last_job, f"probe:{name}")
                     ts.sort()
                     line = (f"{name} x{args.scale}: best={ts[0]:.3f}s "
                             f"median={ts[len(ts) // 2]:.3f}s "
-                            f"compiles={compiles[0]}/{compiles[-1]}")
+                            f"compiles={compiles[0]}/{compiles[-1]} "
+                            f"jobs={jobs[0]}/{jobs[-1]} "
+                            f"mat={','.join(f'{k}:{v}' for k, v in mats.items()) or '-'}")
                     if args.explain:
                         rows, path = write_plan(spark, registry[name], probe_dir, args.explain)
                         line += f" rows={rows} plan={path}"

@@ -1,5 +1,6 @@
 """scripts/probe.multiplied_dir: K copies of every scaling table with
-foreign keys intact inside each copy, constant tables left at 1x."""
+foreign keys intact inside each copy, constant tables left at 1x; and the
+probe's job counters."""
 
 from __future__ import annotations
 
@@ -7,10 +8,10 @@ import shutil
 
 import pytest
 
-from postgresql_datawarehouse_excercise_spark import catalog
+from postgresql_datawarehouse_excercise_spark import catalog, session
 from postgresql_datawarehouse_excercise_spark.etl.validate import fk_orphans
 from postgresql_datawarehouse_excercise_spark.streaming.events import _events_raw_schema
-from scripts.probe import SCALING_KEYS, multiplied_dir
+from scripts.probe import SCALING_KEYS, jobs_by_label, last_job_id, multiplied_dir
 
 K = 2
 
@@ -47,3 +48,25 @@ def test_events_ts_layout_matches_the_source(tables):
     # the streaming entries pick their ts schema from the parquet footer
     base, big = tables
     assert _events_raw_schema(big.sf_dir)["ts"] == _events_raw_schema(base.sf_dir)["ts"]
+
+
+def test_job_counters_count_grouped_jobs_and_split_by_label(spark):
+    # a job in a job group (as a streaming micro-batch runs) is counted,
+    # and only materialize's labelled jobs appear per label
+    sc = spark.sparkContext
+    first = last_job_id(spark)
+    with session.job_label("probe:t"):
+        session.materialize(spark.range(10), "lbl")
+        spark.range(3).collect()
+        sc.setLocalProperty("spark.jobGroup.id", "probe-test-group")
+        try:
+            spark.range(4).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    last = last_job_id(spark)
+    tracker = sc.statusTracker()
+    grouped = set(tracker.getJobIdsForGroup("probe-test-group"))
+    ungrouped = {j for j in tracker.getJobIdsForGroup(None) if j > first}
+    assert grouped and last - first == len(grouped | ungrouped)
+    labels = jobs_by_label(spark, first, last, "probe:t")
+    assert set(labels) == {"lbl"} and labels["lbl"] >= 1

@@ -495,6 +495,80 @@ def test_edit_join_short_docs_not_missed(spark):
     assert got == want, (sorted(got - want), sorted(want - got))
 
 
+def test_edit_join_verify_boundary_vs_bruteforce(spark):
+    """The verify is levenshtein's threshold form, which returns -1 once
+    the distance passes ED_D: a pair at exactly ED_D must come out with
+    distance ED_D, a pair at ED_D + 1 must not come out, and a pair whose
+    lengths differ by more than ED_D must not come out either.  Exact-copy members of a cohort inherit their
+    representative's distance.  All compared with DuckDB's brute force.
+    Every doc has more than ED_PREFIX q-grams, where the prefix filter
+    guarantees a shared indexed gram for any pair within ED_D, so the
+    pairs reach the verify however the edits are spread."""
+    import duckdb
+
+    from postgresql_datawarehouse_excercise_spark.queries.x_dedup import (
+        ED_D,
+        ED_PREFIX,
+        ED_Q,
+        edit_join_pairs,
+    )
+
+    rng = random.Random(17)
+
+    def text(n: int) -> str:
+        return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(n))
+
+    def substituted(s: str, k: int, gap: int) -> str:
+        # k substitutions, gap characters apart, each to a different letter
+        out = list(s)
+        for i in range(k):
+            p = 5 + i * gap
+            out[p] = "z" if out[p] != "z" else "y"
+        return "".join(out)
+
+    n = ED_PREFIX + ED_Q + 10
+    at_d, past_d, grown, copied = text(n), text(n), text(n), text(n + 5)
+    rows = [
+        (1, at_d),
+        # distance ED_D, edits spread over the whole text: kept
+        (2, substituted(at_d, ED_D, n // ED_D)),
+        (3, past_d),
+        # distance ED_D + 1 in one block: most grams survive, so the pair
+        # is a candidate and the verify must drop it
+        (4, substituted(past_d, ED_D + 1, 1)),
+        (5, grown),
+        (6, grown + text(ED_D + 1)),            # lengths differ by ED_D + 1
+        (7, grown + text(ED_D)),                # lengths differ by ED_D
+        (8, copied),                            # 8, 9, 10: one cohort
+        (9, copied),
+        (10, copied),
+        (11, substituted(copied, ED_D, n // ED_D)),  # ED_D from every member
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        (r.doc_a, r.doc_b, r.edit_distance)
+        for r in edit_join_pairs(spark, docs).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", rows)
+    dist = dict(
+        ((a, b), e)
+        for a, b, e in con.sql("""
+        SELECT a.doc_id, b.doc_id, CAST(levenshtein(a.text, b.text) AS BIGINT)
+        FROM d a JOIN d b ON a.doc_id < b.doc_id
+        """).fetchall()
+    )
+    want = {(a, b, e) for (a, b), e in dist.items() if e <= ED_D}
+    # calibration: the corpus holds each boundary shape
+    assert min(len(t) for _, t in rows) - ED_Q + 1 > ED_PREFIX
+    assert dist[1, 2] == ED_D and dist[3, 4] == ED_D + 1
+    assert dist[5, 6] > ED_D and dist[5, 7] == ED_D
+    assert {(8, 9, 0), (8, 10, 0), (9, 10, 0)} <= want
+    assert {(8, 11, ED_D), (9, 11, ED_D), (10, 11, ED_D)} <= want
+    assert got == want, (sorted(got - want), sorted(want - got))
+
+
 def test_salted_join_identical_to_plain_join(spark):
     """salted_join is row-identical to the plain equi-join on a synthetic
     hot-key corpus (one key owns half the fact), including duplicate dim

@@ -74,3 +74,21 @@ def test_codegen_cache_keeps_a_working_set_above_the_spark_default(spark):
     before = codegen_compiles(spark)
     one_round()
     assert codegen_compiles(spark) - before <= 5
+
+
+def test_pipeline_compiles_once_whatever_its_codegen_stage_id(spark):
+    # The right child of a union is planned after the left one, so the
+    # same pipeline gets a different whole-stage codegen id there than
+    # when it runs alone.  Its generated class must still be found in the
+    # cache: only the class name would differ.
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    left = spark.range(50).selectExpr("id * 7919 + 104723 AS v")
+    right = spark.range(60).selectExpr("id * 7907 + 104729 AS v").filter("v % 3 = 1")
+
+    def run(df) -> int:
+        before = codegen_compiles(spark)
+        df.write.format("noop").mode("overwrite").save()
+        return codegen_compiles(spark) - before
+
+    assert run(left) > 0 and run(right) > 0
+    assert run(left.unionByName(right)) == 0

@@ -477,6 +477,61 @@ def test_avg_headroom_guard_falls_back_on_huge_sums(spark, sf_dir, tmp_path):
     assert any("rewriting onto MV" in e for e in small), small
 
 
+def test_avg_guard_reads_the_bound_observed_at_commit(spark, sf_dir, tmp_path):
+    """The AVG headroom bound comes from the MV's commit: building a
+    small-valued AVG rewrite starts no Spark job before the result's own
+    action.  A link-shared twin carries the same bounds, a registry that
+    did not commit the MV computes equal ones from its files, and drop_all
+    forgets them."""
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+
+    from postgresql_datawarehouse_excercise_spark.mv.navigator import AggregateNavigator
+    from postgresql_datawarehouse_excercise_spark.mv.registry import MVDef, MVRegistry
+
+    rows = [(1996, Decimal("100.5")), (1997, Decimal("-7.25")), (1997, Decimal("3.5"))]
+    base = spark.createDataFrame(rows, "year BIGINT, amnt DECIMAL(38,4)")
+    base.createOrReplaceTempView("headroom_bound")
+
+    def builder(t, dep):
+        return base.groupBy("year").agg(
+            F.sum("amnt").alias("amnt"), F.count(F.lit(1)).alias("cnt")
+        )
+
+    reg = MVRegistry(str(tmp_path / "wh"))
+    measures = {"amnt": "sum", "cnt": "count"}
+    reg.register(MVDef("small", builder, frozenset({"year"}), measures))
+    reg.register(MVDef("twin", builder, frozenset({"year"}), measures, link_from="small"))
+    try:
+        reg.build(spark, sf_dir, "small")
+        reg.build(spark, sf_dir, "twin")
+        # |100.5| and |-7.25 + 3.5| rounded half-up to whole units: 101 + 4
+        assert reg.bounds["small"] == {"__rows": 2, "amnt": Decimal(105), "cnt": 3}
+        assert reg.bounds["twin"] == reg.bounds["small"]
+        stranger = MVRegistry(reg.warehouse, defs=reg.defs)
+        assert stranger.measure_bounds(spark, "small") == reg.bounds["small"]
+
+        text = "SELECT year, AVG(amnt) AS a FROM headroom_bound GROUP BY year"
+        sc = spark.sparkContext
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = set(sc.statusTracker().getJobIdsForGroup(None))
+        explain: list[str] = []
+        df = sql_rewrite.spark_sql(
+            spark, sf_dir, text, reg, AggregateNavigator(reg),
+            view_name="headroom_bound", explain=explain,
+        )
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+        assert any("rewriting onto MV" in e for e in explain), explain
+        assert sorted(map(tuple, df.collect())) == sorted(
+            map(tuple, spark.sql(text).collect())
+        )
+    finally:
+        reg.drop_all()
+    assert reg.bounds == {}
+
+
 def test_count_distinct_grain_attr_rewrites_on_default_stack(spark, sf_dir, built):
     """COUNT(DISTINCT partkey) GROUP BY name: partkey is part of the sales
     MV's grain and name is FD-reachable, so even the reference-only stack
