@@ -123,8 +123,8 @@ class MVRegistry:
     # schema of each MV's committed rows: read() declares it, so no job
     # reads a parquet footer to infer it
     schemas: dict[str, StructType] = field(default_factory=dict)
-    # magnitude bounds of each committed snapshot (see measure_bounds),
-    # observed on its write job
+    # magnitude bound of each sum and count measure of the committed
+    # snapshot (see _bound_aggs), observed on its write job
     bounds: dict[str, dict | None] = field(default_factory=dict)
     # session that _analyze registered catalog tables into: drop_all uses it
     # so bare drop_all() cannot leak dead external-table entries pointing at
@@ -289,7 +289,8 @@ class MVRegistry:
         """Commit the MV's next snapshot through its ManagedParquetTable:
         df's rows, their count and measure bounds observed on the write job
         itself (one job, no read-back), or with ``share`` a hardlink share
-        of the link twin's current snapshot, which takes the twin's bounds.  Then re-point the catalog table and the catalog
+        of the link twin's current snapshot, which takes the twin's count
+        and bounds.  Then re-point the catalog table and the catalog
         cache slot at the new snapshot.  A reader of the previous snapshot
         keeps reading it (the table retains one snapshot back)."""
         mv = self.defs[name]
@@ -302,38 +303,30 @@ class MVRegistry:
             self.bounds[name] = self.bounds.get(mv.link_from)
         else:
             obs = Observation()
-            table._commit_rows(df.observe(obs, *self._bound_aggs(name, df.schema)))
+            table._commit_rows(df.observe(
+                obs, F.count(F.lit(1)).alias("__rows"), *self._bound_aggs(name, df.schema)
+            ))
             self.bounds[name] = obs.get
-            self.stats[name] = self.bounds[name]["__rows"]
+            self.stats[name] = self.bounds[name].pop("__rows")
         self.schemas[name] = df.schema
         self._analyze(spark, name, df.schema)
         if mv.cache_key:
             catalog.load(spark, sf_dir)._cache[mv.cache_key] = self.read(spark, name)
 
     def _bound_aggs(self, name: str, schema: StructType) -> list[Column]:
-        """The aggregates behind measure_bounds: the row count as
-        ``__rows`` and, under each measure's own name, ``try_sum`` of
-        |m| cast to decimal(38,0) for a decimal measure and of m for the
-        count measure (NULL when the sum overflows, never an error)."""
-        out = [F.count(F.lit(1)).alias("__rows")]
+        """Magnitude bounds of the MV's measures, under each measure's own
+        name: ``try_sum`` of |m| cast to decimal(38,0) for a decimal sum
+        measure and of m for the count measure (NULL when the sum
+        overflows, never an error).  A bound over the whole MV also bounds
+        any filtered subset of it, and any re-aggregation of such a
+        subset: the SQL rewriter's AVG headroom guard reads them."""
+        out = []
         for col, kind in self.defs[name].measures.items():
             if kind == "count":
                 out.append(F.try_sum(col).alias(col))
-            elif isinstance(schema[col].dataType, DecimalType):
+            elif kind == "sum" and isinstance(schema[col].dataType, DecimalType):
                 out.append(F.try_sum(F.abs(F.col(col)).cast("decimal(38,0)")).alias(col))
         return out
-
-    def measure_bounds(self, spark: SparkSession, name: str) -> dict:
-        """Row count (``__rows``) and per-measure magnitude bounds of the
-        MV's current snapshot (see _bound_aggs): what its commit observed,
-        or, for an MV this registry did not commit, one aggregate over its
-        files.  A bound over the whole MV also bounds any filtered subset
-        of it, and any re-aggregation of such a subset."""
-        got = self.bounds.get(name)
-        if got is None:
-            rows = self.read(spark, name)
-            got = rows.agg(*self._bound_aggs(name, rows.schema)).collect()[0].asDict()
-        return got
 
     def _stamp_version(self, sf_dir: str, name: str, fp: tuple) -> None:
         """Record the built-from snapshot ONLY when every dependency is

@@ -480,9 +480,8 @@ def test_avg_headroom_guard_falls_back_on_huge_sums(spark, sf_dir, tmp_path):
 def test_avg_guard_reads_the_bound_observed_at_commit(spark, sf_dir, tmp_path):
     """The AVG headroom bound comes from the MV's commit: building a
     small-valued AVG rewrite starts no Spark job before the result's own
-    action.  A link-shared twin carries the same bounds, a registry that
-    did not commit the MV computes equal ones from its files, and drop_all
-    forgets them."""
+    action.  A link-shared twin carries the same count and bounds, an MV
+    without a bound executes as written, and drop_all forgets them."""
     from decimal import Decimal
 
     from pyspark.sql import functions as F
@@ -507,26 +506,36 @@ def test_avg_guard_reads_the_bound_observed_at_commit(spark, sf_dir, tmp_path):
         reg.build(spark, sf_dir, "small")
         reg.build(spark, sf_dir, "twin")
         # |100.5| and |-7.25 + 3.5| rounded half-up to whole units: 101 + 4
-        assert reg.bounds["small"] == {"__rows": 2, "amnt": Decimal(105), "cnt": 3}
+        assert reg.bounds["small"] == {"amnt": Decimal(105), "cnt": 3}
+        assert reg.stats["small"] == 2
         assert reg.bounds["twin"] == reg.bounds["small"]
-        stranger = MVRegistry(reg.warehouse, defs=reg.defs)
-        assert stranger.measure_bounds(spark, "small") == reg.bounds["small"]
+        assert reg.stats["twin"] == reg.stats["small"]
 
         text = "SELECT year, AVG(amnt) AS a FROM headroom_bound GROUP BY year"
         sc = spark.sparkContext
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        before = set(sc.statusTracker().getJobIdsForGroup(None))
-        explain: list[str] = []
-        df = sql_rewrite.spark_sql(
-            spark, sf_dir, text, reg, AggregateNavigator(reg),
-            view_name="headroom_bound", explain=explain,
-        )
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+
+        def rewrite() -> list[str]:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            before = set(sc.statusTracker().getJobIdsForGroup(None))
+            explain: list[str] = []
+            df = sql_rewrite.spark_sql(
+                spark, sf_dir, text, reg, AggregateNavigator(reg),
+                view_name="headroom_bound", explain=explain,
+            )
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            assert set(sc.statusTracker().getJobIdsForGroup(None)) == before
+            assert sorted(map(tuple, df.collect())) == sorted(
+                map(tuple, spark.sql(text).collect())
+            )
+            return explain
+
+        explain = rewrite()
         assert any("rewriting onto MV" in e for e in explain), explain
-        assert sorted(map(tuple, df.collect())) == sorted(
-            map(tuple, spark.sql(text).collect())
-        )
+        committed = dict(reg.bounds)
+        reg.bounds.clear()
+        explain = rewrite()
+        assert any("headroom not proven" in e for e in explain), explain
+        reg.bounds.update(committed)
     finally:
         reg.drop_all()
     assert reg.bounds == {}
